@@ -15,6 +15,7 @@ import json
 import os
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +32,7 @@ class IndexReader:
         self._tables: dict[str, DataFrame] = {}
         self._vocab_cache: dict[str, tuple | None] = {}
         self._vocab_sorted_cache: dict[str, tuple | None] = {}
+        self._docs_datasets: list | None = None  # pyarrow datasets, fetch_docs
 
     # ------------------------------------------------------------- fields
     @property
@@ -73,6 +75,43 @@ class IndexReader:
         df = self._table("docs")
         doc_cols = self.meta.get("doc_cols")
         return df.select(*doc_cols) if doc_cols else df
+
+    def fetch_docs(
+        self, segment_ids, doc_ids, columns: tuple[str, ...] = ("doc_key",)
+    ) -> pd.DataFrame:
+        """Stored columns of the given (segment_id, doc_id) docs, read on the
+        driver with pyarrow — no Spark job (the reference reads stored values
+        by doc id from the open reader, index-search.cpp:676-748). The docs
+        parquet paths are opened once per reader; the per-segment
+        ``segment_id == s AND doc_id IN (...)`` filter prunes files and row
+        groups by their statistics, so a top-k fetch reads only the touched
+        segments' parts. Returns (segment_id, doc_id, *columns) in no
+        particular order; pairs not in the table are absent."""
+        import pyarrow.dataset as pads
+
+        if self._docs_datasets is None:
+            v = self.meta["tables"]["docs"]
+            self._docs_datasets = [
+                pads.dataset(p.removeprefix("file:"), format="parquet")
+                for p in (v if isinstance(v, list) else [v])
+            ]
+        want = pd.DataFrame(
+            {"segment_id": np.asarray(segment_ids, np.int64),
+             "doc_id": np.asarray(doc_ids, np.int64)}
+        )
+        cols = ["segment_id", "doc_id", *columns]
+        pred = None
+        for sid, grp in want.groupby("segment_id"):
+            p = (pads.field("segment_id") == int(sid)) & pads.field("doc_id").isin(
+                grp["doc_id"].to_numpy()
+            )
+            pred = p if pred is None else pred | p
+        if pred is None:
+            return want.assign(**{c: pd.Series([], dtype=object) for c in columns})
+        return pd.concat(
+            [d.to_table(columns=cols, filter=pred).to_pandas() for d in self._docs_datasets],
+            ignore_index=True,
+        )
 
     def postings(self) -> DataFrame:
         return self._table("postings")

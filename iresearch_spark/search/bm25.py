@@ -51,6 +51,11 @@ def bm25_score(
     return (c0 * tf / (c1 + tf)).astype(dtype)
 
 
+def tfidf_idf(docs_with_term: float, docs_with_field: float, dtype=np.float64):
+    dt = np.dtype(dtype).type
+    return np.log((dt(docs_with_field) + dt(1)) / (dt(docs_with_term) + dt(1))) + dt(1)
+
+
 def tfidf_score(
     tf: np.ndarray,
     docs_with_term: float,
@@ -59,8 +64,30 @@ def tfidf_score(
     dtype=np.float64,
 ) -> np.ndarray:
     dt = np.dtype(dtype).type
-    idf = np.log((dt(docs_with_field) + dt(1)) / (dt(docs_with_term) + dt(1))) + dt(1)
+    idf = tfidf_idf(docs_with_term, docs_with_field, dtype)
     return (dt(boost) * np.sqrt(np.asarray(tf).astype(dtype)) * idf).astype(dtype)
+
+
+def phrase_score(
+    mode: str,
+    tf: np.ndarray,
+    dl: np.ndarray,
+    idf: float,
+    avgdl: float,
+    k: float = K_DEFAULT,
+    b: float = B_DEFAULT,
+    boost: float = 1.0,
+) -> np.ndarray:
+    """Root Phrase/SamePosition score, f64: the phrase frequency ``tf``
+    plugs into the scorer as the term frequency, ``idf`` is the phrase's
+    stats constant (from the exact phrase df, or the sum of the member
+    terms' idfs). ``mode`` is ``"bm25"``, ``"tfidf"`` or ``"boost"``."""
+    tf = np.asarray(tf, dtype=np.float64)
+    if mode == "boost":
+        return np.full(tf.shape, float(boost))
+    if mode == "tfidf":
+        return float(boost) * np.sqrt(tf) * float(idf)
+    return bm25_score(tf, dl, idf, avgdl, k, b, boost, np.float64)
 
 
 # --------------------------------------------------------------------------
@@ -187,8 +214,7 @@ class TFIDFModel(ScoreModel):
     needs_norms = False
 
     def term_const(self, df, n_field, dtype):
-        dt = np.dtype(dtype).type
-        return float(np.log((dt(n_field) + dt(1)) / (dt(df) + dt(1))) + dt(1))
+        return float(tfidf_idf(df, n_field, dtype))
 
     def score(self, tf, dl, const, avgdl, boost, dtype):
         dt = np.dtype(dtype).type

@@ -76,9 +76,21 @@ from ..index.codec import (
 )
 from ..index.reader import IndexReader
 from . import filters as flt
-from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, bm25_idf, get_model
+from .bm25 import (
+    B_DEFAULT,
+    K_DEFAULT,
+    BM25Model,
+    BoostModel,
+    ScoreModel,
+    TFIDFModel,
+    bm25_idf,
+    get_model,
+    phrase_score,
+    tfidf_idf,
+)
 
 KERNEL_OUT_SCHEMA = "segment_id int, doc_id int, score double"
+BATCH_OUT_SCHEMA = "query string, " + KERNEL_OUT_SCHEMA
 MATCH_OUT_SCHEMA = "segment_id int, doc_id int, tf long, dl long"
 
 
@@ -1721,6 +1733,26 @@ def _local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray
     return ids[order], scores[order]
 
 
+#: zero driver-side hits, typed like the kernel output
+_NO_HITS = pd.DataFrame(
+    {"segment_id": pd.Series([], dtype="int32"), "doc_id": pd.Series([], dtype="int32"),
+     "score": pd.Series([], dtype="float64")}
+)
+
+
+def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> pd.DataFrame:
+    """Driver-side top-k merge of per-segment candidate rows — the
+    reference's heap loop (index-search.cpp:676-748): order by (score desc,
+    segment_id, doc_id) and keep ≤k rows (per ``by`` group when given)."""
+    keys = ["score", "segment_id", "doc_id"]
+    asc = [False, True, True]
+    if by is not None:
+        keys, asc = [by, *keys], [True, *asc]
+    pdf = pdf.sort_values(keys, ascending=asc, kind="stable")
+    top = pdf.groupby(by, sort=False).head(k) if by is not None else pdf.head(k)
+    return top.reset_index(drop=True)
+
+
 # --------------------------------------------------------------------------
 # Searcher
 # --------------------------------------------------------------------------
@@ -1904,6 +1936,11 @@ class Searcher:
         """Top-k matches, ordered by (score desc, segment_id, doc_id).
 
         Returns a DataFrame (doc_key?, segment_id, doc_id, score) of ≤k rows.
+        Scored queries run their kernel job when ``search()`` is called: each
+        segment's ≤k rows are merged on the driver and the doc keys are read
+        from the docs table without Spark (:meth:`IndexReader.fetch_docs`), so
+        the result is a DataFrame over ≤k local rows. Stored-column filters
+        (All, ColumnExists, NumericRange, Nested) stay lazy Spark plans.
         """
         nf = flt.normalize(f)
         if isinstance(nf, flt.Phrase):
@@ -1915,63 +1952,22 @@ class Searcher:
         if isinstance(nf, flt.NumericRange):
             return self._search_numeric_range(nf, k, with_keys)
         if isinstance(nf, flt.NgramSimilarity):
-            return self._search_ngram_similarity(nf, k, with_keys)
+            local = self._ngram_similarity_local(nf, k).toPandas()  # ≤ segments × k
+            return self._hits_frame(_driver_topk(local, k), with_keys)
         if isinstance(nf, flt.Nested):
             return self._search_nested(nf, k, with_keys)
         plan, scan = compile_plan(nf, self.reader, self.k1, self.b, dtype, model=self.model)
-        model = self.model
-        dt = np.float32 if dtype == "float32" else np.float64
-        spark = self.reader.spark
-
         if plan["op"] == "all":
             docs = self.reader.live_docs()
             out = docs.select(
                 "doc_key", "segment_id", "doc_id", F.lit(float(plan["boost"])).alias("score")
             ).orderBy("segment_id", "doc_id").limit(k)
             return out if with_keys else out.drop("doc_key")
-        if plan["op"] == "empty" or (scan.is_empty() and not _plan_has_all(plan)):
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return spark.createDataFrame([], schema if with_keys else schema.split(", ", 1)[1])
-
-        # pos_enc only when a nested phrase needs it: purely boolean
-        # queries never read position bytes
-        pq = self._batch_postings(scan, with_pos=scan.need_positions)
-        norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
-
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            # norms cover every segment (one row each); postings may be empty
-            # for this segment — All-based plans still match its docs
-            if len(norm_pdf) == 0:
-                return pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                    {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-                )
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            ids, scores = _eval_root_dispatch(
-                plan, sv, k, model, dt, dels, dl, avgdl, dl_map, avg_map
-            )
-            ids, scores = _mask_deleted(ids, scores, dels)
-            ids, scores = _local_topk(ids, scores, k)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids.size, sid, np.int32),
-                    "doc_id": ids.astype(np.int32),
-                    "score": scores.astype(np.float64),
-                }
-            )
-
-        local = (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, self._norms_key(scan)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
-        topk = local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk
-        return self._attach_keys(topk, k)
+        if plan["op"] == "empty":
+            return self._hits_frame(_NO_HITS, with_keys)
+        # a batch of one: the batch kernel, merged on the driver
+        hits = self._execute_batch({"": plan}, scan, k, dtype, to_driver=True)
+        return self._hits_frame(hits, with_keys)
 
     def search_ordered(
         self,
@@ -1991,7 +1987,8 @@ class Searcher:
         Scale shape: one full match pass per bucket (each a distributed
         kernel job over the pruned scan), joined on (segment_id, doc_id) —
         the join moves only the MATCH set, never the corpus — and the
-        lexicographic top-k is a TakeOrdered (no global sort). Pruning
+        lexicographic top-k is a TakeOrdered (no global sort) whose ≤k rows
+        are collected and keyed like :meth:`search`'s. Pruning
         (WAND/MaxScore) is single-bucket-bound in the reference too, so the
         exact per-bucket evaluation here is the honest equivalent."""
         if not scorers:
@@ -2012,16 +2009,8 @@ class Searcher:
         order = [F.desc(f"score{i}") for i in range(len(scorers))] + [
             F.asc("segment_id"), F.asc("doc_id"),
         ]
-        topk = out.orderBy(*order).limit(k)
-        if not with_keys:
-            return topk
-        docs = self.reader.docs().select("segment_id", "doc_id", "doc_key")
-        score_cols = [f"score{i}" for i in range(len(scorers))]
-        return (
-            docs.join(F.broadcast(topk), ["segment_id", "doc_id"], "inner")
-            .select("doc_key", "segment_id", "doc_id", *score_cols)
-            .orderBy(*[F.desc(c) for c in score_cols], F.asc("segment_id"), F.asc("doc_id"))
-        )
+        score_cols = tuple(f"score{i}" for i in range(len(scorers)))
+        return self._hits_frame(out.orderBy(*order).limit(k).toPandas(), with_keys, score_cols)
 
     def matches(self, f: flt.Filter, dtype: str = "float64") -> DataFrame:
         """ALL matching (segment_id, doc_id, score) rows — no top-k, no global
@@ -2030,10 +2019,11 @@ class Searcher:
         shuffles only the match set, never sorts the corpus. Positional /
         stored-column filters fall back to the search() path."""
         nf = flt.normalize(f)
+        if isinstance(nf, flt.NgramSimilarity):
+            return self._ngram_similarity_local(nf, 1 << 30)
         if isinstance(
             nf,
-            (flt.Phrase, flt.SamePosition, flt.ColumnExists,
-             flt.NumericRange, flt.NgramSimilarity, flt.Nested),
+            (flt.Phrase, flt.SamePosition, flt.ColumnExists, flt.NumericRange, flt.Nested),
         ):
             return self.search(nf, k=1 << 30, with_keys=False).select(
                 "segment_id", "doc_id", "score"
@@ -2214,14 +2204,17 @@ class Searcher:
         pq: DataFrame | None = None,
         b_plans=None,
         norms_ctx=None,
-    ) -> DataFrame:
+        to_driver: bool = False,
+    ):
+        """Per-query top-k of a compiled batch: (query, segment_id, doc_id,
+        score), ordered by (query, score desc, segment_id, doc_id). A
+        DataFrame, or with ``to_driver`` the same rows as a pandas frame."""
         model = self.model
         dt = np.float32 if dtype == "float32" else np.float64
         spark = self.reader.spark
         if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
-            return spark.createDataFrame(
-                [], "query string, segment_id int, doc_id int, score double"
-            )
+            empty = _NO_HITS.assign(query=pd.Series([], dtype=object))
+            return empty if to_driver else spark.createDataFrame([], BATCH_OUT_SCHEMA)
 
         if pq is None:
             pq = self._seg_partitioned(
@@ -2232,23 +2225,15 @@ class Searcher:
             norms = self._seg_norms(norms, self._norms_key(scan))
         else:
             norms, mixed, avgdl, avg_map = norms_ctx
-        # large batches: ship the plan list as a BROADCAST, not a task-closure
-        # capture — a 1000-plan dict pickled into every task binary costs
-        # seconds of serialize/deserialize PER STAGE, which is pure fixed
-        # overhead that caps batch-serving scalability. PreparedBatch passes a
-        # CACHED broadcast so repeated executes don't even re-pickle the plans
-        # (per-execute fixed cost is what the N→4N query rule charges).
-        if b_plans is None:
-            b_plans = spark.sparkContext.broadcast(list(plans.items()))
+        # large batches ship the plan list as a BROADCAST (PreparedBatch
+        # caches one across executes): a 1000-plan dict pickled into every
+        # task binary costs seconds of serialize/deserialize per stage. A
+        # call without one (search: a single plan) captures the plans in the
+        # closure instead — nothing is left to release after the job.
+        items = list(plans.items()) if b_plans is None else None
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            plan_items = b_plans.value
-            import os as _os
-            import sys as _sys
-            import time as _time
-
-            _dbg = _os.environ.get("IRS_DEBUG_KERNEL")
-            _t0 = _time.time()
+            plan_items = items if items is not None else b_plans.value
             empty = pd.DataFrame(
                 {"query": [], "segment_id": [], "doc_id": [], "score": []}
             ).astype({"query": "object", "segment_id": "int32", "doc_id": "int32", "score": "float64"})
@@ -2276,18 +2261,12 @@ class Searcher:
                             }
                         )
                     )
-            if _dbg:
-                print(
-                    f"KERNEL sid={sid} start={_t0:.2f} dur={_time.time() - _t0:.2f}",
-                    file=_sys.stderr,
-                    flush=True,
-                )
             return pd.concat(frames, ignore_index=True) if frames else empty
 
         local = (
             pq.groupBy(self._seg_groupkey())
             .cogroup(norms.groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, "query string, " + KERNEL_OUT_SCHEMA)
+            .applyInPandas(kernel, BATCH_OUT_SCHEMA)
         )
         n_segments = int(self.reader.meta.get("num_segments", 1))
         if n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
@@ -2295,37 +2274,36 @@ class Searcher:
             # (index-search.cpp:676-748): candidate rows are tiny
             # (#segments × #queries × k), one Spark stage total; the windowed
             # path below is the scale fallback for huge batch×segment products.
-            pdf = local.toPandas()
-            pdf = pdf.sort_values(
-                ["query", "score", "segment_id", "doc_id"],
-                ascending=[True, False, True, True],
-                kind="stable",
-            )
-            topk = pdf.groupby("query", sort=False).head(k).reset_index(drop=True)
-            return spark.createDataFrame(
-                topk, "query string, segment_id int, doc_id int, score double"
-            )
+            topk = _driver_topk(local.toPandas(), k, by="query")
+            return topk if to_driver else spark.createDataFrame(topk, BATCH_OUT_SCHEMA)
         from pyspark.sql import Window
 
         w = Window.partitionBy("query").orderBy(
             F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
         )
-        return (
+        out = (
             local.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k)
             .drop("rn")
             .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
         )
+        return out.toPandas() if to_driver else out
 
-    def _attach_keys(self, topk: DataFrame, k: int) -> DataFrame:
-        """Broadcast the ≤k result rows against the docs table (stored-column
-        fetch ≙ columnstore payload read; broadcast side is the tiny one)."""
-        docs = self.reader.docs().select("segment_id", "doc_id", "doc_key")
-        return (
-            docs.join(F.broadcast(topk), ["segment_id", "doc_id"], "inner")
-            .select("doc_key", "segment_id", "doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
-        )
+    def _hits_frame(
+        self, hits: pd.DataFrame, with_keys: bool, score_cols: tuple[str, ...] = ("score",)
+    ) -> DataFrame:
+        """The ≤k ranked driver-side hits, in their order, as the search
+        result DataFrame: (doc_key?, segment_id, doc_id, *score_cols). Doc
+        keys come from :meth:`IndexReader.fetch_docs` — no Spark job."""
+        hits = hits[["segment_id", "doc_id", *score_cols]]
+        schema = "segment_id int, doc_id int, " + ", ".join(f"{c} double" for c in score_cols)
+        if with_keys:
+            keys = self.reader.fetch_docs(hits["segment_id"], hits["doc_id"])
+            hits = hits.merge(keys, on=["segment_id", "doc_id"], how="inner")[
+                ["doc_key", "segment_id", "doc_id", *score_cols]
+            ]
+            schema = "doc_key string, " + schema
+        return self.reader.spark.createDataFrame(hits, schema)
 
     def _search_column_exists(self, node: flt.ColumnExists, k: int, with_keys: bool) -> DataFrame:
         """by_column_existence (column_existence_filter.cpp): docs whose stored
@@ -2388,22 +2366,15 @@ class Searcher:
         dfp-independent rank key alone. The kernel therefore emits, per
         segment, (a) its top-(k + slack) matches by rank and (b) its exact
         match count; the driver sums the #segments counts into the exact dfp
-        (the phrase_query.cpp one-pass stats collection) and scores the
-        ≤ (k+slack)·S surviving rows with the full expression. No global
+        (the phrase_query.cpp one-pass stats collection), scores the
+        ≤ (k+slack)·S surviving rows with the full expression in numpy
+        (:func:`bm25.phrase_score`) and keeps the top k. No global
         shuffle of the match set, no single-partition Window — the old
         ``Window.partitionBy(lit(1))`` count moved every match row to one
         task, a driver-killer for a high-df phrase at 100× data.
         ``shifts`` = per-slot position offsets: ``0..n-1`` for a phrase,
         all-zero for SamePosition (same_position_filter.cpp). Slots may be
         multiterm filters (VariadicPhraseQuery, phrase_query.cpp:119-303)."""
-        from .bm25 import BoostModel, TFIDFModel
-
-        def _empty():
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return self.reader.spark.createDataFrame(
-                [], schema if with_keys else schema.split(", ", 1)[1]
-            )
-
         # cross-field SamePosition: slots given as (field, term) pairs
         # (same_position_filter.cpp options). Plain-string slots resolve in
         # the node's field as before.
@@ -2415,12 +2386,12 @@ class Searcher:
             ]
             terms = [t[1] if isinstance(t, tuple) else t for t in terms]
             if any(f not in self.reader.field_names for f in slot_fields):
-                return _empty()  # unknown field matches nothing
+                return self._hits_frame(_NO_HITS, with_keys)  # unknown field
             fname = slot_fields[0]
         else:
             fname = getattr(node, "field", None) or self.reader.default_field
         if fname not in self.reader.field_names:
-            return _empty()
+            return self._hits_frame(_NO_HITS, with_keys)
         stats = self.reader.field_stats(fname)
         n, avgdl = stats["docs_with_field"], stats["avgdl"]
         if isinstance(self.model, TFIDFModel):
@@ -2463,10 +2434,8 @@ class Searcher:
                     df_t = tstats.get(t, (0, 0))[0]
                     if df_t == 0:
                         continue  # absent term: the phrase matches nothing anyway
-                    if mode == "bm25":
-                        idf_sum += float(np.log1p((n_f - df_t + 0.5) / (df_t + 0.5)))
-                    else:
-                        idf_sum += float(np.log((n_f + 1.0) / (df_t + 1.0)) + 1.0)
+                    idf_of = bm25_idf if mode == "bm25" else tfidf_idf
+                    idf_sum += float(idf_of(df_t, n_f))
         # slack absorbs rank-vs-score FP boundary noise: the exact expression
         # re-ranks the survivors below, so only >16 docs inside one ULP of the
         # k-th rank could ever flip the set
@@ -2475,50 +2444,20 @@ class Searcher:
             slot_fields=slot_fields,
         )
         pdf = local.toPandas()
-        spark = self.reader.spark
-        if len(pdf) == 0:
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return spark.createDataFrame(
-                [], schema if with_keys else schema.split(", ", 1)[1]
-            )
-        cand = spark.createDataFrame(
-            pdf[["segment_id", "doc_id", "tf", "dl"]],
-            "segment_id int, doc_id int, tf long, dl long",
-        )
-        boost = node.boost
-        k1v, bv = self.k1, self.b
         if mode == "boost":
-            score_col = F.lit(float(boost))
+            idf = 0.0
         elif idf_sum is not None:
-            if mode == "tfidf":
-                score_col = F.lit(boost * idf_sum) * F.sqrt(F.col("tf"))
-            else:
-                c0 = boost * (k1v + 1.0) * idf_sum
-                score_col = (
-                    F.lit(c0)
-                    * F.col("tf")
-                    / (F.lit(k1v * (1 - bv)) + F.lit(k1v * bv) * F.col("dl") / F.lit(avgdl) + F.col("tf"))
-                )
+            idf = idf_sum
         else:
             # exact phrase-df mode: per-segment exact match counts summed into
             # the global dfp (one-pass stats, no extra job)
             dfp = float(pdf.drop_duplicates("segment_id")["seg_matches"].sum())
-            if mode == "tfidf":
-                idf = F.log((F.lit(float(n)) + 1.0) / (F.lit(dfp) + 1.0)) + 1.0
-                score_col = F.lit(boost) * F.sqrt(F.col("tf")) * idf
-            else:
-                idf = F.log1p((F.lit(float(n)) - F.lit(dfp) + 0.5) / (F.lit(dfp) + 0.5))
-                c0 = F.lit(boost * (k1v + 1.0)) * idf
-                score_col = (
-                    c0
-                    * F.col("tf")
-                    / (F.lit(k1v * (1 - bv)) + F.lit(k1v * bv) * F.col("dl") / F.lit(avgdl) + F.col("tf"))
-                )
-        scored = cand.withColumn("score", score_col)
-        topk = scored.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk.select("segment_id", "doc_id", "score")
-        return self._attach_keys(topk.select("segment_id", "doc_id", "score"), k)
+            idf = tfidf_idf(dfp, n) if mode == "tfidf" else bm25_idf(dfp, n)
+        pdf["score"] = phrase_score(
+            mode, pdf["tf"].to_numpy(), pdf["dl"].to_numpy(), idf, avgdl,
+            self.k1, self.b, node.boost,
+        )
+        return self._hits_frame(_driver_topk(pdf, k), with_keys)
 
     def _search_nested(self, node: flt.Nested, k: int, with_keys: bool) -> DataFrame:
         """ChildToParentJoin (nested_filter.cpp:99-305) as a relational plan:
@@ -2591,15 +2530,14 @@ class Searcher:
             topk = out.orderBy(F.desc("score"), "segment_id", "doc_id").limit(k)
         return topk if with_keys else topk.drop("doc_key")
 
-    def _search_ngram_similarity(
-        self, node: flt.NgramSimilarity, k: int, with_keys: bool
-    ) -> DataFrame:
+    def _ngram_similarity_local(self, node: flt.NgramSimilarity, k: int) -> DataFrame:
         """by_ngram_similarity (ngram_similarity_query.cpp): per segment,
         candidate docs (≥ min distinct matched ngrams, a cheap vectorized
         union-count prefilter ≙ the reference's potential/min_match cut) get
         the longest in-order increasing-position chain computed by an
         O(stream × N) DP over the doc's merged occurrence stream. Score =
-        boost * L/N."""
+        boost * L/N. Returns each segment's top-k (segment_id, doc_id,
+        score) rows, unmerged."""
         import math
 
         ngrams = list(node.ngrams)
@@ -2689,16 +2627,12 @@ class Searcher:
                 }
             )
 
-        local = (
+        return (
             self._seg_partitioned(pq)
             .groupBy(self._seg_groupkey())
             .cogroup(self._seg_norms(norms, ("field", fname)).groupBy(self._seg_groupkey()))
             .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
         )
-        topk = local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk
-        return self._attach_keys(topk, k)
 
     def _sidecar_targets(
         self,

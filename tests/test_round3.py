@@ -198,9 +198,13 @@ def test_phrase_plan_has_no_single_partition_window(spark, tmp_path_factory):
     df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
     IndexBuilder(spark, path, num_segments=2).build(df, key_col="doc_key", text_col="text")
     reader = IndexReader(spark, path)
-    res = Searcher(reader).search(flt.Phrase(("fast", "scan")), k=5, with_keys=False)
+    s = Searcher(reader)
+    # search() scores the phrase kernel's rows on the driver: inspect the
+    # kernel DataFrame it collects
+    res = s.phrase_matches(["fast", "scan"], [0, 1], local_k=5 + 16, rank_params=("bm25", 0.3, 0.1))
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+    assert [r["doc_key"] for r in s.search(flt.Phrase(("fast", "scan")), k=5).collect()]
 
 
 # --------------------------------------------------------------------------

@@ -617,7 +617,8 @@ def test_routed_placement_adds_no_exchange(spark, batch_index):
     from iresearch_spark import Searcher, filters as flt
 
     def n_exchanges(s):
-        p = s.search(flt.Term("alpha"), k=5)._jdf.queryExecution().executedPlan().toString()
+        # search() returns local rows; its kernel's plan is matches()'s
+        p = s.matches(flt.Term("alpha"))._jdf.queryExecution().executedPlan().toString()
         return p.count("Exchange")
 
     s_routed = Searcher(batch_index)

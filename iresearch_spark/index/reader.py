@@ -16,10 +16,46 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import vbyte_decode
+
+#: (path, directory mtime) → pyarrow dataset; a process-wide cache, so each
+#: driver or Python worker lists a table's files once. A committed
+#: generation's directories are never rewritten in place, and the mtime in the
+#: key keeps a directory deleted and rebuilt under the same name from being
+#: served stale.
+_DATASETS: dict[tuple[str, int], pads.Dataset] = {}
+
+
+def table_datasets(paths) -> list[pads.Dataset]:
+    """pyarrow datasets over one index table's paths (``meta["tables"]``
+    value: a path or a list of paths), opened once per process."""
+    out = []
+    for p in paths if isinstance(paths, list) else [paths]:
+        p = p.removeprefix("file:")
+        key = (p, os.stat(p).st_mtime_ns)
+        d = _DATASETS.get(key)
+        if d is None:
+            d = _DATASETS[key] = pads.dataset(p, format="parquet")
+        out.append(d)
+    return out
+
+
+def read_frame(paths, columns: list[str], pred=None) -> pd.DataFrame:
+    """The ``columns`` of one index table's rows matching the pyarrow
+    expression ``pred``, read with pyarrow — no Spark. Files and row groups
+    whose statistics exclude ``pred`` are skipped. Columns a part lacks (an
+    older layout) are left out of that part's rows."""
+    frames = [
+        d.to_table(columns=[c for c in columns if c in d.schema.names], filter=pred)
+        .to_pandas()
+        for d in table_datasets(paths)
+    ]
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
 class IndexReader:
@@ -32,7 +68,7 @@ class IndexReader:
         self._tables: dict[str, DataFrame] = {}
         self._vocab_cache: dict[str, tuple | None] = {}
         self._vocab_sorted_cache: dict[str, tuple | None] = {}
-        self._docs_datasets: list | None = None  # pyarrow datasets, fetch_docs
+        self._norms_summary: pd.DataFrame | None = None
 
     # ------------------------------------------------------------- fields
     @property
@@ -81,36 +117,25 @@ class IndexReader:
     ) -> pd.DataFrame:
         """Stored columns of the given (segment_id, doc_id) docs, read on the
         driver with pyarrow — no Spark job (the reference reads stored values
-        by doc id from the open reader, index-search.cpp:676-748). The docs
-        parquet paths are opened once per reader; the per-segment
-        ``segment_id == s AND doc_id IN (...)`` filter prunes files and row
-        groups by their statistics, so a top-k fetch reads only the touched
-        segments' parts. Returns (segment_id, doc_id, *columns) in no
-        particular order; pairs not in the table are absent."""
-        import pyarrow.dataset as pads
-
-        if self._docs_datasets is None:
-            v = self.meta["tables"]["docs"]
-            self._docs_datasets = [
-                pads.dataset(p.removeprefix("file:"), format="parquet")
-                for p in (v if isinstance(v, list) else [v])
-            ]
+        by doc id from the open reader, index-search.cpp:676-748). The
+        per-segment ``segment_id == s AND doc_id IN (...)`` filter prunes
+        files and row groups by their statistics, so a top-k fetch reads only
+        the touched segments' parts. Returns (segment_id, doc_id, *columns)
+        in no particular order; pairs not in the table are absent."""
         want = pd.DataFrame(
             {"segment_id": np.asarray(segment_ids, np.int64),
              "doc_id": np.asarray(doc_ids, np.int64)}
         )
-        cols = ["segment_id", "doc_id", *columns]
         pred = None
         for sid, grp in want.groupby("segment_id"):
-            p = (pads.field("segment_id") == int(sid)) & pads.field("doc_id").isin(
+            p = (pc.field("segment_id") == int(sid)) & pc.field("doc_id").isin(
                 grp["doc_id"].to_numpy()
             )
             pred = p if pred is None else pred | p
         if pred is None:
             return want.assign(**{c: pd.Series([], dtype=object) for c in columns})
-        return pd.concat(
-            [d.to_table(columns=cols, filter=pred).to_pandas() for d in self._docs_datasets],
-            ignore_index=True,
+        return read_frame(
+            self.meta["tables"]["docs"], ["segment_id", "doc_id", *columns], pred
         )
 
     def postings(self) -> DataFrame:
@@ -251,11 +276,9 @@ class IndexReader:
             return docs
         return docs.join(dels, ["segment_id", "doc_id"], "left_anti")
 
-    def norms(self, field: str | None = None, all_fields: bool = False) -> DataFrame:
-        """Per-segment chunked Norm2 rows. ``field`` scopes to one field's doc
-        lengths (the default field when None); ``all_fields=True`` returns
-        every field's rows (the mixed-field kernel path builds a per-field
-        norms map from them)."""
+    def norms(self, field: str | None = None) -> DataFrame:
+        """Per-segment chunked Norm2 rows of one field's doc lengths (the
+        default field when None)."""
         df = self._table("norms")
         keep = [
             c
@@ -266,16 +289,8 @@ class IndexReader:
             if c in df.columns
         ]
         out = df.select(*keep)
-        if not all_fields and "field" in out.columns and self.is_multifield:
+        if "field" in out.columns and self.is_multifield:
             out = out.where(F.col("field") == self._resolve_field(field))
-        dels = self.deletes()
-        if dels is not None:
-            # per-segment sorted delete arrays ride the norms side into the
-            # scoring kernels (the in-memory document_mask analogue)
-            agg = dels.groupBy("segment_id").agg(
-                F.sort_array(F.collect_list("doc_id")).alias("del_ids")
-            )
-            out = out.join(F.broadcast(agg), "segment_id", "left")
         return out
 
     def field_stats(self, field: str | None = None) -> dict:
@@ -291,13 +306,9 @@ class IndexReader:
                 n = int(row["docs_with_field"])
                 ttf = int(row["total_term_freq"])
             else:
-                nt = self._table("norms")
-                sel = nt
-                if "field" in nt.columns:
-                    sel = nt.where(F.col("field") == fname)
-                rows = sel.select("docs_with_field", "sum_len").collect()
-                n = sum(int(r["docs_with_field"]) for r in rows)
-                ttf = sum(int(r["sum_len"]) for r in rows)
+                rows = self._norms_rows(fname)
+                n = int(rows["docs_with_field"].sum())
+                ttf = int(rows["sum_len"].sum())
             self._field_stats[fname] = {
                 "docs_with_field": n,
                 "total_term_freq": ttf,
@@ -391,14 +402,22 @@ class IndexReader:
             [vbyte_decode(r["doc_len_enc"]).astype(np.int64) for r in rows]
         ) if rows else np.empty(0, np.int64)
 
+    def _norms_rows(self, field: str) -> pd.DataFrame:
+        """One field's per-chunk norms counters (segment_id, docs_count,
+        docs_with_field, sum_len), read once per reader with pyarrow — the
+        whole-table summary is a few numbers per segment chunk."""
+        if self._norms_summary is None:
+            self._norms_summary = read_frame(
+                self.meta["tables"]["norms"],
+                ["field", "segment_id", "docs_count", "docs_with_field", "sum_len"],
+            )
+        ns = self._norms_summary
+        return ns[ns["field"] == field] if "field" in ns.columns else ns
+
     def segment_docs_counts(self) -> dict[int, int]:
-        """segment_id → live+masked doc count (sums the default field's norm
-        chunk rows — every field covers the same docs)."""
-        nt = self._table("norms")
-        sel = nt
-        if "field" in nt.columns:
-            sel = nt.where(F.col("field") == self.default_field)
-        rows = (
-            sel.groupBy("segment_id").agg(F.sum("docs_count").alias("n")).collect()
-        )
-        return {int(r["segment_id"]): int(r["n"]) for r in rows}
+        """segment_id → live+masked doc count of every live segment (sums the
+        default field's norm chunk rows — every field covers the same docs).
+        No Spark job."""
+        rows = self._norms_rows(self.default_field)
+        counts = rows.groupby("segment_id")["docs_count"].sum()
+        return {int(sid): int(n) for sid, n in counts.items()}

@@ -5,9 +5,12 @@ The reference lifecycle (SURVEY.md §3.2) maps as:
 * ``prepare`` — :func:`compile_plan`: expand multiterm leaves against the
   ``term_dict`` table (pruned scans), collect global stats (field_stats +
   per-term df) once, bake per-term idf into the plan (collectors.cpp analogue).
-* ``execute`` — one ``cogroup(postings_q, norms).applyInPandas`` pass: each
-  segment's kernel decodes only the needed posting lists (VByte blocks), runs
-  the boolean algebra vectorized in numpy (conjunction = sorted-array
+* ``execute`` — one shuffle-free Spark job (:meth:`Searcher._segment_job`):
+  ``range(P).mapInArrow`` with the live segments packed into P tasks; each
+  task reads its own segments' postings, norms and deletes from the index
+  parquet with pyarrow (the per-segment reader of segment_reader.hpp:35-110).
+  Each segment's kernel decodes only the needed posting lists (VByte blocks),
+  runs the boolean algebra vectorized in numpy (conjunction = sorted-array
   intersection ≙ conjunction.hpp; disjunction = unique+bincount ≙
   disjunction.hpp; exclusion ≙ exclusion.hpp), scores BM25, and emits its local
   top-k under (score desc, doc_id asc).
@@ -34,16 +37,16 @@ All bounds are conservative (most favorable norm, strict comparisons), so
 results stay rank-identical to the unpruned evaluation.
 
 ``Searcher.search_many`` evaluates a BATCH of queries in one distributed pass:
-postings for the union of all query terms are scanned once per segment, each
-plan is pruned independently in-kernel, and a single window takes the global
-per-query top-k. This amortizes job/scan overhead across queries — the shape
+postings for the union of all query terms are read once per segment, each
+plan is pruned independently in-kernel, and the driver merges the per-query
+top-k. This amortizes job/scan overhead across queries — the shape
 batched query serving takes on a real cluster.
 
-Scale notes: stats collects are O(#query terms); the postings scan is pruned
-by parquet min/max stats over the (field, term)-sorted range layout (field
-equality plus exact, prefix and range term predicates all push down);
-per-segment kernels are independent tasks; the only driver-side data is
-#segments × #queries × k candidate rows.
+Scale notes: stats collects are O(#query terms); each task's postings read
+is pruned by parquet min/max stats over the (field, term)-sorted range layout
+(field equality plus exact, prefix, range and wildcard-prefix term ranges all
+prune row groups); per-segment kernels are independent; the only driver-side
+data is #segments × #queries × k candidate rows.
 
 Multi-field: every filter leaf resolves a field (None → index default) with
 its OWN df/doc-length/avgdl stats (per-field collectors, bm25.cpp:204-276).
@@ -58,14 +61,18 @@ from __future__ import annotations
 
 import dataclasses as _dataclasses
 import functools as _functools
+import heapq as _heapq
 import os
 from dataclasses import dataclass, field as _dc_field
 from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as _T
 
 from ..index.builder import FIELD_SEP
 from ..index.codec import (
@@ -74,7 +81,7 @@ from ..index.codec import (
     decode_positions,
     vbyte_decode,
 )
-from ..index.reader import IndexReader
+from ..index.reader import IndexReader, read_frame
 from . import filters as flt
 from .bm25 import (
     B_DEFAULT,
@@ -370,15 +377,6 @@ def spec_pred(spec: tuple):
     raise ValueError(f"bad spec {spec}")
 
 
-def specs_pred(specs) -> "F.Column | None":
-    """OR of spec predicates (None when no specs)."""
-    pred = None
-    for s in specs:
-        p = spec_pred(s)
-        pred = p if pred is None else (pred | p)
-    return pred
-
-
 @_functools.lru_cache(maxsize=256)
 def _like_regex(pattern: str):
     """Python twin of Spark SQL ``LIKE``: ``%``/``_`` wildcards, backslash
@@ -449,6 +447,80 @@ def _prefix_block(terms_a: np.ndarray, p: str) -> tuple[int, int]:
     succ = _prefix_successor(p)
     hi = len(terms_a) if succ is None else int(np.searchsorted(terms_a, succ, side="left"))
     return lo, hi
+
+
+def _terms_filter(terms: list[str]) -> pc.Expression:
+    """pyarrow twin of :meth:`IndexReader._bare_term_pred`: the min/max range
+    (prunable from row-group statistics) AND'd with the exact set."""
+    ts = sorted(terms)
+    t = pc.field("term")
+    return (t >= ts[0]) & (t <= ts[-1]) & t.isin(ts)
+
+
+def spec_filter(spec: tuple) -> pc.Expression:
+    """pyarrow filter for a tail spec, read by the segment tasks. Prefix and
+    range specs select exactly the terms :func:`spec_match` accepts, as term
+    ranges that row-group statistics prune (a prefix is
+    ``[p, _prefix_successor(p))``). A wildcard is its literal-prefix range
+    AND'd with ``match_like``: a superset of :func:`spec_match`, which the
+    kernels apply to the rows read."""
+    t = pc.field("term")
+    kind = spec[0]
+    if kind == "prefix":
+        succ = _prefix_successor(spec[1])
+        return t >= spec[1] if succ is None else (t >= spec[1]) & (t < succ)
+    if kind == "range":
+        _, lo, hi, il, ih = spec
+        pred = pc.scalar(True)
+        if lo is not None:
+            pred = pred & (t >= lo if il else t > lo)
+        if hi is not None:
+            pred = pred & (t <= hi if ih else t < hi)
+        return pred
+    if kind == "wildcard":
+        pat = spec[1]
+        cut = min((i for i, c in enumerate(pat) if c in "%_\\"), default=len(pat))
+        return spec_filter(("prefix", pat[:cut])) & pc.match_like(t, pat)
+    raise ValueError(f"bad spec {spec}")
+
+
+def scan_reads(scan: ScanSpec, multifield: bool) -> list[tuple[pc.Expression, bool]]:
+    """The compiled batch's postings reads as ``(pyarrow filter,
+    with_positions)`` pairs; empty when nothing is scanned. The rows are,
+    per field, the exact terms OR the field's tail specs, AND'd with the
+    field equality on multi-field indexes (the layout is sorted by
+    (field, term), so both reach row-group statistics). ``pos_enc`` is read
+    only for the phrase slots' terms: when other rows exist too, they are a
+    second read without it, so one phrase in a large batch does not drag
+    every other term's (typically largest) position stream."""
+
+    def per_field(terms_of, with_specs: bool):
+        pred = None
+        for f in scan.fields:
+            terms = terms_of.get(f, [])
+            p = _terms_filter(terms) if terms else None
+            for spec in scan.field_specs.get(f, []) if with_specs else ():
+                p = spec_filter(spec) if p is None else p | spec_filter(spec)
+            if p is None:
+                continue
+            if multifield:
+                p = (pc.field("field") == f) & p
+            pred = p if pred is None else pred | p
+        return pred
+
+    rows = per_field(scan.field_terms, True)
+    if rows is None:
+        return []
+    positional = per_field(scan.pos_terms, False) if scan.need_positions else None
+    if positional is None:
+        return [(rows, False)]
+    every_row = not any(scan.field_specs.values()) and all(
+        set(scan.pos_terms.get(f, [])) == set(scan.field_terms.get(f, []))
+        for f in scan.fields
+    )
+    if every_row:
+        return [(rows, True)]
+    return [(positional, True), (rows & ~positional, False)]
 
 
 def _vocab_expand(reader: IndexReader, fname: str, spec: tuple, limit: int):
@@ -610,8 +682,10 @@ def expand_multiterm(
             if not keep.any():
                 return [], None
             kt, kd, kdf = cand_terms[keep], d[keep], df_a[idx][keep]
-            lens = np.minimum(
-                np.fromiter((len(t) for t in kt), np.int64, len(kt)), qlen_full
+            # an empty vocabulary term would make the length 0: clamp to 1
+            lens = np.maximum(
+                np.minimum(np.fromiter((len(t) for t in kt), np.int64, len(kt)), qlen_full),
+                1,
             )
             fboost = 1.0 - kd / lens.astype(np.float64)
             # sort by (fboost desc, term desc): lexsort is stable, keys last-major
@@ -654,8 +728,9 @@ def expand_multiterm(
                 "fboost",
                 F.lit(1.0)
                 - F.col("dist")
-                / F.least(
-                    F.length("term"), F.lit(max(1, len(pfx) + len(q)))
+                / F.greatest(
+                    F.least(F.length("term"), F.lit(max(1, len(pfx) + len(q)))),
+                    F.lit(1),
                 ).cast("double"),
             )
             .orderBy(F.desc("fboost"), F.desc("term"))
@@ -849,7 +924,8 @@ def compile_plans(
                 members.append(
                     (scan.key(f, t), model.term_const(df, n_by_field[f], dt), tb)
                 )
-            if tail_spec is not None:
+            # one spec per field, however many nodes repeat it
+            if tail_spec is not None and tail_spec not in scan.field_specs.get(f, []):
                 scan.field_specs.setdefault(f, []).append(tail_spec)
             return {
                 "op": "mterm",
@@ -1758,17 +1834,99 @@ def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> pd.DataFra
 # --------------------------------------------------------------------------
 
 
-# Spark HashPartitioning hash replica + collision-free partition-count scan
-# (pytest asserts parity with F.hash) — shared with the index builder's
-# segment invert job, which has the same one-kernel-per-task placement need.
-from ..partition import (  # noqa: E402
-    collision_free_partition_count as _collision_free_partition_count,
-    segment_routing_keys as _segment_routing_keys,
-    spark_murmur3_int32 as _spark_murmur3_int32,
-)
+def pack_segments(counts: dict[int, int], p: int) -> list[list[int]]:
+    """Live segments (``segment_id → docs_count``) packed into ``p`` task
+    groups: largest segment first, each into the group holding the fewest
+    docs so far (greedy longest-processing-time scheduling). Every segment
+    lands in exactly one group; empty groups are dropped; members are sorted
+    by segment id."""
+    heap = [(0, g) for g in range(p)]
+    groups: list[list[int]] = [[] for _ in range(p)]
+    for sid, n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
+        load, g = _heapq.heappop(heap)
+        groups[g].append(sid)
+        _heapq.heappush(heap, (load + n, g))
+    return [sorted(g) for g in groups if g]
 
-#: sentinel for Searcher._routing "not built yet" (None means "fall back")
-_ROUTING_UNSET = object()
+
+_POSTINGS_COLS = [
+    "segment_id", "field", "term", "doc_ids_enc", "freqs_enc", "block_last_doc",
+    "block_doc_off", "block_freq_off", "block_max_freq", "docs_count", "max_freq",
+]
+_NORMS_COLS = ["field", "segment_id", "chunk_id", "docs_count", "doc_len_enc", "min_len"]
+_TYPES = {
+    "int": (pa.int32(), _T.IntegerType()), "long": (pa.int64(), _T.LongType()),
+    "double": (pa.float64(), _T.DoubleType()), "string": (pa.string(), _T.StringType()),
+}
+
+
+@_functools.lru_cache(maxsize=None)
+def _schemas(ddl: str) -> tuple[pa.Schema, "_T.StructType"]:
+    """(pyarrow, Spark) schemas of a flat ``name type, ...`` kernel output
+    schema, built without a JVM round trip."""
+    cols = [c.split() for c in ddl.split(",")]
+    return (
+        pa.schema([(n, _TYPES[t][0]) for n, t in cols]),
+        _T.StructType([_T.StructField(n, _TYPES[t][1]) for n, t in cols]),
+    )
+
+
+def _segment_frames(
+    sids: list[int], tables: dict, reads, mixed: bool, norms_pred
+) -> dict[int, tuple[pd.DataFrame, pd.DataFrame]]:
+    """``segment_id → (postings rows, norms rows)`` for one task's segments,
+    read with pyarrow. Postings rows are the ``reads`` (see
+    :func:`scan_reads`), keyed ``field\\x1fterm`` on mixed-field scans; a
+    segment with deletes gets its sorted deleted doc ids as a ``del_ids``
+    column on its norms rows (the document_mask, segment_reader.hpp:92-93)."""
+    seg = pc.field("segment_id").isin(sids)
+    cols = [c for c in _POSTINGS_COLS if c != "field" or mixed]
+    any_pos = any(pos for _, pos in reads)
+    parts = []
+    for pred, pos in reads:
+        part = read_frame(tables["postings"], cols + ["pos_enc"] * pos, pred & seg)
+        parts.append(part if pos or not any_pos else part.assign(pos_enc=None))
+    if not parts:
+        post = pd.DataFrame(columns=cols)
+    else:
+        post = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+    if mixed and len(post):
+        post["term"] = post["field"] + FIELD_SEP + post["term"]
+    norms = read_frame(
+        tables["norms"], _NORMS_COLS, seg if norms_pred is None else norms_pred & seg
+    )
+    dels = {}
+    if "deletes" in tables:
+        d = read_frame(tables["deletes"], ["segment_id", "doc_id"], seg)
+        dels = {
+            sid: np.sort(g["doc_id"].to_numpy(np.int64)) for sid, g in d.groupby("segment_id")
+        }
+    post_of = dict(tuple(post.groupby("segment_id"))) if len(post) else {}
+    norms_of = dict(tuple(norms.groupby("segment_id")))
+    out = {}
+    for sid in sids:
+        n = norms_of.get(sid, norms.iloc[:0])
+        if sid in dels:
+            n = n.assign(del_ids=[dels[sid]] * len(n))
+        out[sid] = (post_of.get(sid, post.iloc[:0]), n)
+    return out
+
+
+def _segment_task(groups, tables, reads, mixed, norms_pred, kernel, schema: pa.Schema):
+    """The ``mapInArrow`` body of :meth:`Searcher._segment_job`: for each
+    group id arriving in the input, run ``kernel(postings, norms)`` over each
+    of that group's segments and emit its rows."""
+
+    def run(batches):
+        for batch in batches:
+            for gid in batch.column(0).to_pylist():
+                frames = _segment_frames(groups[gid], tables, reads, mixed, norms_pred)
+                for post_pdf, norm_pdf in frames.values():
+                    out = kernel(post_pdf, norm_pdf)
+                    if len(out):
+                        yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+
+    return run
 
 
 class Searcher:
@@ -1806,125 +1964,54 @@ class Searcher:
         if phrase_scoring not in ("exact_df", "sum_of_terms"):
             raise ValueError(f"unknown phrase_scoring {phrase_scoring!r}")
         self.phrase_scoring = phrase_scoring
-        self._part_n: int | None = None  # collision-free segment partitioning
-        self._routing = _ROUTING_UNSET  # (map expr, n) | None, lazily built
-        self._norms_parts: dict = {}  # field-set -> persisted routed norms
+        self._groups: list[list[int]] | None = None  # segment task groups
 
-    def _segment_ids(self) -> list[int]:
-        """Superset of live segment ids (cheap, no Spark job on current meta)."""
-        nsi = self.reader.meta.get("next_segment_id")
-        if nsi is not None:
-            return list(range(max(1, int(nsi))))
-        # Legacy meta (pre-next_segment_id): a consolidated index can hold
-        # live ids ≥ num_segments (e.g. {0, 4} with num_segments=2), so
-        # range(num_segments) would NOT cover them. Read the real live ids
-        # once (tiny norms collect, cached for the Searcher's lifetime).
-        return sorted(self.reader.segment_docs_counts()) or [0]
+    def _segment_groups(self) -> list[list[int]]:
+        """The live segments packed into ``P = min(#live,
+        defaultParallelism)`` task groups (:func:`pack_segments`); read once
+        per Searcher from the norms table, no Spark job."""
+        if self._groups is None:
+            counts = self.reader.segment_docs_counts()
+            p = min(len(counts), self.reader.spark.sparkContext.defaultParallelism)
+            self._groups = pack_segments(counts, p)
+        return self._groups
 
-    #: above this many segments the routing map literal starts to weigh on
-    #: every plan (2 literals per segment); fall back to the modulus scheme
-    ROUTED_MAX_SEGMENTS = int(os.environ.get("IRS_ROUTED_MAX_SEGMENTS", "1024"))
+    def _segment_job(
+        self, kernel, scan: ScanSpec, schema: str, norms_field: str | None = None
+    ) -> DataFrame:
+        """ONE shuffle-free Spark job running ``kernel(postings_pdf,
+        norms_pdf)`` once per live segment → ``schema`` rows.
 
-    def _seg_routing(self):
-        """Zero-empty-task placement: ``(route map expr, n)`` or None.
-
-        See :func:`iresearch_spark.partition.segment_routing_keys` — each
-        segment id gets a substitute routing int whose murmur3 lands in its
-        own bucket with EXACTLY n partitions, so every kernel stage runs one
-        task per segment and nothing else (the collision-free-modulus scheme
-        needed 250 partitions for 32 segments — 218 empty tasks per query,
-        measured ~130 ms of the interactive floor at local[32])."""
-        if self._routing is _ROUTING_UNSET:
-            ids = self._segment_ids()
-            routed = None
-            if len(ids) <= self.ROUTED_MAX_SEGMENTS:
-                rk = _segment_routing_keys(ids)
-                if rk is not None:
-                    keys, n = rk
-                    mapping = F.create_map(
-                        *[F.lit(x) for kv in keys.items() for x in kv]
-                    )
-                    routed = (mapping, n)
-            self._routing = routed
-        return self._routing
-
-    def _seg_groupkey(self) -> str:
-        """Cogroup key matched to the placement: the route column when routed
-        (grouping by segment_id over a route-partitioned child would fail
-        Catalyst's clustered-distribution check and re-exchange), else the
-        raw segment_id."""
-        return "segment_id" if self._seg_routing() is None else "__seg_route"
-
-    def _seg_norms(self, norms: DataFrame, key) -> DataFrame:
-        """Seg-partitioned norms, PERSISTED and cached per field-set key for
-        the Searcher's lifetime — the BM25 working set, held hot exactly as
-        the reference keeps norms in memory per open reader
-        (segment_reader.hpp:35-110). Norms depend only on the immutable
-        index snapshot and the referenced field set, never on the query, so
-        every search after the first skips the norms scan + exchange
-        entirely (one shuffle stage less per interactive query).
-        ``key`` must pin the field selection (("ctx", fields, mixed) or
-        ("field", f)). Release with :meth:`unpersist`."""
-        ent = self._norms_parts.get(key)
-        if ent is None:
-            ent = self._seg_partitioned(norms).persist()
-            self._norms_parts[key] = ent
-        return ent
-
-    @staticmethod
-    def _norms_key(scan: ScanSpec):
-        return ("ctx", tuple(scan.fields), scan.mixed)
+        ``range(P).mapInArrow``: task i reads group i's segments (see
+        :meth:`_segment_groups`) straight from the committed generation's
+        parquet with pyarrow — postings rows selected by ``scan``
+        (:func:`scan_reads`), norms rows of ``norms_field`` (else the scan's
+        fields, else the default field) and the delete mask — then calls the
+        kernel per segment, the reference's per-segment reader loop
+        (segment_reader.hpp:35-110). Nothing is redistributed and nothing is
+        cached in Spark; the plan is one Range → MapInArrow node."""
+        reader = self.reader
+        groups = self._segment_groups()
+        if not groups:
+            return reader.spark.createDataFrame([], schema)
+        fields = [norms_field] if norms_field is not None else scan.fields or [reader.default_field]
+        norms_pred = pc.field("field").isin(fields) if reader.is_multifield else None
+        tables = {
+            t: reader.meta["tables"][t]
+            for t in ("postings", "norms", "deletes") if t in reader.meta["tables"]
+        }
+        arrow_schema, spark_schema = _schemas(schema)
+        task = _segment_task(
+            groups, tables, scan_reads(scan, reader.is_multifield), scan.mixed,
+            norms_pred, kernel, arrow_schema,
+        )
+        return reader.spark.range(len(groups), numPartitions=len(groups)).mapInArrow(
+            task, spark_schema
+        )
 
     def unpersist(self) -> None:
-        """Release the cached norms partitions (idempotent)."""
-        for df in self._norms_parts.values():
-            df.unpersist()
-        self._norms_parts.clear()
-
-    def _seg_partition_count(self) -> int:
-        """Smallest partition count that hash-places every POSSIBLE segment
-        id in its own bucket (collision-free by construction).
-
-        Hash partitioning with a fixed over-provision factor still collides
-        (8 segments → a [2,1,1,1,1,1,1] bucket occupancy, measured): the
-        collided task runs two segments' kernels SERIALLY while other cores
-        idle — doubling the stage critical path at high parallelism, the
-        dominant N→4N scaling loss for batch serving. Spark's
-        ``repartition(n, col)`` routes by ``pmod(murmur3(col), n)``;
-        :func:`_spark_murmur3_int32` replicates that hash exactly (pytest
-        asserts parity with ``F.hash``), so scanning n upward finds a count
-        where all ids land 1:1 — exactly one segment per task, the
-        reference's per-segment execute loop in parallel, with no sampling
-        (range partitioning samples rows and merges small segments
-        nondeterministically) and no extra jobs."""
-        if self._part_n is None:
-            self._part_n = _collision_free_partition_count(self._segment_ids())
-        return self._part_n
-
-    def _seg_partitioned(self, df: DataFrame) -> DataFrame:
-        """Explicit one-kernel-per-task placement before the cogroup kernels.
-        Without an explicit repartition, AQE sees a tiny shuffle (the encoded
-        postings are a few MB) and coalesces to ~1 partition — which
-        serializes the CPU-heavy per-segment kernels.
-
-        Routed scheme (default, :meth:`_seg_routing`): a ``__seg_route``
-        column maps each segment id to a routing int placed alone in its own
-        bucket at EXACTLY n partitions — one task per segment, zero empty
-        tasks. Unknown ids (defensive; the id set is a superset by
-        construction) fall through to a distinct out-of-band key so two
-        segments can never share a group. Fallback scheme: hash partitioning
-        on segment_id with a collision-free modulus
-        (see :meth:`_seg_partition_count`)."""
-        routing = self._seg_routing()
-        if routing is None:
-            return df.repartition(self._seg_partition_count(), "segment_id")
-        mapping, n = routing
-        # try_element_at: NULL (not an ANSI error) on a key outside the map
-        route = F.coalesce(
-            F.try_element_at(mapping, F.col("segment_id").cast("int")),
-            F.col("segment_id") + F.lit(1 << 20),
-        )
-        return df.withColumn("__seg_route", route).repartition(n, "__seg_route")
+        """No-op, kept for callers: a Searcher caches nothing in Spark (each
+        search's segment tasks read the index parquet directly)."""
 
     def search(
         self,
@@ -2039,8 +2126,7 @@ class Searcher:
             return spark.createDataFrame([], KERNEL_OUT_SCHEMA)
         model = self.model
         dt = np.float32 if dtype == "float32" else np.float64
-        pq = self._batch_postings(scan, with_pos=scan.need_positions)
-        norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
+        mixed, avgdl, avg_map = self._norms_ctx(scan)
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(norm_pdf) == 0:
@@ -2062,12 +2148,7 @@ class Searcher:
                 }
             )
 
-        return (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, self._norms_key(scan)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
+        return self._segment_job(kernel, scan, KERNEL_OUT_SCHEMA)
 
     # ------------------------------------------------------------- batched
     def prepare(
@@ -2110,90 +2191,15 @@ class Searcher:
         return self.prepare(queries, dtype).execute(k)
 
     def _norms_ctx(self, scan: ScanSpec):
-        """(norms_df, mixed, default avgdl, avgdl-by-field) for a compiled
-        batch. Single-field batches get that field's norms rows only (the
-        field clause pushes down with the parquet scan); mixed batches carry
-        every referenced field's rows and the kernels build a per-field map."""
+        """(mixed, default avgdl, avgdl-by-field) for a compiled batch. Mixed
+        batches read every referenced field's norms rows and the kernels
+        build a per-field map."""
         flds = scan.fields
         if scan.mixed:
-            norms = self.reader.norms(all_fields=True).where(F.col("field").isin(flds))
             avg_map = {f: self.reader.field_stats(f)["avgdl"] for f in flds}
-            return norms, True, avg_map[flds[0]], avg_map
+            return True, avg_map[flds[0]], avg_map
         f = flds[0] if flds else None
-        return self.reader.norms(field=f), False, self.reader.field_stats(f)["avgdl"], None
-
-    def _batch_postings(self, scan: ScanSpec, with_pos: bool = False) -> DataFrame:
-        """Union pruned postings scan for a compiled batch: per field, the
-        (range + In) term predicate OR the field's pushable tail specs, AND'd
-        with the field equality (multi-field layout is sorted by
-        (field, term), so both clauses reach parquet row-group stats); fields
-        OR together into ONE scan. Mixed batches key rows by the composite
-        ``field\\x1fterm`` so every kernel lookup stays a dict hit."""
-        reader = self.reader
-        pred = None
-        for f in scan.fields:
-            terms = scan.field_terms.get(f, [])
-            specs = scan.field_specs.get(f, [])
-            p = IndexReader._bare_term_pred(sorted(terms)) if terms else None
-            sp = specs_pred(specs)
-            if sp is not None:
-                p = sp if p is None else (p | sp)
-            if p is None:
-                continue
-            clause = reader._field_clause(f)
-            if clause is not None:
-                p = clause & p
-            pred = p if pred is None else (pred | p)
-        term_col = (
-            F.concat_ws(FIELD_SEP, F.col("field"), F.col("term")).alias("term")
-            if scan.mixed
-            else F.col("term")
-        )
-
-        def select_cols(df: DataFrame, pos_col):
-            return df.select(
-                F.col("segment_id"),
-                term_col,
-                F.col("doc_ids_enc"),
-                F.col("freqs_enc"),
-                *([pos_col.alias("pos_enc")] if pos_col is not None else []),
-                F.col("block_last_doc"),
-                F.col("block_doc_off"),
-                F.col("block_freq_off"),
-                F.col("block_max_freq"),
-                F.col("docs_count"),
-                F.col("max_freq"),
-            )
-
-        base = reader.postings()
-        full = base.where(pred if pred is not None else F.lit(False))
-        if not with_pos:
-            return select_cols(full, None)
-        # positional-subset predicate: only the phrase slots' terms
-        pos_pred = None
-        split = False
-        for f in scan.fields:
-            pos_set = set(scan.pos_terms.get(f, []))
-            if pos_set != set(scan.field_terms.get(f, [])) or scan.field_specs.get(f):
-                split = True  # some non-positional rows exist in this field
-            if not pos_set:
-                continue
-            p = IndexReader._bare_term_pred(sorted(pos_set))
-            clause = reader._field_clause(f)
-            if clause is not None:
-                p = clause & p
-            pos_pred = p if pos_pred is None else (pos_pred | p)
-        if pos_pred is None:  # positions requested but no positional terms
-            return select_cols(full, None)
-        if not split:  # every scanned term is positional: one scan
-            return select_cols(full, F.col("pos_enc"))
-        # split scan: position bytes ONLY for the phrase slots' rows — the
-        # rest of the batch's (typically largest) stream stays unread
-        scan_pos = select_cols(base.where(pos_pred), F.col("pos_enc"))
-        scan_rest = select_cols(
-            full.where(~pos_pred), F.lit(None).cast("binary")
-        )
-        return scan_pos.unionByName(scan_rest)
+        return False, self.reader.field_stats(f)["avgdl"], None
 
     def _execute_batch(
         self,
@@ -2201,9 +2207,7 @@ class Searcher:
         scan: ScanSpec,
         k: int,
         dtype: str,
-        pq: DataFrame | None = None,
         b_plans=None,
-        norms_ctx=None,
         to_driver: bool = False,
     ):
         """Per-query top-k of a compiled batch: (query, segment_id, doc_id,
@@ -2216,15 +2220,7 @@ class Searcher:
             empty = _NO_HITS.assign(query=pd.Series([], dtype=object))
             return empty if to_driver else spark.createDataFrame([], BATCH_OUT_SCHEMA)
 
-        if pq is None:
-            pq = self._seg_partitioned(
-                self._batch_postings(scan, with_pos=scan.need_positions)
-            )
-        if norms_ctx is None:
-            norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
-            norms = self._seg_norms(norms, self._norms_key(scan))
-        else:
-            norms, mixed, avgdl, avg_map = norms_ctx
+        mixed, avgdl, avg_map = self._norms_ctx(scan)
         # large batches ship the plan list as a BROADCAST (PreparedBatch
         # caches one across executes): a 1000-plan dict pickled into every
         # task binary costs seconds of serialize/deserialize per stage. A
@@ -2263,11 +2259,7 @@ class Searcher:
                     )
             return pd.concat(frames, ignore_index=True) if frames else empty
 
-        local = (
-            pq.groupBy(self._seg_groupkey())
-            .cogroup(norms.groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, BATCH_OUT_SCHEMA)
-        )
+        local = self._segment_job(kernel, scan, BATCH_OUT_SCHEMA)
         n_segments = int(self.reader.meta.get("num_segments", 1))
         if n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
             # driver-side merge — the reference's own top-k heap loop
@@ -2545,13 +2537,8 @@ class Searcher:
         min_match = max(1, int(math.ceil(node.threshold * n_total)))
         boost = float(node.boost)
         uniq = sorted(set(ngrams))
-        fname = getattr(node, "field", None)
-        pq = self.reader.postings_for_terms(uniq, field=fname).select(
-            "segment_id", "term", "doc_ids_enc", "freqs_enc", "pos_enc",
-            "block_last_doc", "block_doc_off", "block_freq_off",
-            "block_max_freq", "docs_count", "max_freq",
-        )
-        norms = self.reader.norms(field=fname)
+        fname = self.reader._resolve_field(getattr(node, "field", None))
+        scan = ScanSpec({fname: uniq}, need_positions=True, pos_terms={fname: uniq})
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
             empty = pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
@@ -2627,12 +2614,7 @@ class Searcher:
                 }
             )
 
-        return (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, ("field", fname)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
+        return self._segment_job(kernel, scan, KERNEL_OUT_SCHEMA)
 
     def _sidecar_targets(
         self,
@@ -2864,6 +2846,28 @@ class Searcher:
                 slots.append([e[0] for e in expanded])
         return slots
 
+    def _phrase_scan(
+        self, terms: list, field: str | None, slot_fields: list[str] | None
+    ) -> tuple[ScanSpec, list[list[str]], str]:
+        """(positional postings scan, per-slot kernel keys, norms field) of a
+        phrase. Cross-field slots (``slot_fields``) read each field's terms
+        and key them ``field\\x1fterm`` when the slots span fields; their
+        norms are the first slot's field's."""
+        if slot_fields is not None:
+            slots = [[t] if isinstance(t, str) else list(t) for t in terms]
+            by_field: dict[str, set] = {}
+            for f, slot in zip(slot_fields, slots):
+                by_field.setdefault(f, set()).update(slot)
+            field_terms = {f: sorted(ts) for f, ts in by_field.items()}
+            scan = ScanSpec(field_terms, need_positions=True, pos_terms=field_terms)
+            keys = [[scan.key(f, t) for t in slot] for f, slot in zip(slot_fields, slots)]
+            return scan, keys, slot_fields[0]
+        field = self.reader._resolve_field(field)
+        slots = self._expand_slots(list(terms), field=field)
+        flat = sorted({t for slot in slots for t in slot})
+        scan = ScanSpec({field: flat}, need_positions=True, pos_terms={field: flat})
+        return scan, [list(s) for s in slots], field
+
     def phrase_matches(
         self,
         terms: list,
@@ -2901,46 +2905,7 @@ class Searcher:
         phrase scorer needs without ever shuffling the full match set."""
         if shifts is None:
             shifts = list(range(len(terms)))
-        _PQ_COLS = [
-            "segment_id",
-            "term",
-            "doc_ids_enc",
-            "freqs_enc",
-            "pos_enc",
-            "block_last_doc",
-            "block_doc_off",
-            "block_freq_off",
-            "block_max_freq",
-            "docs_count",
-            "max_freq",
-        ]
-        if slot_fields is not None:
-            slots = [[t] if isinstance(t, str) else list(t) for t in terms]
-            by_field: dict[str, set] = {}
-            for f, slot in zip(slot_fields, slots):
-                by_field.setdefault(f, set()).update(slot)
-            pq = None
-            for f in sorted(by_field):
-                pq_f = (
-                    self.reader.postings_for_terms(sorted(by_field[f]), field=f)
-                    .select(*_PQ_COLS)
-                    .withColumn("term", F.concat(F.lit(f + FIELD_SEP), F.col("term")))
-                )
-                pq = pq_f if pq is None else pq.unionByName(pq_f)
-            slots = [
-                [f + FIELD_SEP + t for t in slot]
-                for f, slot in zip(slot_fields, slots)
-            ]
-            norms = self.reader.norms(field=slot_fields[0])
-            field = slot_fields[0]  # norms context tag below
-        else:
-            slots = self._expand_slots(list(terms), field=field)
-            flat_terms = sorted({t for slot in slots for t in slot})
-            pq = self.reader.postings_for_terms(flat_terms, field=field).select(
-                *_PQ_COLS
-            )
-            norms = self.reader.norms(field=field)
-        slot_list = [list(s) for s in slots]
+        scan, slot_list, field = self._phrase_scan(terms, field, slot_fields)
         shift_list = list(shifts)
         out_schema = MATCH_OUT_SCHEMA + (", seg_matches long" if local_k is not None else "")
 
@@ -2984,20 +2949,16 @@ class Searcher:
                 data["seg_matches"] = np.full(out_ids.size, seg_n, np.int64)
             return pd.DataFrame(data)
 
-        return (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, ("field", field)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, out_schema)
-        )
+        return self._segment_job(kernel, scan, out_schema, norms_field=field)
 
 
 class PreparedBatch:
     """A compiled query batch (``filter::prepared`` analogue): stats baked,
-    multiterm leaves expanded, and the pruned postings scan **persisted** on
-    first execute — the reference's per-segment seek-cookie / proxy_filter
-    caching (term_filter.cpp:40-66, proxy_filter.cpp:34-54): repeated
-    ``execute`` calls run only the scoring kernels over the cached postings."""
+    multiterm leaves expanded and the plan list broadcast once. Each
+    ``execute`` is one Spark job whose segment tasks re-read the batch's
+    postings and norms from the index parquet (:meth:`Searcher._segment_job`)
+    — nothing is persisted, so no other Searcher or batch can share or drop
+    this one's state."""
 
     def __init__(
         self,
@@ -3010,46 +2971,21 @@ class PreparedBatch:
         self.plans = plans
         self.scan = scan
         self.dtype = dtype
-        self._pq: DataFrame | None = None
-        self._norms_ctx = None  # persisted seg-partitioned norms + stats
         self._b_plans = None  # cached plan broadcast (reused across executes)
 
     def execute(self, k: int = 10) -> DataFrame:
-        """Per-execute fixed cost is what batch-serving scaling charges, so
-        everything reusable is cached here: the pruned postings scan and the
-        norms rows persist ALREADY seg-partitioned (cogroup's clustered-
-        distribution requirement is satisfied by the cached partitioning — no
-        per-execute exchange of the postings), and the compiled plan list is
-        broadcast once, not re-pickled per execute."""
+        """Per-query top-k of the batch, (query, segment_id, doc_id, score).
+        The compiled plan list is broadcast on the first call, not
+        re-pickled into every execute's tasks."""
         s = self._searcher
-        if self._pq is None and not self.scan.is_empty():
-            self._pq = s._seg_partitioned(
-                s._batch_postings(self.scan, with_pos=self.scan.need_positions)
-            ).persist()
-        if self._norms_ctx is None:
-            norms, mixed, avgdl, avg_map = s._norms_ctx(self.scan)
-            # the Searcher-level norms cache owns the persist (shared with
-            # interactive searches over the same field set)
-            self._norms_ctx = (
-                s._seg_norms(norms, s._norms_key(self.scan)), mixed, avgdl, avg_map
-            )
         if self._b_plans is None:
             self._b_plans = s.reader.spark.sparkContext.broadcast(
                 list(self.plans.items())
             )
-        return s._execute_batch(
-            self.plans, self.scan, k, self.dtype,
-            pq=self._pq, b_plans=self._b_plans, norms_ctx=self._norms_ctx,
-        )
+        return s._execute_batch(self.plans, self.scan, k, self.dtype, b_plans=self._b_plans)
 
     def unpersist(self) -> None:
-        if self._pq is not None:
-            self._pq.unpersist()
-            self._pq = None
-        if self._norms_ctx is not None:
-            # norms persist is owned by the Searcher's cache (shared across
-            # batches + interactive searches); released by Searcher.unpersist
-            self._norms_ctx = None
+        """Release the plan broadcast (idempotent)."""
         if self._b_plans is not None:
             self._b_plans.unpersist()
             self._b_plans = None

@@ -11,7 +11,8 @@ fetched from the docs table with pyarrow (``IndexReader.fetch_docs``).
   (doc_key, segment_id, doc_id) sequence, scores within rel 1e-12.
   Re-record with ``python -m tests.test_keyed_search --record`` (run from the
   repo root) when a scoring change is intended.
-* Job floor: a keyed Term search runs ≤ 2 Spark jobs, a keyed Phrase ≤ 3.
+* Job floor: a keyed Term search and a keyed Phrase search each run one
+  Spark job.
 * The driver merge and the Window fallback on either side of
   ``BATCH_MERGE_MAX`` return identical keyed rows.
 """
@@ -142,14 +143,13 @@ def _jobs_of(spark, fn) -> int:
 
 def test_keyed_term_and_phrase_job_floor(spark, small_index):
     s = Searcher(small_index)
-    # warm the reader's vocabulary/stats and the persisted norms first
+    # warm the reader's vocabulary and stats first
     s.search(flt.Term("index"), k=K).collect()
     s.search(flt.Phrase(("index", "spark")), k=K).collect()
     n_term = _jobs_of(spark, lambda: s.search(flt.Term("spark"), k=K).collect())
     n_phrase = _jobs_of(spark, lambda: s.search(flt.Phrase(("spark", "index")), k=K).collect())
-    s.unpersist()
-    assert 1 <= n_term <= 2, n_term
-    assert 1 <= n_phrase <= 3, n_phrase
+    assert n_term == 1, n_term
+    assert n_phrase == 1, n_phrase
 
 
 def test_keyed_search_identical_across_merge_gate(small_index):

@@ -1008,21 +1008,21 @@ def test_phrase_offsets_nested_under_and(gap_index):
 
 
 def test_cross_field_samepos_union_keeps_pushdown(same_position_index):
-    """The cross-field same-position postings plan is a UNION of per-field
-    pruned scans — each branch must still push its term + field predicates
-    to parquet (the row-group-pruning contract every 100-TB claim rests
-    on), not degenerate into one unpruned scan."""
+    """The cross-field same-position postings read is, per field, a pruned
+    read: that field's term range + set AND'd with its field equality, so
+    row-group statistics prune every branch (the row-group-pruning contract
+    every 100-TB claim rests on) — never one unpruned read."""
+    from iresearch_spark.search.executor import scan_reads
+
     s = Searcher(same_position_index)
-    pq_plan = None
-    # reach the pq the kernel would scan: phrase_matches with slot_fields
-    local = s.phrase_matches(
-        [["300"], ["90"]], [0, 0], slot_fields=["a", "b"]
-    )
-    plan = local._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("PushedFilters:") >= 2, plan  # one pruned scan per field
-    pushed = plan.split("PushedFilters:")[1:]
-    joined = "|".join(p.split("]")[0] for p in pushed)
-    assert "term," in joined or "EqualTo(term" in joined, plan
+    scan, keys, _ = s._phrase_scan([["300"], ["90"]], None, ["a", "b"])
+    assert keys == [["a\x1f300"], ["b\x1f90"]]
+    reads = scan_reads(scan, same_position_index.is_multifield)
+    assert len(reads) == 1 and reads[0][1]  # one read, positions for every row
+    pred = str(reads[0][0])
+    assert pred.count("is_in(term") == 2, pred  # one pruned branch per field
+    for f, t in (("a", "300"), ("b", "90")):
+        assert f'(field == "{f}")' in pred and f'(term >= "{t}")' in pred, pred
 
 
 def test_same_position_cross_field_nested_and_batch(same_position_index):

@@ -229,7 +229,6 @@ def test_nested_child_no_global_sort(spark, tmp_path_factory):
     got = {r["doc_key"] for r in res.collect()}
     assert got == {f"P{g}" for g in range(6)}
     # the child leg itself: all matches — no GLOBAL sort / top-k in its plan
-    # (cogroup's per-partition `Sort [...], false` locals are expected)
     child = s.matches(flt.Term("scan"))
     plan = child._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrdered" not in plan and "], true," not in plan

@@ -284,35 +284,6 @@ def test_append_callable_analyzer_rejected(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# collision-free segment partitioning: murmur3 parity + 1:1 placement
-# --------------------------------------------------------------------------
-
-
-def test_spark_murmur3_parity(spark):
-    from pyspark.sql import functions as F
-
-    from iresearch_spark.search.executor import _spark_murmur3_int32
-
-    rows = (
-        spark.createDataFrame([(i,) for i in range(-8, 200)], "x int")
-        .select("x", F.hash("x").alias("h"))
-        .collect()
-    )
-    for r in rows:
-        assert _spark_murmur3_int32(r["x"]) == r["h"], r["x"]
-
-
-def test_seg_partition_count_collision_free(spark, tiny_idx):
-    from iresearch_spark.search.executor import _spark_murmur3_int32
-
-    s = Searcher(tiny_idx)
-    n = s._seg_partition_count()
-    n_ids = int(tiny_idx.meta.get("next_segment_id", tiny_idx.meta["num_segments"]))
-    buckets = {_spark_murmur3_int32(i) % n for i in range(n_ids)}
-    assert len(buckets) == n_ids  # every segment lands in its own task
-
-
-# --------------------------------------------------------------------------
 # PAY payload stream: codec round-trip + end-to-end per-occurrence payloads
 # --------------------------------------------------------------------------
 

@@ -549,108 +549,6 @@ def test_minhash_signatures_plan_has_no_shuffle(spark):
 
 
 # --------------------------------------------------------------------------
-# Routed segment placement: zero empty tasks (one task per segment, exactly
-# n partitions) replacing the collision-free-modulus scheme (which needed
-# 250 partitions for 32 dense ids — 218 empty tasks per kernel stage)
-# --------------------------------------------------------------------------
-
-
-def test_segment_routing_keys_bijective():
-    from iresearch_spark.partition import segment_routing_keys, spark_murmur3_int32
-
-    for ids in ([0], list(range(8)), list(range(32)), [0, 4, 7, 19], list(range(3, 300, 7))):
-        keys, n = segment_routing_keys(ids)
-        assert n == len(set(ids))
-        sids = sorted(set(ids))
-        buckets = []
-        for j, sid in enumerate(sids):
-            b = spark_murmur3_int32(keys[sid]) % n
-            if b < 0:
-                b += n
-            buckets.append(b)
-            assert b == j, (sid, keys[sid], b, j)  # dense rank placement
-        assert len(set(buckets)) == n  # bijective: one segment per partition
-
-
-def test_routed_placement_one_segment_per_task(spark, batch_index):
-    from pyspark.sql import functions as F
-
-    from iresearch_spark import Searcher
-
-    s = Searcher(batch_index)
-    routing = s._seg_routing()
-    assert routing is not None, "routed scheme should engage for small indexes"
-    _, n = routing
-    norms = batch_index.norms()
-    routed = s._seg_partitioned(norms)
-    assert routed.rdd.getNumPartitions() == n  # EXACTLY n partitions
-    occ = (
-        routed.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(F.countDistinct("segment_id").alias("segs"))
-        .collect()
-    )
-    assert all(r["segs"] == 1 for r in occ), occ  # never two segments in a task
-    assert len(occ) == n  # and no empty partitions for live dense ids
-
-
-def test_routed_vs_fallback_results_identical(spark, batch_index):
-    from iresearch_spark import Searcher, filters as flt
-
-    q = flt.Or((flt.Term("alpha"), flt.Phrase(("alpha", "beta"))))
-    s_routed = Searcher(batch_index)
-    s_fallback = Searcher(batch_index)
-    s_fallback.ROUTED_MAX_SEGMENTS = 0  # force the collision-free-modulus path
-    assert s_fallback._seg_routing() is None
-    a = [tuple(r) for r in s_routed.search(q, k=20).collect()]
-    b = [tuple(r) for r in s_fallback.search(q, k=20).collect()]
-    assert a == b
-    pa = sorted(tuple(r) for r in s_routed.search_many({"a": q, "b": flt.Term("beta")}, k=5).collect())
-    pb = sorted(tuple(r) for r in s_fallback.search_many({"a": q, "b": flt.Term("beta")}, k=5).collect())
-    assert pa == pb
-
-
-def test_routed_placement_adds_no_exchange(spark, batch_index):
-    """The route column is both the shuffle key AND the cogroup key, so
-    Catalyst's clustered-distribution check passes — grouping by segment_id
-    over a route-partitioned child would silently re-exchange instead."""
-    from iresearch_spark import Searcher, filters as flt
-
-    def n_exchanges(s):
-        # search() returns local rows; its kernel's plan is matches()'s
-        p = s.matches(flt.Term("alpha"))._jdf.queryExecution().executedPlan().toString()
-        return p.count("Exchange")
-
-    s_routed = Searcher(batch_index)
-    s_fallback = Searcher(batch_index)
-    s_fallback.ROUTED_MAX_SEGMENTS = 0
-    assert n_exchanges(s_routed) == n_exchanges(s_fallback)
-
-
-def test_norms_cache_reused_and_result_identical(spark, batch_index):
-    """The seg-partitioned norms persist once per (field set) per Searcher —
-    the BM25 working set held hot like the reference's open reader — and a
-    cache-bypassing Searcher returns identical results."""
-    from iresearch_spark import Searcher, filters as flt
-
-    s = Searcher(batch_index)
-    q1 = [tuple(r) for r in s.search(flt.Term("alpha"), k=10).collect()]
-    ent_after_first = dict(s._norms_parts)
-    q2 = [tuple(r) for r in s.search(flt.Term("beta"), k=10).collect()]
-    assert len(s._norms_parts) == 1  # same default-field entry reused
-    assert next(iter(s._norms_parts.values())) is next(iter(ent_after_first.values()))
-
-    s_nocache = Searcher(batch_index)
-    s_nocache._seg_norms = lambda norms, key: s_nocache._seg_partitioned(norms)
-    assert q1 == [tuple(r) for r in s_nocache.search(flt.Term("alpha"), k=10).collect()]
-    assert q2 == [tuple(r) for r in s_nocache.search(flt.Term("beta"), k=10).collect()]
-
-    s.unpersist()
-    assert s._norms_parts == {}
-    s.unpersist()  # idempotent
-
-
-# --------------------------------------------------------------------------
 # Fuzzy exact-prefix option (by_edit_distance opts.prefix,
 # levenshtein_filter.cpp:241-265): candidates must start with the prefix,
 # edits apply to the remainder, similarity length = |prefix| + |term|

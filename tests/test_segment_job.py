@@ -1,0 +1,231 @@
+"""The segment-task launcher (``Searcher._segment_job``) and what rides on it.
+
+* Packing: every live segment lands in exactly one of
+  ``P = min(#live, defaultParallelism)`` task groups, sparse ids after
+  ``consolidate`` included.
+* Spark-free differential over a vocabulary: the pyarrow filter of a prefix
+  or range tail spec selects exactly the terms ``spec_match`` accepts; a
+  wildcard's selects a superset of them.
+* A batch repeating one overflowing multiterm node scans its tail spec once.
+* Fuzzy over an empty-string vocabulary term scores finite on both the
+  driver-vocabulary and the distributed expansion tier.
+* Two Searchers and two prepared batches over one index share nothing in
+  Spark: releasing one leaves the other's ``execute`` at one job.
+"""
+
+from __future__ import annotations
+
+import math
+import uuid
+
+import numpy as np
+import pyarrow as pa
+import pytest
+
+from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
+from iresearch_spark.index.consolidate import consolidate
+from iresearch_spark.search.executor import (
+    compile_plans,
+    pack_segments,
+    spec_filter,
+    spec_match,
+)
+
+WORDS = ["spark", "span", "spin", "scan", "sort", "slow", "fast", "hash", "join", "merge"]
+
+
+def _jobs_of(spark, fn) -> int:
+    sc = spark.sparkContext
+    gid = f"segjob-{uuid.uuid4()}"
+    sc.setJobGroup(gid, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _docs(spark, prefix: str, n: int, seed: int):
+    rng = np.random.default_rng(seed)
+    rows = [
+        (f"{prefix}{i:04d}", " ".join(rng.choice(WORDS, size=int(rng.integers(3, 12)))))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "doc_key string, text string")
+
+
+@pytest.fixture(scope="module")
+def seg_index(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("segjob"))
+    IndexBuilder(spark, path, num_segments=3).build(
+        _docs(spark, "d", 180, 3), key_col="doc_key", text_col="text"
+    )
+    return IndexReader(spark, path)
+
+
+# --------------------------------------------------------------------------
+# packing
+# --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "counts,p",
+    [
+        ({0: 5}, 1),
+        ({0: 10, 4: 3}, 2),
+        ({i: 100 - i for i in range(8)}, 4),
+        ({i: 1 + (i * 37) % 11 for i in range(3, 300, 7)}, 6),
+    ],
+)
+def test_pack_segments_covers_each_segment_once(counts, p):
+    groups = pack_segments(counts, p)
+    assert len(groups) == p
+    flat = [sid for g in groups for sid in g]
+    assert sorted(flat) == sorted(counts)  # every segment exactly once
+    loads = [sum(counts[s] for s in g) for g in groups]
+    # greedy largest-first: no group exceeds the lightest by more than the
+    # largest single segment
+    assert max(loads) - min(loads) <= max(counts.values())
+
+
+def test_segment_groups_cover_sparse_live_ids(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("segjob_sparse"))
+    IndexBuilder(spark, path, num_segments=5).build(
+        _docs(spark, "c", 200, 4), key_col="doc_key", text_col="text"
+    )
+    before = Searcher(IndexReader(spark, path)).search(flt.Term("spark"), k=500).collect()
+    consolidate(IndexReader(spark, path), [0, 1, 2, 3])  # merged into id 0
+    reader = IndexReader(spark, path)
+    live = sorted(reader.segment_docs_counts())
+    assert live == [0, 4]
+    s = Searcher(reader)
+    groups = s._segment_groups()
+    assert len(groups) == min(len(live), spark.sparkContext.defaultParallelism)
+    assert sorted(sid for g in groups for sid in g) == live
+    after = s.search(flt.Term("spark"), k=500).collect()
+    assert sorted(r["doc_key"] for r in after) == sorted(r["doc_key"] for r in before)
+    assert {r["segment_id"] for r in after} <= set(live)
+
+
+# --------------------------------------------------------------------------
+# Spark-free: pyarrow spec filters vs spec_match
+# --------------------------------------------------------------------------
+
+_VOCAB = sorted(
+    {
+        "", "a", "ab", "abc", "abd", "abz", "ac", "b", "ba", "x%y", "x_y", "xay",
+        "a\\b", "zz", "\U0010ffff", "a\U0010ffff", "a\U0010ffffb", "пуй", "проглот",
+        "line\nbreak", "ab%", "ab\\%",
+    }
+    | {
+        "".join(np.random.default_rng(i).choice(list("abcxyz"), size=1 + i % 5))
+        for i in range(300)
+    }
+)
+
+_SPECS = [
+    ("prefix", ""), ("prefix", "a"), ("prefix", "ab"), ("prefix", "abz"),
+    ("prefix", "\U0010ffff"), ("prefix", "a\U0010ffff"), ("prefix", "п"),
+    ("prefix", "q"),
+    ("range", None, None, True, True), ("range", "a", "b", True, False),
+    ("range", "a", "b", False, True), ("range", "ab", "ab", True, True),
+    ("range", "ab", "ab", False, True), ("range", None, "b", True, True),
+    ("range", "x", None, False, False), ("range", "c", "a", True, True),
+]
+_WILDCARDS = [
+    ("wildcard", "a%"), ("wildcard", "%b"), ("wildcard", "a_c"), ("wildcard", "_"),
+    ("wildcard", "%"), ("wildcard", "x\\%y"), ("wildcard", "x\\_y"), ("wildcard", "ab\\%"),
+    ("wildcard", "a\\\\b"), ("wildcard", "abc"), ("wildcard", "line%"), ("wildcard", "п%т"),
+]
+
+
+def _selected(spec) -> set[str]:
+    table = pa.table({"term": pa.array(_VOCAB, pa.string())})
+    return set(table.filter(spec_filter(spec)).column("term").to_pylist())
+
+
+@pytest.mark.parametrize("spec", _SPECS, ids=repr)
+def test_spec_filter_selects_exactly_spec_match(spec):
+    assert _selected(spec) == {t for t in _VOCAB if spec_match(spec, t)}
+
+
+@pytest.mark.parametrize("spec", _WILDCARDS, ids=repr)
+def test_wildcard_spec_filter_selects_superset(spec):
+    want = {t for t in _VOCAB if spec_match(spec, t)}
+    assert want <= _selected(spec)
+
+
+# --------------------------------------------------------------------------
+# tail specs are scanned once per batch
+# --------------------------------------------------------------------------
+
+
+def test_repeated_prefix_tail_spec_scanned_once(seg_index):
+    node = flt.Prefix("s", scored_terms_limit=1)  # overflows: 6 "s" words
+    plans, scan = compile_plans(
+        {"a": node, "b": node, "c": flt.Or((node, flt.Term("hash")))}, seg_index
+    )
+    assert scan.field_specs == {seg_index.default_field: [("prefix", "s")]}
+    assert all(p.get("unscored_spec") == ("prefix", "s") for p in (plans["a"], plans["b"]))
+    s = Searcher(seg_index)
+    rows = s.search_many({"a": node, "b": node}, k=200).collect()
+    by = {
+        q: sorted((r["segment_id"], r["doc_id"]) for r in rows if r["query"] == q)
+        for q in "ab"
+    }
+    assert by["a"] == by["b"] and len(by["a"]) == s.matches(node).count()
+
+
+# --------------------------------------------------------------------------
+# fuzzy over an empty-string term
+# --------------------------------------------------------------------------
+
+
+def test_fuzzy_empty_vocabulary_term_scores_finite(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("segjob_fuzzy_empty"))
+    df = spark.createDataFrame(
+        [("k1", ""), ("k2", "ab"), ("k3", "abc"), ("k4", "b")], "doc_key string, name string"
+    )
+    IndexBuilder(spark, path, num_segments=2).build(
+        df, key_col="doc_key", fields=(("name", "name", "norm:none"),)
+    )
+    f = flt.Fuzzy("ab", max_distance=2)
+    results = {}
+    for tier in ("vocab", "distributed"):
+        reader = IndexReader(spark, path)
+        if tier == "distributed":
+            reader.FUZZY_VOCAB_MAX = 0  # no driver vocabulary: Spark expansion
+        assert (reader.fuzzy_vocab() is None) == (tier == "distributed")
+        rows = Searcher(reader).search(f, k=10).collect()
+        results[tier] = [(r["doc_key"], r["score"]) for r in rows]
+        assert "k1" in {r["doc_key"] for r in rows}  # "" is within 2 edits of "ab"
+        assert all(math.isfinite(r["score"]) for r in rows), rows
+    assert [k for k, _ in results["vocab"]] == [k for k, _ in results["distributed"]]
+    for (_, x), (_, y) in zip(results["vocab"], results["distributed"]):
+        assert math.isclose(x, y, rel_tol=1e-12)
+
+
+# --------------------------------------------------------------------------
+# no Spark state shared between Searchers or batches
+# --------------------------------------------------------------------------
+
+
+def test_released_searcher_does_not_slow_another_batch(spark, seg_index):
+    batch = {
+        "t": flt.Term("spark"),
+        "o": flt.Or((flt.Term("scan"), flt.Term("hash"))),
+        "p": flt.Prefix("s"),
+    }
+    a, b = Searcher(seg_index), Searcher(seg_index)
+    pa_, pb = a.prepare(batch), b.prepare(batch)
+    first = pa_.execute(k=10).collect()
+    want = pb.execute(k=10).collect()
+    assert [tuple(r) for r in first] == [tuple(r) for r in want]
+    pa_.unpersist()
+    a.unpersist()
+    got = []
+    n_jobs = _jobs_of(spark, lambda: got.extend(pb.execute(k=10).collect()))
+    assert n_jobs == 1, n_jobs
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    pb.unpersist()
+    b.unpersist()

@@ -68,28 +68,6 @@ def tfidf_score(
     return (dt(boost) * np.sqrt(np.asarray(tf).astype(dtype)) * idf).astype(dtype)
 
 
-def phrase_score(
-    mode: str,
-    tf: np.ndarray,
-    dl: np.ndarray,
-    idf: float,
-    avgdl: float,
-    k: float = K_DEFAULT,
-    b: float = B_DEFAULT,
-    boost: float = 1.0,
-) -> np.ndarray:
-    """Root Phrase/SamePosition score, f64: the phrase frequency ``tf``
-    plugs into the scorer as the term frequency, ``idf`` is the phrase's
-    stats constant (from the exact phrase df, or the sum of the member
-    terms' idfs). ``mode`` is ``"bm25"``, ``"tfidf"`` or ``"boost"``."""
-    tf = np.asarray(tf, dtype=np.float64)
-    if mode == "boost":
-        return np.full(tf.shape, float(boost))
-    if mode == "tfidf":
-        return float(boost) * np.sqrt(tf) * float(idf)
-    return bm25_score(tf, dl, idf, avgdl, k, b, boost, np.float64)
-
-
 # --------------------------------------------------------------------------
 # Scorer strategy (Order::Prepare / bucket analogue, sort.hpp:218-349):
 # every query kernel scores via one of these models. `term_const` is the

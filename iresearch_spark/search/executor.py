@@ -1,22 +1,32 @@
-"""Query execution: filter tree → distributed per-segment kernels → global top-k.
+"""Query execution: one compile → one kernel → one merge.
 
-The reference lifecycle (SURVEY.md §3.2) maps as:
+Every scored filter — Term/Terms/multiterm, boolean trees, Phrase and
+SamePosition (root or nested), NgramSimilarity — takes the same path, and
+``search``, ``matches`` and ``search_many`` / ``PreparedBatch`` differ only
+in the merge:
 
-* ``prepare`` — :func:`compile_plan`: expand multiterm leaves against the
+* ``prepare`` — :func:`compile_plans`: expand multiterm leaves against the
   ``term_dict`` table (pruned scans), collect global stats (field_stats +
-  per-term df) once, bake per-term idf into the plan (collectors.cpp analogue).
-* ``execute`` — one shuffle-free Spark job (:meth:`Searcher._segment_job`):
-  ``range(P).mapInArrow`` with the live segments packed into P tasks; each
-  task reads its own segments' postings, norms and deletes from the index
-  parquet with pyarrow (the per-segment reader of segment_reader.hpp:35-110).
-  Each segment's kernel decodes only the needed posting lists (VByte blocks),
-  runs the boolean algebra vectorized in numpy (conjunction = sorted-array
+  per-term df) once, bake per-term idf into a plan tree (collectors.cpp
+  analogue). A root Phrase/SamePosition under ``phrase_scoring="exact_df"``
+  leaves its idf unbound: the phrase df is only known after the kernel runs.
+* ``execute`` — one shuffle-free Spark job (:meth:`Searcher._segment_job`,
+  called only by :meth:`Searcher._execute_batch`): ``range(P).mapInArrow``
+  with the live segments packed into P tasks; each task reads its own
+  segments' postings, norms and deletes from the index parquet with pyarrow
+  (the per-segment reader of segment_reader.hpp:35-110). Each segment's
+  kernel decodes only the needed posting lists (VByte blocks), runs the
+  boolean algebra vectorized in numpy (conjunction = sorted-array
   intersection ≙ conjunction.hpp; disjunction = unique+bincount ≙
-  disjunction.hpp; exclusion ≙ exclusion.hpp), scores BM25, and emits its local
-  top-k under (score desc, doc_id asc).
-* driver top-k — union of per-segment top-k rows is tiny; final global order
-  (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
-  utils/index-search.cpp:676-748.
+  disjunction.hpp; exclusion ≙ exclusion.hpp; phrases = packed-key position
+  intersection), scores through the searcher's :class:`ScoreModel`, and
+  emits its local top-k under (score desc, doc_id asc) — or, for
+  ``matches``, every match.
+* merge — the union of per-segment top-k rows is tiny; the driver orders it
+  by (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
+  utils/index-search.cpp:676-748, binding an unbound phrase idf from the
+  summed per-segment match counts first. ``matches`` has no merge: its
+  result is the kernel job itself.
 
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
@@ -36,11 +46,10 @@ Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 All bounds are conservative (most favorable norm, strict comparisons), so
 results stay rank-identical to the unpruned evaluation.
 
-``Searcher.search_many`` evaluates a BATCH of queries in one distributed pass:
+``Searcher.search_many`` evaluates a BATCH of queries in that one pass:
 postings for the union of all query terms are read once per segment, each
 plan is pruned independently in-kernel, and the driver merges the per-query
-top-k. This amortizes job/scan overhead across queries — the shape
-batched query serving takes on a real cluster.
+top-k; ``search`` is a batch of one.
 
 Scale notes: stats collects are O(#query terms); each task's postings read
 is pruned by parquet min/max stats over the (field, term)-sorted range layout
@@ -62,9 +71,9 @@ from __future__ import annotations
 import dataclasses as _dataclasses
 import functools as _functools
 import heapq as _heapq
+import math
 import os
 from dataclasses import dataclass, field as _dc_field
-from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -83,22 +92,17 @@ from ..index.codec import (
 )
 from ..index.reader import IndexReader, read_frame
 from . import filters as flt
-from .bm25 import (
-    B_DEFAULT,
-    K_DEFAULT,
-    BM25Model,
-    BoostModel,
-    ScoreModel,
-    TFIDFModel,
-    bm25_idf,
-    get_model,
-    phrase_score,
-    tfidf_idf,
-)
+from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
 
 KERNEL_OUT_SCHEMA = "segment_id int, doc_id int, score double"
 BATCH_OUT_SCHEMA = "query string, " + KERNEL_OUT_SCHEMA
-MATCH_OUT_SCHEMA = "segment_id int, doc_id int, tf long, dl long"
+#: the segment kernel's rows: a batch row plus the segment's match count of
+#: an unbound (exact_df) phrase plan, 0 for every other plan
+_SEGMENT_OUT_SCHEMA = BATCH_OUT_SCHEMA + ", seg_matches long"
+
+
+def _dtype(dtype: str):
+    return np.float32 if dtype == "float32" else np.float64
 
 
 @dataclass
@@ -793,7 +797,7 @@ def compile_plans(
     normalized = {name: flt.normalize(f) for name, f in filters.items()}
     default_field = reader.default_field
     known = set(reader.field_names)
-    dt = np.float32 if dtype == "float32" else np.float64
+    dt = _dtype(dtype)
 
     def fld(node: flt.Filter) -> str:
         return getattr(node, "field", None) or default_field
@@ -810,7 +814,7 @@ def compile_plans(
         elif isinstance(
             node,
             (flt.Term, flt.Terms, flt.Prefix, flt.Range, flt.Wildcard,
-             flt.Fuzzy, flt.Phrase, flt.SamePosition),
+             flt.Fuzzy, flt.Phrase, flt.SamePosition, flt.NgramSimilarity),
         ):
             if fld(node) in known:
                 fields_used.add(fld(node))
@@ -937,13 +941,12 @@ def compile_plans(
                 "field": f,
             }
         if isinstance(node, (flt.Phrase, flt.SamePosition)):
-            # Phrase/SamePosition NESTED under And/Or (root-level nodes go to
-            # search()'s two-pass path before this compiler runs): evaluated
-            # in-kernel as a scored leaf whose tf is the phrase frequency and
-            # whose idf is the SUM of the member terms' idfs — exactly the
-            # reference's aggregated phrase stats (phrase_filter.cpp:231-318
-            # term_stats.finish per slot; bm25.cpp:495-497 `stats.idf +=`),
-            # i.e. nested phrases always score in `sum_of_terms` mode.
+            # a scored leaf whose tf is the phrase frequency and whose idf is
+            # the SUM of the member terms' idfs — the reference's aggregated
+            # phrase stats (phrase_filter.cpp:231-318 term_stats.finish per
+            # slot; bm25.cpp:495-497 `stats.idf +=`), i.e. `sum_of_terms`.
+            # Nested phrases always score so; Searcher unbinds a ROOT
+            # phrase's idf under `exact_df` (see Searcher._compile).
             slots: list[list[str]] = []
             slot_flds: list[str] = []
             idf_sum = 0.0
@@ -991,9 +994,21 @@ def compile_plans(
                 "shifts": shifts,
                 "idf": idf_sum,
                 "boost": node.boost,
-                # norms context = the FIRST slot's field (cross-field slots
-                # share the doc space; dl/avgdl follow the root path's choice)
+                # norms and stats context = the FIRST slot's field
+                # (cross-field slots share the doc space)
                 "field": slot_flds[0] if slot_flds else f,
+            }
+        if isinstance(node, flt.NgramSimilarity):
+            if f not in known or not node.ngrams:
+                return {"op": "empty"}
+            scan.field_terms[f].extend(node.ngrams)
+            scan.pos_terms.setdefault(f, []).extend(node.ngrams)
+            scan.need_positions = True
+            n = len(node.ngrams)
+            return {
+                "op": "ngram", "ngrams": [scan.key(f, t) for t in node.ngrams],
+                "min_match": max(1, math.ceil(node.threshold * n)),
+                "boost": node.boost, "field": f,
             }
         if isinstance(node, flt.Not):
             # standalone negation (Not::prepare, boolean_filter.cpp:455-485):
@@ -1070,7 +1085,7 @@ def compile_plans(
 def _plan_fields(plan: dict) -> set[str]:
     """Set of index fields a compiled plan's scoring leaves touch."""
     out: set[str] = set()
-    if plan.get("field") and plan["op"] in ("term", "mterm", "phrase"):
+    if plan.get("field") and plan["op"] in ("term", "mterm", "phrase", "ngram"):
         out.add(plan["field"])
     for p in plan.get("parts", ()):  # boolean composites
         out |= _plan_fields(p)
@@ -1238,14 +1253,15 @@ def _kth_threshold(scores: np.ndarray, k: int) -> float:
     return float(np.partition(scores, scores.size - k)[scores.size - k])
 
 
-def _mask_del_pair(
+def _mask_deleted(
     ids: np.ndarray, vals: np.ndarray, dels: np.ndarray | None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Drop deleted ids from a decoded (ids, companion) pair BEFORE any top-k
-    threshold is computed — the docs_mask must be applied inside every doc
-    iterator (segment_reader.hpp:92-93), not after pruning: a deleted doc that
-    ranks in the provisional top-k would otherwise inflate theta and cause
-    live-doc blocks to be skipped."""
+    """Drop deleted ids (sorted searchsorted membership test) from an (ids,
+    companion) pair. The pruned kernels call it on each decoded list BEFORE
+    any top-k threshold is computed — the docs_mask must be applied inside
+    every doc iterator (segment_reader.hpp:92-93), not after pruning: a
+    deleted doc that ranks in the provisional top-k would otherwise inflate
+    theta and cause live-doc blocks to be skipped."""
     if dels is None or ids.size == 0:
         return ids, vals
     pos = np.searchsorted(dels, ids)
@@ -1263,7 +1279,7 @@ def _wand_single_term(
     n_blocks = view.block_last.size
     if view._full is not None or n_blocks <= 2:
         ids, tfs = view.decode_all()
-        ids, tfs = _mask_del_pair(ids, tfs, dels)
+        ids, tfs = _mask_deleted(ids, tfs, dels)
         return ids, model.score(tfs, dl[ids - 1], idf, avgdl, boost, dt)
     block_ub = np.array(
         [model.ub(int(m), idf, dl_min, avgdl, boost, dt) for m in view.block_maxf]
@@ -1280,7 +1296,7 @@ def _wand_single_term(
             break  # no later block (all ≤ this bound) can reach the k-th score
         sel = np.sort(order[i : i + chunk])
         ids, tfs = view.decode_blocks(sel)
-        ids, tfs = _mask_del_pair(ids, tfs, dels)
+        ids, tfs = _mask_deleted(ids, tfs, dels)
         sc = model.score(tfs, dl[ids - 1], idf, avgdl, boost, dt)
         out_ids.append(ids)
         out_sc.append(sc)
@@ -1335,7 +1351,7 @@ def _maxscore_union(
             ids, tfs = view.decode_blocks(blocks)
         else:
             ids, tfs = view.decode_all()
-        ids, tfs = _mask_del_pair(ids, tfs, dels)
+        ids, tfs = _mask_deleted(ids, tfs, dels)
         sc = model.score(tfs, dl[ids - 1], idf, avgdl, boost, dt)
         if candidates_only:
             _add_to_candidates(cand_ids, cand_scores, ids, sc)
@@ -1364,7 +1380,7 @@ def _conjunction_selective(
     ids, tfs = view0.decode_all()
     # mask the driving leg (docs_mask inside the iterator): intersections
     # with later legs can only shrink the set, never reintroduce deleted docs
-    ids, tfs = _mask_del_pair(ids, tfs, dels)
+    ids, tfs = _mask_deleted(ids, tfs, dels)
     scores = model.score(tfs, dl[ids - 1], idf0, avgdl, boost0, dt)
     for view, idf, boost in term_legs[1:]:
         if ids.size == 0:
@@ -1423,7 +1439,7 @@ def _eval_root(
             tails = [sv.view(t).decode_all()[0] for t in unscored if sv.view(t) is not None]
             if tails:
                 live = np.unique(np.concatenate(tails))
-                live, _ = _mask_del_pair(live, live, dels)
+                live, _ = _mask_deleted(live, live, dels)
                 extra = np.setdiff1d(live, ids)[: k - ids.size]
                 ids = np.concatenate([ids, extra])
                 sc = np.concatenate([sc, np.zeros(extra.size, dtype=dt)])
@@ -1503,27 +1519,44 @@ def _norms_views(norm_pdf: pd.DataFrame, mixed: bool):
     return next(iter(dl_map.values())), dl_map
 
 
+#: packed position key ``doc_rank * 2^32 + pos`` of the positional kernels
+_PACK = np.int64(1) << np.int64(32)
+
+
+def _positions_of(view: PostingsView, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(candidate rank, position) of every occurrence of ``view``'s term in
+    the sorted candidate docs ``cand``, rank-major and position-ascending:
+    one flat gather of each present doc's position run."""
+    t_ids, t_tfs = view.decode_all()
+    row = np.minimum(np.searchsorted(t_ids, cand), t_ids.size - 1)
+    present = t_ids[row] == cand
+    rows_sel = row[present]
+    starts = np.zeros(t_ids.size + 1, dtype=np.int64)
+    np.cumsum(t_tfs, out=starts[1:])
+    lens = t_tfs[rows_sel]
+    out_off = np.zeros(rows_sel.size, np.int64)
+    np.cumsum(lens[:-1], out=out_off[1:])
+    rep = np.repeat(np.arange(rows_sel.size), lens)
+    flat_idx = np.arange(int(lens.sum()), dtype=np.int64) - out_off[rep] + starts[rows_sel][rep]
+    return np.flatnonzero(present).astype(np.int64)[rep], view.positions()[flat_idx]
+
+
 def _phrase_seg_tfs(
-    sv: "_SegmentViews",
-    slot_list: list[list[str]],
-    shift_list: list[int],
-    dels: np.ndarray | None = None,
+    sv: "_SegmentViews", slot_list: list[list[str]], shift_list: list[int]
 ) -> tuple[np.ndarray, np.ndarray]:
     """One segment's (possibly variadic) phrase evaluation → (sorted doc
     ids, phrase frequency per doc). FULLY vectorized, zero per-doc Python:
     per slot, candidate docs' positions gather into one flat array, pack as
     ``doc_rank * 2^32 + (pos - shift)`` keys, and the slots' key sets
     intersect with ``np.intersect1d`` (phrase_iterator's position
-    conjunction, collapsed to the flattened-stream trick). Shared by
-    :meth:`Searcher.phrase_matches` (the root two-pass path) and the
-    in-kernel ``{"op": "phrase"}`` leaf for Phrase nested under And/Or."""
-    PACK = np.int64(1) << np.int64(32)
+    conjunction, collapsed to the flattened-stream trick). A slot with
+    several terms (variadic) unions its terms' keys first (disjunction of
+    position iterators, phrase_query.cpp VariadicPhraseQuery)."""
     max_shift = max(shift_list) if shift_list else 0
     empty = (np.empty(0, np.int64), np.empty(0, np.int64))
     slot_views = []
     for slot in slot_list:
-        views = [sv.view(t) for t in slot]
-        views = [v for v in views if v is not None]
+        views = [v for v in map(sv.view, slot) if v is not None]
         if not views:
             return empty  # some slot matches nothing in this segment
         slot_views.append(views)
@@ -1538,42 +1571,12 @@ def _phrase_seg_tfs(
         cand = slot_ids if cand is None else np.intersect1d(cand, slot_ids, assume_unique=True)
         if cand.size == 0:
             return empty
-    cand, _ = _mask_deleted(cand, cand, dels)  # document_mask
-    if cand.size == 0:
-        return empty
-    # rank of each candidate doc (dense 0..m-1) for key packing
-    n_cand = cand.size
     cur_keys = None
-    for j, views in enumerate(slot_views):
+    for views, shift in zip(slot_views, shift_list):
         parts = []
         for v in views:
-            t_ids, t_tfs = v.decode_all()
-            t_pos = v.positions()
-            # rows of this term present among candidates
-            row = np.searchsorted(t_ids, cand)
-            row_c = np.minimum(row, t_ids.size - 1)
-            present = t_ids[row_c] == cand
-            rows_sel = row_c[present]
-            ranks_sel = np.flatnonzero(present).astype(np.int64)
-            if rows_sel.size == 0:
-                continue
-            starts = np.zeros(t_ids.size + 1, dtype=np.int64)
-            np.cumsum(t_tfs, out=starts[1:])
-            lens = t_tfs[rows_sel]
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            # flat gather of each selected row's position run
-            out_off = np.zeros(rows_sel.size, np.int64)
-            np.cumsum(lens[:-1], out=out_off[1:])
-            rep = np.repeat(np.arange(rows_sel.size), lens)
-            flat_idx = np.arange(total, dtype=np.int64) - out_off[rep] + starts[rows_sel][rep]
-            pos = t_pos[flat_idx]
-            ranks = ranks_sel[rep]
-            keys = ranks * PACK + (pos - np.int64(shift_list[j]) + np.int64(max_shift))
-            parts.append(keys)
-        if not parts:
-            return empty
+            ranks, pos = _positions_of(v, cand)
+            parts.append(ranks * _PACK + (pos - np.int64(shift) + np.int64(max_shift)))
         # single-term keys are already sorted+unique (ranks asc, pos asc
         # within rank); unions go through np.unique
         slot_keys = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
@@ -1584,15 +1587,41 @@ def _phrase_seg_tfs(
         )
         if cur_keys.size == 0:
             return empty
-    doc_rank = (cur_keys // PACK).astype(np.int64)
-    tf = np.bincount(doc_rank, minlength=n_cand)
+    tf = np.bincount(cur_keys // _PACK, minlength=cand.size)
     hit = np.flatnonzero(tf)
     return cand[hit], tf[hit].astype(np.int64)
 
 
+def _ngram_seg_scores(plan: dict, sv: "_SegmentViews") -> tuple[np.ndarray, np.ndarray]:
+    """by_ngram_similarity (ngram_similarity_query.cpp) in one segment: the
+    candidates are the docs holding ANY query ngram (a distinct-count
+    prefilter would be unsafe when the query repeats an ngram); each gets
+    the longest in-order increasing-position chain L
+    (:func:`_ngram_chain_lengths` over the merged occurrence stream), and
+    docs with L ≥ ``min_match`` score boost * L/N — a float64 ratio, like
+    the reference's filter_boost, whatever the searcher's dtype."""
+    ngrams = plan["ngrams"]
+    views = {t: v for t in sorted(set(ngrams)) if (v := sv.view(t)) is not None}
+    if not views:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    cand = np.unique(np.concatenate([v.decode_all()[0] for v in views.values()]))
+    keys, tvals = [], []
+    for ti, v in enumerate(views.values()):
+        ranks, pos = _positions_of(v, cand)
+        keys.append(ranks * _PACK + pos)
+        tvals.append(np.full(ranks.size, ti, np.int64))
+    keys, tvals = np.concatenate(keys), np.concatenate(tvals)
+    order = np.argsort(keys, kind="stable")
+    keys, tvals = keys[order], tvals[order]
+    slot_lists = [[i for i, g in enumerate(ngrams) if g == t] for t in views]
+    docs_u, L = _ngram_chain_lengths(keys, keys // _PACK, tvals, slot_lists, len(ngrams))
+    hit = L >= plan["min_match"]
+    return cand[docs_u[hit]], float(plan["boost"]) * L[hit] / len(ngrams)
+
+
 def _eval_plan(
     plan: dict,
-    decoded: dict[str, Any],
+    decoded: "_SegmentViews",
     dl: np.ndarray,
     avgdl: float,
     model: ScoreModel,
@@ -1638,19 +1667,18 @@ def _eval_plan(
                 legs.append((hit[0], np.zeros(hit[0].size, dtype=dt)))
         return _union(legs, plan.get("min_match", 1), dt, plan.get("merge", "sum"))
     if op == "phrase":
-        # nested Phrase/SamePosition leaf: tf = phrase frequency (packed-key
-        # position intersect, _phrase_seg_tfs), idf = the compile-time sum of
-        # member-term idfs (aggregated stats, phrase_filter.cpp:231-318)
-        if not hasattr(decoded, "view"):
-            raise ValueError(
-                "nested phrase evaluation needs positional segment views"
-            )
+        # tf = phrase frequency (packed-key position intersect), idf = the
+        # compile-time sum of member-term idfs (aggregated stats,
+        # phrase_filter.cpp:231-318), or const 1 while unbound (exact_df:
+        # the merge multiplies in the idf of the summed phrase df)
         dl_l, avgdl_l = leaf_norms(plan)
         ids, tfs = _phrase_seg_tfs(decoded, plan["slots"], plan["shifts"])
         if ids.size == 0:
             return empty
-        scores = model.score(tfs, dl_l[ids - 1], plan["idf"], avgdl_l, plan["boost"], dt)
-        return ids, scores
+        idf = 1.0 if plan["idf"] is None else plan["idf"]
+        return ids, model.score(tfs, dl_l[ids - 1], idf, avgdl_l, plan["boost"], dt)
+    if op == "ngram":
+        return _ngram_seg_scores(plan, decoded)
     if op == "and":
         merge = plan.get("merge", "sum")
         parts = [_eval_plan(p, decoded, dl, avgdl, model, dt, nctx) for p in plan["parts"]]
@@ -1774,18 +1802,6 @@ def _deleted_of(norm_pdf: pd.DataFrame) -> np.ndarray | None:
     return np.asarray(v, dtype=np.int64)
 
 
-def _mask_deleted(
-    ids: np.ndarray, scores: np.ndarray, dels: np.ndarray | None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Drop deleted doc ids (sorted searchsorted membership test)."""
-    if dels is None or ids.size == 0:
-        return ids, scores
-    pos = np.searchsorted(dels, ids)
-    pos_c = np.minimum(pos, dels.size - 1)
-    keep = dels[pos_c] != ids
-    return ids[keep], scores[keep]
-
-
 def _plan_has_all(plan: dict) -> bool:
     """True when the plan (or a sub-plan) matches docs without any postings —
     such plans must be evaluated from the norms side in every segment."""
@@ -1827,6 +1843,23 @@ def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> pd.DataFra
     pdf = pdf.sort_values(keys, ascending=asc, kind="stable")
     top = pdf.groupby(by, sort=False).head(k) if by is not None else pdf.head(k)
     return top.reset_index(drop=True)
+
+
+def _top(df: DataFrame, k: int | None, *order) -> DataFrame:
+    """``df``'s first k rows under ``order``; every row, unordered, when ``k``
+    is None (:meth:`Searcher.matches`)."""
+    return df if k is None else df.orderBy(*order).limit(k)
+
+
+def _unbound(plan: dict) -> bool:
+    """A root phrase plan whose idf the merge binds (``exact_df``)."""
+    return plan["op"] == "phrase" and plan["idf"] is None
+
+
+#: zero segment-kernel rows, typed like ``_SEGMENT_OUT_SCHEMA``
+_NO_SEGMENT_ROWS = _NO_HITS.assign(
+    query=pd.Series([], dtype=object), seg_matches=pd.Series([], dtype="int64")
+)[["query", "segment_id", "doc_id", "score", "seg_matches"]]
 
 
 # --------------------------------------------------------------------------
@@ -1936,7 +1969,7 @@ class Searcher:
     # driver heap-merge (reference index-search.cpp:676-748) is one stage,
     # above it the distributed Window-per-query fallback runs instead.
     # Instance-overridable for tests / unusual deployments.
-    BATCH_MERGE_MAX = int(os.environ.get("IRS_BATCH_MERGE_MAX", "2000000"))
+    BATCH_MERGE_MAX = 2_000_000
 
     def __init__(
         self,
@@ -1946,16 +1979,23 @@ class Searcher:
         scorer: str = "bm25",
         phrase_scoring: str = "exact_df",
     ):
-        """``phrase_scoring`` picks the Phrase/SamePosition stats semantics:
+        """``phrase_scoring`` picks the stats of a ROOT Phrase/SamePosition;
+        either way the phrase frequency plugs into the scorer as tf:
 
         * ``"exact_df"`` (default, this engine's documented historical mode) —
-          idf from the exact phrase document frequency;
+          idf from the exact phrase document frequency. That df is known only
+          after the kernel ran, so the idf is bound on the driver: each
+          segment reports its match count, and the merge sums them and
+          multiplies the idf into the (const-1) kernel scores. Batches
+          (:meth:`prepare`) have no such merge and reject root phrases in
+          this mode.
         * ``"sum_of_terms"`` — REFERENCE PARITY: the aggregated stats blob sums
           every member term's idf (phrase_filter.cpp:231-318
           ``term_stats.finish`` per slot term; bm25.cpp:495-497 / tfidf.cpp:380
-          ``idf +=``), and the phrase frequency plugs into the scorer as tf.
-          Variadic slots sum ALL expanded terms' idfs, like the reference's
-          per-slot collectors (phrase_filter.cpp:418-427).
+          ``idf +=``). Variadic slots sum ALL expanded terms' idfs, like the
+          reference's per-slot collectors (phrase_filter.cpp:418-427).
+
+        Phrases nested under And/Or always score as ``sum_of_terms``.
         """
         self.reader = reader
         self.k1 = k1
@@ -1976,31 +2016,29 @@ class Searcher:
             self._groups = pack_segments(counts, p)
         return self._groups
 
-    def _segment_job(
-        self, kernel, scan: ScanSpec, schema: str, norms_field: str | None = None
-    ) -> DataFrame:
+    def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
         """ONE shuffle-free Spark job running ``kernel(postings_pdf,
-        norms_pdf)`` once per live segment → ``schema`` rows.
+        norms_pdf)`` once per live segment → ``_SEGMENT_OUT_SCHEMA`` rows.
 
         ``range(P).mapInArrow``: task i reads group i's segments (see
         :meth:`_segment_groups`) straight from the committed generation's
         parquet with pyarrow — postings rows selected by ``scan``
-        (:func:`scan_reads`), norms rows of ``norms_field`` (else the scan's
-        fields, else the default field) and the delete mask — then calls the
+        (:func:`scan_reads`), norms rows of the scan's fields (else the
+        default field) and the delete mask — then calls the
         kernel per segment, the reference's per-segment reader loop
         (segment_reader.hpp:35-110). Nothing is redistributed and nothing is
         cached in Spark; the plan is one Range → MapInArrow node."""
         reader = self.reader
         groups = self._segment_groups()
         if not groups:
-            return reader.spark.createDataFrame([], schema)
-        fields = [norms_field] if norms_field is not None else scan.fields or [reader.default_field]
+            return reader.spark.createDataFrame([], _SEGMENT_OUT_SCHEMA)
+        fields = scan.fields or [reader.default_field]
         norms_pred = pc.field("field").isin(fields) if reader.is_multifield else None
         tables = {
             t: reader.meta["tables"][t]
             for t in ("postings", "norms", "deletes") if t in reader.meta["tables"]
         }
-        arrow_schema, spark_schema = _schemas(schema)
+        arrow_schema, spark_schema = _schemas(_SEGMENT_OUT_SCHEMA)
         task = _segment_task(
             groups, tables, scan_reads(scan, reader.is_multifield), scan.mixed,
             norms_pred, kernel, arrow_schema,
@@ -2030,20 +2068,10 @@ class Searcher:
         (All, ColumnExists, NumericRange, Nested) stay lazy Spark plans.
         """
         nf = flt.normalize(f)
-        if isinstance(nf, flt.Phrase):
-            return self._search_phrase(nf, list(nf.terms), _phrase_shifts(nf), k, dtype, with_keys)
-        if isinstance(nf, flt.SamePosition):
-            return self._search_phrase(nf, list(nf.terms), [0] * len(nf.terms), k, dtype, with_keys)
-        if isinstance(nf, flt.ColumnExists):
-            return self._search_column_exists(nf, k, with_keys)
-        if isinstance(nf, flt.NumericRange):
-            return self._search_numeric_range(nf, k, with_keys)
-        if isinstance(nf, flt.NgramSimilarity):
-            local = self._ngram_similarity_local(nf, k).toPandas()  # ≤ segments × k
-            return self._hits_frame(_driver_topk(local, k), with_keys)
-        if isinstance(nf, flt.Nested):
-            return self._search_nested(nf, k, with_keys)
-        plan, scan = compile_plan(nf, self.reader, self.k1, self.b, dtype, model=self.model)
+        stored = self._stored_filter(nf, k, with_keys)
+        if stored is not None:
+            return stored
+        plan, scan = self._compile(nf, dtype)
         if plan["op"] == "all":
             docs = self.reader.live_docs()
             out = docs.select(
@@ -2055,6 +2083,34 @@ class Searcher:
         # a batch of one: the batch kernel, merged on the driver
         hits = self._execute_batch({"": plan}, scan, k, dtype, to_driver=True)
         return self._hits_frame(hits, with_keys)
+
+    def _stored_filter(self, nf: flt.Filter, k: int | None, with_keys: bool):
+        """The lazy result of a stored-column filter (ColumnExists,
+        NumericRange, Nested) — its top k, or every match when ``k`` is None
+        — or None for a filter the kernel scores."""
+        if isinstance(nf, flt.ColumnExists):
+            return self._search_column_exists(nf, k, with_keys)
+        if isinstance(nf, flt.NumericRange):
+            return self._search_numeric_range(nf, k, with_keys)
+        if isinstance(nf, flt.Nested):
+            return self._search_nested(nf, k, with_keys)
+        return None
+
+    def _compile(self, nf: flt.Filter, dtype: str) -> tuple[dict, ScanSpec]:
+        """:func:`compile_plan` of one normalized root filter. A root
+        Phrase/SamePosition under ``exact_df`` gets ``"idf": None``: the
+        kernel scores it at const 1 and reports its per-segment match counts,
+        and :meth:`_bind_phrase_idf` multiplies in the phrase-df idf."""
+        plan, scan = compile_plan(nf, self.reader, self.k1, self.b, dtype, model=self.model)
+        if plan["op"] == "phrase" and self.phrase_scoring == "exact_df":
+            plan["idf"] = None
+        return plan, scan
+
+    def _phrase_idf(self, plan: dict, dfp: int, dtype: str) -> float:
+        """The idf of an unbound phrase plan matched by ``dfp`` live docs,
+        from the stats of the plan's (first slot's) field."""
+        n = self.reader.field_stats(plan["field"])["docs_with_field"]
+        return self.model.term_const(int(dfp), n, _dtype(dtype))
 
     def search_ordered(
         self,
@@ -2103,52 +2159,30 @@ class Searcher:
         """ALL matching (segment_id, doc_id, score) rows — no top-k, no global
         sort, output stays partitioned by segment. This is the composition
         path (nested child legs, pre-materialization): a downstream fold
-        shuffles only the match set, never sorts the corpus. Positional /
-        stored-column filters fall back to the search() path."""
+        shuffles only the match set, never sorts the corpus. Scored filters
+        are the search kernel without its top-k; nothing is collected. An
+        ``exact_df`` root phrase first counts its matches (one more job, one
+        row back) to bind its idf."""
         nf = flt.normalize(f)
-        if isinstance(nf, flt.NgramSimilarity):
-            return self._ngram_similarity_local(nf, 1 << 30)
-        if isinstance(
-            nf,
-            (flt.Phrase, flt.SamePosition, flt.ColumnExists, flt.NumericRange, flt.Nested),
-        ):
-            return self.search(nf, k=1 << 30, with_keys=False).select(
-                "segment_id", "doc_id", "score"
-            )
-        plan, scan = compile_plan(nf, self.reader, self.k1, self.b, dtype, model=self.model)
-        spark = self.reader.spark
+        stored = self._stored_filter(nf, None, with_keys=False)
+        if stored is not None:
+            return stored
+        plan, scan = self._compile(nf, dtype)
         if plan["op"] == "all":
             docs = self.reader.live_docs()
             return docs.select(
                 "segment_id", "doc_id", F.lit(float(plan["boost"])).alias("score")
             )
-        if plan["op"] == "empty" or (scan.is_empty() and not _plan_has_all(plan)):
-            return spark.createDataFrame([], KERNEL_OUT_SCHEMA)
-        model = self.model
-        dt = np.float32 if dtype == "float32" else np.float64
-        mixed, avgdl, avg_map = self._norms_ctx(scan)
-
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(norm_pdf) == 0:
-                return pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                    {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-                )
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            nctx = (dl_map, avg_map) if mixed else None
-            ids, scores = _eval_plan(plan, sv, dl, avgdl, model, dt, nctx)
-            ids, scores = _mask_deleted(ids, scores, dels)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids.size, sid, np.int32),
-                    "doc_id": ids.astype(np.int32),
-                    "score": scores.astype(np.float64),
-                }
-            )
-
-        return self._segment_job(kernel, scan, KERNEL_OUT_SCHEMA)
+        if plan["op"] == "empty":
+            return self.reader.spark.createDataFrame([], KERNEL_OUT_SCHEMA)
+        local = self._execute_batch({"": plan}, scan, None, dtype)
+        score = F.col("score")
+        if _unbound(plan):
+            # the same dtype product as _bind_phrase_idf's numpy one
+            ftype = "float" if dtype == "float32" else "double"
+            idf = self._phrase_idf(plan, local.count(), dtype)
+            score = (score.cast(ftype) * F.lit(idf).cast(ftype)).cast("double").alias("score")
+        return local.select("segment_id", "doc_id", score)
 
     # ------------------------------------------------------------- batched
     def prepare(
@@ -2160,13 +2194,20 @@ class Searcher:
         normalize, expand multiterm leaves, collect global stats ONCE, bake
         per-term constants. The returned :class:`PreparedBatch` can be
         ``execute()``d repeatedly without touching the driver-side stats again
-        — the exact analogue of the reference's prepared-query reuse."""
+        — the exact analogue of the reference's prepared-query reuse.
+
+        A root Phrase/SamePosition needs its idf at compile time, i.e.
+        ``phrase_scoring="sum_of_terms"``: the batch's Window fallback has no
+        driver merge to bind an ``exact_df`` idf in."""
         normalized = {name: flt.normalize(f) for name, f in queries.items()}
         for name, nf in normalized.items():
-            if isinstance(nf, flt.Phrase):
-                raise ValueError(f"{name}: phrase queries need search() (two-pass stats)")
-            if isinstance(nf, (flt.SamePosition, flt.ColumnExists)):
-                raise ValueError(f"{name}: {type(nf).__name__} queries need search()")
+            if isinstance(nf, flt.ColumnExists):
+                raise ValueError(f"{name}: ColumnExists queries need search()")
+            if isinstance(nf, (flt.Phrase, flt.SamePosition)) and self.phrase_scoring == "exact_df":
+                raise ValueError(
+                    f"{name}: a root {type(nf).__name__} in a batch needs "
+                    "phrase_scoring='sum_of_terms' (exact_df binds its idf in search())"
+                )
         plans, scan = compile_plans(
             normalized, self.reader, self.k1, self.b, dtype, model=self.model
         )
@@ -2178,11 +2219,12 @@ class Searcher:
         k: int = 10,
         dtype: str = "float64",
     ) -> DataFrame:
-        """Evaluate a batch of (non-phrase) queries in ONE distributed pass.
+        """Evaluate a batch of queries in ONE distributed pass (root phrases
+        as :meth:`prepare` allows).
 
         Postings for the union of every query's terms are scanned once per
         segment; each plan is pruned independently (WAND/MaxScore) in-kernel;
-        a single window takes the per-query global top-k. Returns
+        the driver merges the per-query top-k. Returns
         (query, segment_id, doc_id, score) — ≤ k rows per query, ordered by
         (query, score desc, segment_id, doc_id). This is the batched query
         evaluation shape of the north rule: per-query driver overhead is
@@ -2205,16 +2247,20 @@ class Searcher:
         self,
         plans: dict[str, dict],
         scan: ScanSpec,
-        k: int,
+        k: int | None,
         dtype: str,
         b_plans=None,
         to_driver: bool = False,
     ):
         """Per-query top-k of a compiled batch: (query, segment_id, doc_id,
         score), ordered by (query, score desc, segment_id, doc_id). A
-        DataFrame, or with ``to_driver`` the same rows as a pandas frame."""
+        DataFrame, or with ``to_driver`` the same rows as a pandas frame.
+
+        ``k=None`` is :meth:`matches`: every plan evaluates exact with no
+        top-k, and the result is the kernel job's lazy DataFrame, unmerged
+        (unbound phrase idfs are left to the caller)."""
         model = self.model
-        dt = np.float32 if dtype == "float32" else np.float64
+        dt = _dtype(dtype)
         spark = self.reader.spark
         if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
             empty = _NO_HITS.assign(query=pd.Series([], dtype=object))
@@ -2230,22 +2276,27 @@ class Searcher:
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
             plan_items = items if items is not None else b_plans.value
-            empty = pd.DataFrame(
-                {"query": [], "segment_id": [], "doc_id": [], "score": []}
-            ).astype({"query": "object", "segment_id": "int32", "doc_id": "int32", "score": "float64"})
             if len(norm_pdf) == 0:
-                return empty  # postings may be empty: All plans use norms only
+                return _NO_SEGMENT_ROWS  # postings may be empty: All plans use norms only
             sid = int(norm_pdf["segment_id"].iloc[0])
             dl, dl_map = _norms_views(norm_pdf, mixed)
             dels = _deleted_of(norm_pdf)
             sv = _SegmentViews(post_pdf)
             frames = []
             for name, plan in plan_items:
-                ids, scores = _eval_root_dispatch(
-                    plan, sv, k, model, dt, dels, dl, avgdl, dl_map, avg_map
-                )
+                if k is None:
+                    nctx = (dl_map, avg_map) if mixed else None
+                    ids, scores = _eval_plan(plan, sv, dl, avgdl, model, dt, nctx)
+                else:
+                    ids, scores = _eval_root_dispatch(
+                        plan, sv, k, model, dt, dels, dl, avgdl, dl_map, avg_map
+                    )
                 ids, scores = _mask_deleted(ids, scores, dels)
-                ids, scores = _local_topk(ids, scores, k)
+                n_matches = ids.size if _unbound(plan) else 0
+                if k is not None:
+                    # an unbound idf scales every score alike, yet its ULP
+                    # rounding may reorder near-ties: 16 rows of slack
+                    ids, scores = _local_topk(ids, scores, k + 16 if _unbound(plan) else k)
                 if ids.size:
                     frames.append(
                         pd.DataFrame(
@@ -2254,19 +2305,26 @@ class Searcher:
                                 "segment_id": np.full(ids.size, sid, np.int32),
                                 "doc_id": ids.astype(np.int32),
                                 "score": scores.astype(np.float64),
+                                "seg_matches": np.int64(n_matches),
                             }
                         )
                     )
-            return pd.concat(frames, ignore_index=True) if frames else empty
+            return pd.concat(frames, ignore_index=True) if frames else _NO_SEGMENT_ROWS
 
-        local = self._segment_job(kernel, scan, BATCH_OUT_SCHEMA)
+        local = self._segment_job(kernel, scan)
+        if k is None:
+            return local
         n_segments = int(self.reader.meta.get("num_segments", 1))
-        if n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
+        unbound = any(_unbound(p) for p in plans.values())
+        if unbound or n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
             # driver-side merge — the reference's own top-k heap loop
             # (index-search.cpp:676-748): candidate rows are tiny
             # (#segments × #queries × k), one Spark stage total; the windowed
             # path below is the scale fallback for huge batch×segment products.
-            topk = _driver_topk(local.toPandas(), k, by="query")
+            pdf = local.toPandas()
+            if unbound:
+                self._bind_phrase_idf(pdf, plans, dtype)
+            topk = _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
             return topk if to_driver else spark.createDataFrame(topk, BATCH_OUT_SCHEMA)
         from pyspark.sql import Window
 
@@ -2274,12 +2332,26 @@ class Searcher:
             F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
         )
         out = (
-            local.withColumn("rn", F.row_number().over(w))
+            local.drop("seg_matches")
+            .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k)
             .drop("rn")
             .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
         )
         return out.toPandas() if to_driver else out
+
+    def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
+        """Bind each unbound phrase plan's idf into its kernel rows in place:
+        the per-segment match counts sum to the exact phrase df (the
+        phrase_query.cpp one-pass stats collection), and every const-1 score
+        is multiplied by that df's idf in ``dtype``."""
+        dt = _dtype(dtype)
+        for name, plan in plans.items():
+            if _unbound(plan):
+                rows = pdf["query"] == name
+                dfp = pdf.loc[rows].drop_duplicates("segment_id")["seg_matches"].sum()
+                idf = dt(self._phrase_idf(plan, dfp, dtype))
+                pdf.loc[rows, "score"] = (pdf.loc[rows, "score"].to_numpy(dt) * idf).astype(np.float64)
 
     def _hits_frame(
         self, hits: pd.DataFrame, with_keys: bool, score_cols: tuple[str, ...] = ("score",)
@@ -2297,7 +2369,7 @@ class Searcher:
             schema = "doc_key string, " + schema
         return self.reader.spark.createDataFrame(hits, schema)
 
-    def _search_column_exists(self, node: flt.ColumnExists, k: int, with_keys: bool) -> DataFrame:
+    def _search_column_exists(self, node: flt.ColumnExists, k: int | None, with_keys: bool) -> DataFrame:
         """by_column_existence (column_existence_filter.cpp): docs whose stored
         column is non-null, constant score = boost. Catalyst pushes the
         IS NOT NULL to the parquet scan."""
@@ -2313,15 +2385,13 @@ class Searcher:
         pred = F.col(cols[0]).isNotNull()
         for c in cols[1:]:
             pred = pred | F.col(c).isNotNull()
-        out = (
-            docs.where(pred)
-            .select("doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score"))
-            .orderBy("segment_id", "doc_id")
-            .limit(k)
+        out = docs.where(pred).select(
+            "doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score")
         )
+        out = _top(out, k, "segment_id", "doc_id")
         return out if with_keys else out.drop("doc_key")
 
-    def _search_numeric_range(self, node: flt.NumericRange, k: int, with_keys: bool) -> DataFrame:
+    def _search_numeric_range(self, node: flt.NumericRange, k: int | None, with_keys: bool) -> DataFrame:
         """by_granular_range analogue: a native numeric predicate on a stored
         column — Catalyst pushes it to the parquet scan (min/max row-group
         pruning plays the role of the reference's multi-precision trie terms,
@@ -2338,120 +2408,13 @@ class Searcher:
             pred = pred & (c >= node.low if node.include_low else c > node.low)
         if node.high is not None:
             pred = pred & (c <= node.high if node.include_high else c < node.high)
-        out = (
-            docs.where(pred)
-            .select("doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score"))
-            .orderBy("segment_id", "doc_id")
-            .limit(k)
+        out = docs.where(pred).select(
+            "doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score")
         )
+        out = _top(out, k, "segment_id", "doc_id")
         return out if with_keys else out.drop("doc_key")
 
-    # ------------------------------------------------------------- phrase
-    def _search_phrase(
-        self, node: flt.Filter, terms: list, shifts: list[int], k: int, dtype: str, with_keys: bool
-    ) -> DataFrame:
-        """Positional query in ONE distributed kernel pass, scale-safe.
-
-        The final score is ``boost * idf(dfp) * rank(tf, dl)`` where the
-        global phrase-df ``dfp`` only scales every doc's score by the SAME
-        positive constant — so the top-k SET and its order are decided by the
-        dfp-independent rank key alone. The kernel therefore emits, per
-        segment, (a) its top-(k + slack) matches by rank and (b) its exact
-        match count; the driver sums the #segments counts into the exact dfp
-        (the phrase_query.cpp one-pass stats collection), scores the
-        ≤ (k+slack)·S surviving rows with the full expression in numpy
-        (:func:`bm25.phrase_score`) and keeps the top k. No global
-        shuffle of the match set, no single-partition Window — the old
-        ``Window.partitionBy(lit(1))`` count moved every match row to one
-        task, a driver-killer for a high-df phrase at 100× data.
-        ``shifts`` = per-slot position offsets: ``0..n-1`` for a phrase,
-        all-zero for SamePosition (same_position_filter.cpp). Slots may be
-        multiterm filters (VariadicPhraseQuery, phrase_query.cpp:119-303)."""
-        # cross-field SamePosition: slots given as (field, term) pairs
-        # (same_position_filter.cpp options). Plain-string slots resolve in
-        # the node's field as before.
-        slot_fields: list[str] | None = None
-        if any(isinstance(t, tuple) for t in terms):
-            default_f = getattr(node, "field", None) or self.reader.default_field
-            slot_fields = [
-                t[0] if isinstance(t, tuple) else default_f for t in terms
-            ]
-            terms = [t[1] if isinstance(t, tuple) else t for t in terms]
-            if any(f not in self.reader.field_names for f in slot_fields):
-                return self._hits_frame(_NO_HITS, with_keys)  # unknown field
-            fname = slot_fields[0]
-        else:
-            fname = getattr(node, "field", None) or self.reader.default_field
-        if fname not in self.reader.field_names:
-            return self._hits_frame(_NO_HITS, with_keys)
-        stats = self.reader.field_stats(fname)
-        n, avgdl = stats["docs_with_field"], stats["avgdl"]
-        if isinstance(self.model, TFIDFModel):
-            mode = "tfidf"
-        elif isinstance(self.model, BoostModel):
-            mode = "boost"
-        else:
-            mode = "bm25"
-        rank_params = (
-            mode,
-            self.k1 * (1 - self.b),
-            (self.k1 * self.b / avgdl) if avgdl else 0.0,
-        )
-        # reference-parity stats mode: the aggregated stats blob is the SUM of
-        # every member term's idf (term_stats.finish per slot term,
-        # phrase_filter.cpp:231-318; bm25.cpp:495-497 `idf +=`); the phrase
-        # frequency plugs in as tf. The idf is a per-query constant, so the
-        # dfp-independent rank key below already yields the exact top-k set.
-        slots = self._expand_slots(list(terms), field=fname)
-        idf_sum: float | None = None
-        if self.phrase_scoring == "sum_of_terms" and mode in ("bm25", "tfidf"):
-            idf_sum = 0.0
-            # per-slot stats come from THAT slot's field (cross-field
-            # same-position collects each term in its own field — "1 field
-            # per term since treated as a disjunction",
-            # same_position_filter_tests.cpp collector counts)
-            per_slot_fields = slot_fields or [fname] * len(slots)
-            stats_cache: dict[str, tuple[dict, float]] = {}
-            for f, slot in zip(per_slot_fields, slots):
-                if f not in stats_cache:
-                    fs = self.reader.field_stats(f)
-                    ts = self.reader.term_stats(
-                        sorted({t for fl, sl in zip(per_slot_fields, slots)
-                                if fl == f for t in sl}),
-                        field=f,
-                    )
-                    stats_cache[f] = (ts, float(fs["docs_with_field"]))
-                tstats, n_f = stats_cache[f]
-                for t in slot:
-                    df_t = tstats.get(t, (0, 0))[0]
-                    if df_t == 0:
-                        continue  # absent term: the phrase matches nothing anyway
-                    idf_of = bm25_idf if mode == "bm25" else tfidf_idf
-                    idf_sum += float(idf_of(df_t, n_f))
-        # slack absorbs rank-vs-score FP boundary noise: the exact expression
-        # re-ranks the survivors below, so only >16 docs inside one ULP of the
-        # k-th rank could ever flip the set
-        local = self.phrase_matches(
-            slots, shifts, local_k=k + 16, rank_params=rank_params, field=fname,
-            slot_fields=slot_fields,
-        )
-        pdf = local.toPandas()
-        if mode == "boost":
-            idf = 0.0
-        elif idf_sum is not None:
-            idf = idf_sum
-        else:
-            # exact phrase-df mode: per-segment exact match counts summed into
-            # the global dfp (one-pass stats, no extra job)
-            dfp = float(pdf.drop_duplicates("segment_id")["seg_matches"].sum())
-            idf = tfidf_idf(dfp, n) if mode == "tfidf" else bm25_idf(dfp, n)
-        pdf["score"] = phrase_score(
-            mode, pdf["tf"].to_numpy(), pdf["dl"].to_numpy(), idf, avgdl,
-            self.k1, self.b, node.boost,
-        )
-        return self._hits_frame(_driver_topk(pdf, k), with_keys)
-
-    def _search_nested(self, node: flt.Nested, k: int, with_keys: bool) -> DataFrame:
+    def _search_nested(self, node: flt.Nested, k: int | None, with_keys: bool) -> DataFrame:
         """ChildToParentJoin (nested_filter.cpp:99-305) as a relational plan:
         ALL child matches (un-truncated kernel pass) → broadcast-light
         groupBy(parent_key) fold → join onto the parent docs. The aggregate
@@ -2487,7 +2450,7 @@ class Searcher:
             out = parents.join(grouped.select("doc_key"), "doc_key", "left_anti").select(
                 "doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score")
             )
-            topk = out.orderBy("segment_id", "doc_id").limit(k)
+            topk = _top(out, k, "segment_id", "doc_id")
         else:
             min_c = node.min_children if node.match == "min" else 1
             max_c = getattr(node, "max_children", None)
@@ -2508,7 +2471,7 @@ class Searcher:
                         * F.lit(float(node.boost))
                     ).alias("score"),
                 )
-                topk = out.orderBy(F.desc("score"), "segment_id", "doc_id").limit(k)
+                topk = _top(out, k, F.desc("score"), "segment_id", "doc_id")
                 return topk if with_keys else topk.drop("doc_key")
             matched = grouped.where(F.col("n_children") >= min_c)
             # Match.Max upper bound (nested_filter.hpp:35-52: a Match is a
@@ -2519,102 +2482,8 @@ class Searcher:
                 "doc_key", "segment_id", "doc_id",
                 (F.col("child_score") * F.lit(float(node.boost))).alias("score"),
             )
-            topk = out.orderBy(F.desc("score"), "segment_id", "doc_id").limit(k)
+            topk = _top(out, k, F.desc("score"), "segment_id", "doc_id")
         return topk if with_keys else topk.drop("doc_key")
-
-    def _ngram_similarity_local(self, node: flt.NgramSimilarity, k: int) -> DataFrame:
-        """by_ngram_similarity (ngram_similarity_query.cpp): per segment,
-        candidate docs (≥ min distinct matched ngrams, a cheap vectorized
-        union-count prefilter ≙ the reference's potential/min_match cut) get
-        the longest in-order increasing-position chain computed by an
-        O(stream × N) DP over the doc's merged occurrence stream. Score =
-        boost * L/N. Returns each segment's top-k (segment_id, doc_id,
-        score) rows, unmerged."""
-        import math
-
-        ngrams = list(node.ngrams)
-        n_total = len(ngrams)
-        min_match = max(1, int(math.ceil(node.threshold * n_total)))
-        boost = float(node.boost)
-        uniq = sorted(set(ngrams))
-        fname = self.reader._resolve_field(getattr(node, "field", None))
-        scan = ScanSpec({fname: uniq}, need_positions=True, pos_terms={fname: uniq})
-
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-            )
-            if len(post_pdf) == 0 or len(norm_pdf) == 0:
-                return empty
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            # (doc, pos, query-slot) streams per distinct matched ngram
-            per_term: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-            for t in uniq:
-                v = sv.view(t)
-                if v is None:
-                    continue
-                t_ids, t_tfs = v.decode_all()
-                per_term[t] = (t_ids, t_tfs, v.positions())
-            if not per_term:
-                return empty
-            # candidates = union of docs containing ANY query ngram (a
-            # distinct-count >= min_match prefilter would be unsafe when the
-            # query repeats an ngram; the DP below applies the real cut)
-            leg_ids = [ids for ids, _, _ in per_term.values()]
-            all_ids = np.concatenate(leg_ids)
-            cand = np.unique(all_ids)
-            cand, _ = _mask_deleted(cand, cand, dels)
-            if cand.size == 0:
-                return empty
-            # merged stream per candidate: gather (doc_rank, pos, slot-set id)
-            slots_of = {t: [i for i, g in enumerate(ngrams) if g == t] for t in per_term}
-            streams = []  # (key = rank*2^32 + pos, term_index)
-            PACK = np.int64(1) << np.int64(32)
-            for ti, (t, (t_ids, t_tfs, t_pos)) in enumerate(per_term.items()):
-                row = np.searchsorted(t_ids, cand)
-                row_c = np.minimum(row, t_ids.size - 1)
-                present = t_ids[row_c] == cand
-                rows_sel = row_c[present]
-                ranks_sel = np.flatnonzero(present).astype(np.int64)
-                if rows_sel.size == 0:
-                    continue
-                starts = np.zeros(t_ids.size + 1, dtype=np.int64)
-                np.cumsum(t_tfs, out=starts[1:])
-                lens = t_tfs[rows_sel]
-                total = int(lens.sum())
-                out_off = np.zeros(rows_sel.size, np.int64)
-                np.cumsum(lens[:-1], out=out_off[1:])
-                rep = np.repeat(np.arange(rows_sel.size), lens)
-                flat_idx = np.arange(total, dtype=np.int64) - out_off[rep] + starts[rows_sel][rep]
-                keys = ranks_sel[rep] * PACK + t_pos[flat_idx]
-                streams.append((keys, np.full(total, ti, np.int64)))
-            keys = np.concatenate([s[0] for s in streams])
-            tvals = np.concatenate([s[1] for s in streams])
-            order = np.argsort(keys, kind="stable")
-            keys, tvals = keys[order], tvals[order]
-            doc_rank = (keys // PACK).astype(np.int64)
-            # lockstep-across-docs chain DP (no per-event Python; see
-            # _ngram_chain_lengths)
-            term_list = list(per_term.keys())
-            slot_lists = [slots_of[t] for t in term_list]
-            docs_u, L = _ngram_chain_lengths(keys, doc_rank, tvals, slot_lists, n_total)
-            hit = L >= min_match
-            if not hit.any():
-                return empty
-            ids = cand[docs_u[hit]].astype(np.int64)
-            scores = (boost * L[hit] / n_total).astype(np.float64)
-            ids_k, scores_k = _local_topk(ids, scores, k)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids_k.size, sid, np.int32),
-                    "doc_id": ids_k.astype(np.int32),
-                    "score": scores_k,
-                }
-            )
-
-        return self._segment_job(kernel, scan, KERNEL_OUT_SCHEMA)
 
     def _sidecar_targets(
         self,
@@ -2827,130 +2696,6 @@ class Searcher:
             pay_scan.mapInPandas(kernel, out_schema)
             .orderBy(F.desc("score"), "segment_id", "doc_id", "term", "pos")
         )
-
-    def _expand_slots(self, terms: list, field: str | None = None) -> list[list[str]]:
-        """Variadic slots: a str slot stays fixed; a multiterm filter slot
-        (Prefix/Wildcard/Fuzzy/Range/Terms) expands against the term dict of
-        the phrase's field, capped at its ``scored_terms_limit``
-        (phrase_filter.cpp variadic parts)."""
-        slots: list[list[str]] = []
-        for t in terms:
-            if isinstance(t, str):
-                slots.append([t])
-            elif isinstance(t, (list, tuple)):
-                slots.append(list(t))  # already-expanded slot (pass-through)
-            elif isinstance(t, flt.Terms):
-                slots.append(sorted(set(t.terms)))
-            else:
-                expanded, _tail = expand_multiterm(t, self.reader, field=field)
-                slots.append([e[0] for e in expanded])
-        return slots
-
-    def _phrase_scan(
-        self, terms: list, field: str | None, slot_fields: list[str] | None
-    ) -> tuple[ScanSpec, list[list[str]], str]:
-        """(positional postings scan, per-slot kernel keys, norms field) of a
-        phrase. Cross-field slots (``slot_fields``) read each field's terms
-        and key them ``field\\x1fterm`` when the slots span fields; their
-        norms are the first slot's field's."""
-        if slot_fields is not None:
-            slots = [[t] if isinstance(t, str) else list(t) for t in terms]
-            by_field: dict[str, set] = {}
-            for f, slot in zip(slot_fields, slots):
-                by_field.setdefault(f, set()).update(slot)
-            field_terms = {f: sorted(ts) for f, ts in by_field.items()}
-            scan = ScanSpec(field_terms, need_positions=True, pos_terms=field_terms)
-            keys = [[scan.key(f, t) for t in slot] for f, slot in zip(slot_fields, slots)]
-            return scan, keys, slot_fields[0]
-        field = self.reader._resolve_field(field)
-        slots = self._expand_slots(list(terms), field=field)
-        flat = sorted({t for slot in slots for t in slot})
-        scan = ScanSpec({field: flat}, need_positions=True, pos_terms={field: flat})
-        return scan, [list(s) for s in slots], field
-
-    def phrase_matches(
-        self,
-        terms: list,
-        shifts: list[int] | None = None,
-        local_k: int | None = None,
-        rank_params: tuple[str, float, float] | None = None,
-        field: str | None = None,
-        slot_fields: list[str] | None = None,
-    ) -> DataFrame:
-        """All docs matching the (possibly variadic) phrase, with occurrence
-        counts.
-
-        ``slot_fields`` (cross-field SamePosition): per-slot field names —
-        slot i's terms resolve in ``slot_fields[i]``. Postings are fetched
-        per field and re-keyed with a ``field\\x1fterm`` composite so the
-        SAME packed-key intersect kernel runs unchanged; positions align
-        across fields because every field's tokens of one doc share the
-        position space of that doc's respective value arrays
-        (same_position_filter.cpp: options are (field, term) pairs).
-
-        Kernel — FULLY vectorized, zero per-doc Python: for every slot the
-        candidate docs' positions are gathered into one flat array, packed as
-        ``doc_rank * 2^32 + (pos - shift)`` keys, and the slots' key sets are
-        intersected with ``np.intersect1d`` in one pass (the flattened-stream
-        trick the invert pass uses). tf per doc = bincount of the surviving
-        keys' doc ranks. A slot with several terms (variadic) unions its
-        terms' keys first (disjunction of position iterators,
-        phrase_query.cpp VariadicPhraseQuery).
-
-        With ``local_k`` set, each segment emits only its top-``local_k``
-        matches under the dfp-independent rank key given by ``rank_params``
-        (mode, A=k1(1-b), B=k1·b/avgdl; rank = tf/(A+B·dl+tf) for bm25, tf
-        for tfidf, doc order for boost) plus a ``seg_matches`` column carrying
-        the segment's exact total match count — the inputs the scale-safe
-        phrase scorer needs without ever shuffling the full match set."""
-        if shifts is None:
-            shifts = list(range(len(terms)))
-        scan, slot_list, field = self._phrase_scan(terms, field, slot_fields)
-        shift_list = list(shifts)
-        out_schema = MATCH_OUT_SCHEMA + (", seg_matches long" if local_k is not None else "")
-
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            cols = {"segment_id": [], "doc_id": [], "tf": [], "dl": []}
-            types = {"segment_id": "int32", "doc_id": "int32", "tf": "int64", "dl": "int64"}
-            if local_k is not None:
-                cols["seg_matches"] = []
-                types["seg_matches"] = "int64"
-            empty = pd.DataFrame(cols).astype(types)
-            if len(post_pdf) == 0 or len(norm_pdf) == 0:
-                return empty
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl = _SegmentNorms(norm_pdf)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            out_ids, tf_v = _phrase_seg_tfs(sv, slot_list, shift_list, dels)
-            if out_ids.size == 0:
-                return empty
-            dl_v = dl[out_ids - 1]
-            seg_n = int(out_ids.size)
-            if local_k is not None and out_ids.size > local_k:
-                mode, A, Bc = rank_params
-                if mode == "bm25":
-                    tfd = tf_v.astype(np.float64)
-                    rank = tfd / (A + Bc * dl_v.astype(np.float64) + tfd)
-                elif mode == "tfidf":
-                    rank = tf_v.astype(np.float64)
-                else:  # boost: constant score → doc order
-                    rank = np.zeros(out_ids.size)
-                sel = np.lexsort((out_ids, -rank))[:local_k]
-                sel.sort()
-                out_ids, tf_v, dl_v = out_ids[sel], tf_v[sel], dl_v[sel]
-            data = {
-                "segment_id": np.full(out_ids.size, sid, np.int32),
-                "doc_id": out_ids.astype(np.int32),
-                "tf": tf_v,
-                "dl": dl_v,
-            }
-            if local_k is not None:
-                data["seg_matches"] = np.full(out_ids.size, seg_n, np.int64)
-            return pd.DataFrame(data)
-
-        return self._segment_job(kernel, scan, out_schema, norms_field=field)
-
 
 class PreparedBatch:
     """A compiled query batch (``filter::prepared`` analogue): stats baked,

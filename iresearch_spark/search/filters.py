@@ -102,9 +102,12 @@ class Phrase(Filter):
     """Positional phrase (phrase_filter.cpp). Slots are fixed terms (str) or
     multiterm filters (Prefix/Wildcard/Fuzzy/Range/Terms) — the variadic form
     of phrase_query.cpp:119-303 (each filter slot expands against the term
-    dict, capped at its scored_terms_limit). tf = #occurrences; scored as
-    BM25 over the phrase's own document frequency (documented divergence:
-    the reference folds per-term stats, we use exact phrase df)."""
+    dict, capped at its scored_terms_limit). tf = #occurrences, scored by
+    the searcher's scorer and dtype like a term's. At the root, the idf is
+    by default that of the phrase's own document frequency, bound on the
+    driver after the kernel counted the matches (documented divergence:
+    the reference sums the member terms' idfs — ``Searcher(...,
+    phrase_scoring="sum_of_terms")``, which nested phrases always use)."""
 
     terms: tuple  # str | Filter per slot
     boost: float = 1.0
@@ -121,7 +124,7 @@ class Phrase(Filter):
 class SamePosition(Filter):
     """All terms occurring at the identical position in a doc
     (same_position_filter.cpp). tf = number of shared positions; scored like
-    :class:`Phrase` (exact match-df BM25).
+    :class:`Phrase` (stats and norms of the first slot's field).
 
     Each slot is either a plain term (looked up in ``field``) or a
     ``(field, term)`` pair — the reference's options are (field, term)

@@ -147,7 +147,7 @@ def test_root_phrase_unchanged_default_mode(idx):
     # the root path keeps its exact_df default; nesting is sum_of_terms-only
     s = Searcher(idx)  # default exact_df
     root = s.search(PH, k=5).collect()
-    assert root  # two-pass path unaffected by the compiler change
+    assert root
 
 
 NEST_CHILDREN = {

@@ -997,8 +997,8 @@ def test_by_terms_merge_type(gap_index, merge, fold):
 
 
 def test_phrase_offsets_nested_under_and(gap_index):
-    """Offsets must also apply on the in-kernel nested-phrase path (the
-    compile_plans branch, not just the root two-pass path)."""
+    """Offsets must also apply to a phrase nested under And, not just to a
+    root phrase."""
     root = matched(gap_index, flt.Phrase(("a", "a"), offsets=(0, 1)))
     nested = matched(
         gap_index,
@@ -1012,11 +1012,12 @@ def test_cross_field_samepos_union_keeps_pushdown(same_position_index):
     read: that field's term range + set AND'd with its field equality, so
     row-group statistics prune every branch (the row-group-pruning contract
     every 100-TB claim rests on) — never one unpruned read."""
-    from iresearch_spark.search.executor import scan_reads
+    from iresearch_spark.search.executor import compile_plan, scan_reads
 
-    s = Searcher(same_position_index)
-    scan, keys, _ = s._phrase_scan([["300"], ["90"]], None, ["a", "b"])
-    assert keys == [["a\x1f300"], ["b\x1f90"]]
+    plan, scan = compile_plan(
+        flt.SamePosition((("a", "300"), ("b", "90"))), same_position_index
+    )
+    assert plan["slots"] == [["a\x1f300"], ["b\x1f90"]]
     reads = scan_reads(scan, same_position_index.is_multifield)
     assert len(reads) == 1 and reads[0][1]  # one read, positions for every row
     pred = str(reads[0][0])
@@ -1037,8 +1038,6 @@ def test_same_position_cross_field_nested_and_batch(same_position_index):
         flt.And((flt.SamePosition(pairs), flt.All(boost=0.0))),
     )
     s = Searcher(same_position_index)
-    # root-level positional queries use search()'s two-pass path by design;
-    # the batch form is the nested-leaf wrapping
     batch = s.search_many(
         {"q": flt.And((flt.SamePosition(pairs), flt.All(boost=0.0)))}, k=100
     )

@@ -209,23 +209,6 @@ def test_variadic_phrase_fuzzy_slot(vbuilt):
     assert _keys(rows) == ["v0002"]
 
 
-def test_variadic_phrase_terms_slot(vbuilt):
-    s = Searcher(vbuilt)
-    rows = s.search(
-        flt.Phrase((flt.Terms(("quick", "slow")), "brown", "fox")), k=10
-    ).collect()
-    assert _keys(rows) == ["v0001", "v0005"]
-    # v0005 contains BOTH "slow brown fox" and "quick brown fox" -> tf 2
-    by_key = {r["doc_key"]: r["score"] for r in rows}
-    assert by_key["v0005"] > by_key["v0001"] * 0  # present; tf asserted via matches
-    m = Searcher(vbuilt).phrase_matches([flt.Terms(("quick", "slow")), "brown", "fox"])
-    tf = {}
-    docs = vbuilt.docs().select("segment_id", "doc_id", "doc_key")
-    for r in m.join(docs, ["segment_id", "doc_id"]).collect():
-        tf[r["doc_key"]] = r["tf"]
-    assert tf == {"v0001": 1, "v0005": 2}
-
-
 # ---------------------------------------------------------- boosts & merges
 
 

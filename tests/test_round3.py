@@ -1,8 +1,8 @@
 """Round-3 regressions: docs_mask inside pruned iterators (WAND/MaxScore/
 conjunction with multi-block segments), delete-commit lost updates, the fused
 postings+term_dict build stage, the scale-safe phrase scorer (per-segment
-local top-k + exact seg counts, no single-partition Window), the matches-only
-nested child pass, and same-position ngram chain semantics."""
+local top-k + exact seg counts), the matches-only nested child pass, and
+same-position ngram chain semantics."""
 
 import numpy as np
 import pytest
@@ -190,21 +190,6 @@ def test_phrase_local_topk_truncation(spark, tmp_path_factory):
     assert [g[0] for g in got] == [e[0] for e in exp]
     for (_, gs), (_, es) in zip(got, exp):
         assert abs(gs - es) < 1e-9
-
-
-def test_phrase_plan_has_no_single_partition_window(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("phwin"))
-    docs = {f"w{i:03d}": "fast scan pad" for i in range(20)}
-    df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=2).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    s = Searcher(reader)
-    # search() scores the phrase kernel's rows on the driver: inspect the
-    # kernel DataFrame it collects
-    res = s.phrase_matches(["fast", "scan"], [0, 1], local_k=5 + 16, rank_params=("bm25", 0.3, 0.1))
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert [r["doc_key"] for r in s.search(flt.Phrase(("fast", "scan")), k=5).collect()]
 
 
 # --------------------------------------------------------------------------

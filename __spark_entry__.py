@@ -888,24 +888,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_text_edge_ngram"] = text_edge_ngram
 
-    def fuzzy_distributed(s, d):
-        # the OVER-CAP fuzzy path: a fresh reader with FUZZY_VOCAB_MAX=0
-        # rejects the driver-cached vocab, forcing the fully distributed
-        # expansion (pushed-down tlen/charmask JVM prefilter + pandas-UDF
-        # Levenshtein DP on survivors) against the same oracle as q_fuzzy
-        base = _index(s, d)  # ensures the index exists
-        r = IndexReader(s, base.index_path)
-        r.FUZZY_VOCAB_MAX = 0
-        res = Searcher(r, k1=K1, b=B).search(
-            flt.Fuzzy("scam", max_distance=1), k=TOPK, dtype="float64"
-        )
-        return res.select(
-            F.col("doc_key").cast("bigint").alias("doc_id"),
-            F.round(F.col("score"), 4).cast("double").alias("score"),
-        )
-
-    q["q_fuzzy_dist"] = fuzzy_distributed
-
     # by_edit_distance with the exact-prefix option (levenshtein_filter.cpp:
     # 241-265): candidates must start with "s"; only the remainder is matched
     # within 1 edit of "cam" (so "scan" matches via its suffix "can")
@@ -1321,7 +1303,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     first = [
         # (1) new in r5
         "q_same_position_fields", "q_or_minmatch0", "q_terms_minmatch0",
-        "q_text_edge_ngram", "q_fuzzy_dist", "q_fuzzy_prefix",
+        "q_text_edge_ngram", "q_fuzzy_prefix",
         "q_collation_sv", "q_collation_da",
         # (2) green in r03, rotated out of r04's 50-entry window
         "q_lang_id", "q_fingerprint", "q_exact_dups", "q_jaccard_pairs",
@@ -1734,10 +1716,6 @@ WHERE CAST(round(list_dot_product(l.v, r.v) / (sqrt(list_dot_product(l.v, l.v)) 
     o["q_same_position_syn"] = _bm25_sql("term = 'scan'")
     o["q_term_text_analyzer"] = _bm25_sql("term = 'custom'", cte=_text_tok_cte())
     o["q_text_edge_ngram"] = _bm25_sql("term = 'cus'", cte=_text_edge_tok_cte())
-    o["q_fuzzy_dist"] = _bm25_sql(
-        "levenshtein(term, 'scam') <= 1",
-        leg_boost="(1.0 - levenshtein(tf.term, 'scam') / least(length(tf.term), 4))",
-    )
     o["q_phrase_variadic"] = _phrase_regex_sql(" fast  s[a-z0-9]* ")
     o["q_fuzzy_transpose"] = _bm25_sql(
         "damerau_levenshtein(term, 'saprk') <= 1",

@@ -66,7 +66,6 @@ from ..analysis.tokenizers import (
 )
 
 from .codec import encode_postings_batch_arrow, vbyte_encode
-from .termfeat import with_term_features
 
 POSTINGS_SCHEMA = (
     "field string, term string, segment_id int, docs_count int, total_freq long, "
@@ -91,10 +90,7 @@ FIELD_SEP = "\x1f"
 # cells, not one multi-hundred-MB cell every kernel must decode in full.
 NORMS_CHUNK_DOCS = 1 << 16
 
-# the layout kernel emits the base columns; tlen/charmask (the build-amortized
-# fuzzy-prefilter features, see index/termfeat.py) are appended declaratively
-TERM_DICT_BASE_SCHEMA = "field string, term string, df long, ttf long, max_freq int"
-TERM_DICT_SCHEMA = TERM_DICT_BASE_SCHEMA + ", tlen int, charmask int"
+TERM_DICT_SCHEMA = "field string, term string, df long, ttf long, max_freq int"
 
 OFFSETS_SCHEMA = (
     "term string, segment_id int, docs_count int, "
@@ -839,7 +835,7 @@ class IndexBuilder:
         # the engine's (segment_id, doc_id) tie-break equals the oracle's
         # doc_key tie-break — rank identity on equal scores (SURVEY §7.3 risk
         # 3). The bucket is computed from the PERSISTED deterministic
-        # boundaries (searchsorted in an Arrow-batched UDF), so membership is
+        # boundaries (a CASE chain over the sorted cut points), so membership is
         # restart-stable; the range shuffle on `_b` merely places buckets.
         if seg_groups is not None:
             # ---- footer-stats fast path: NO full-corpus motion at all ----
@@ -903,20 +899,16 @@ class IndexBuilder:
             )
             inverted = desc.mapInArrow(invert_groups, LINEAGE_SCHEMA)
         else:
-            barr = np.array(boundaries, dtype=object)
-
-            from pyspark.sql.functions import pandas_udf
-
-            @pandas_udf("int")
-            def _bucket(keys: pd.Series) -> pd.Series:
-                if barr.size == 0:
-                    return pd.Series(np.zeros(len(keys), np.int32), index=keys.index)
-                b = np.searchsorted(barr, keys.astype(str).to_numpy(), side="right")
-                return pd.Series(b.astype(np.int32), index=keys.index)
-
+            # bucket = the number of (sorted) boundaries <= key, i.e.
+            # searchsorted(side="right"); string order is code point order on
+            # both sides
+            key = F.col(key_col).cast("string")
+            bucket = F.lit(0)
+            for i, bound in enumerate(boundaries):
+                bucket = F.when(key >= bound, i + 1).otherwise(bucket)
             partitioned = (
                 df.select(*in_cols)
-                .withColumn("_b", _bucket(F.col(key_col).cast("string")))
+                .withColumn("_b", bucket.cast("int"))
                 .repartitionByRange(num_segments, "_b")
                 .sortWithinPartitions("_b", key_col)
             )
@@ -1032,8 +1024,7 @@ class IndexBuilder:
                 spark.read.parquet(raw_path)
                 .repartitionByRange(p_parts, "field", "term")
                 .sortWithinPartitions("field", "term", "segment_id")
-                .mapInArrow(_layout_and_aggregate(postings_path), TERM_DICT_BASE_SCHEMA)
-                .transform(with_term_features)
+                .mapInArrow(_layout_and_aggregate(postings_path), TERM_DICT_SCHEMA)
                 .write.mode("overwrite")
                 .parquet(agg_path)
             )
@@ -1083,8 +1074,8 @@ class IndexBuilder:
         if not self._stage_done(run_id, gen, "term_dict", term_dict_path):
             t0 = time.time()
             if term_sources:
-                # select the base columns only: a legacy source may lack
-                # tlen/charmask and the features are recomputed below anyway
+                # select the term_dict columns only: an older source may
+                # carry more
                 srcs = [
                     spark.read.parquet(p).select("field", "term", "df", "ttf", "max_freq")
                     for p in term_sources
@@ -1108,8 +1099,7 @@ class IndexBuilder:
                     )
                 )
             (
-                agg.transform(with_term_features)
-                .repartitionByRange(max(8, p_parts // 4), "field", "term")
+                agg.repartitionByRange(max(8, p_parts // 4), "field", "term")
                 .sortWithinPartitions("field", "term")
                 .write.mode("overwrite")
                 .parquet(term_dict_path)

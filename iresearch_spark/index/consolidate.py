@@ -661,8 +661,6 @@ def consolidate(
         # purged docs change df/ttf: rebuild term_dict from the new postings
         # (the reference merge recomputes term stats the same way)
         term_dict_path = os.path.join(gen_dir, "term_dict")
-        from .termfeat import with_term_features
-
         (
             spark.read.parquet(postings_path)
             .groupBy("field", "term")
@@ -671,7 +669,6 @@ def consolidate(
                 F.sum("total_freq").alias("ttf"),
                 F.max("max_freq").alias("max_freq"),
             )
-            .transform(with_term_features)
             .repartitionByRange(max(8, p_parts // 4), "field", "term")
             .sortWithinPartitions("field", "term")
             .write.mode("overwrite")

@@ -1,8 +1,12 @@
 """Point-in-time index reader (segment_reader.hpp analogue).
 
-Loads the committed generation's tables; global BM25 stats are collected once
-per field (tiny) and cached — the ``filter::prepare`` stats phase
-(SURVEY.md §3.2). Multi-field indexes (reference per-document field lists,
+Loads the committed generation's tables; global BM25 stats are read once per
+field with pyarrow and cached on the driver — the ``filter::prepare`` stats
+phase (SURVEY.md §3.2): the norms counters for field stats, and the field's
+sorted term dictionary (:meth:`IndexReader.fuzzy_vocab_sorted`) for per-term
+df/ttf and multiterm expansion.
+
+Multi-field indexes (reference per-document field lists,
 utils/index-put.cpp:258-277) carry a ``field`` column in postings / term_dict
 / norms; every scan helper takes an optional ``field`` (None = the index's
 default field) and the field equality clause pushes down to the
@@ -66,8 +70,7 @@ class IndexReader:
             self.meta = json.load(f)
         self._field_stats: dict[str, dict] = {}
         self._tables: dict[str, DataFrame] = {}
-        self._vocab_cache: dict[str, tuple | None] = {}
-        self._vocab_sorted_cache: dict[str, tuple | None] = {}
+        self._vocab: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._norms_summary: pd.DataFrame | None = None
 
     # ------------------------------------------------------------- fields
@@ -143,123 +146,41 @@ class IndexReader:
 
     def term_dict(self, field: str | None = None) -> DataFrame:
         td = self._table("term_dict")
-        if "charmask" not in td.columns:
-            # index committed before the fuzzy-prefilter feature columns
-            # landed: derive tlen/charmask on the fly (same expressions the
-            # build persists — see index/termfeat.py)
-            from .termfeat import with_term_features
-
-            td = with_term_features(td)
         clause = self._field_clause(field) if "field" in td.columns else None
         return td.where(clause) if clause is not None else td
 
-    # in-memory term-dictionary cap for the fuzzy fast path (rows per field).
-    # ~48 bytes/row → the default caps the driver cache at ~100 MB, far above
-    # any natural-language vocabulary (enwiki ≈ 10M distinct body terms).
-    FUZZY_VOCAB_MAX = int(os.environ.get("IRS_FUZZY_VOCAB_MAX", "2000000"))
-
-    def fuzzy_vocab(self, field: str | None = None):
-        """Driver-cached (terms, df, tlen, charmask) numpy columns for one
-        field — the in-memory term-dictionary role of the reference's FST
-        (formats_burst_trie.cpp:857-861: the prefix index lives in memory on
-        the searching node; fuzzy intersects the automaton with it locally,
-        levenshtein_filter.cpp:139-310). Expanding a fuzzy query against this
-        cache is pure numpy (micro-seconds) instead of a dedicated Spark job
-        whose scheduling floor dwarfs the actual work.
-
-        BOUNDED: collected once per reader per field, only when the field's
-        vocabulary has ≤ ``FUZZY_VOCAB_MAX`` rows; larger vocabularies return
-        None and the caller keeps the fully distributed expansion (pushed-down
-        tlen/charmask prefilter + pandas-UDF DP) — nothing unbounded ever
-        reaches the driver."""
-        fname = self._resolve_field(field)
-        if fname in self._vocab_cache:
-            return self._vocab_cache[fname]
-        # collected in ascending term order: the JVM sorts the (one-time)
-        # collect so fuzzy_vocab_sorted never pays a driver-side argsort over
-        # millions of Python strings (the is-sorted check there then passes)
-        cols = (
-            self.term_dict(fname)
-            .select("term", "df", "ttf", "tlen", "charmask")
-            .orderBy("term")
-        )
-        # over-cap guard: when the table's parquet footers (driver-local, no
-        # job) show more rows than the cap, a cheap limited COUNT decides
-        # before any data transfer — a >cap vocabulary must not pay a
-        # multi-GB toPandas just to be discarded (the first query on a huge
-        # index would eat the collect). Footer total covers all fields, so
-        # under-cap totals skip the probe entirely (zero extra jobs on the
-        # common path).
-        total = self._term_dict_total_rows()
-        if total is None or total > self.FUZZY_VOCAB_MAX:
-            if cols.limit(self.FUZZY_VOCAB_MAX + 1).count() > self.FUZZY_VOCAB_MAX:
-                self._vocab_cache[fname] = None
-                return None
-        pdf = cols.limit(self.FUZZY_VOCAB_MAX + 1).toPandas()
-        if len(pdf) > self.FUZZY_VOCAB_MAX:
-            self._vocab_cache[fname] = None
-            return None
-        out = (
-            pdf["term"].to_numpy(dtype=object),
-            pdf["df"].to_numpy(np.int64),
-            pdf["ttf"].to_numpy(np.int64),
-            pdf["tlen"].to_numpy(np.int64),
-            pdf["charmask"].to_numpy(np.int64),
-        )
-        self._vocab_cache[fname] = out
-        return out
-
-    def _term_dict_total_rows(self) -> int | None:
-        """Total term_dict rows (ALL fields) from parquet footer metadata,
-        read driver-local — no Spark job, no data. None when the paths are
-        not locally readable (remote fs) — callers then fall back to a
-        limited COUNT job."""
-        try:
-            import pyarrow.parquet as pq
-
-            v = self.meta["tables"]["term_dict"]
-            paths = v if isinstance(v, list) else [v]
-            total = 0
-            for p in paths:
-                p = p.removeprefix("file:")
-                if os.path.isdir(p):
-                    for root, _dirs, files in os.walk(p):
-                        for f in files:
-                            if f.endswith(".parquet"):
-                                total += pq.ParquetFile(
-                                    os.path.join(root, f)
-                                ).metadata.num_rows
-                elif os.path.isfile(p):
-                    total += pq.ParquetFile(p).metadata.num_rows
-                else:
-                    return None
-            return total
-        except Exception:
-            return None
-
     def fuzzy_vocab_sorted(self, field: str | None = None):
-        """:meth:`fuzzy_vocab` permuted into ASCENDING term order — the
-        FST-role sorted view the Levenshtein-automaton intersect walk
-        (search/lev_automaton.py) seeks over.  The collect order of the
-        term_dict scan is not guaranteed (df-ranked / task order), so the
-        permutation is computed once per (reader, field) and cached; the
-        prefilter fast path keeps the unsorted arrays (its selection is
-        order-independent) and never pays the sort."""
+        """One field's term dictionary as term-ascending numpy arrays
+        ``(terms, df, ttf)`` — the in-memory term index of the reference
+        (formats_burst_trie.cpp:857-861), which every multiterm expansion
+        (prefix, range, wildcard, fuzzy) and every (df, ttf) lookup reads on
+        the driver: zero Spark jobs.
+
+        Loaded once per (reader, field) by one pyarrow read of the term_dict
+        table (``field == f`` on multi-field indexes). The table is written
+        sorted by (field, term), so the rows normally arrive in ascending
+        order; a list-valued table concatenates its parts, so the order is
+        checked and a stable argsort restores it when needed.
+
+        Memory: the whole field vocabulary stays on the driver, about 65
+        bytes per term (3 MB for 50k terms, 650 MB for 10M); there is no
+        cap."""
         fname = self._resolve_field(field)
-        if fname in self._vocab_sorted_cache:
-            return self._vocab_sorted_cache[fname]
-        vocab = self.fuzzy_vocab(fname)
+        vocab = self._vocab.get(fname)
         if vocab is None:
-            self._vocab_sorted_cache[fname] = None
-            return None
-        terms = vocab[0]
-        if len(terms) > 1 and not bool(np.all(terms[:-1] <= terms[1:])):
-            perm = np.argsort(terms, kind="stable")
-            out = tuple(a[perm] for a in vocab)
-        else:
-            out = vocab
-        self._vocab_sorted_cache[fname] = out
-        return out
+            pred = pc.field("field") == fname if self.is_multifield else None
+            pdf = read_frame(self.meta["tables"]["term_dict"], ["term", "df", "ttf"], pred)
+            vocab = (
+                pdf["term"].to_numpy(dtype=object),
+                pdf["df"].to_numpy(np.int64),
+                pdf["ttf"].to_numpy(np.int64),
+            )
+            terms = vocab[0]
+            if len(terms) > 1 and not bool(np.all(terms[:-1] <= terms[1:])):
+                perm = np.argsort(terms, kind="stable")
+                vocab = tuple(a[perm] for a in vocab)
+            self._vocab[fname] = vocab
+        return vocab
 
     def deletes(self) -> DataFrame | None:
         """(segment_id, doc_id) delete pairs — the document_mask
@@ -327,13 +248,6 @@ class IndexReader:
         rng = (F.col("term") >= ts[0]) & (F.col("term") <= ts[-1])
         return rng & F.col("term").isin(ts)
 
-    def _term_pred(self, terms: list[str], field: str | None = None):
-        """:meth:`_bare_term_pred` plus the field equality on multi-field
-        indexes."""
-        pred = self._bare_term_pred(terms)
-        clause = self._field_clause(field)
-        return pred & clause if clause is not None else pred
-
     def postings_for_terms(
         self, terms: list[str], extra_pred=None, field: str | None = None
     ) -> DataFrame:
@@ -372,26 +286,16 @@ class IndexReader:
         self, terms: list[str], field: str | None = None
     ) -> dict[str, tuple[int, int]]:
         """term → (df, ttf) within one field; the term_collector phase
-        (collectors.cpp:144-219).
-
-        Served from the driver-cached sorted vocabulary when the field's
-        dictionary fits the cache (binary search per term — zero Spark jobs;
-        the cache is built once per reader and amortizes across every query,
-        which leaves the postings kernel as a search's ONLY job).  Falls back
-        to the distributed term_dict lookup above the cache cap or under
-        IRS_STATS_VOCAB=0."""
-        if os.environ.get("IRS_STATS_VOCAB", "1") != "0":
-            vocab = self.fuzzy_vocab_sorted(field)
-            if vocab is not None:
-                ta, dfa, ttfa = vocab[0], vocab[1], vocab[2]
-                out: dict[str, tuple[int, int]] = {}
-                for t in terms:
-                    i = int(np.searchsorted(ta, t))
-                    if i < len(ta) and ta[i] == t:
-                        out[t] = (int(dfa[i]), int(ttfa[i]))
-                return out
-        rows = self.term_dict(field).where(self._bare_term_pred(terms)).collect()
-        return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+        (collectors.cpp:144-219). One binary search per term in
+        :meth:`fuzzy_vocab_sorted`'s arrays — no Spark job. Absent terms have
+        no entry."""
+        ta, dfa, ttfa = self.fuzzy_vocab_sorted(field)
+        out: dict[str, tuple[int, int]] = {}
+        for t in terms:
+            i = int(np.searchsorted(ta, t))
+            if i < len(ta) and ta[i] == t:
+                out[t] = (int(dfa[i]), int(ttfa[i]))
+        return out
 
     def doc_lens(self, segment_id: int, field: str | None = None) -> np.ndarray:
         """Dense doc_len array for one segment+field (Norm2 reader analogue);

@@ -5,11 +5,15 @@ SamePosition (root or nested), NgramSimilarity — takes the same path, and
 ``search``, ``matches`` and ``search_many`` / ``PreparedBatch`` differ only
 in the merge:
 
-* ``prepare`` — :func:`compile_plans`: expand multiterm leaves against the
-  ``term_dict`` table (pruned scans), collect global stats (field_stats +
-  per-term df) once, bake per-term idf into a plan tree (collectors.cpp
-  analogue). A root Phrase/SamePosition under ``phrase_scoring="exact_df"``
-  leaves its idf unbound: the phrase df is only known after the kernel runs.
+* ``prepare`` — :func:`compile_plans`, pure driver code with no Spark job:
+  expand multiterm leaves against the field's sorted term dictionary, held
+  on the driver as numpy arrays (:meth:`IndexReader.fuzzy_vocab_sorted`,
+  loaded once per reader and field with pyarrow; prefix/range/wildcard are
+  binary-search slices, fuzzy is the Levenshtein automaton's intersect
+  walk), look up global stats (field_stats + per-term df) once, bake
+  per-term idf into a plan tree (collectors.cpp analogue). A root
+  Phrase/SamePosition under ``phrase_scoring="exact_df"`` leaves its idf
+  unbound: the phrase df is only known after the kernel runs.
 * ``execute`` — one shuffle-free Spark job (:meth:`Searcher._segment_job`,
   called only by :meth:`Searcher._execute_batch`): ``range(P).mapInArrow``
   with the live segments packed into P tasks; each task reads its own
@@ -51,11 +55,12 @@ postings for the union of all query terms are read once per segment, each
 plan is pruned independently in-kernel, and the driver merges the per-query
 top-k; ``search`` is a batch of one.
 
-Scale notes: stats collects are O(#query terms); each task's postings read
-is pruned by parquet min/max stats over the (field, term)-sorted range layout
-(field equality plus exact, prefix, range and wildcard-prefix term ranges all
-prune row groups); per-segment kernels are independent; the only driver-side
-data is #segments × #queries × k candidate rows.
+Scale notes: the driver holds each queried field's vocabulary (about 65
+bytes per term); each task's postings read is pruned by parquet min/max
+stats over the (field, term)-sorted range layout (field equality plus exact,
+prefix, range and wildcard-prefix term ranges all prune row groups);
+per-segment kernels are independent; the only other driver-side data is
+#segments × #queries × k candidate rows.
 
 Multi-field: every filter leaf resolves a field (None → index default) with
 its OWN df/doc-length/avgdl stats (per-field collectors, bm25.cpp:204-276).
@@ -72,7 +77,6 @@ import dataclasses as _dataclasses
 import functools as _functools
 import heapq as _heapq
 import math
-import os
 from dataclasses import dataclass, field as _dc_field
 
 import numpy as np
@@ -93,6 +97,7 @@ from ..index.codec import (
 from ..index.reader import IndexReader, read_frame
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
+from .lev_automaton import LevAutomaton
 
 KERNEL_OUT_SCHEMA = "segment_id int, doc_id int, score double"
 BATCH_OUT_SCHEMA = "query string, " + KERNEL_OUT_SCHEMA
@@ -146,7 +151,7 @@ class ScanSpec:
 
 
 # --------------------------------------------------------------------------
-# Multiterm expansion (prefix/range/wildcard/fuzzy) over the term_dict table
+# Multiterm expansion (prefix/range/wildcard/fuzzy) over the sorted vocabulary
 # --------------------------------------------------------------------------
 
 
@@ -362,25 +367,6 @@ def _phrase_shifts(node) -> list[int]:
     return shifts
 
 
-def spec_pred(spec: tuple):
-    """Spark Column predicate for a spec — pushable into the term-sorted
-    parquet scan (StartsWith / range comparisons reach row-group stats)."""
-    kind = spec[0]
-    if kind == "prefix":
-        return F.col("term").startswith(spec[1])
-    if kind == "range":
-        _, lo, hi, il, ih = spec
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (F.col("term") >= lo if il else F.col("term") > lo)
-        if hi is not None:
-            pred = pred & (F.col("term") <= hi if ih else F.col("term") < hi)
-        return pred
-    if kind == "wildcard":
-        return F.col("term").like(spec[1])
-    raise ValueError(f"bad spec {spec}")
-
-
 @_functools.lru_cache(maxsize=256)
 def _like_regex(pattern: str):
     """Python twin of Spark SQL ``LIKE``: ``%``/``_`` wildcards, backslash
@@ -410,7 +396,8 @@ def _like_regex(pattern: str):
 
 
 def spec_match(spec: tuple, term: str) -> bool:
-    """Python twin of :func:`spec_pred` for kernel-side tail identification."""
+    """Whether ``term`` satisfies a tail spec (the kernels' tail
+    identification); the expansion's slices select exactly these terms."""
     kind = spec[0]
     if kind == "prefix":
         return term.startswith(spec[1])
@@ -426,11 +413,6 @@ def spec_match(spec: tuple, term: str) -> bool:
     raise ValueError(f"bad spec {spec}")
 
 
-#: wildcard slices larger than this fall back to the distributed RLIKE scan
-#: (JVM codegen beats a driver-side regex loop at this size)
-_VOCAB_WILDCARD_MAX = 500_000
-
-
 def _prefix_successor(p: str) -> str | None:
     """Smallest string greater than EVERY string with prefix ``p`` (the
     right-open bound of the prefix block in a sorted dictionary), or None
@@ -442,6 +424,14 @@ def _prefix_successor(p: str) -> str | None:
         return None
     cps[-1] = chr(ord(cps[-1]) + 1)
     return "".join(cps)
+
+
+def _like_prefix(pattern: str) -> str:
+    """The literal prefix every match of a LIKE pattern starts with: the
+    pattern up to its first ``%``, ``_`` or ``\\`` (an escape ends it too,
+    which keeps the cut correct without decoding escapes)."""
+    cut = min((i for i, c in enumerate(pattern) if c in "%_\\"), default=len(pattern))
+    return pattern[:cut]
 
 
 def _prefix_block(terms_a: np.ndarray, p: str) -> tuple[int, int]:
@@ -482,9 +472,7 @@ def spec_filter(spec: tuple) -> pc.Expression:
             pred = pred & (t <= hi if ih else t < hi)
         return pred
     if kind == "wildcard":
-        pat = spec[1]
-        cut = min((i for i, c in enumerate(pat) if c in "%_\\"), default=len(pat))
-        return spec_filter(("prefix", pat[:cut])) & pc.match_like(t, pat)
+        return spec_filter(("prefix", _like_prefix(spec[1]))) & pc.match_like(t, spec[1])
     raise ValueError(f"bad spec {spec}")
 
 
@@ -527,52 +515,22 @@ def scan_reads(scan: ScanSpec, multifield: bool) -> list[tuple[pc.Expression, bo
     return [(positional, True), (rows & ~positional, False)]
 
 
-def _vocab_expand(reader: IndexReader, fname: str, spec: tuple, limit: int):
-    """Driver-cached expansion of prefix/range/wildcard specs — the same
-    in-memory term-dictionary fast path fuzzy uses (reader.fuzzy_vocab_sorted,
-    the reference's node-local FST: formats_burst_trie.cpp:857-861), so the
-    common multiterm filters cost ZERO extra Spark jobs beyond the postings
-    scan.  Prefix and range become two binary searches on the sorted vocab;
-    wildcard slices its literal prefix block, then regex-matches only the
-    slice.  Selection parity with the distributed job
-    (``orderBy(df desc, term) limit(limit+1)``): the slice is term-ascending,
-    so a STABLE argsort on -df yields df-desc with term-asc tie-breaks.
-
-    Returns (scored, overflow) or None to fall back to the distributed scan
-    (vocab above the cache cap, over-large wildcard slice, or
-    IRS_MULTITERM_VOCAB=0)."""
-    if os.environ.get("IRS_MULTITERM_VOCAB", "1") == "0":
-        return None
-    vocab = reader.fuzzy_vocab_sorted(fname)
-    if vocab is None:
-        return None
-    terms_a, df_a = vocab[0], vocab[1]
-    n = len(terms_a)
+def _vocab_expand(terms_a: np.ndarray, df_a: np.ndarray, spec: tuple, limit: int):
+    """Prefix/range/wildcard expansion over a field's sorted vocabulary →
+    (scored, overflow). Prefix and range are two binary searches; a wildcard
+    slices its literal-prefix block, then regex-matches only the slice. The
+    ``limit`` highest-df matches are scored, ties towards the smaller term
+    (the slice is term-ascending, so a STABLE argsort on -df gives that
+    order); ``overflow`` says more matched."""
     kind = spec[0]
-    if kind == "prefix":
-        lo, hi = _prefix_block(terms_a, spec[1])
-    elif kind == "range":
+    if kind == "range":
         _, rlo, rhi, il, ih = spec
         lo = 0 if rlo is None else int(np.searchsorted(terms_a, rlo, side="left" if il else "right"))
-        hi = n if rhi is None else int(np.searchsorted(terms_a, rhi, side="right" if ih else "left"))
-    elif kind == "wildcard":
-        pat = spec[1]
-        if "\\" in pat:
-            # the literal-prefix cut below is not escape-aware (an escaped
-            # \% is a literal, not a wildcard) — keep escaped patterns on
-            # the distributed path (_like_regex itself handles LIKE escapes,
-            # so the kernel tail stays consistent either way)
-            return None
-        cut = min(
-            (i for i, c in enumerate(pat) if c in "%_"), default=len(pat)
+        hi = len(terms_a) if rhi is None else int(
+            np.searchsorted(terms_a, rhi, side="right" if ih else "left")
         )
-        lo, hi = _prefix_block(terms_a, pat[:cut])
-        if hi - lo > _VOCAB_WILDCARD_MAX:
-            return None
     else:
-        return None
-    if hi <= lo:
-        return [], False
+        lo, hi = _prefix_block(terms_a, spec[1] if kind == "prefix" else _like_prefix(spec[1]))
     seg_terms, seg_df = terms_a[lo:hi], df_a[lo:hi]
     if kind == "wildcard":
         rx = _like_regex(spec[1])
@@ -580,189 +538,96 @@ def _vocab_expand(reader: IndexReader, fname: str, spec: tuple, limit: int):
             (rx.match(t) is not None for t in seg_terms), bool, len(seg_terms)
         )
         seg_terms, seg_df = seg_terms[mask], seg_df[mask]
-    m = len(seg_terms)
-    if m == 0:
-        return [], False
-    if m > limit:
+    if len(seg_terms) > limit:
         order = np.argsort(-seg_df, kind="stable")[:limit]
         return sorted((str(seg_terms[i]), int(seg_df[i])) for i in order), True
     return sorted((str(t), int(d)) for t, d in zip(seg_terms, seg_df)), False
 
 
+def _fuzzy_expand(node: flt.Fuzzy, terms_a: np.ndarray, df_a: np.ndarray) -> list:
+    """Fuzzy expansion over a field's sorted vocabulary → scored
+    (term, df, similarity) triples.
+
+    Candidates are the Levenshtein/OSA automaton's intersect walk over the
+    vocabulary (search/lev_automaton.py — the automaton × FST arc walk of
+    levenshtein_filter.cpp:139-310), then the exact DP gives each its
+    distance. With ``prefix`` (levenshtein_filter.cpp:241-265) only the
+    prefix block's suffixes are matched. Selection: the top ``max_terms`` by
+    similarity ``1 - d / min(|term|, |prefix| + |q|)``
+    (levenshtein_filter.cpp:48-55, 158-165), ties towards the LARGER term
+    (top_terms_collector.hpp:64-69)."""
+    q, maxd, max_terms = node.term, node.max_distance, node.max_terms
+    transpose = getattr(node, "with_transpositions", False)
+    # The reference's default parametric-description provider only covers
+    # distances [0..4], and distance 4 only WITHOUT transpositions
+    # (levenshtein_default_pdp.hpp:24-28); an unsupported distance yields
+    # an invalid description and the filter matches nothing
+    # (levenshtein_filter.cpp:71-75, levenshtein_filter_test.cpp "default
+    # provider doesn't support" cases).
+    if maxd > (3 if transpose else 4):
+        return []
+    # max_terms == 0 means UNLIMITED, not zero: limited_sample_collector
+    # treats a 0 cap as "collect everything" (top_terms_collector use in
+    # multiterm_query; levenshtein_filter_test.cpp pairs every (d, 1024)
+    # case with an identical (d, 0) expectation).
+    if max_terms <= 0:
+        max_terms = 1 << 30
+    pfx = getattr(node, "prefix", "") or ""
+    if pfx:
+        lo, hi = _prefix_block(terms_a, pfx)
+        terms_a, df_a = terms_a[lo:hi], df_a[lo:hi]
+        # a shared prefix preserves order: the suffixes are still sorted
+        match_a = np.array([t[len(pfx):] for t in terms_a], dtype=object)
+    else:
+        match_a = terms_a
+    idx = LevAutomaton(q, maxd, transpose=transpose).intersect(match_a)
+    if idx.size == 0:
+        return []
+    d = _fuzzy_distances(list(match_a[idx]), q, maxd, transpose=transpose)
+    keep = d <= maxd
+    kt, kd, kdf = terms_a[idx][keep], d[keep], df_a[idx][keep]
+    # similarity length incl. the prefix, clamped to >= 1 exactly like the
+    # reference (levenshtein_filter.cpp collect_terms: max(1,
+    # utf8_length(prefix) + utf8_length(term))); an empty vocabulary term
+    # would make the length 0, so the min is clamped to 1 too
+    lens = np.fromiter((len(t) for t in kt), np.int64, len(kt))
+    lens = np.maximum(np.minimum(lens, max(1, len(pfx) + len(q))), 1)
+    fboost = 1.0 - kd / lens.astype(np.float64)
+    # sort by (fboost desc, term desc): lexsort is stable, keys last-major
+    order = np.lexsort((kt.astype("U"), fboost))[::-1][:max_terms]
+    # triples: the similarity is a SCORING boost too — each scored state's
+    # score is entry.boost * query boost (multiterm_query.cpp:150-157;
+    # ::similarity collected per term)
+    return sorted((str(kt[i]), int(kdf[i]), float(fboost[i])) for i in order)
+
+
 def expand_multiterm(
     node: flt.Filter, reader: IndexReader, field: str | None = None
-) -> tuple[list[tuple[str, int]], tuple | None]:
-    """Term-dict expansion for multiterm filters → (scored, tail_spec).
+) -> tuple[list[tuple], tuple | None]:
+    """Term-dictionary expansion of a multiterm filter → (scored, tail_spec),
+    on the driver over :meth:`IndexReader.fuzzy_vocab_sorted`'s arrays (the
+    reference's node-local term index, formats_burst_trie.cpp:857-861):
+    no Spark job.
 
     Mirrors the reference: at most ``scored_terms_limit`` terms (highest df)
     are scored; the remaining matches are still MATCHED but contribute no
     score — the unscored-bitset union of multiterm_query.cpp:36-168 /
-    limited_sample_collector. The driver collect is BOUNDED at
-    ``scored_terms_limit + 1`` rows (a distributed df-ranked top-k job over
-    the pruned term_dict scan); when the expansion overflows, the tail is
+    limited_sample_collector. When the expansion overflows, the tail is
     returned as a predicate spec that the postings scan + kernels evaluate
-    in place — no unbounded ``collect`` anywhere on this path.
+    in place. Fuzzy never has a tail: its ``max_terms`` cap drops the rest.
     """
     fname = getattr(node, "field", None) or field or reader.default_field
     if fname not in reader.field_names:
         return [], None  # unknown field matches nothing (reference semantics)
-    td = reader.term_dict(fname)
-    limit = getattr(node, "scored_terms_limit", 1 << 30)
+    terms_a, df_a, _ = reader.fuzzy_vocab_sorted(fname)
     if isinstance(node, flt.Fuzzy):
-        q, maxd, max_terms = node.term, node.max_distance, node.max_terms
-        transpose = getattr(node, "with_transpositions", False)
-        # The reference's default parametric-description provider only covers
-        # distances [0..4], and distance 4 only WITHOUT transpositions
-        # (levenshtein_default_pdp.hpp:24-28); an unsupported distance yields
-        # an invalid description and the filter matches nothing
-        # (levenshtein_filter.cpp:71-75, levenshtein_filter_test.cpp "default
-        # provider doesn't support" cases).
-        if maxd > (3 if transpose else 4):
-            return [], None
-        # max_terms == 0 means UNLIMITED, not zero: limited_sample_collector
-        # treats a 0 cap as "collect everything" (top_terms_collector use in
-        # multiterm_query; levenshtein_filter_test.cpp pairs every (d, 1024)
-        # case with an identical (d, 0) expectation).
-        if max_terms <= 0:
-            max_terms = 1 << 30
-        from ..index.termfeat import fuzzy_prefilter_np, fuzzy_prefilter_pred
-
-        # FAST PATH — driver-cached term dictionary (reader.fuzzy_vocab, the
-        # reference's in-memory FST role): candidate enumeration + DP +
-        # selection are pure Python/numpy, so fuzzy costs ZERO extra Spark
-        # jobs beyond the postings scan.  Candidate enumeration is the
-        # Levenshtein-automaton intersect walk over the SORTED vocabulary
-        # (search/lev_automaton.py — the automaton×FST arc walk of
-        # levenshtein_filter.cpp:139-310, sublinear in |vocab|) for
-        # max_distance <= 2 (the reference's common parametric tables); the
-        # linear tlen/charmask prefilter scan remains for larger distances
-        # and as the IRS_FUZZY_AUTOMATON=0 escape hatch.  Both enumerators
-        # feed the SAME exact-DP + selection code, so the expansion is
-        # candidate-set- and selection-identical either way.
-        # Selection parity: top max_terms by boost = 1 - d/min(|term|, |q|)
-        # (levenshtein_filter.cpp:48-55, 158-165), ties towards the LARGER
-        # term (top_terms_collector.hpp:64-69); NOT first-max_terms in term
-        # order.
-        pfx = getattr(node, "prefix", "") or ""
-        # similarity length incl. the prefix, clamped to >= 1 exactly like
-        # the reference (levenshtein_filter.cpp collect_terms:
-        # max(1, utf8_length(prefix) + utf8_length(term))) — an empty target
-        # otherwise divides by zero in the boost
-        qlen_full = max(1, len(pfx) + len(q))
-        use_automaton = maxd <= 2 and os.environ.get("IRS_FUZZY_AUTOMATON", "1") != "0"
-        vocab = (
-            reader.fuzzy_vocab_sorted(fname) if (use_automaton or pfx)
-            else reader.fuzzy_vocab(fname)
-        )
-        if vocab is not None:
-            terms_a, df_a, _ttf_a, tlen_a, mask_a = vocab
-            if pfx:
-                # exact-prefix variant (levenshtein_filter.cpp:241-265): the
-                # sorted vocabulary gives the prefix run in two searchsorted
-                # probes; only the run's SUFFIXES (still sorted — shared
-                # prefix preserves order) enter the automaton/DP.
-                lo = int(np.searchsorted(terms_a, pfx, side="left"))
-                hi = int(np.searchsorted(terms_a, pfx + "\U0010ffff", side="right"))
-                terms_a, df_a = terms_a[lo:hi], df_a[lo:hi]
-                if terms_a.size == 0:
-                    return [], None
-                match_a = np.array([t[len(pfx):] for t in terms_a], dtype=object)
-            else:
-                match_a = terms_a
-            if use_automaton:
-                from .lev_automaton import LevAutomaton
-
-                idx = LevAutomaton(q, maxd, transpose=transpose).intersect(match_a)
-            elif pfx:
-                idx = np.arange(match_a.size)  # the prefix run IS the prefilter
-            else:
-                sel = fuzzy_prefilter_np(tlen_a, mask_a, q, maxd)
-                idx = np.flatnonzero(sel)
-            if idx.size == 0:
-                return [], None
-            cand_terms = terms_a[idx]
-            d = _fuzzy_distances(list(match_a[idx]), q, maxd, transpose=transpose)
-            keep = d <= maxd
-            if not keep.any():
-                return [], None
-            kt, kd, kdf = cand_terms[keep], d[keep], df_a[idx][keep]
-            # an empty vocabulary term would make the length 0: clamp to 1
-            lens = np.maximum(
-                np.minimum(np.fromiter((len(t) for t in kt), np.int64, len(kt)), qlen_full),
-                1,
-            )
-            fboost = 1.0 - kd / lens.astype(np.float64)
-            # sort by (fboost desc, term desc): lexsort is stable, keys last-major
-            order = np.lexsort((kt.astype("U"), fboost))[::-1][:max_terms]
-            # triples: the similarity is a SCORING boost too — each scored
-            # state's score is entry.boost * query boost
-            # (multiterm_query.cpp:150-157; ::similarity collected per term)
-            return (
-                sorted((str(kt[i]), int(kdf[i]), float(fboost[i])) for i in order),
-                None,
-            )
-
-        # DISTRIBUTED PATH (vocabulary above the driver-cache cap): the
-        # build-amortized prefilter (index/termfeat.py) — length window + two
-        # bit_count set-arithmetic lower bounds — evaluates JVM-side over the
-        # PERSISTED tlen/charmask columns (whole-stage codegen over ints); only
-        # the survivor set reaches the exact-DP pandas UDF below.
-        if pfx:
-            # the exact-prefix clause replaces the tlen/charmask prefilter:
-            # startswith pushes down to the SORTED term_dict parquet (range
-            # stats prune row groups), and only the run's suffixes reach the
-            # exact-DP UDF
-            cand = td.where(F.col("term").startswith(pfx))
-            match_col = F.expr(f"substring(term, {len(pfx) + 1})")
-        else:
-            cand = td.where(fuzzy_prefilter_pred(q, maxd))
-            match_col = F.col("term")
-
-        def dists(batch: pd.Series) -> pd.Series:
-            d = _fuzzy_distances(batch.tolist(), q, maxd, transpose=transpose)
-            return pd.Series(d, index=batch.index)
-
-        from pyspark.sql.functions import pandas_udf
-
-        dist_udf = pandas_udf(dists, "long")
-        matched = (
-            cand.withColumn("dist", dist_udf(match_col))
-            .where(F.col("dist") <= maxd)
-            .withColumn(
-                "fboost",
-                F.lit(1.0)
-                - F.col("dist")
-                / F.greatest(
-                    F.least(F.length("term"), F.lit(max(1, len(pfx) + len(q)))),
-                    F.lit(1),
-                ).cast("double"),
-            )
-            .orderBy(F.desc("fboost"), F.desc("term"))
-            .limit(max_terms)
-        )
-        rows = matched.collect()
-        return (
-            sorted((r["term"], int(r["df"]), float(r["fboost"])) for r in rows),
-            None,
-        )
+        return _fuzzy_expand(node, terms_a, df_a), None
     spec = _spec_of(node)
     if spec is None:
         raise TypeError(f"not a multiterm filter: {node}")
-    fast = _vocab_expand(reader, fname, spec, limit)
-    if fast is not None:
-        scored, overflow = fast
-        return scored, (spec if overflow else None)
-    rows = (
-        td.where(spec_pred(spec))
-        .select("term", "df")
-        .orderBy(F.desc("df"), "term")
-        .limit(limit + 1)
-        .collect()
-    )
-    if len(rows) > limit:
-        scored = sorted((r["term"], int(r["df"])) for r in rows[:limit])
-        return scored, spec
-    return sorted((r["term"], int(r["df"])) for r in rows), None
+    limit = getattr(node, "scored_terms_limit", 1 << 30)
+    scored, overflow = _vocab_expand(terms_a, df_a, spec, limit)
+    return scored, (spec if overflow else None)
 
 
 # --------------------------------------------------------------------------

@@ -4,8 +4,10 @@ The reference expands ``by_edit_distance`` by intersecting a parametric
 Levenshtein automaton (Schulz–Mihov) with the FST term dictionary, making the
 expansion sublinear in vocabulary size (levenshtein_utils.cpp:1-775;
 levenshtein_filter.cpp:139-310: ``visit`` walks automaton × FST arcs).  This
-module is the Spark-repo analogue over the driver-cached SORTED term
-dictionary (index/reader.py ``fuzzy_vocab`` — the in-memory FST role):
+module is the Spark-repo analogue over the driver-held SORTED term
+dictionary (index/reader.py ``fuzzy_vocab_sorted`` — the in-memory FST
+role), and it enumerates every fuzzy expansion, at every distance the
+reference's provider supports (0–4, 0–3 with transpositions):
 
 * :class:`LevAutomaton` — an NFA for (query, max_distance, transpositions)
   determinized LAZILY into subset states, one transition table entry per

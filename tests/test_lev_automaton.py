@@ -1,5 +1,6 @@
 """Levenshtein-automaton enumeration: exactness vs the OSA/Levenshtein DP,
-sorted-dictionary intersect completeness, and on/off expansion parity.
+sorted-dictionary intersect completeness, and expansion parity with the
+brute-force DP at every distance.
 
 The automaton (search/lev_automaton.py) is the repo's analogue of the
 reference's parametric-automaton × FST walk (levenshtein_utils.cpp:1-775,
@@ -8,7 +9,6 @@ have NO false negatives vs the exact DP (a false positive would merely cost
 a wasted DP row; a false negative loses a matching term)."""
 
 import itertools
-import os
 import random
 
 import numpy as np
@@ -25,7 +25,7 @@ def brute_accept(words, q, d, tr):
 
 
 @pytest.mark.parametrize("transpose", [False, True])
-@pytest.mark.parametrize("maxd", [0, 1, 2])
+@pytest.mark.parametrize("maxd", [0, 1, 2, 3, 4])
 def test_accepts_exhaustive_small_alphabet(maxd, transpose):
     """Exhaustive over the 'ab' alphabet (the regime where subsumption and
     transposition-state bugs surface): automaton acceptance == DP <= d."""
@@ -43,7 +43,7 @@ def test_accepts_exhaustive_small_alphabet(maxd, transpose):
 @given(
     q=st.text(alphabet="abcß日", max_size=6),
     w=st.text(alphabet="abcß日", max_size=8),
-    d=st.integers(0, 2),
+    d=st.integers(0, 4),
     tr=st.booleans(),
 )
 def test_accepts_property(q, w, d, tr):
@@ -63,7 +63,7 @@ def test_intersect_matches_bruteforce(seed):
         )
         terms = np.array(vocab, dtype=object)
         q = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 5)))
-        d = rng.choice([1, 2])
+        d = rng.choice([1, 2, 3, 4])
         tr = rng.choice([False, True])
         A = LevAutomaton(q, d, tr)
         exp = {i for i, ok in enumerate(brute_accept(vocab, q, d, tr)) if ok}
@@ -93,20 +93,41 @@ def test_intersect_is_sublinear_in_touches():
     assert touched[0] < 500, touched[0]
 
 
-def test_expansion_parity_automaton_vs_prefilter(built_small, monkeypatch):
-    """End-to-end expansion (candidates + selection) is identical with the
-    automaton on and off, on a real index."""
+def brute_expand(reader, q, d, tr, max_terms):
+    """Fuzzy expansion by brute force over the collected term_dict: every
+    term within ``d`` by the DP, similarity ``1 - d / min(|term|, |q|)``,
+    top ``max_terms`` by (similarity desc, term desc)."""
+    from iresearch_spark.search.executor import _levenshtein_leq
+
+    rows = [(r["term"], int(r["df"])) for r in reader.term_dict().collect()]
+    dist = _levenshtein_leq([t for t, _ in rows], q, d, transpose=tr)
+    hits = [
+        (t, df, 1.0 - int(dd) / max(1, min(len(t), len(q))))
+        for (t, df), dd in zip(rows, dist)
+        if dd <= d
+    ]
+    hits.sort(key=lambda h: (h[2], h[0]), reverse=True)
+    return sorted(hits[:max_terms])
+
+
+EXPANSION_CASES = [
+    ("sprak", 2, False, 50), ("scam", 1, False, 50), ("sacn", 1, True, 50),
+    ("scam", 3, False, 50), ("scam", 3, False, 3), ("span", 4, False, 50),
+    ("span", 4, False, 4), ("sacn", 3, True, 50), ("sacn", 3, True, 2),
+]
+
+
+def test_expansion_parity_automaton_vs_brute(built_small):
+    """End-to-end expansion (automaton candidates + DP + selection) equals
+    the brute force at every distance, on a real index."""
     from iresearch_spark.search.executor import expand_multiterm
     from iresearch_spark.search import filters as flt
 
-    reader = built_small
-    for term, d, tr in [("sprak", 2, False), ("scam", 1, False), ("sacn", 1, True)]:
-        node = flt.Fuzzy(term, max_distance=d, with_transpositions=tr)
-        monkeypatch.setenv("IRS_FUZZY_AUTOMATON", "0")
-        base, _ = expand_multiterm(node, reader)
-        monkeypatch.delenv("IRS_FUZZY_AUTOMATON")
-        auto, _ = expand_multiterm(node, reader)
-        assert auto == base, (term, d, tr)
+    for q, d, tr, max_terms in EXPANSION_CASES:
+        node = flt.Fuzzy(q, max_distance=d, max_terms=max_terms, with_transpositions=tr)
+        got, tail = expand_multiterm(node, built_small)
+        assert tail is None
+        assert got == brute_expand(built_small, q, d, tr, max_terms), (q, d, tr, max_terms)
 
 
 @pytest.fixture(scope="module")
@@ -130,13 +151,38 @@ def built_small(spark, tmp_path_factory):
 
 
 def test_sorted_vocab_cache(built_small):
-    """fuzzy_vocab_sorted returns an ascending view and caches it."""
+    """fuzzy_vocab_sorted returns ascending (terms, df, ttf) arrays equal to
+    the term_dict table, and caches them."""
     r = built_small
     v1 = r.fuzzy_vocab_sorted()
-    assert v1 is not None
     terms = v1[0]
     assert bool(np.all(terms[:-1] <= terms[1:]))
     assert r.fuzzy_vocab_sorted() is v1
-    # df values still line up with their terms after the permutation
-    base = dict(zip(r.fuzzy_vocab()[0].tolist(), r.fuzzy_vocab()[1].tolist()))
-    assert dict(zip(terms.tolist(), v1[1].tolist())) == base
+    td = {x["term"]: (x["df"], x["ttf"]) for x in r.term_dict().collect()}
+    assert dict(zip(terms.tolist(), zip(v1[1].tolist(), v1[2].tolist()))) == td
+    assert len(terms) == len(td)
+
+
+def test_fuzzy_end_to_end_unchanged(spark, tmp_path):
+    # candidate-set parity: a fuzzy search returns the same top-k as a
+    # brute-force oracle over the corpus
+    from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
+    from tests.oracle import ScalarIndex
+
+    docs = {
+        f"d{i:03d}": " ".join(
+            ["scan"] * (1 + i % 3) + ["scam"] * (i % 2) + ["swan", "span", "pad"][: 1 + i % 3]
+        )
+        for i in range(60)
+    }
+    path = str(tmp_path / "r4fuzz")
+    df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
+    IndexBuilder(spark, path, num_segments=2).build(df, key_col="doc_key", text_col="text")
+    reader = IndexReader(spark, path)
+    got = [
+        r["doc_key"]
+        for r in Searcher(reader).search(flt.Fuzzy("scam", max_distance=1), k=10).collect()
+    ]
+    # expansion of 'scam'@1 over this vocabulary is exactly {scam, scan}
+    exp = [k for k, _ in ScalarIndex(docs).multiterm_query(["scam", "scan"], k=10)]
+    assert got == exp

@@ -145,36 +145,6 @@ def test_by_edit_distance_reference_selection(
     assert matched(lev_index, f) == expected
 
 
-def test_by_edit_distance_distributed_path_same_selection(
-    lev_index, monkeypatch
-):
-    """The over-cap (distributed tlen/charmask prefilter + pandas-UDF DP)
-    path must make the same selections as the driver-cached fast path on a
-    sample of the harder cases above."""
-    monkeypatch.setattr(lev_index, "FUZZY_VOCAB_MAX", 0)
-    saved_cache = dict(lev_index._vocab_cache)
-    lev_index._vocab_cache.clear()
-    try:
-        for term, maxd, max_terms, transpose, prefix, expected in [
-            ("aaaa", 3, 10, False, "", [5, 7, 13, 16, 17, 18, 19, 21, 27, 28, 30, 32]),
-            ("ababab", 2, 1024, True, "", [17, 18]),
-            ("aa", 2, 1024, False, "aa", [5, 7, 13, 16, 19, 27, 32]),
-            ("", 1, 1024, False, "", [28, 29]),
-            ("", 5, 1024, False, "", []),
-        ]:
-            f = flt.Fuzzy(
-                term,
-                max_distance=maxd,
-                max_terms=max_terms,
-                with_transpositions=transpose,
-                prefix=prefix,
-            )
-            assert matched(lev_index, f) == expected, (term, maxd, transpose, prefix)
-    finally:
-        lev_index._vocab_cache.clear()
-        lev_index._vocab_cache.update(saved_cache)
-
-
 # ---------------------------------------------------------------------------
 # prefix_filter_test.cpp by_prefix_sequential (simple_sequential.json) and
 # wildcard_filter_test.cpp simple_sequential (simple_sequential_utf8.json),

@@ -76,76 +76,6 @@ def test_ivf_centroids_partition_invariant(spark):
 
 
 # --------------------------------------------------------------------------
-# build-amortized fuzzy prefilter (index/termfeat.py): plane parity + the
-# conservative guarantee (no true candidate lost), and end-to-end fuzzy parity
-# --------------------------------------------------------------------------
-
-FUZZ_VOCAB = [
-    "scan", "scam", "scans", "swan", "span", "sun", "can", "spark", "saprk",
-    "sprak", "park", "dark", "data", "merge", "mere", "me2ge", "m3rge",
-    "a", "", "zzzz", "scanner", "sc4n", "sçan", "漢字", "tokyo東京",
-]
-
-
-def test_termfeat_plane_parity(spark):
-    from iresearch_spark.index.termfeat import char_bit, term_feature_cols
-
-    df = spark.createDataFrame([(t,) for t in FUZZ_VOCAB if t], "term string")
-    got = {r["term"]: (r["tlen"], r["charmask"]) for r in df.select("term", *term_feature_cols()).collect()}
-    for t in FUZZ_VOCAB:
-        if not t:
-            continue
-        mask = 0
-        for ch in set(t):
-            mask |= 1 << char_bit(ch)
-        assert got[t] == (len(t), mask), t
-
-
-@pytest.mark.parametrize("query,maxd,transpose", [
-    ("scan", 1, False), ("scam", 1, False), ("saprk", 1, True),
-    ("merge", 2, False), ("漢字", 1, False),
-])
-def test_fuzzy_prefilter_is_conservative(spark, query, maxd, transpose):
-    from iresearch_spark.index.termfeat import fuzzy_prefilter_pred, term_feature_cols
-    from iresearch_spark.search.executor import _levenshtein_leq
-
-    vocab = [t for t in FUZZ_VOCAB if t]
-    true_d = _levenshtein_leq(vocab, query, maxd, transpose=transpose)
-    truth = {t for t, d in zip(vocab, true_d) if d <= maxd}
-    df = spark.createDataFrame([(t,) for t in vocab], "term string").select(
-        "term", *term_feature_cols()
-    )
-    survivors = {r["term"] for r in df.where(fuzzy_prefilter_pred(query, maxd)).collect()}
-    assert truth <= survivors  # the pushed-down predicate never loses a match
-
-
-def test_fuzzy_end_to_end_unchanged(spark, tmp_path):
-    # candidate-set parity: the persisted-column path returns the same top-k
-    # as a brute-force oracle over the corpus
-    from tests.oracle import ScalarIndex
-
-    docs = {
-        f"d{i:03d}": " ".join(
-            ["scan"] * (1 + i % 3) + ["scam"] * (i % 2) + ["swan", "span", "pad"][: 1 + i % 3]
-        )
-        for i in range(60)
-    }
-    path = str(tmp_path / "r4fuzz")
-    df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=2).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    td = reader.term_dict()
-    assert "charmask" in td.columns and "tlen" in td.columns  # persisted, not derived
-    got = [
-        r["doc_key"]
-        for r in Searcher(reader).search(flt.Fuzzy("scam", max_distance=1), k=10).collect()
-    ]
-    # expansion of 'scam'@1 over this vocabulary is exactly {scam, scan}
-    exp = [k for k, _ in ScalarIndex(docs).multiterm_query(["scam", "scan"], k=10)]
-    assert got == exp
-
-
-# --------------------------------------------------------------------------
 # vectorized ngram chain DP: equality with the scalar per-event reference loop
 # on dense random streams, and a speed sanity check
 # --------------------------------------------------------------------------

@@ -592,30 +592,6 @@ def test_fuzzy_prefix_candidates_match_brute(spark, batch_index, pfx, term, d, t
     assert sorted(t for t, *_ in got) == expect, (pfx, term, d, tr)
 
 
-def test_fuzzy_prefix_automaton_off_parity(spark, batch_index, monkeypatch):
-    import iresearch_spark.search.executor as ex
-    from iresearch_spark import filters as flt
-
-    f = flt.Fuzzy("cab", max_distance=1, prefix="s")
-    on, _ = ex.expand_multiterm(f, batch_index)
-    monkeypatch.setenv("IRS_FUZZY_AUTOMATON", "0")
-    off, _ = ex.expand_multiterm(f, batch_index)
-    assert on == off
-
-
-def test_fuzzy_prefix_distributed_path_parity(spark, batch_index):
-    """Over-cap readers take the startswith-pushdown + suffix-DP path; the
-    search results must equal the driver-cached path's."""
-    from iresearch_spark import IndexReader, Searcher, filters as flt
-
-    f = flt.Fuzzy("cab", max_distance=1, prefix="s")
-    fast = [tuple(r) for r in Searcher(batch_index).search(f, k=50).collect()]
-    r2 = IndexReader(spark, batch_index.index_path)
-    r2.FUZZY_VOCAB_MAX = 0
-    dist = [tuple(r) for r in Searcher(r2).search(f, k=50).collect()]
-    assert fast == dist and len(fast) > 0
-
-
 def test_fuzzy_prefix_similarity_length_includes_prefix(spark, batch_index):
     """Selection boost = 1 - d/min(|candidate|, |prefix|+|term|): with
     max_terms=1 the closer candidate must win under the prefixed length."""

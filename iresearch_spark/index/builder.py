@@ -1046,7 +1046,7 @@ class IndexBuilder:
         gen: int,
         gen_dir: str,
         run_id: str,
-        num_segments: int,
+        requested_segments: int,
         next_segment_id: int,
         docs_paths: list[str],
         norms_paths: list[str],
@@ -1067,9 +1067,15 @@ class IndexBuilder:
         stage). Appends pass ``term_sources`` = [previous term_dict, new
         partial] — merging two term_dict-shaped tables is far cheaper than
         re-scanning every generation's postings; the fallback (no sources)
-        aggregates over all postings paths."""
+        aggregates over all postings paths.
+
+        ``requested_segments`` only sizes the term_dict partitions: the meta
+        records the segments actually written (a footer-planned build makes
+        at most one segment per input row group), counted from the norms
+        rows. ``next_segment_id`` stays past every id a segments stage may
+        have assigned, so appended ids never collide."""
         spark = self.spark
-        p_parts = self.postings_partitions or max(16, num_segments)
+        p_parts = self.postings_partitions or max(16, requested_segments)
         term_dict_path = os.path.join(gen_dir, "term_dict")
         if not self._stage_done(run_id, gen, "term_dict", term_dict_path):
             t0 = time.time()
@@ -1106,11 +1112,11 @@ class IndexBuilder:
             )
             self._manifest(run_id, gen, "term_dict", "done", time.time() - t0)
 
-        # docs_count for the meta from the tiny norms rows of the DEFAULT
-        # field (every field covers the same docs; counting one avoids
-        # multi-field double counting); driver-local read — a Spark job for a
-        # few-KB stats table is pure serial time (Spark fallback for
-        # non-local index paths)
+        # docs_count and the live segment count for the meta from the tiny
+        # norms rows of the DEFAULT field (every field covers the same docs;
+        # counting one avoids multi-field double counting); driver-local
+        # read — a Spark job for a few-KB stats table is pure serial time
+        # (Spark fallback for non-local index paths)
         default_field = field_list[0][0]
         norm_pdf = self._read_parquet_local(
             norms_paths, ["field", "segment_id", "docs_count"]
@@ -1121,15 +1127,15 @@ class IndexBuilder:
                 norm_pdf = norm_pdf[
                     norm_pdf["field"].fillna(default_field) == default_field
                 ]
-            total_docs = int(norm_pdf["docs_count"].sum())
         else:
-            total_docs = sum(
-                int(r["docs_count"])
-                for r in spark.read.parquet(*norms_paths)
+            norm_pdf = (
+                spark.read.parquet(*norms_paths)
                 .where(F.col("field") == default_field)
                 .select("segment_id", "docs_count")
-                .collect()
+                .toPandas()
             )
+        total_docs = int(norm_pdf["docs_count"].sum())
+        num_segments = int(norm_pdf["segment_id"].nunique())
         tables = dict(carry_tables or {})
         tables.update(
             {

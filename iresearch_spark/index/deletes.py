@@ -65,7 +65,7 @@ def delete_docs(reader: IndexReader, doc_keys) -> dict:
     union = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     deletes_path = os.path.join(gen_dir, "deletes")
-    n_parts = max(1, int(meta.get("num_segments", 1)) // 8)
+    n_parts = max(1, len(reader.segment_docs_counts()) // 8)
     union.distinct().repartitionByRange(n_parts, "segment_id", "doc_id").sortWithinPartitions(
         "segment_id", "doc_id"
     ).write.mode("overwrite").parquet(deletes_path)

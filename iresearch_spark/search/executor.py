@@ -14,12 +14,18 @@ in the merge:
   per-term idf into a plan tree (collectors.cpp analogue). A root
   Phrase/SamePosition under ``phrase_scoring="exact_df"`` leaves its idf
   unbound: the phrase df is only known after the kernel runs.
-* ``execute`` — one shuffle-free Spark job (:meth:`Searcher._segment_job`,
-  called only by :meth:`Searcher._execute_batch`): ``range(P).mapInArrow``
-  with the live segments packed into P tasks; each task reads its own
-  segments' postings, norms and deletes from the index parquet with pyarrow
-  (the per-segment reader of segment_reader.hpp:35-110). Each segment's
-  kernel decodes only the needed posting lists (VByte blocks), runs the
+* ``execute`` — one per-segment loop (:func:`_segment_loop`, the
+  per-segment reader of segment_reader.hpp:35-110): one pyarrow read of its
+  segments' postings, norms and deletes from the index parquet, then one
+  kernel call per segment. :meth:`Searcher._execute_batch` places it. A
+  driver-merged batch planning at most ``Searcher.DRIVER_MAX_POSTINGS``
+  postings runs the loop serially in the driver over every live segment,
+  with no Spark job (the reference's in-process loop,
+  index-search.cpp:676-748). Anything larger, ``matches`` and the Window
+  fallback run it as one shuffle-free Spark job
+  (:meth:`Searcher._segment_job`): ``range(P).mapInArrow`` with the live
+  segments packed into P tasks, each looping over its own segments. Each
+  segment's kernel decodes only the needed posting lists (VByte blocks), runs the
   boolean algebra vectorized in numpy (conjunction = sorted-array
   intersection ≙ conjunction.hpp; disjunction = unique+bincount ≙
   disjunction.hpp; exclusion ≙ exclusion.hpp; phrases = packed-key position
@@ -30,7 +36,7 @@ in the merge:
   by (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
   utils/index-search.cpp:676-748, binding an unbound phrase idf from the
   summed per-segment match counts first. ``matches`` has no merge: its
-  result is the kernel job itself.
+  result is the lazy kernel job itself.
 
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
@@ -128,6 +134,11 @@ class ScanSpec:
     # batch must not drag every other term's (typically largest) stream
     need_positions: bool = False
     pos_terms: dict[str, list[str]] = _dc_field(default_factory=dict)
+    # planned postings: the df sum over every plan's scored leaves (an All
+    # leg counts every doc), summed over the batch's plans — the placement
+    # input of Searcher._execute_batch. Unscored multiterm tails do not
+    # count: top-k prunes their 0-score matches.
+    planned_postings: int = 0
 
     @property
     def fields(self) -> list[str]:
@@ -713,6 +724,9 @@ def compile_plans(
                     terms_by_field[f].add(t)
                 elif isinstance(t, flt.Terms):
                     terms_by_field[f].update(t.terms)
+        elif isinstance(node, flt.NgramSimilarity):
+            if f in known:
+                terms_by_field[f].update(node.ngrams)  # df for planned postings only
         elif isinstance(node, (flt.And, flt.Or)):
             for p in node.parts:
                 collect_terms(p)
@@ -729,11 +743,19 @@ def compile_plans(
     n_by_field = {f: reader.field_stats(f)["docs_with_field"] for f in fields_used}
     expansion_cache: dict[str, tuple] = {}
 
+    def df_of(f: str, term: str) -> int:
+        return tstats.get((f, term), (0, 0))[0]
+
     def idf_of(f: str, term: str) -> float:
-        df = tstats.get((f, term), (0, 0))[0]
+        df = df_of(f, term)
         if df == 0:
             return 0.0
         return model.term_const(df, n_by_field[f], dt)
+
+    def all_leg(boost: float) -> dict:
+        # an all-docs leg enumerates every stored doc of every segment
+        scan.planned_postings += sum(reader.segment_docs_counts().values())
+        return {"op": "all", "boost": boost}
 
     def build(node: flt.Filter) -> dict:
         f = fld(node)
@@ -741,6 +763,7 @@ def compile_plans(
             if f not in known:
                 return {"op": "empty"}
             scan.field_terms[f].append(node.term)
+            scan.planned_postings += df_of(f, node.term)
             return {
                 "op": "term", "term": scan.key(f, node.term),
                 "idf": idf_of(f, node.term), "boost": node.boost, "field": f,
@@ -773,6 +796,7 @@ def compile_plans(
                 for t, b in zip(node.terms, boosts)
             ]
             scan.field_terms[f].extend(node.terms)
+            scan.planned_postings += sum(df_of(f, t) for t in node.terms)
             return {
                 "op": "mterm", "terms": members, "min_match": node.min_match,
                 "merge": getattr(node, "merge", "sum"),
@@ -790,6 +814,7 @@ def compile_plans(
                 t, df = ent[0], ent[1]
                 tb = float(ent[2]) if len(ent) > 2 else 1.0
                 scan.field_terms[f].append(t)
+                scan.planned_postings += df
                 members.append(
                     (scan.key(f, t), model.term_const(df, n_by_field[f], dt), tb)
                 )
@@ -826,9 +851,11 @@ def compile_plans(
                 if isinstance(t, str):
                     slot_terms = [t]
                     idf_sum += idf_of(sf, t)
+                    slot_df = df_of(sf, t)
                 elif isinstance(t, flt.Terms):
                     slot_terms = sorted(set(t.terms))
                     idf_sum += sum(idf_of(sf, w) for w in slot_terms)
+                    slot_df = sum(df_of(sf, w) for w in slot_terms)
                 else:  # variadic multiterm slot (phrase_filter.cpp variadic)
                     ckey = repr(t) + FIELD_SEP + sf + "#slot"
                     if ckey not in expansion_cache:
@@ -838,8 +865,10 @@ def compile_plans(
                     idf_sum += sum(
                         model.term_const(e[1], n_by_field[sf], dt) for e in expanded
                     )
+                    slot_df = sum(e[1] for e in expanded)
                 if not slot_terms:
                     return {"op": "empty"}  # unexpandable slot matches nothing
+                scan.planned_postings += slot_df
                 scan.field_terms[sf].extend(slot_terms)
                 scan.pos_terms.setdefault(sf, []).extend(slot_terms)
                 slots.append(slot_terms)
@@ -867,6 +896,7 @@ def compile_plans(
             if f not in known or not node.ngrams:
                 return {"op": "empty"}
             scan.field_terms[f].extend(node.ngrams)
+            scan.planned_postings += sum(df_of(f, t) for t in node.ngrams)
             scan.pos_terms.setdefault(f, []).extend(node.ngrams)
             scan.need_positions = True
             n = len(node.ngrams)
@@ -893,7 +923,7 @@ def compile_plans(
             if not incl:
                 # only negations: implicit all-docs base, constant score
                 # (boolean_filter.cpp:352-401 MakeAllDocsFilter grouping)
-                incl = [{"op": "all", "boost": 1.0}]
+                incl = [all_leg(1.0)]
             return {"op": "and", "parts": incl, "exclude": excl, "merge": node.merge, "boost": node.boost}
         if isinstance(node, flt.Or):
             # Or::prepare (boolean_filter.cpp:492-511): an EXPLICIT
@@ -902,7 +932,7 @@ def compile_plans(
             # boost, regardless of its parts (boolean_filter_tests.cpp
             # "min match count == 0": even Or(name=V) matches all 32).
             if node.min_match == 0:
-                return {"op": "all", "boost": node.boost}
+                return all_leg(node.boost)
             # min_match above the part count is unreachable
             # (MinMatchQuery::prepare, boolean_filter.cpp:270-272)
             if node.min_match > len(node.parts):
@@ -915,7 +945,7 @@ def compile_plans(
             for p in node.parts:
                 if isinstance(p, flt.Not):
                     excl.append(build(p.part))
-                    incl.append({"op": "all", "boost": 0.0})
+                    incl.append(all_leg(0.0))
                 else:
                     incl.append(build(p))
             return {
@@ -927,7 +957,7 @@ def compile_plans(
                 "boost": node.boost,
             }
         if isinstance(node, flt.All):
-            return {"op": "all", "boost": node.boost}
+            return all_leg(node.boost)
         if isinstance(node, flt.Empty):
             return {"op": "empty"}
         raise TypeError(f"unsupported filter: {node}")
@@ -1810,19 +1840,27 @@ def _segment_frames(
     return out
 
 
-def _segment_task(groups, tables, reads, mixed, norms_pred, kernel, schema: pa.Schema):
+def _segment_loop(sids: list[int], read: tuple, kernel):
+    """The per-segment reader loop (segment_reader.hpp:35-110) of both
+    placements: one pyarrow read of ``sids``' postings, norms and deletes
+    (``read`` = :meth:`Searcher._segment_read`), then ``kernel(postings,
+    norms)`` per segment, serially. Yields each non-empty kernel frame."""
+    for post_pdf, norm_pdf in _segment_frames(sids, *read).values():
+        out = kernel(post_pdf, norm_pdf)
+        if len(out):
+            yield out
+
+
+def _segment_task(groups, read: tuple, kernel, schema: pa.Schema):
     """The ``mapInArrow`` body of :meth:`Searcher._segment_job`: for each
-    group id arriving in the input, run ``kernel(postings, norms)`` over each
-    of that group's segments and emit its rows."""
+    group id arriving in the input, run :func:`_segment_loop` over that
+    group's segments and emit its rows."""
 
     def run(batches):
         for batch in batches:
             for gid in batch.column(0).to_pylist():
-                frames = _segment_frames(groups[gid], tables, reads, mixed, norms_pred)
-                for post_pdf, norm_pdf in frames.values():
-                    out = kernel(post_pdf, norm_pdf)
-                    if len(out):
-                        yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+                for out in _segment_loop(groups[gid], read, kernel):
+                    yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
 
     return run
 
@@ -1835,6 +1873,15 @@ class Searcher:
     # above it the distributed Window-per-query fallback runs instead.
     # Instance-overridable for tests / unusual deployments.
     BATCH_MERGE_MAX = 2_000_000
+    # kernel placement for driver-merged batches: at or under this many
+    # planned postings (ScanSpec.planned_postings — the df sum over every
+    # plan's scored leaves; unscored multiterm tails do not count, top-k
+    # prunes their 0-score matches) the segment loop runs serially in the
+    # driver with no Spark job, above it as the Spark job. On 4 cores
+    # examples/placement_sweep.py puts the break-even near 0.9M planned
+    # postings; a job gains with more executor cores, so the constant sits
+    # well under that. Instance-overridable like BATCH_MERGE_MAX.
+    DRIVER_MAX_POSTINGS = 250_000
 
     def __init__(
         self,
@@ -1881,36 +1928,46 @@ class Searcher:
             self._groups = pack_segments(counts, p)
         return self._groups
 
-    def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
-        """ONE shuffle-free Spark job running ``kernel(postings_pdf,
-        norms_pdf)`` once per live segment → ``_SEGMENT_OUT_SCHEMA`` rows.
-
-        ``range(P).mapInArrow``: task i reads group i's segments (see
-        :meth:`_segment_groups`) straight from the committed generation's
-        parquet with pyarrow — postings rows selected by ``scan``
-        (:func:`scan_reads`), norms rows of the scan's fields (else the
-        default field) and the delete mask — then calls the
-        kernel per segment, the reference's per-segment reader loop
-        (segment_reader.hpp:35-110). Nothing is redistributed and nothing is
-        cached in Spark; the plan is one Range → MapInArrow node."""
+    def _segment_read(self, scan: ScanSpec) -> tuple:
+        """What :func:`_segment_frames` reads for ``scan`` from the committed
+        generation's parquet: (tables, postings reads (:func:`scan_reads`),
+        mixed, norms predicate — the scan's fields, else the default
+        field)."""
         reader = self.reader
-        groups = self._segment_groups()
-        if not groups:
-            return reader.spark.createDataFrame([], _SEGMENT_OUT_SCHEMA)
         fields = scan.fields or [reader.default_field]
         norms_pred = pc.field("field").isin(fields) if reader.is_multifield else None
         tables = {
             t: reader.meta["tables"][t]
             for t in ("postings", "norms", "deletes") if t in reader.meta["tables"]
         }
+        return tables, scan_reads(scan, reader.is_multifield), scan.mixed, norms_pred
+
+    def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
+        """The Spark placement: ONE shuffle-free Spark job running
+        ``kernel(postings_pdf, norms_pdf)`` once per live segment →
+        ``_SEGMENT_OUT_SCHEMA`` rows.
+
+        ``range(P).mapInArrow``: task i runs :func:`_segment_loop` over group
+        i's segments (see :meth:`_segment_groups`). Nothing is redistributed
+        and nothing is cached in Spark; the plan is one Range → MapInArrow
+        node."""
+        reader = self.reader
+        groups = self._segment_groups()
+        if not groups:
+            return reader.spark.createDataFrame([], _SEGMENT_OUT_SCHEMA)
         arrow_schema, spark_schema = _schemas(_SEGMENT_OUT_SCHEMA)
-        task = _segment_task(
-            groups, tables, scan_reads(scan, reader.is_multifield), scan.mixed,
-            norms_pred, kernel, arrow_schema,
-        )
+        task = _segment_task(groups, self._segment_read(scan), kernel, arrow_schema)
         return reader.spark.range(len(groups), numPartitions=len(groups)).mapInArrow(
             task, spark_schema
         )
+
+    def _segment_rows(self, kernel, scan: ScanSpec) -> pd.DataFrame:
+        """The driver placement: the same ``_SEGMENT_OUT_SCHEMA`` rows as
+        :meth:`_segment_job`, from one :func:`_segment_loop` over every live
+        segment in this process — no Spark job."""
+        sids = sorted(self.reader.segment_docs_counts())
+        outs = list(_segment_loop(sids, self._segment_read(scan), kernel))
+        return pd.concat(outs, ignore_index=True) if outs else _NO_SEGMENT_ROWS.copy()
 
     def unpersist(self) -> None:
         """No-op, kept for callers: a Searcher caches nothing in Spark (each
@@ -1926,11 +1983,14 @@ class Searcher:
         """Top-k matches, ordered by (score desc, segment_id, doc_id).
 
         Returns a DataFrame (doc_key?, segment_id, doc_id, score) of ≤k rows.
-        Scored queries run their kernel job when ``search()`` is called: each
-        segment's ≤k rows are merged on the driver and the doc keys are read
-        from the docs table without Spark (:meth:`IndexReader.fetch_docs`), so
-        the result is a DataFrame over ≤k local rows. Stored-column filters
-        (All, ColumnExists, NumericRange, Nested) stay lazy Spark plans.
+        Scored queries run their kernel when ``search()`` is called — in the
+        driver with no Spark job when the query plans at most
+        ``DRIVER_MAX_POSTINGS`` postings, else as one Spark job (see
+        :meth:`_execute_batch`): each segment's ≤k rows are merged on the
+        driver and the doc keys are read from the docs table without Spark
+        (:meth:`IndexReader.fetch_docs`), so the result is a DataFrame over ≤k
+        local rows. Stored-column filters (All, ColumnExists, NumericRange,
+        Nested) stay lazy Spark plans.
         """
         nf = flt.normalize(f)
         stored = self._stored_filter(nf, k, with_keys)
@@ -2084,8 +2144,8 @@ class Searcher:
         k: int = 10,
         dtype: str = "float64",
     ) -> DataFrame:
-        """Evaluate a batch of queries in ONE distributed pass (root phrases
-        as :meth:`prepare` allows).
+        """Evaluate a batch of queries in ONE pass over the segments (root
+        phrases as :meth:`prepare` allows; placed like :meth:`search`).
 
         Postings for the union of every query's terms are scanned once per
         segment; each plan is pruned independently (WAND/MaxScore) in-kernel;
@@ -2121,6 +2181,13 @@ class Searcher:
         score), ordered by (query, score desc, segment_id, doc_id). A
         DataFrame, or with ``to_driver`` the same rows as a pandas frame.
 
+        Placement: when the merge runs on the driver (≤ ``BATCH_MERGE_MAX``
+        candidate rows, or an unbound phrase idf to bind) and the batch plans
+        at most ``DRIVER_MAX_POSTINGS`` postings, the per-segment loop runs
+        in this process (:meth:`_segment_rows`, no Spark job); otherwise it
+        is the Spark job (:meth:`_segment_job`). Both run the same loop and
+        kernel, so the rows are identical.
+
         ``k=None`` is :meth:`matches`: every plan evaluates exact with no
         top-k, and the result is the kernel job's lazy DataFrame, unmerged
         (unbound phrase idfs are left to the caller)."""
@@ -2131,13 +2198,24 @@ class Searcher:
             empty = _NO_HITS.assign(query=pd.Series([], dtype=object))
             return empty if to_driver else spark.createDataFrame([], BATCH_OUT_SCHEMA)
 
+        unbound = any(_unbound(p) for p in plans.values())
+        # driver-side merge — the reference's own top-k heap loop
+        # (index-search.cpp:676-748): candidate rows are tiny (#segments ×
+        # #queries × k); the windowed path is the scale fallback for huge
+        # batch×segment products.
+        driver_merge = k is not None and (
+            unbound
+            or len(self.reader.segment_docs_counts()) * len(plans) * k <= self.BATCH_MERGE_MAX
+        )
+        in_driver = driver_merge and scan.planned_postings <= self.DRIVER_MAX_POSTINGS
         mixed, avgdl, avg_map = self._norms_ctx(scan)
         # large batches ship the plan list as a BROADCAST (PreparedBatch
         # caches one across executes): a 1000-plan dict pickled into every
-        # task binary costs seconds of serialize/deserialize per stage. A
-        # call without one (search: a single plan) captures the plans in the
-        # closure instead — nothing is left to release after the job.
-        items = list(plans.items()) if b_plans is None else None
+        # task binary costs seconds of serialize/deserialize per stage. The
+        # driver placement and a call without one (search: a single plan)
+        # capture the plans in the closure instead — nothing is left to
+        # release after the job.
+        items = list(plans.items()) if b_plans is None or in_driver else None
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
             plan_items = items if items is not None else b_plans.value
@@ -2176,34 +2254,31 @@ class Searcher:
                     )
             return pd.concat(frames, ignore_index=True) if frames else _NO_SEGMENT_ROWS
 
-        local = self._segment_job(kernel, scan)
-        if k is None:
-            return local
-        n_segments = int(self.reader.meta.get("num_segments", 1))
-        unbound = any(_unbound(p) for p in plans.values())
-        if unbound or n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
-            # driver-side merge — the reference's own top-k heap loop
-            # (index-search.cpp:676-748): candidate rows are tiny
-            # (#segments × #queries × k), one Spark stage total; the windowed
-            # path below is the scale fallback for huge batch×segment products.
-            pdf = local.toPandas()
-            if unbound:
-                self._bind_phrase_idf(pdf, plans, dtype)
-            topk = _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
-            return topk if to_driver else spark.createDataFrame(topk, BATCH_OUT_SCHEMA)
-        from pyspark.sql import Window
+        if in_driver:
+            pdf = self._segment_rows(kernel, scan)
+        else:
+            local = self._segment_job(kernel, scan)
+            if k is None:
+                return local
+            if not driver_merge:
+                from pyspark.sql import Window
 
-        w = Window.partitionBy("query").orderBy(
-            F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
-        )
-        out = (
-            local.drop("seg_matches")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .drop("rn")
-            .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
-        )
-        return out.toPandas() if to_driver else out
+                w = Window.partitionBy("query").orderBy(
+                    F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
+                )
+                out = (
+                    local.drop("seg_matches")
+                    .withColumn("rn", F.row_number().over(w))
+                    .where(F.col("rn") <= k)
+                    .drop("rn")
+                    .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
+                )
+                return out.toPandas() if to_driver else out
+            pdf = local.toPandas()
+        if unbound:
+            self._bind_phrase_idf(pdf, plans, dtype)
+        topk = _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
+        return topk if to_driver else spark.createDataFrame(topk, BATCH_OUT_SCHEMA)
 
     def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
         """Bind each unbound phrase plan's idf into its kernel rows in place:
@@ -2565,9 +2640,11 @@ class Searcher:
 class PreparedBatch:
     """A compiled query batch (``filter::prepared`` analogue): stats baked,
     multiterm leaves expanded and the plan list broadcast once. Each
-    ``execute`` is one Spark job whose segment tasks re-read the batch's
-    postings and norms from the index parquet (:meth:`Searcher._segment_job`)
-    — nothing is persisted, so no other Searcher or batch can share or drop
+    ``execute`` re-reads the batch's postings and norms from the index
+    parquet — in the driver when the batch plans at most
+    ``Searcher.DRIVER_MAX_POSTINGS`` postings and its merge runs on the
+    driver, else in one Spark job (:meth:`Searcher._execute_batch`).
+    Nothing is persisted, so no other Searcher or batch can share or drop
     this one's state."""
 
     def __init__(

@@ -187,3 +187,38 @@ def test_fastpath_multifield_matches_legacy(spark, tmp_path):
         a = [(h["doc_key"], round(h["score"], 10)) for h in sf.search(q, k=10).collect()]
         b = [(h["doc_key"], round(h["score"], 10)) for h in sl.search(q, k=10).collect()]
         assert a == b
+
+
+def test_meta_records_segments_written(spark, tmp_path):
+    # four key-disjoint one-row-group files plan at most four segments, however
+    # many are requested: meta records the segments written, and an append's
+    # fresh ids start past every id the build could have assigned
+    src = str(tmp_path / "src")
+    synth_pages(spark, 300, seed=7, partitions=3).select("url", "text").write.parquet(src)
+    pages = spark.read.parquet(src)
+
+    def key(i: int) -> str:
+        return f"https://example.org/{i:010d}"
+
+    def one_file_parts(path: str, cuts: list[int]) -> str:
+        for lo, hi in zip(cuts, cuts[1:]):
+            pages.where((F.col("url") >= key(lo)) & (F.col("url") < key(hi))).coalesce(
+                1
+            ).write.mode("append").parquet(path)
+        return path
+
+    first = one_file_parts(str(tmp_path / "first"), [0, 50, 100, 150, 200])
+    idx = str(tmp_path / "idx")
+    b = IndexBuilder(spark, idx, analyzer="simple", num_segments=8)
+    meta = b.build(spark.read.parquet(first), key_col="url", text_col="text")
+    assert len(json.load(open(os.path.join(idx, "gen=1", "filegroups.json")))) == 4
+    live = IndexReader(spark, idx).segment_docs_counts()
+    assert meta["num_segments"] == len(live) == 4
+    assert meta["next_segment_id"] == 8
+
+    more = one_file_parts(str(tmp_path / "more"), [200, 250, 300])
+    meta = b.append(spark.read.parquet(more))
+    live = IndexReader(spark, idx).segment_docs_counts()
+    assert meta["num_segments"] == len(live) == 6
+    assert sorted(live) == [0, 1, 2, 3, 8, 9]
+    assert sum(live.values()) == meta["docs_count"] == 300

@@ -10,9 +10,14 @@ fetched from the docs table with pyarrow (``IndexReader.fetch_docs``).
   attached keys with a broadcast join of the docs table. Same
   (doc_key, segment_id, doc_id) sequence, scores within rel 1e-12.
   Re-record with ``python -m tests.test_keyed_search --record`` (run from the
-  repo root) when a scoring change is intended.
-* Job floor: a keyed Term search and a keyed Phrase search each run one
-  Spark job.
+  repo root) when a scoring change is intended. Every case is run under both
+  kernel placements, each forced through ``Searcher.DRIVER_MAX_POSTINGS``:
+  the rows must be identical, and equal to the recorded answers.
+* Job floor: on the Spark placement a keyed Term search and a keyed Phrase
+  search each run one Spark job; on the driver placement they run none.
+* Placement choice: a batch planning more postings than
+  ``DRIVER_MAX_POSTINGS`` runs one Spark job, a batch at the constant runs
+  none and returns the same rows.
 * The driver merge and the Window fallback on either side of
   ``BATCH_MERGE_MAX`` return identical keyed rows.
 """
@@ -50,6 +55,8 @@ FILTERS = {
 }
 VARIANTS = {"keyed": (True, "float64"), "unkeyed": (False, "float64"), "keyed_f32": (True, "float32")}
 STATES = ("built", "appended", "deleted", "consolidated")
+#: DRIVER_MAX_POSTINGS forcing each kernel placement (planned postings ≥ 0)
+PLACEMENTS = {"driver": 1 << 62, "spark": -1}
 
 
 def _corpus(prefix: str, n: int, seed: int) -> list[tuple[str, str]]:
@@ -62,8 +69,14 @@ def _corpus(prefix: str, n: int, seed: int) -> list[tuple[str, str]]:
     ]
 
 
-def _answers(reader) -> dict[str, list]:
+def _searcher(reader, placement: str) -> Searcher:
     s = Searcher(reader)
+    s.DRIVER_MAX_POSTINGS = PLACEMENTS[placement]
+    return s
+
+
+def _answers(reader, placement: str = "spark") -> dict[str, list]:
+    s = _searcher(reader, placement)
     out = {}
     for fname, f in FILTERS.items():
         for vname, (with_keys, dtype) in VARIANTS.items():
@@ -76,26 +89,32 @@ def _answers(reader) -> dict[str, list]:
     return out
 
 
-def _walk_states(spark, path: str) -> dict[str, dict]:
-    """Answers of every case in each index state, reached in order."""
+def _walk_states(spark, path: str, placements=("spark",)) -> dict[str, dict]:
+    """Answers of every case in each index state, reached in order:
+    ``{placement: {state: {case: rows}}}``."""
+    got: dict[str, dict] = {p: {} for p in placements}
+
+    def answer(state: str) -> None:
+        for p in placements:
+            got[p][state] = _answers(IndexReader(spark, path), p)
+
     df = spark.createDataFrame(_corpus("d", 240, 11), "doc_key string, text string")
     builder = IndexBuilder(spark, path, analyzer="simple+syn:scan=seek0", num_segments=3)
     builder.build(df, key_col="doc_key", text_col="text")
-    got = {"built": _answers(IndexReader(spark, path))}
+    answer("built")
     builder.append(spark.createDataFrame(_corpus("e", 80, 12), "doc_key string, text string"))
-    reader = IndexReader(spark, path)
-    assert isinstance(reader.meta["tables"]["docs"], list)  # keys come from several paths
-    got["appended"] = _answers(reader)
+    assert isinstance(IndexReader(spark, path).meta["tables"]["docs"], list)  # keys from several paths
+    answer("appended")
     delete_docs(IndexReader(spark, path), [f"d{i:04d}" for i in range(0, 240, 9)])
-    got["deleted"] = _answers(IndexReader(spark, path))
+    answer("deleted")
     consolidate(IndexReader(spark, path))
-    got["consolidated"] = _answers(IndexReader(spark, path))
+    answer("consolidated")
     return got
 
 
 @pytest.fixture(scope="module")
 def walked(spark, tmp_path_factory):
-    return _walk_states(spark, str(tmp_path_factory.mktemp("keyed")))
+    return _walk_states(spark, str(tmp_path_factory.mktemp("keyed")), tuple(PLACEMENTS))
 
 
 @pytest.fixture(scope="module")
@@ -110,15 +129,16 @@ def recorded():
 def test_keyed_search_matches_recorded_answers(walked, recorded, state, variant, fname):
     case = f"{fname}/{variant}"
     exp = recorded[state][case]
-    got = walked[state][case]
     assert exp, f"{state} {case}: recorded answer is empty"
+    got = walked["spark"][state][case]
+    assert walked["driver"][state][case] == got  # both placements: identical rows
     assert [r[:3] for r in got] == [r[:3] for r in exp]
     for g, e in zip(got, exp):
         assert math.isclose(g[3], e[3], rel_tol=1e-12, abs_tol=0.0), (state, case, g, e)
 
 
 # --------------------------------------------------------------------------
-# job floor and the BATCH_MERGE_MAX gate
+# job floor, kernel placement and the BATCH_MERGE_MAX gate
 # --------------------------------------------------------------------------
 
 
@@ -141,15 +161,49 @@ def _jobs_of(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
-def test_keyed_term_and_phrase_job_floor(spark, small_index):
-    s = Searcher(small_index)
+def _term_and_phrase_jobs(spark, s: Searcher) -> tuple[int, int]:
     # warm the reader's vocabulary and stats first
     s.search(flt.Term("index"), k=K).collect()
     s.search(flt.Phrase(("index", "spark")), k=K).collect()
     n_term = _jobs_of(spark, lambda: s.search(flt.Term("spark"), k=K).collect())
     n_phrase = _jobs_of(spark, lambda: s.search(flt.Phrase(("spark", "index")), k=K).collect())
-    assert n_term == 1, n_term
-    assert n_phrase == 1, n_phrase
+    return n_term, n_phrase
+
+
+def test_keyed_term_and_phrase_job_floor(spark, small_index):
+    assert _term_and_phrase_jobs(spark, _searcher(small_index, "spark")) == (1, 1)
+
+
+def test_keyed_term_and_phrase_run_no_job_in_driver(spark, small_index):
+    assert _term_and_phrase_jobs(spark, _searcher(small_index, "driver")) == (0, 0)
+
+
+def test_batch_placement_follows_planned_postings(spark, small_index):
+    batch = {
+        "t": flt.Term("spark"),
+        "a": flt.And((flt.Term("sort"), flt.Not(flt.Term("query")))),
+        "p": flt.Phrase(("spark", "index")),
+        "x": flt.Prefix("s"),
+        "n": flt.NgramSimilarity(("spark", "index", "query"), threshold=0.6),
+    }
+    s = Searcher(small_index, phrase_scoring="sum_of_terms")
+    prepared = s.prepare(batch)
+    df = {t: d for t, (d, _) in small_index.term_stats(WORDS).items()}
+    planned = (
+        df["spark"] + df["sort"] + df["query"] + df["spark"] + df["index"]
+        + sum(d for t, d in df.items() if t.startswith("s"))
+        + df["spark"] + df["index"] + df["query"]
+    )
+    assert prepared.scan.planned_postings == planned
+    s.DRIVER_MAX_POSTINGS = planned - 1
+    want = []
+    assert _jobs_of(spark, lambda: want.extend(prepared.execute(k=K).collect())) == 1
+    s.DRIVER_MAX_POSTINGS = planned
+    got = []
+    assert _jobs_of(spark, lambda: got.extend(prepared.execute(k=K).collect())) == 0
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert {r["query"] for r in got} == set(batch)
+    prepared.unpersist()
 
 
 def test_keyed_search_identical_across_merge_gate(small_index):
@@ -180,7 +234,7 @@ if __name__ == "__main__" and sys.argv[1:2] == ["--record"]:
 
     spark = get_spark("keyed_search_record", master="local[4]", shuffle_partitions=4)
     with tempfile.TemporaryDirectory() as tmp:
-        answers = _walk_states(spark, os.path.join(tmp, "idx"))
+        answers = _walk_states(spark, os.path.join(tmp, "idx"))["spark"]
     spark.stop()
     with open(sys.argv[2] if len(sys.argv) > 2 else FIXTURE, "w") as fh:
         json.dump(answers, fh, indent=1)

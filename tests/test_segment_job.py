@@ -206,6 +206,7 @@ def test_released_searcher_does_not_slow_another_batch(spark, seg_index):
         "p": flt.Prefix("s"),
     }
     a, b = Searcher(seg_index), Searcher(seg_index)
+    a.DRIVER_MAX_POSTINGS = b.DRIVER_MAX_POSTINGS = -1  # the Spark placement
     pa_, pb = a.prepare(batch), b.prepare(batch)
     first = pa_.execute(k=10).collect()
     want = pb.execute(k=10).collect()

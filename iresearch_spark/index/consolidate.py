@@ -651,6 +651,8 @@ def consolidate(
     # ---- commit gen+1 ----
     meta["generation"] = gen
     meta["num_segments"] = len(all_ids) - len(merge_ids) + 1
+    # the purge drops the merged segments' deleted docs from storage
+    meta["docs_count"] = sum(docs_count.values()) - sum(ds.size for ds in dmask.values())
     meta["tables"] = dict(meta["tables"])
     meta["tables"]["postings"] = postings_path
     meta["tables"]["norms"] = norms_path

@@ -35,8 +35,10 @@ in the merge:
 * merge — the union of per-segment top-k rows is tiny; the driver orders it
   by (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
   utils/index-search.cpp:676-748, binding an unbound phrase idf from the
-  summed per-segment match counts first. ``matches`` has no merge: its
-  result is the lazy kernel job itself.
+  summed per-segment match counts first. The merged rows stay on the driver
+  (:class:`_LocalResult`): ``collect``/``toPandas``/``count``/``take`` answer
+  from them, and only a Spark operation on the result builds its JVM plan.
+  ``matches`` has no merge: its result is the lazy kernel job itself.
 
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
@@ -90,6 +92,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
 
@@ -1799,6 +1802,49 @@ def _schemas(ddl: str) -> tuple[pa.Schema, "_T.StructType"]:
     )
 
 
+# A driver-merged result's ≤k rows already sit in pandas on the driver: pushing
+# them into the JVM only for collect() to pull them back was half a search.
+class _LocalResult(_ClassicDataFrame):
+    """A search result DataFrame over driver-side rows: ``ddl``'s columns, in
+    order, with the dtypes Spark's ``toPandas`` gives them (int32, int64,
+    float64, object). ``collect``, ``toPandas``, ``count`` and ``take`` (so
+    ``head`` and ``first``) answer from the rows, exactly as Spark would;
+    ``schema``, ``columns`` and ``dtypes`` come from ``ddl``. Any other
+    operation reads ``_jdf``, which builds the Spark plan
+    (``createDataFrame`` of the rows) on first use."""
+
+    def __new__(cls, *args, **kwargs):
+        # classic DataFrame.__new__ would call __init__(jdf, sql_ctx) itself
+        return object.__new__(cls)
+
+    def __init__(self, spark, rows: pd.DataFrame, ddl: str):
+        self.__dict__["schema"] = _schemas(ddl)[1]  # the parent's cached_property
+        self._rows = rows
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+
+    @_functools.cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._rows, self.schema)._jdf
+
+    def collect(self) -> list:
+        cols = [self._rows[c].tolist() for c in self.schema.names]
+        return [self.schema.fromInternal(values) for values in zip(*cols)]
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._rows.reset_index(drop=True)
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def take(self, num: int) -> list:
+        if num < 0:
+            return super().take(num)  # Spark's own error for a negative limit
+        return self.collect()[:num]
+
+
 def _segment_frames(
     sids: list[int], tables: dict, reads, mixed: bool, norms_pred
 ) -> dict[int, tuple[pd.DataFrame, pd.DataFrame]]:
@@ -1988,8 +2034,9 @@ class Searcher:
         ``DRIVER_MAX_POSTINGS`` postings, else as one Spark job (see
         :meth:`_execute_batch`): each segment's ≤k rows are merged on the
         driver and the doc keys are read from the docs table without Spark
-        (:meth:`IndexReader.fetch_docs`), so the result is a DataFrame over ≤k
-        local rows. Stored-column filters (All, ColumnExists, NumericRange,
+        (:meth:`IndexReader.fetch_docs`). The result holds those ≤k rows on
+        the driver (:class:`_LocalResult`): ``collect`` and ``toPandas`` make
+        no JVM call. Stored-column filters (All, ColumnExists, NumericRange,
         Nested) stay lazy Spark plans.
         """
         nf = flt.normalize(f)
@@ -2153,7 +2200,8 @@ class Searcher:
         (query, segment_id, doc_id, score) — ≤ k rows per query, ordered by
         (query, score desc, segment_id, doc_id). This is the batched query
         evaluation shape of the north rule: per-query driver overhead is
-        amortized, throughput scales with executors.
+        amortized, throughput scales with executors. A driver-merged batch
+        keeps its rows on the driver (see :meth:`PreparedBatch.execute`).
         """
         return self.prepare(queries, dtype).execute(k)
 
@@ -2179,7 +2227,8 @@ class Searcher:
     ):
         """Per-query top-k of a compiled batch: (query, segment_id, doc_id,
         score), ordered by (query, score desc, segment_id, doc_id). A
-        DataFrame, or with ``to_driver`` the same rows as a pandas frame.
+        DataFrame (a :class:`_LocalResult` when merged on the driver), or
+        with ``to_driver`` the same rows as a pandas frame.
 
         Placement: when the merge runs on the driver (≤ ``BATCH_MERGE_MAX``
         candidate rows, or an unbound phrase idf to bind) and the batch plans
@@ -2195,8 +2244,8 @@ class Searcher:
         dt = _dtype(dtype)
         spark = self.reader.spark
         if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
-            empty = _NO_HITS.assign(query=pd.Series([], dtype=object))
-            return empty if to_driver else spark.createDataFrame([], BATCH_OUT_SCHEMA)
+            empty = _NO_SEGMENT_ROWS.drop(columns="seg_matches")
+            return empty if to_driver else _LocalResult(spark, empty, BATCH_OUT_SCHEMA)
 
         unbound = any(_unbound(p) for p in plans.values())
         # driver-side merge — the reference's own top-k heap loop
@@ -2225,7 +2274,7 @@ class Searcher:
             dl, dl_map = _norms_views(norm_pdf, mixed)
             dels = _deleted_of(norm_pdf)
             sv = _SegmentViews(post_pdf)
-            frames = []
+            names, sizes, matches, id_parts, score_parts = [], [], [], [], []
             for name, plan in plan_items:
                 if k is None:
                     nctx = (dl_map, avg_map) if mixed else None
@@ -2241,18 +2290,23 @@ class Searcher:
                     # rounding may reorder near-ties: 16 rows of slack
                     ids, scores = _local_topk(ids, scores, k + 16 if _unbound(plan) else k)
                 if ids.size:
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query": name,
-                                "segment_id": np.full(ids.size, sid, np.int32),
-                                "doc_id": ids.astype(np.int32),
-                                "score": scores.astype(np.float64),
-                                "seg_matches": np.int64(n_matches),
-                            }
-                        )
-                    )
-            return pd.concat(frames, ignore_index=True) if frames else _NO_SEGMENT_ROWS
+                    names.append(name)
+                    sizes.append(ids.size)
+                    matches.append(n_matches)
+                    id_parts.append(ids.astype(np.int32))
+                    score_parts.append(scores.astype(np.float64))
+            if not sizes:
+                return _NO_SEGMENT_ROWS
+            # one frame per segment: every plan's rows, in plan order
+            return pd.DataFrame(
+                {
+                    "query": np.repeat(np.array(names, dtype=object), sizes),
+                    "segment_id": np.full(sum(sizes), sid, np.int32),
+                    "doc_id": np.concatenate(id_parts),
+                    "score": np.concatenate(score_parts),
+                    "seg_matches": np.repeat(np.array(matches, dtype=np.int64), sizes),
+                }
+            )
 
         if in_driver:
             pdf = self._segment_rows(kernel, scan)
@@ -2278,7 +2332,7 @@ class Searcher:
         if unbound:
             self._bind_phrase_idf(pdf, plans, dtype)
         topk = _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
-        return topk if to_driver else spark.createDataFrame(topk, BATCH_OUT_SCHEMA)
+        return topk if to_driver else _LocalResult(spark, topk, BATCH_OUT_SCHEMA)
 
     def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
         """Bind each unbound phrase plan's idf into its kernel rows in place:
@@ -2297,8 +2351,9 @@ class Searcher:
         self, hits: pd.DataFrame, with_keys: bool, score_cols: tuple[str, ...] = ("score",)
     ) -> DataFrame:
         """The ≤k ranked driver-side hits, in their order, as the search
-        result DataFrame: (doc_key?, segment_id, doc_id, *score_cols). Doc
-        keys come from :meth:`IndexReader.fetch_docs` — no Spark job."""
+        result: a :class:`_LocalResult` of (doc_key?, segment_id, doc_id,
+        *score_cols) that keeps the rows on the driver. Doc keys come from
+        :meth:`IndexReader.fetch_docs` — no Spark job."""
         hits = hits[["segment_id", "doc_id", *score_cols]]
         schema = "segment_id int, doc_id int, " + ", ".join(f"{c} double" for c in score_cols)
         if with_keys:
@@ -2307,7 +2362,7 @@ class Searcher:
                 ["doc_key", "segment_id", "doc_id", *score_cols]
             ]
             schema = "doc_key string, " + schema
-        return self.reader.spark.createDataFrame(hits, schema)
+        return _LocalResult(self.reader.spark, hits, schema)
 
     def _search_column_exists(self, node: flt.ColumnExists, k: int | None, with_keys: bool) -> DataFrame:
         """by_column_existence (column_existence_filter.cpp): docs whose stored
@@ -2662,8 +2717,11 @@ class PreparedBatch:
 
     def execute(self, k: int = 10) -> DataFrame:
         """Per-query top-k of the batch, (query, segment_id, doc_id, score).
-        The compiled plan list is broadcast on the first call, not
-        re-pickled into every execute's tasks."""
+        When the merge runs on the driver the result holds its rows there
+        (:class:`_LocalResult`: ``collect`` makes no JVM call); the Window
+        fallback's result is a lazy Spark plan. The compiled plan list is
+        broadcast on the first call, not re-pickled into every execute's
+        tasks."""
         s = self._searcher
         if self._b_plans is None:
             self._b_plans = s.reader.spark.sparkContext.broadcast(

@@ -71,3 +71,21 @@ def test_consolidate_all_to_one(spark, built):
     meta = consolidate(r, segment_ids=None)
     assert meta["num_segments"] == 1
     assert snap(spark, built) == before
+
+
+def test_purge_commits_live_docs_count(spark, tmp_path):
+    """A purging consolidate commits the surviving doc count: meta
+    ``docs_count`` equals the segments' counts and the stored docs."""
+    from iresearch_spark.index.deletes import delete_docs
+
+    docs = dict(list(make_corpus(100).items())[:100])
+    path = str(tmp_path / "purge")
+    df = spark.createDataFrame([(k, v) for k, v in docs.items()], "doc_key string, text string")
+    IndexBuilder(spark, path, analyzer="simple", num_segments=2).build(
+        df, key_col="doc_key", text_col="text"
+    )
+    delete_docs(IndexReader(spark, path), sorted(docs)[::4])
+    consolidate(IndexReader(spark, path))
+    r = IndexReader(spark, path)
+    assert "deletes" not in r.meta["tables"]
+    assert r.meta["docs_count"] == sum(r.segment_docs_counts().values()) == r.docs().count() == 75

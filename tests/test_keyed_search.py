@@ -13,6 +13,14 @@ fetched from the docs table with pyarrow (``IndexReader.fetch_docs``).
   repo root) when a scoring change is intended. Every case is run under both
   kernel placements, each forced through ``Searcher.DRIVER_MAX_POSTINGS``:
   the rows must be identical, and equal to the recorded answers.
+* Local results: every such result is a ``_LocalResult`` whose
+  ``collect``/``toPandas``/``count``/``take``/``first``/``columns``/``schema``
+  answer exactly (value types and pandas dtypes included) like the same rows
+  materialized through its Spark plan — every case, state and placement,
+  plus a ``PreparedBatch`` (empty too) and a ``search_ordered`` result. A
+  driver-placed search or batch execute collects with ``createDataFrame``
+  patched to raise and no Spark job; Spark operations on a result (select,
+  where, join, orderBy, show) match the materialized frame's.
 * Job floor: on the Spark placement a keyed Term search and a keyed Phrase
   search each run one Spark job; on the driver placement they run none.
 * Placement choice: a batch planning more postings than
@@ -31,11 +39,14 @@ import sys
 import uuid
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame, functions as F
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
 from iresearch_spark.index.consolidate import consolidate
 from iresearch_spark.index.deletes import delete_docs
+from iresearch_spark.search.executor import _LocalResult
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "keyed_search_answers.json")
 WORDS = [
@@ -75,23 +86,57 @@ def _searcher(reader, placement: str) -> Searcher:
     return s
 
 
-def _answers(reader, placement: str = "spark") -> dict[str, list]:
+def _views(df) -> dict:
+    """What a result answers: its rows (with field names and value types),
+    pandas frame, count, first rows, columns and schema."""
+    rows = df.collect()
+    return {
+        "rows": rows,
+        "types": [(list(r.__fields__), [type(v) for v in r]) for r in rows],
+        "pandas": df.toPandas(),
+        "count": df.count(),
+        "take3": df.take(3),
+        "first": df.first(),
+        "columns": df.columns,
+        "schema": df.schema,
+    }
+
+
+def _local_and_spark_views(res) -> tuple[dict, dict]:
+    """A driver-merged result's own answers, then those of the same rows
+    materialized through its Spark plan."""
+    assert isinstance(res, _LocalResult)
+    local = _views(res)
+    return local, _views(DataFrame(res._jdf, res.sparkSession))
+
+
+def _assert_same_views(local: dict, materialized: dict) -> None:
+    local, materialized = dict(local), dict(materialized)
+    pd.testing.assert_frame_equal(local.pop("pandas"), materialized.pop("pandas"))
+    assert local == materialized
+
+
+def _rows(views: dict) -> list[list]:
+    return [
+        [r["doc_key"] if "doc_key" in r else None, r["segment_id"], r["doc_id"], r["score"]]
+        for r in views["rows"]
+    ]
+
+
+def _answers(reader, placement: str = "spark") -> dict[str, tuple[dict, dict]]:
     s = _searcher(reader, placement)
     out = {}
     for fname, f in FILTERS.items():
         for vname, (with_keys, dtype) in VARIANTS.items():
-            rows = s.search(f, k=K, dtype=dtype, with_keys=with_keys).collect()
-            out[f"{fname}/{vname}"] = [
-                [r["doc_key"] if with_keys else None, r["segment_id"], r["doc_id"], r["score"]]
-                for r in rows
-            ]
+            res = s.search(f, k=K, dtype=dtype, with_keys=with_keys)
+            out[f"{fname}/{vname}"] = _local_and_spark_views(res)
     s.unpersist()
     return out
 
 
 def _walk_states(spark, path: str, placements=("spark",)) -> dict[str, dict]:
-    """Answers of every case in each index state, reached in order:
-    ``{placement: {state: {case: rows}}}``."""
+    """Views (:func:`_local_and_spark_views`) of every case in each index
+    state, reached in order: ``{placement: {state: {case: views}}}``."""
     got: dict[str, dict] = {p: {} for p in placements}
 
     def answer(state: str) -> None:
@@ -130,11 +175,19 @@ def test_keyed_search_matches_recorded_answers(walked, recorded, state, variant,
     case = f"{fname}/{variant}"
     exp = recorded[state][case]
     assert exp, f"{state} {case}: recorded answer is empty"
-    got = walked["spark"][state][case]
-    assert walked["driver"][state][case] == got  # both placements: identical rows
+    got = _rows(walked["spark"][state][case][0])
+    assert _rows(walked["driver"][state][case][0]) == got  # both placements: identical rows
     assert [r[:3] for r in got] == [r[:3] for r in exp]
     for g, e in zip(got, exp):
         assert math.isclose(g[3], e[3], rel_tol=1e-12, abs_tol=0.0), (state, case, g, e)
+
+
+@pytest.mark.parametrize("placement", sorted(PLACEMENTS))
+@pytest.mark.parametrize("state", STATES)
+@pytest.mark.parametrize("variant", sorted(VARIANTS))
+@pytest.mark.parametrize("fname", sorted(FILTERS))
+def test_local_result_answers_like_spark(walked, placement, state, variant, fname):
+    _assert_same_views(*walked[placement][state][f"{fname}/{variant}"])
 
 
 # --------------------------------------------------------------------------
@@ -176,6 +229,64 @@ def test_keyed_term_and_phrase_job_floor(spark, small_index):
 
 def test_keyed_term_and_phrase_run_no_job_in_driver(spark, small_index):
     assert _term_and_phrase_jobs(spark, _searcher(small_index, "driver")) == (0, 0)
+
+
+SCAN_OR_HASH = flt.Or((flt.Term("scan"), flt.Term("hash")))
+
+
+def test_driver_results_need_no_spark_plan(spark, small_index, monkeypatch):
+    s = _searcher(small_index, "driver")
+    prepared = s.prepare({"t": flt.Term("spark"), "o": SCAN_OR_HASH})
+
+    def run() -> list:
+        return [s.search(flt.Term("spark"), k=K).collect(), prepared.execute(k=K).collect()]
+
+    want = run()
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("a driver-merged result built a Spark plan")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", refuse)
+    got = []
+    assert _jobs_of(spark, lambda: got.extend(run())) == 0
+    assert got == want and all(got)
+    prepared.unpersist()
+
+
+@pytest.mark.parametrize("placement", sorted(PLACEMENTS))
+def test_batch_and_ordered_results_answer_like_spark(small_index, placement):
+    s = _searcher(small_index, placement)
+    batch = {"t": flt.Term("spark"), "o": SCAN_OR_HASH, "x": flt.Prefix("s")}
+    for queries in (batch, {"none": flt.Term("absent")}):
+        prepared = s.prepare(queries)
+        _assert_same_views(*_local_and_spark_views(prepared.execute(k=K)))
+        prepared.unpersist()
+    ordered = s.search_ordered(SCAN_OR_HASH, k=K, scorers=("bm25", "tfidf"))
+    _assert_same_views(*_local_and_spark_views(ordered))
+
+
+def test_spark_operations_on_a_result(spark, small_index, capsys):
+    res = _searcher(small_index, "driver").search(SCAN_OR_HASH, k=K)
+    docs = small_index.docs()
+    capsys.readouterr()
+
+    def ops(df) -> dict:
+        out = {
+            "select": df.select("doc_key", "score").collect(),
+            "where": df.where(F.col("doc_id") % 2 == 0).collect(),
+            "join": (
+                df.drop("doc_key").join(docs, ["segment_id", "doc_id"]).orderBy("doc_key").collect()
+            ),
+            "orderBy": df.orderBy("doc_key").collect(),
+        }
+        df.show()
+        out["show"] = capsys.readouterr().out
+        return out
+
+    got = ops(res)  # the first operation builds the result's Spark plan
+    assert got == ops(DataFrame(res._jdf, spark))
+    assert len(got["select"]) == K and "doc_key" in got["show"]
+    assert sorted(r["doc_key"] for r in got["join"]) == sorted(r["doc_key"] for r in res.collect())
 
 
 def test_batch_placement_follows_planned_postings(spark, small_index):
@@ -234,7 +345,11 @@ if __name__ == "__main__" and sys.argv[1:2] == ["--record"]:
 
     spark = get_spark("keyed_search_record", master="local[4]", shuffle_partitions=4)
     with tempfile.TemporaryDirectory() as tmp:
-        answers = _walk_states(spark, os.path.join(tmp, "idx"))["spark"]
+        walked = _walk_states(spark, os.path.join(tmp, "idx"))["spark"]
+    answers = {
+        state: {case: _rows(views[0]) for case, views in cases.items()}
+        for state, cases in walked.items()
+    }
     spark.stop()
     with open(sys.argv[2] if len(sys.argv) > 2 else FIXTURE, "w") as fh:
         json.dump(answers, fh, indent=1)

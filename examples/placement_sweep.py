@@ -125,7 +125,7 @@ def main() -> None:
     spark = get_spark("placement_sweep", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     reader = IndexReader(spark, args.index)
-    searcher = Searcher(reader, phrase_scoring="sum_of_terms")
+    searcher = Searcher(reader)
     gen = Terms(reader, args.seed)
     counts = reader.segment_docs_counts()
     print(f"# {args.index}: {sum(counts.values())} docs, {len(counts)} segments, "

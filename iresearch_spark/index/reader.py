@@ -10,7 +10,7 @@ Multi-field indexes (reference per-document field lists,
 utils/index-put.cpp:258-277) carry a ``field`` column in postings / term_dict
 / norms; every scan helper takes an optional ``field`` (None = the index's
 default field) and the field equality clause pushes down to the
-(field, term)-sorted parquet layout exactly like the term predicates.
+(field, term)-sorted parquet layout.
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .codec import vbyte_decode
 
 #: (path, directory mtime) → pyarrow dataset; a process-wide cache, so each
 #: driver or Python worker lists a table's files once. A committed
@@ -237,51 +235,6 @@ class IndexReader:
             }
         return self._field_stats[fname]
 
-    @staticmethod
-    def _bare_term_pred(terms: list[str]):
-        """Pushdown-friendly membership predicate: an explicit min/max range
-        (always prunable from parquet row-group stats on the term-sorted
-        layout) AND'd with the In set. Spark only converts small In lists to
-        parquet filters, so the range clause is what guarantees file/row-group
-        pruning for big term sets."""
-        ts = sorted(terms)
-        rng = (F.col("term") >= ts[0]) & (F.col("term") <= ts[-1])
-        return rng & F.col("term").isin(ts)
-
-    def postings_for_terms(
-        self, terms: list[str], extra_pred=None, field: str | None = None
-    ) -> DataFrame:
-        """Pruned postings scan (the FST term-index role, done by layout):
-        the postings table is range-partitioned + sorted by (field, term), so
-        the field + min/max + In predicate prunes files and row groups.
-        ``extra_pred`` widens the scan with a pushable term predicate
-        (prefix/range/wildcard multiterm tails) OR'd in — evaluated in-scan,
-        never collected. The whole scan is scoped to ONE field; mixed-field
-        scans OR several of these predicates (executor `_batch_postings`).
-
-        Very large term sets without an extra predicate use a broadcast
-        semi-join plus the min/max range clause instead of a giant In
-        expression (which costs seconds of driver planning)."""
-        clause = self._field_clause(field)
-        if not terms:
-            pred = extra_pred if extra_pred is not None else F.lit(False)
-            if clause is not None and extra_pred is not None:
-                pred = clause & pred
-            return self.postings().where(pred)
-        ts = sorted(terms)
-        if len(ts) > 2048 and extra_pred is None:
-            rng = (F.col("term") >= ts[0]) & (F.col("term") <= ts[-1])
-            if clause is not None:
-                rng = clause & rng
-            tdf = self.spark.createDataFrame([(t,) for t in ts], "term string")
-            return self.postings().where(rng).join(F.broadcast(tdf), "term", "leftsemi")
-        pred = self._bare_term_pred(ts)
-        if extra_pred is not None:
-            pred = pred | extra_pred
-        if clause is not None:
-            pred = clause & pred
-        return self.postings().where(pred)
-
     def term_stats(
         self, terms: list[str], field: str | None = None
     ) -> dict[str, tuple[int, int]]:
@@ -296,15 +249,6 @@ class IndexReader:
             if i < len(ta) and ta[i] == t:
                 out[t] = (int(dfa[i]), int(ttfa[i]))
         return out
-
-    def doc_lens(self, segment_id: int, field: str | None = None) -> np.ndarray:
-        """Dense doc_len array for one segment+field (Norm2 reader analogue);
-        chunked rows are concatenated in chunk order."""
-        rows = self.norms(field=field).where(F.col("segment_id") == segment_id).collect()
-        rows.sort(key=lambda r: r["chunk_id"] if "chunk_id" in r.__fields__ else 0)
-        return np.concatenate(
-            [vbyte_decode(r["doc_len_enc"]).astype(np.int64) for r in rows]
-        ) if rows else np.empty(0, np.int64)
 
     def _norms_rows(self, field: str) -> pd.DataFrame:
         """One field's per-chunk norms counters (segment_id, docs_count,

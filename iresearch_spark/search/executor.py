@@ -18,22 +18,23 @@ in the merge:
   per-segment reader of segment_reader.hpp:35-110): one pyarrow read of its
   segments' postings, norms and deletes from the index parquet, then one
   kernel call per segment. :meth:`Searcher._execute_batch` places it. A
-  driver-merged batch planning at most ``Searcher.DRIVER_MAX_POSTINGS``
+  k-bounded batch planning at most ``Searcher.DRIVER_MAX_POSTINGS``
   postings runs the loop serially in the driver over every live segment,
   with no Spark job (the reference's in-process loop,
-  index-search.cpp:676-748). Anything larger, ``matches`` and the Window
-  fallback run it as one shuffle-free Spark job
-  (:meth:`Searcher._segment_job`): ``range(P).mapInArrow`` with the live
-  segments packed into P tasks, each looping over its own segments. Each
-  segment's kernel decodes only the needed posting lists (VByte blocks), runs the
-  boolean algebra vectorized in numpy (conjunction = sorted-array
-  intersection ≙ conjunction.hpp; disjunction = unique+bincount ≙
-  disjunction.hpp; exclusion ≙ exclusion.hpp; phrases = packed-key position
-  intersection), scores through the searcher's :class:`ScoreModel`, and
-  emits its local top-k under (score desc, doc_id asc) — or, for
-  ``matches``, every match.
-* merge — the union of per-segment top-k rows is tiny; the driver orders it
-  by (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
+  index-search.cpp:676-748). A larger batch, and ``matches``, run it as
+  one shuffle-free Spark job (:meth:`Searcher._segment_job`):
+  ``range(P).mapInArrow`` with the live segments packed into P tasks, each
+  looping over its own segments. Each segment's kernel decodes only the
+  needed posting lists (VByte blocks), runs the boolean algebra vectorized
+  in numpy (conjunction = sorted-array intersection ≙ conjunction.hpp;
+  disjunction = unique+bincount ≙ disjunction.hpp; exclusion ≙
+  exclusion.hpp; phrases = packed-key position intersection), scores
+  through the searcher's :class:`ScoreModel`, and emits its local top-k
+  under (score desc, doc_id asc) — or, for ``matches``, every match.
+* merge — every k-bounded call (``search``, ``search_many``,
+  ``PreparedBatch.execute``) has one merge, on the driver: the union of
+  per-segment top-k rows is tiny, and the driver orders it by (score desc,
+  segment_id asc, doc_id asc) ≙ the min-heap loop of
   utils/index-search.cpp:676-748, binding an unbound phrase idf from the
   summed per-segment match counts first. The merged rows stay on the driver
   (:class:`_LocalResult`): ``collect``/``toPandas``/``count``/``take`` answer
@@ -68,7 +69,8 @@ bytes per term); each task's postings read is pruned by parquet min/max
 stats over the (field, term)-sorted range layout (field equality plus exact,
 prefix, range and wildcard-prefix term ranges all prune row groups);
 per-segment kernels are independent; the only other driver-side data is
-#segments × #queries × k candidate rows.
+the merge's candidate rows, at most #segments × #queries × (k + 16) (each
+segment keeps 16 extra rows of an ``exact_df`` root phrase).
 
 Multi-field: every filter leaf resolves a field (None → index default) with
 its OWN df/doc-length/avgdl stats (per-field collectors, bm25.cpp:204-276).
@@ -458,8 +460,9 @@ def _prefix_block(terms_a: np.ndarray, p: str) -> tuple[int, int]:
 
 
 def _terms_filter(terms: list[str]) -> pc.Expression:
-    """pyarrow twin of :meth:`IndexReader._bare_term_pred`: the min/max range
-    (prunable from row-group statistics) AND'd with the exact set."""
+    """pyarrow filter for an exact term set: the min/max range (prunable
+    from row-group statistics on the term-sorted layout) AND'd with the
+    set itself."""
     ts = sorted(terms)
     t = pc.field("term")
     return (t >= ts[0]) & (t <= ts[-1]) & t.isin(ts)
@@ -1912,21 +1915,14 @@ def _segment_task(groups, read: tuple, kernel, schema: pa.Schema):
 
 
 class Searcher:
-    # batch-merge gate: candidate rows reaching the driver merge are bounded
-    # by n_segments × n_plans × k (each segment kernel pre-top-k's to ≤k rows
-    # per (segment, query) via _local_topk); at or under this many rows the
-    # driver heap-merge (reference index-search.cpp:676-748) is one stage,
-    # above it the distributed Window-per-query fallback runs instead.
-    # Instance-overridable for tests / unusual deployments.
-    BATCH_MERGE_MAX = 2_000_000
-    # kernel placement for driver-merged batches: at or under this many
+    # kernel placement for k-bounded batches: at or under this many
     # planned postings (ScanSpec.planned_postings — the df sum over every
     # plan's scored leaves; unscored multiterm tails do not count, top-k
     # prunes their 0-score matches) the segment loop runs serially in the
     # driver with no Spark job, above it as the Spark job. On 4 cores
     # examples/placement_sweep.py puts the break-even near 0.9M planned
     # postings; a job gains with more executor cores, so the constant sits
-    # well under that. Instance-overridable like BATCH_MERGE_MAX.
+    # well under that. Instance-overridable for tests / unusual deployments.
     DRIVER_MAX_POSTINGS = 250_000
 
     def __init__(
@@ -1944,9 +1940,8 @@ class Searcher:
           idf from the exact phrase document frequency. That df is known only
           after the kernel ran, so the idf is bound on the driver: each
           segment reports its match count, and the merge sums them and
-          multiplies the idf into the (const-1) kernel scores. Batches
-          (:meth:`prepare`) have no such merge and reject root phrases in
-          this mode.
+          multiplies the idf into the (const-1) kernel scores. A batch
+          (:meth:`prepare`) binds each root phrase's idf the same way.
         * ``"sum_of_terms"`` — REFERENCE PARITY: the aggregated stats blob sums
           every member term's idf (phrase_filter.cpp:231-318
           ``term_stats.finish`` per slot term; bm25.cpp:495-497 / tfidf.cpp:380
@@ -2043,7 +2038,8 @@ class Searcher:
         stored = self._stored_filter(nf, k, with_keys)
         if stored is not None:
             return stored
-        plan, scan = self._compile(nf, dtype)
+        plans, scan = self._compile({"": nf}, dtype)
+        plan = plans[""]
         if plan["op"] == "all":
             docs = self.reader.live_docs()
             out = docs.select(
@@ -2053,8 +2049,7 @@ class Searcher:
         if plan["op"] == "empty":
             return self._hits_frame(_NO_HITS, with_keys)
         # a batch of one: the batch kernel, merged on the driver
-        hits = self._execute_batch({"": plan}, scan, k, dtype, to_driver=True)
-        return self._hits_frame(hits, with_keys)
+        return self._hits_frame(self._execute_batch(plans, scan, k, dtype), with_keys)
 
     def _stored_filter(self, nf: flt.Filter, k: int | None, with_keys: bool):
         """The lazy result of a stored-column filter (ColumnExists,
@@ -2068,15 +2063,20 @@ class Searcher:
             return self._search_nested(nf, k, with_keys)
         return None
 
-    def _compile(self, nf: flt.Filter, dtype: str) -> tuple[dict, ScanSpec]:
-        """:func:`compile_plan` of one normalized root filter. A root
-        Phrase/SamePosition under ``exact_df`` gets ``"idf": None``: the
-        kernel scores it at const 1 and reports its per-segment match counts,
-        and :meth:`_bind_phrase_idf` multiplies in the phrase-df idf."""
-        plan, scan = compile_plan(nf, self.reader, self.k1, self.b, dtype, model=self.model)
-        if plan["op"] == "phrase" and self.phrase_scoring == "exact_df":
-            plan["idf"] = None
-        return plan, scan
+    def _compile(
+        self, filters: dict[str, flt.Filter], dtype: str
+    ) -> tuple[dict[str, dict], ScanSpec]:
+        """:func:`compile_plans` of normalized root filters — the one compile
+        of ``search``, ``matches`` and ``prepare``. Under ``exact_df`` each
+        root Phrase/SamePosition gets ``"idf": None``: the kernel scores it at
+        const 1 and reports its per-segment match counts, and
+        :meth:`_bind_phrase_idf` multiplies in the phrase-df idf."""
+        plans, scan = compile_plans(filters, self.reader, self.k1, self.b, dtype, model=self.model)
+        if self.phrase_scoring == "exact_df":
+            for plan in plans.values():
+                if plan["op"] == "phrase":
+                    plan["idf"] = None
+        return plans, scan
 
     def _phrase_idf(self, plan: dict, dfp: int, dtype: str) -> float:
         """The idf of an unbound phrase plan matched by ``dfp`` live docs,
@@ -2139,7 +2139,8 @@ class Searcher:
         stored = self._stored_filter(nf, None, with_keys=False)
         if stored is not None:
             return stored
-        plan, scan = self._compile(nf, dtype)
+        plans, scan = self._compile({"": nf}, dtype)
+        plan = plans[""]
         if plan["op"] == "all":
             docs = self.reader.live_docs()
             return docs.select(
@@ -2147,7 +2148,7 @@ class Searcher:
             )
         if plan["op"] == "empty":
             return self.reader.spark.createDataFrame([], KERNEL_OUT_SCHEMA)
-        local = self._execute_batch({"": plan}, scan, None, dtype)
+        local = self._execute_batch(plans, scan, None, dtype)
         score = F.col("score")
         if _unbound(plan):
             # the same dtype product as _bind_phrase_idf's numpy one
@@ -2168,21 +2169,14 @@ class Searcher:
         ``execute()``d repeatedly without touching the driver-side stats again
         — the exact analogue of the reference's prepared-query reuse.
 
-        A root Phrase/SamePosition needs its idf at compile time, i.e.
-        ``phrase_scoring="sum_of_terms"``: the batch's Window fallback has no
-        driver merge to bind an ``exact_df`` idf in."""
+        Compiled like :meth:`search` (:meth:`_compile`): under ``exact_df``
+        a root Phrase/SamePosition's idf is bound at each execute's merge,
+        so every query scores exactly as its own ``search()``."""
         normalized = {name: flt.normalize(f) for name, f in queries.items()}
         for name, nf in normalized.items():
             if isinstance(nf, flt.ColumnExists):
                 raise ValueError(f"{name}: ColumnExists queries need search()")
-            if isinstance(nf, (flt.Phrase, flt.SamePosition)) and self.phrase_scoring == "exact_df":
-                raise ValueError(
-                    f"{name}: a root {type(nf).__name__} in a batch needs "
-                    "phrase_scoring='sum_of_terms' (exact_df binds its idf in search())"
-                )
-        plans, scan = compile_plans(
-            normalized, self.reader, self.k1, self.b, dtype, model=self.model
-        )
+        plans, scan = self._compile(normalized, dtype)
         return PreparedBatch(self, plans, scan, dtype)
 
     def search_many(
@@ -2191,8 +2185,9 @@ class Searcher:
         k: int = 10,
         dtype: str = "float64",
     ) -> DataFrame:
-        """Evaluate a batch of queries in ONE pass over the segments (root
-        phrases as :meth:`prepare` allows; placed like :meth:`search`).
+        """Evaluate a batch of queries in ONE pass over the segments, placed
+        like :meth:`search`; each query's rows and scores equal its own
+        ``search()``'s.
 
         Postings for the union of every query's terms are scanned once per
         segment; each plan is pruned independently (WAND/MaxScore) in-kernel;
@@ -2200,8 +2195,8 @@ class Searcher:
         (query, segment_id, doc_id, score) — ≤ k rows per query, ordered by
         (query, score desc, segment_id, doc_id). This is the batched query
         evaluation shape of the north rule: per-query driver overhead is
-        amortized, throughput scales with executors. A driver-merged batch
-        keeps its rows on the driver (see :meth:`PreparedBatch.execute`).
+        amortized, throughput scales with executors. The result keeps its
+        rows on the driver (see :meth:`PreparedBatch.execute`).
         """
         return self.prepare(queries, dtype).execute(k)
 
@@ -2222,52 +2217,35 @@ class Searcher:
         scan: ScanSpec,
         k: int | None,
         dtype: str,
-        b_plans=None,
-        to_driver: bool = False,
     ):
-        """Per-query top-k of a compiled batch: (query, segment_id, doc_id,
-        score), ordered by (query, score desc, segment_id, doc_id). A
-        DataFrame (a :class:`_LocalResult` when merged on the driver), or
-        with ``to_driver`` the same rows as a pandas frame.
+        """Per-query top-k of a compiled batch as pandas rows (query,
+        segment_id, doc_id, score), ordered by (query, score desc,
+        segment_id, doc_id): the one merge of every k-bounded call, on the
+        driver (:func:`_driver_topk`, after :meth:`_bind_phrase_idf`). At
+        most #segments × #plans × (k + 16) kernel rows reach it.
 
-        Placement: when the merge runs on the driver (≤ ``BATCH_MERGE_MAX``
-        candidate rows, or an unbound phrase idf to bind) and the batch plans
-        at most ``DRIVER_MAX_POSTINGS`` postings, the per-segment loop runs
-        in this process (:meth:`_segment_rows`, no Spark job); otherwise it
-        is the Spark job (:meth:`_segment_job`). Both run the same loop and
-        kernel, so the rows are identical.
+        Placement: a batch planning at most ``DRIVER_MAX_POSTINGS`` postings
+        runs the per-segment loop in this process (:meth:`_segment_rows`, no
+        Spark job); a larger one runs it as the Spark job
+        (:meth:`_segment_job`). Both run the same loop and kernel, so the
+        rows are identical.
 
         ``k=None`` is :meth:`matches`: every plan evaluates exact with no
         top-k, and the result is the kernel job's lazy DataFrame, unmerged
         (unbound phrase idfs are left to the caller)."""
         model = self.model
         dt = _dtype(dtype)
-        spark = self.reader.spark
         if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
             empty = _NO_SEGMENT_ROWS.drop(columns="seg_matches")
-            return empty if to_driver else _LocalResult(spark, empty, BATCH_OUT_SCHEMA)
+            return empty if k is not None else _LocalResult(self.reader.spark, empty, BATCH_OUT_SCHEMA)
 
-        unbound = any(_unbound(p) for p in plans.values())
-        # driver-side merge — the reference's own top-k heap loop
-        # (index-search.cpp:676-748): candidate rows are tiny (#segments ×
-        # #queries × k); the windowed path is the scale fallback for huge
-        # batch×segment products.
-        driver_merge = k is not None and (
-            unbound
-            or len(self.reader.segment_docs_counts()) * len(plans) * k <= self.BATCH_MERGE_MAX
-        )
-        in_driver = driver_merge and scan.planned_postings <= self.DRIVER_MAX_POSTINGS
+        in_driver = k is not None and scan.planned_postings <= self.DRIVER_MAX_POSTINGS
         mixed, avgdl, avg_map = self._norms_ctx(scan)
-        # large batches ship the plan list as a BROADCAST (PreparedBatch
-        # caches one across executes): a 1000-plan dict pickled into every
-        # task binary costs seconds of serialize/deserialize per stage. The
-        # driver placement and a call without one (search: a single plan)
-        # capture the plans in the closure instead — nothing is left to
-        # release after the job.
-        items = list(plans.items()) if b_plans is None or in_driver else None
+        # the plans ride in the kernel's closure: PySpark itself broadcasts a
+        # pickled command larger than PythonUtils.getBroadcastThreshold
+        items = list(plans.items())
 
         def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            plan_items = items if items is not None else b_plans.value
             if len(norm_pdf) == 0:
                 return _NO_SEGMENT_ROWS  # postings may be empty: All plans use norms only
             sid = int(norm_pdf["segment_id"].iloc[0])
@@ -2275,7 +2253,7 @@ class Searcher:
             dels = _deleted_of(norm_pdf)
             sv = _SegmentViews(post_pdf)
             names, sizes, matches, id_parts, score_parts = [], [], [], [], []
-            for name, plan in plan_items:
+            for name, plan in items:
                 if k is None:
                     nctx = (dl_map, avg_map) if mixed else None
                     ids, scores = _eval_plan(plan, sv, dl, avgdl, model, dt, nctx)
@@ -2314,25 +2292,9 @@ class Searcher:
             local = self._segment_job(kernel, scan)
             if k is None:
                 return local
-            if not driver_merge:
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("query").orderBy(
-                    F.desc("score"), F.asc("segment_id"), F.asc("doc_id")
-                )
-                out = (
-                    local.drop("seg_matches")
-                    .withColumn("rn", F.row_number().over(w))
-                    .where(F.col("rn") <= k)
-                    .drop("rn")
-                    .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
-                )
-                return out.toPandas() if to_driver else out
             pdf = local.toPandas()
-        if unbound:
-            self._bind_phrase_idf(pdf, plans, dtype)
-        topk = _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
-        return topk if to_driver else _LocalResult(spark, topk, BATCH_OUT_SCHEMA)
+        self._bind_phrase_idf(pdf, plans, dtype)
+        return _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
 
     def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
         """Bind each unbound phrase plan's idf into its kernel rows in place:
@@ -2492,10 +2454,12 @@ class Searcher:
     ):
         """Shared :meth:`highlight` / :meth:`payloads` scaffolding: extract
         the query's term set from the normalized filter (Term/Terms/And/Or),
-        run the normal pruned top-k search, broadcast the ≤k target docs and
-        their (doc_key, score), and return the term+segment-pruned sidecar
-        scan. Returns None when the search matches nothing; raises if the
-        index lacks the sidecar table."""
+        run the normal pruned top-k search, and return the ≤k target docs
+        (``segment_id → sorted doc ids``), their ``(segment_id, doc_id) →
+        (doc_key, score)`` and the term+segment-pruned sidecar scan. The two
+        dicts ride in the caller's kernel closure. Returns None when the
+        search matches nothing; raises if the index lacks the sidecar
+        table."""
         if table not in self.reader.meta.get("tables", {}):
             raise ValueError(
                 f"index has no {table} sidecar: build with "
@@ -2528,13 +2492,12 @@ class Searcher:
             targets.setdefault(sid, []).append(did)
             keys[(sid, did)] = (r["doc_key"], float(r["score"]))
         tgt = {s: np.asarray(sorted(d), dtype=np.int64) for s, d in targets.items()}
-        sc = self.reader.spark.sparkContext
         scan = (
             self.reader._table(table)
             .where(F.col("term").isin(terms) & F.col("segment_id").isin(list(tgt)))
             .select(*cols)
         )
-        return sc.broadcast(tgt), sc.broadcast(keys), scan
+        return tgt, keys, scan
 
     def highlight(self, f: flt.Filter, k: int = 10, dtype: str = "float64") -> DataFrame:
         """First-occurrence token offsets of the query's terms in the top-k
@@ -2551,7 +2514,7 @@ class Searcher:
 
         Scale shape: top-k is the normal pruned search; the offsets decode is
         a mapInPandas over the term+segment-pruned sidecar scan with the ≤k
-        target docs broadcast — per-occurrence work only for the touched
+        target docs in its closure — per-occurrence work only for the touched
         (term, segment) rows, nothing unbounded at the driver.
         """
         out_schema = (
@@ -2565,7 +2528,7 @@ class Searcher:
         )
         if prep is None:
             return self.reader.spark.createDataFrame([], out_schema)
-        b_targets, b_keys, offs_scan = prep
+        targets, keys, offs_scan = prep
 
         def kernel(batches):
             for pdf in batches:
@@ -2573,7 +2536,7 @@ class Searcher:
                     "doc_key", "segment_id", "doc_id", "score", "term", "start", "end"
                 )}
                 for row in pdf.itertuples(index=False):
-                    tgt = b_targets.value.get(int(row.segment_id))
+                    tgt = targets.get(int(row.segment_id))
                     if tgt is None:
                         continue
                     docs = np.cumsum(vbyte_decode(row.doc_ids_enc).astype(np.int64))
@@ -2586,7 +2549,7 @@ class Searcher:
                     np.cumsum(freqs[:-1], out=occ_start[1:])
                     first = offs[occ_start[sel]]
                     for j, d in zip(first, docs[sel]):
-                        dk, sc = b_keys.value[(int(row.segment_id), int(d))]
+                        dk, sc = keys[(int(row.segment_id), int(d))]
                         cols["doc_key"].append(dk)
                         cols["segment_id"].append(int(row.segment_id))
                         cols["doc_id"].append(int(d))
@@ -2616,7 +2579,7 @@ class Searcher:
 
         Scale shape mirrors :meth:`highlight`: top-k is the normal pruned
         search; the payload decode is a mapInPandas over the term+segment-
-        pruned sidecar scan with the ≤k target docs broadcast."""
+        pruned sidecar scan with the ≤k target docs in its closure."""
         out_schema = (
             "doc_key string, segment_id int, doc_id int, score double, "
             "term string, pos long, payload long"
@@ -2628,13 +2591,13 @@ class Searcher:
         )
         if prep is None:
             return self.reader.spark.createDataFrame([], out_schema)
-        b_targets, b_keys, pay_scan = prep
+        targets, keys, pay_scan = prep
 
         def kernel(batches):
             for pdf in batches:
                 frames = []
                 for row in pdf.itertuples(index=False):  # one row per (term, segment)
-                    tgt = b_targets.value.get(int(row.segment_id))
+                    tgt = targets.get(int(row.segment_id))
                     if tgt is None:
                         continue
                     docs = np.cumsum(vbyte_decode(row.doc_ids_enc).astype(np.int64))
@@ -2657,9 +2620,8 @@ class Searcher:
                         + occ_start[sel][rep]
                     )
                     d_ids = docs[sel][rep]
-                    keymap = b_keys.value
                     dks, scs = zip(
-                        *(keymap[(int(row.segment_id), int(d))] for d in docs[sel])
+                        *(keys[(int(row.segment_id), int(d))] for d in docs[sel])
                     )
                     frames.append(
                         pd.DataFrame(
@@ -2693,14 +2655,13 @@ class Searcher:
         )
 
 class PreparedBatch:
-    """A compiled query batch (``filter::prepared`` analogue): stats baked,
-    multiterm leaves expanded and the plan list broadcast once. Each
-    ``execute`` re-reads the batch's postings and norms from the index
-    parquet — in the driver when the batch plans at most
-    ``Searcher.DRIVER_MAX_POSTINGS`` postings and its merge runs on the
-    driver, else in one Spark job (:meth:`Searcher._execute_batch`).
-    Nothing is persisted, so no other Searcher or batch can share or drop
-    this one's state."""
+    """A compiled query batch (``filter::prepared`` analogue): stats baked
+    and multiterm leaves expanded once. Each ``execute`` re-reads the
+    batch's postings and norms from the index parquet — in the driver when
+    the batch plans at most ``Searcher.DRIVER_MAX_POSTINGS`` postings, else
+    in one Spark job — and merges on the driver
+    (:meth:`Searcher._execute_batch`). Nothing is persisted or broadcast, so
+    no other Searcher or batch can share or drop this one's state."""
 
     def __init__(
         self,
@@ -2713,24 +2674,16 @@ class PreparedBatch:
         self.plans = plans
         self.scan = scan
         self.dtype = dtype
-        self._b_plans = None  # cached plan broadcast (reused across executes)
 
     def execute(self, k: int = 10) -> DataFrame:
-        """Per-query top-k of the batch, (query, segment_id, doc_id, score).
-        When the merge runs on the driver the result holds its rows there
-        (:class:`_LocalResult`: ``collect`` makes no JVM call); the Window
-        fallback's result is a lazy Spark plan. The compiled plan list is
-        broadcast on the first call, not re-pickled into every execute's
-        tasks."""
+        """Per-query top-k of the batch, (query, segment_id, doc_id, score),
+        each query's rows and scores those of its own ``search()``. The
+        result holds its merged rows on the driver (:class:`_LocalResult`:
+        ``collect`` makes no JVM call)."""
         s = self._searcher
-        if self._b_plans is None:
-            self._b_plans = s.reader.spark.sparkContext.broadcast(
-                list(self.plans.items())
-            )
-        return s._execute_batch(self.plans, self.scan, k, self.dtype, b_plans=self._b_plans)
+        rows = s._execute_batch(self.plans, self.scan, k, self.dtype)
+        return _LocalResult(s.reader.spark, rows, BATCH_OUT_SCHEMA)
 
     def unpersist(self) -> None:
-        """Release the plan broadcast (idempotent)."""
-        if self._b_plans is not None:
-            self._b_plans.unpersist()
-            self._b_plans = None
+        """No-op, kept for callers: a batch holds nothing in Spark (each
+        execute pickles its plans into the kernel's closure)."""

@@ -236,10 +236,29 @@ def test_search_many_matches_individual(built):
         assert by_q.get(name, []) == solo, name
 
 
-def test_search_many_rejects_phrase(built):
+def test_search_many_exact_df_phrase_agrees_with_search(built):
+    # an exact_df root phrase in a batch gets its idf bound at the batch's
+    # merge: every query's rows and scores are its own search()'s, under
+    # both kernel placements and both dtypes
     reader, _, _ = built
-    with pytest.raises(ValueError):
-        Searcher(reader).search_many({"p": flt.Phrase(("quick", "brown"))})
+    batch = {
+        "p": flt.Phrase(("quick", "brown")),
+        "sp": flt.SamePosition(("quick", "quick")),
+        "t": flt.Term("spark"),
+        "o": flt.Or((flt.Term("fox"), flt.Term("crawl"))),
+    }
+    for max_postings in (1 << 62, -1):
+        s = Searcher(reader)
+        s.DRIVER_MAX_POSTINGS = max_postings
+        for dtype in ("float64", "float32"):
+            got = [tuple(r) for r in s.search_many(batch, k=10, dtype=dtype).collect()]
+            want = [
+                (name, *r)
+                for name in sorted(batch)
+                for r in s.search(batch[name], k=10, dtype=dtype, with_keys=False).collect()
+            ]
+            assert got == want, (max_postings, dtype)
+            assert {q for q, *_ in got} == set(batch)
 
 
 def test_column_exists_and_same_position(built):

@@ -26,8 +26,6 @@ fetched from the docs table with pyarrow (``IndexReader.fetch_docs``).
 * Placement choice: a batch planning more postings than
   ``DRIVER_MAX_POSTINGS`` runs one Spark job, a batch at the constant runs
   none and returns the same rows.
-* The driver merge and the Window fallback on either side of
-  ``BATCH_MERGE_MAX`` return identical keyed rows.
 """
 
 from __future__ import annotations
@@ -191,7 +189,7 @@ def test_local_result_answers_like_spark(walked, placement, state, variant, fnam
 
 
 # --------------------------------------------------------------------------
-# job floor, kernel placement and the BATCH_MERGE_MAX gate
+# job floor and kernel placement
 # --------------------------------------------------------------------------
 
 
@@ -315,26 +313,6 @@ def test_batch_placement_follows_planned_postings(spark, small_index):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert {r["query"] for r in got} == set(batch)
     prepared.unpersist()
-
-
-def test_keyed_search_identical_across_merge_gate(small_index):
-    k = 7
-    s_driver = Searcher(small_index)
-    s_window = Searcher(small_index)
-    s_window.BATCH_MERGE_MAX = 0  # force the distributed Window fallback
-    assert 3 * k <= s_driver.BATCH_MERGE_MAX  # default: driver merge
-    for f in (
-        flt.Term("spark"),
-        flt.Or((flt.Term("scan"), flt.Term("merge"))),
-        flt.And((flt.Term("sort"), flt.Term("query"))),
-        flt.Prefix("s"),
-    ):
-        for with_keys in (True, False):
-            a = [tuple(r) for r in s_driver.search(f, k=k, with_keys=with_keys).collect()]
-            b = [tuple(r) for r in s_window.search(f, k=k, with_keys=with_keys).collect()]
-            assert a == b and 0 < len(a) <= k, f
-    s_driver.unpersist()
-    s_window.unpersist()
 
 
 if __name__ == "__main__" and sys.argv[1:2] == ["--record"]:

@@ -13,7 +13,8 @@ Every phrase form runs through the one compiled-plan kernel, so a root
 phrase, the same phrase nested under And, and a prepared batch of it agree
 for every scorer and dtype; ``matches()`` is that kernel without a top-k and
 collects nothing to the driver. The default ``exact_df`` mode binds the idf
-of the exact phrase df on the driver, checked against a numpy oracle.
+of the exact phrase df on the driver, in ``search()`` and in a prepared batch
+alike, checked against a numpy oracle.
 """
 
 import math
@@ -209,14 +210,18 @@ def open_idx(spark, tmp_path_factory):
     return IndexReader(spark, path)
 
 
-def _ranked(reader, rows):
-    """[(doc_key, score)] in (score desc, segment_id, doc_id) order."""
+def _keyed(reader, rows):
+    """[(doc_key, score)] of unkeyed result rows, in their order."""
     keys = {
         (r["segment_id"], r["doc_id"]): r["doc_key"]
         for r in reader.docs().select("segment_id", "doc_id", "doc_key").collect()
     }
-    rows = sorted(rows, key=lambda r: (-r["score"], r["segment_id"], r["doc_id"]))
     return [(keys[(r["segment_id"], r["doc_id"])], r["score"]) for r in rows]
+
+
+def _ranked(reader, rows):
+    """[(doc_key, score)] in (score desc, segment_id, doc_id) order."""
+    return _keyed(reader, sorted(rows, key=lambda r: (-r["score"], r["segment_id"], r["doc_id"])))
 
 
 @pytest.mark.parametrize("dtype", DTYPES)
@@ -253,13 +258,21 @@ def _phrase_oracle(tf_by_doc, dl_by_doc, scorer, dtype):
 
 
 def _assert_scores(got_rows, want, dtype):
-    got = {r["doc_key"]: r["score"] for r in got_rows}
+    """``got_rows``: [(doc_key, score)] in result order."""
+    got = dict(got_rows)
     assert set(got) == set(want)
     rel = 1e-12 if dtype == "float64" else 1e-6
     for d, v in want.items():
         assert math.isclose(got[d], v, rel_tol=rel, abs_tol=0.0), (d, got[d], v)
-    scores = [r["score"] for r in got_rows]
+    scores = [v for _, v in got_rows]
     assert scores == sorted(scores, reverse=True)
+
+
+def _search_and_batch(s, reader, f, dtype):
+    """``f``'s top 10 from ``search()`` and from a prepared batch of it."""
+    root = s.search(f, k=10, dtype=dtype).collect()
+    batch = s.prepare({"p": f}, dtype).execute(10).collect()
+    return [(r["doc_key"], r["score"]) for r in root], _keyed(reader, batch)
 
 
 @pytest.mark.parametrize("dtype", DTYPES)
@@ -270,8 +283,8 @@ def test_root_phrase_exact_df_matches_numpy_oracle(open_idx, scorer, dtype):
         {d: _phrase_tf(t, ("open", "source")) for d, t in toks.items()},
         {d: len(t) for d, t in toks.items()}, scorer, dtype,
     )
-    got = Searcher(open_idx, scorer=scorer).search(OPEN, k=10, dtype=dtype).collect()
-    _assert_scores(got, want, dtype)
+    for got in _search_and_batch(Searcher(open_idx, scorer=scorer), open_idx, OPEN, dtype):
+        _assert_scores(got, want, dtype)
 
 
 # fields a and b hold parallel arrays: SamePosition((a, x), (b, p)) counts
@@ -305,10 +318,9 @@ def test_cross_field_same_position_exact_df_matches_numpy_oracle(xfield_idx, sco
     tf = {k: sum(x == "x" and y == "p" for x, y in zip(a[k], b[k])) for k in a}
     assert sum(1 for v in tf.values() if v) == 4
     want = _phrase_oracle(tf, {d: len(t) for d, t in a.items()}, scorer, dtype)
-    got = Searcher(xfield_idx, scorer=scorer).search(
-        flt.SamePosition((("a", "x"), ("b", "p"))), k=10, dtype=dtype
-    ).collect()
-    _assert_scores(got, want, dtype)
+    f = flt.SamePosition((("a", "x"), ("b", "p")))
+    for got in _search_and_batch(Searcher(xfield_idx, scorer=scorer), xfield_idx, f, dtype):
+        _assert_scores(got, want, dtype)
 
 
 # --------------------------------------------------------------------------

@@ -74,81 +74,6 @@ def test_edge_spec_bad_bounds():
         text_edge_tokenize("en", (), 3, 2)
 
 
-# ---------------------------------------------------------------------------
-# batch-serving 2M merge gate (r4 verdict item 7): both sides of the
-# driver-merge / Window-fallback boundary must return identical results, and
-# the kernel's per-(segment, query) pre-top-k bound must hold (it is what
-# makes the driver merge's candidate volume n_segments × n_plans × k).
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def batch_index(spark, tmp_path_factory):
-    from iresearch_spark import IndexBuilder, IndexReader
-
-    words = ["spark", "index", "scan", "merge", "rank", "query", "fast", "dup"]
-    rows = [
-        (f"{i:04d}", " ".join(words[(i + j) % len(words)] for j in range(1 + i % 7)))
-        for i in range(120)
-    ]
-    path = str(tmp_path_factory.mktemp("batchidx"))
-    df = spark.createDataFrame(rows, "doc_key string, text string")
-    IndexBuilder(spark, path, analyzer="simple", num_segments=3).build(
-        df, key_col="doc_key", text_col="text"
-    )
-    return IndexReader(spark, path)
-
-
-def test_batch_merge_gate_both_sides_identical(spark, batch_index):
-    from iresearch_spark import Searcher, filters as flt
-
-    batch = {
-        "qa": flt.Term("spark"),
-        "qb": flt.Or((flt.Term("scan"), flt.Term("merge"))),
-        "qc": flt.And((flt.Term("rank"), flt.Term("query"))),
-    }
-    k = 7
-
-    def rows_of(searcher):
-        return sorted(
-            (r["query"], r["segment_id"], r["doc_id"], round(r["score"], 9))
-            for r in searcher.search_many(batch, k=k).collect()
-        )
-
-    s_driver = Searcher(batch_index)
-    assert 3 * len(batch) * k <= s_driver.BATCH_MERGE_MAX  # default: driver merge
-    got_driver = rows_of(s_driver)
-
-    s_window = Searcher(batch_index)
-    s_window.BATCH_MERGE_MAX = 0  # force the distributed Window fallback
-    got_window = rows_of(s_window)
-
-    assert got_driver == got_window
-    assert len({q for q, *_ in got_driver}) == len(batch)
-    # ranking within each query is the same under both paths
-    for q in batch:
-        a = [t for t in got_driver if t[0] == q]
-        assert 0 < len(a) <= 3 * k
-
-
-def test_batch_kernel_per_segment_topk_bound(spark, batch_index):
-    # the invariant the driver merge's size arithmetic rests on: each segment
-    # kernel emits at most k rows per (segment_id, query)
-    from iresearch_spark import Searcher, filters as flt
-
-    k = 3
-    s = Searcher(batch_index)
-    res = s.search_many({"qa": flt.Term("spark"), "qb": flt.Prefix("s")}, k=k)
-    counts = (
-        res.groupBy("query", "segment_id").count().collect()
-    )
-    # search_many returns the global top-k per query; per (segment, query) the
-    # contribution can never exceed k
-    assert all(r["count"] <= k for r in counts)
-    for q in ("qa", "qb"):
-        assert sum(r["count"] for r in counts if r["query"] == q) <= k
-
-
 # --------------------------------------------------------------------------
 # Gapped live segment ids (round-5 fix): a build can create FEWER segments
 # than requested (footer fast path with few row groups; legacy path with
@@ -435,46 +360,6 @@ def test_widen_noop_on_well_partitioned_input(spark):
 
 
 # --------------------------------------------------------------------------
-# plan-level contract: the postings scan's term predicate must reach the
-# parquet reader as PushedFilters (row-group pruning on the term-sorted
-# layout) — the property every 100-TB claim in this repo rests on
-# --------------------------------------------------------------------------
-
-
-def test_postings_scan_term_pushdown(spark, tmp_path_factory):
-    from iresearch_spark import IndexBuilder, IndexReader
-
-    path = str(tmp_path_factory.mktemp("pushdown_idx"))
-    df = spark.createDataFrame(
-        [(f"d{i}", f"alpha beta w{i % 7} scan merge") for i in range(200)],
-        "doc_key string, text string",
-    )
-    IndexBuilder(spark, path, analyzer="simple", num_segments=2).build(
-        df, key_col="doc_key", text_col="text"
-    )
-    reader = IndexReader(spark, path)
-
-    def pushed_filters(sdf):
-        plan = sdf._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters:" in plan, plan
-        return plan.split("PushedFilters:")[1].split("]")[0], plan
-
-    # small term set: range + In, ALL pushed to parquet
-    pf, plan = pushed_filters(reader.postings_for_terms(["merge", "scan"]))
-    assert "GreaterThanOrEqual(term," in pf and "LessThanOrEqual(term," in pf, plan
-    assert "In(term" in pf or "EqualTo(term" in pf, plan
-
-    # very large term set: the In list would not push — the broadcast
-    # semi-join path must still push the min/max RANGE clause so row-group
-    # pruning survives at any term-set size
-    big = sorted(f"t{i:05d}" for i in range(2100))
-    sdf = reader.postings_for_terms(big)
-    pf2, plan2 = pushed_filters(sdf)
-    assert "GreaterThanOrEqual(term," in pf2 and "LessThanOrEqual(term," in pf2, plan2
-    assert "In(term" not in pf2  # the giant set rides the semi-join instead
-
-
-# --------------------------------------------------------------------------
 # simhash64 narrow-map rewrite (round-5 final): zero-shuffle HOF formulation
 # must equal a scalar Python oracle and keep the explode-path's row semantics
 # --------------------------------------------------------------------------
@@ -553,6 +438,23 @@ def test_minhash_signatures_plan_has_no_shuffle(spark):
 # levenshtein_filter.cpp:241-265): candidates must start with the prefix,
 # edits apply to the remainder, similarity length = |prefix| + |term|
 # --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def batch_index(spark, tmp_path_factory):
+    from iresearch_spark import IndexBuilder, IndexReader
+
+    words = ["spark", "index", "scan", "merge", "rank", "query", "fast", "dup"]
+    rows = [
+        (f"{i:04d}", " ".join(words[(i + j) % len(words)] for j in range(1 + i % 7)))
+        for i in range(120)
+    ]
+    path = str(tmp_path_factory.mktemp("batchidx"))
+    df = spark.createDataFrame(rows, "doc_key string, text string")
+    IndexBuilder(spark, path, analyzer="simple", num_segments=3).build(
+        df, key_col="doc_key", text_col="text"
+    )
+    return IndexReader(spark, path)
 
 
 def _fuzzy_prefix_brute(vocab, pfx, term, d, tr=False):

@@ -8,8 +8,12 @@
   wildcard's selects a superset of them.
 * A batch repeating one overflowing multiterm node scans its tail spec once.
 * Fuzzy over an empty-string vocabulary term matches and scores finite.
+* The merge's input: each segment kernel emits at most k rows per
+  (segment, query) — k + 16 for an ``exact_df`` root phrase — under both
+  placements.
 * Two Searchers and two prepared batches over one index share nothing in
-  Spark: releasing one leaves the other's ``execute`` at one job.
+  Spark: releasing one leaves the other's ``execute`` at one job, and no
+  search-path call creates a Spark broadcast.
 """
 
 from __future__ import annotations
@@ -20,9 +24,11 @@ import uuid
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark import SparkContext
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
 from iresearch_spark.index.consolidate import consolidate
+from iresearch_spark.search import executor
 from iresearch_spark.search.executor import (
     compile_plans,
     pack_segments,
@@ -195,6 +201,36 @@ def test_fuzzy_empty_vocabulary_term_scores_finite(spark, tmp_path_factory):
 
 
 # --------------------------------------------------------------------------
+# the merge's input bound
+# --------------------------------------------------------------------------
+
+
+def test_batch_kernel_per_segment_topk_bound(seg_index, monkeypatch):
+    # the invariant the driver merge's size rests on: each segment kernel
+    # emits at most k rows per (segment_id, query), k + 16 for an exact_df
+    # root phrase (its idf is bound at the merge)
+    merged_inputs = []
+    driver_topk = executor._driver_topk
+
+    def spy(pdf, k, by=None):
+        merged_inputs.append(pdf)
+        return driver_topk(pdf, k, by)
+
+    monkeypatch.setattr(executor, "_driver_topk", spy)
+    k = 3
+    batch = {"qa": flt.Term("spark"), "qb": flt.Prefix("s"), "qp": flt.Phrase(("spark", "scan"))}
+    for max_postings in (1 << 62, -1):
+        s = Searcher(seg_index)
+        s.DRIVER_MAX_POSTINGS = max_postings
+        rows = s.search_many(batch, k=k).collect()
+        per_segment = merged_inputs.pop().groupby(["query", "segment_id"]).size()
+        assert per_segment["qa"].max() == per_segment["qb"].max() == k
+        assert 0 < per_segment["qp"].max() <= k + 16
+        for q in batch:
+            assert 0 < sum(r["query"] == q for r in rows) <= k
+
+
+# --------------------------------------------------------------------------
 # no Spark state shared between Searchers or batches
 # --------------------------------------------------------------------------
 
@@ -219,3 +255,41 @@ def test_released_searcher_does_not_slow_another_batch(spark, seg_index):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     pb.unpersist()
     b.unpersist()
+
+
+def test_search_paths_create_no_broadcast(spark, tmp_path_factory, monkeypatch):
+    offs = str(tmp_path_factory.mktemp("segjob_offs"))
+    IndexBuilder(spark, offs, num_segments=2, with_offsets=True).build(
+        _docs(spark, "o", 40, 5), key_col="doc_key", text_col="text"
+    )
+    pays = str(tmp_path_factory.mktemp("segjob_pays"))
+    df = spark.createDataFrame(
+        [("p1", "scan|1 hash|2 scan|3"), ("p2", "hash|4 scan|5"), ("p3", "join|6")],
+        "doc_key string, text string",
+    )
+    IndexBuilder(spark, pays, analyzer="payload:|", num_segments=2, with_payloads=True).build(
+        df, key_col="doc_key", text_col="text"
+    )
+    calls = []
+    broadcast = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(type(value).__name__)
+        return broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    batch = {"t": flt.Term("spark"), "o": flt.Or((flt.Term("scan"), flt.Term("hash")))}
+    for max_postings in (1 << 62, -1):
+        s = Searcher(IndexReader(spark, offs))
+        s.DRIVER_MAX_POSTINGS = max_postings
+        assert s.search(flt.Term("spark"), k=10).collect()
+        for _ in range(3):
+            assert s.search_many(batch, k=10).collect()
+        prepared = s.prepare(batch)
+        assert prepared.execute(k=10).collect()
+        assert s.matches(flt.Term("scan")).collect()
+        assert s.highlight(flt.Term("scan"), k=5).collect()
+        p = Searcher(IndexReader(spark, pays))
+        p.DRIVER_MAX_POSTINGS = max_postings
+        assert p.payloads(flt.Term("scan"), k=5).collect()
+    assert calls == []

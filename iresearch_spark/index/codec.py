@@ -423,6 +423,59 @@ def decode_freqs(
     return vbyte_decode(sel).astype(np.int64)
 
 
+def _flat_bytes(column) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated bytes, per-row byte bounds of len rows+1) of a binary
+    column: a pyarrow binary array is read zero-copy from its buffers, any
+    other sequence of byte strings (nulls as empty) is joined."""
+    import pyarrow as pa
+
+    if isinstance(column, pa.ChunkedArray):
+        column = column.combine_chunks()
+    if isinstance(column, pa.Array):
+        n = len(column)
+        _, offs, data = column.buffers()
+        if data is None:
+            return np.empty(0, np.uint8), np.zeros(n + 1, np.int64)
+        odt = np.int64 if pa.types.is_large_binary(column.type) else np.int32
+        bounds = np.frombuffer(offs, odt, n + 1, column.offset * np.dtype(odt).itemsize)
+        bounds = bounds.astype(np.int64)
+        buf = np.frombuffer(data, np.uint8)[bounds[0] : bounds[-1]]
+        return buf, bounds - bounds[0]
+    rows = [b or b"" for b in column]
+    bounds = np.zeros(len(rows) + 1, np.int64)
+    np.cumsum(np.fromiter(map(len, rows), np.int64, len(rows)), out=bounds[1:])
+    return np.frombuffer(b"".join(rows), np.uint8), bounds
+
+
+def decode_postings(doc_ids_enc, freqs_enc) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY posting lists at once — the read-side twin of
+    :func:`encode_postings_batch`: every row's ``doc_ids_enc`` in one
+    :func:`vbyte_decode` call and every row's ``freqs_enc`` in another (a
+    column-at-a-time decode; the per-call cost no longer lands on each short
+    list). Each argument is a pyarrow binary array or a sequence of byte
+    strings, one row per posting list.
+
+    Returns ``(ids, tfs, offsets)``: the flat doc ids and freqs, and the
+    per-row value bounds (len rows+1), so row r is
+    ``ids[offsets[r]:offsets[r + 1]]``. Only a row's first delta is absolute
+    (block starts are relative to the previous block's last doc), so a
+    cumsum restarted at each row start gives the doc ids."""
+    dbuf, dbounds = _flat_bytes(doc_ids_enc)
+    fbuf, _ = _flat_bytes(freqs_enc)
+    # values per row = varint terminators (high bit clear) in its bytes
+    vpre = np.zeros(dbuf.size + 1, np.int64)
+    np.cumsum((dbuf & 0x80) == 0, out=vpre[1:])
+    offsets = vpre[dbounds]
+    deltas = vbyte_decode(dbuf).astype(np.int64)
+    tfs = vbyte_decode(fbuf).astype(np.int64)
+    ids = np.cumsum(deltas)
+    if ids.size:
+        starts = offsets[:-1]
+        carry = ids[np.minimum(starts, ids.size - 1)] - deltas[np.minimum(starts, ids.size - 1)]
+        ids -= np.repeat(carry, np.diff(offsets))
+    return ids, tfs, offsets
+
+
 def encode_value_stream_arrow(
     values: np.ndarray, freqs: np.ndarray, term_bounds: np.ndarray
 ) -> "object":
@@ -452,9 +505,11 @@ def encode_value_stream_arrow(
     return _binary_arrow(buf, byte_bounds, T, "payload")
 
 
-def decode_positions(pos_enc: bytes, freqs: np.ndarray) -> np.ndarray:
-    """Decode the flattened per-doc delta positions back to absolute positions."""
-    if not pos_enc:
+def decode_positions(pos_enc: bytes | np.ndarray, freqs: np.ndarray) -> np.ndarray:
+    """Decode the flattened per-doc delta positions back to absolute positions.
+    The stream may span several posting lists (their bytes concatenated,
+    ``freqs`` likewise): each doc's first position is absolute."""
+    if len(pos_enc) == 0:
         return np.empty(0, dtype=np.int64)
     pdelta = vbyte_decode(pos_enc).astype(np.int64)
     freqs = np.asarray(freqs, dtype=np.int64)

@@ -20,6 +20,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
@@ -47,17 +48,21 @@ def table_datasets(paths) -> list[pads.Dataset]:
     return out
 
 
-def read_frame(paths, columns: list[str], pred=None) -> pd.DataFrame:
+def read_table(paths, columns: list[str], pred=None) -> pa.Table:
     """The ``columns`` of one index table's rows matching the pyarrow
     expression ``pred``, read with pyarrow — no Spark. Files and row groups
     whose statistics exclude ``pred`` are skipped. Columns a part lacks (an
-    older layout) are left out of that part's rows."""
-    frames = [
+    older layout) are null in that part's rows."""
+    tables = [
         d.to_table(columns=[c for c in columns if c in d.schema.names], filter=pred)
-        .to_pandas()
         for d in table_datasets(paths)
     ]
-    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    return tables[0] if len(tables) == 1 else pa.concat_tables(tables, promote_options="default")
+
+
+def read_frame(paths, columns: list[str], pred=None) -> pd.DataFrame:
+    """:func:`read_table` as a pandas frame."""
+    return read_table(paths, columns, pred).to_pandas()
 
 
 class IndexReader:

@@ -16,17 +16,20 @@ in the merge:
   unbound: the phrase df is only known after the kernel runs.
 * ``execute`` — one per-segment loop (:func:`_segment_loop`, the
   per-segment reader of segment_reader.hpp:35-110): one pyarrow read of its
-  segments' postings, norms and deletes from the index parquet, then one
-  kernel call per segment. :meth:`Searcher._execute_batch` places it. A
-  k-bounded batch planning at most ``Searcher.DRIVER_MAX_POSTINGS``
-  postings runs the loop serially in the driver over every live segment,
-  with no Spark job (the reference's in-process loop,
-  index-search.cpp:676-748). A larger batch, and ``matches``, run it as
-  one shuffle-free Spark job (:meth:`Searcher._segment_job`):
-  ``range(P).mapInArrow`` with the live segments packed into P tasks, each
-  looping over its own segments. Each segment's kernel decodes only the
-  needed posting lists (VByte blocks), runs the boolean algebra vectorized
-  in numpy (conjunction = sorted-array intersection ≙ conjunction.hpp;
+  segments' postings from the index parquet, then one kernel call per
+  segment. Norms and deletes are query-independent: each process reads and
+  decodes a segment's once per generation (:data:`_SEGMENT_STATE`).
+  :meth:`Searcher._execute_batch` places the loop. A k-bounded batch
+  planning at most ``Searcher.DRIVER_MAX_POSTINGS`` postings runs the loop
+  serially in the driver over every live segment, with no Spark job (the
+  reference's in-process loop, index-search.cpp:676-748). A larger batch,
+  and ``matches``, run it as one shuffle-free Spark job
+  (:meth:`Searcher._segment_job`): ``range(P).mapInArrow`` with the live
+  segments packed into P tasks, each looping over its own segments. Each
+  segment's kernel decodes every posting list read for it in one
+  vectorized pass (:class:`_SegmentViews`: one VByte decode of all doc
+  ids, one of all freqs), runs the boolean algebra vectorized in numpy
+  (conjunction = sorted-array intersection ≙ conjunction.hpp;
   disjunction = unique+bincount ≙ disjunction.hpp; exclusion ≙
   exclusion.hpp; phrases = packed-key position intersection), scores
   through the searcher's :class:`ScoreModel`, and emits its local top-k
@@ -44,17 +47,17 @@ in the merge:
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
 * single term — **block-max WAND**: per-128-doc-block score upper bounds from
-  ``block_max_freq`` + the segment's min doc length; blocks are processed in
-  descending upper bound and decoding stops once the running k-th score beats
-  the next block's bound.
+  each block's max freq + the segment's min doc length; blocks are processed
+  in descending upper bound and scoring stops once the running k-th score
+  beats the next block's bound.
 * disjunction / multiterm — **MaxScore**: per-term upper bounds, terms
   processed in descending bound; once the suffix bound-sum drops below the
-  running threshold, later (cheap) terms are decoded only for the blocks that
+  running threshold, later (cheap) terms are scored only for the blocks that
   contain surviving candidates (skip-list seek ≙ ``np.searchsorted`` into
-  ``block_last_doc``), and candidates that can no longer reach the k-th score
-  are dropped.
-* conjunction — cost-ordered: the rarest term is decoded fully, every other
-  term decodes only the blocks containing the current intersection.
+  each block's last doc), and candidates that can no longer reach the k-th
+  score are dropped.
+* conjunction — cost-ordered: the rarest term is taken whole, every other
+  term only at the blocks containing the current intersection.
 
 All bounds are conservative (most favorable norm, strict comparisons), so
 results stay rank-identical to the unpruned evaluation.
@@ -87,6 +90,8 @@ import dataclasses as _dataclasses
 import functools as _functools
 import heapq as _heapq
 import math
+import os
+import threading
 from dataclasses import dataclass, field as _dc_field
 
 import numpy as np
@@ -100,12 +105,13 @@ from pyspark.sql import types as _T
 
 from ..index.builder import FIELD_SEP
 from ..index.codec import (
-    decode_doc_ids,
-    decode_freqs,
+    BLOCK_SIZE,
+    _flat_bytes,
     decode_positions,
+    decode_postings,
     vbyte_decode,
 )
-from ..index.reader import IndexReader, read_frame
+from ..index.reader import IndexReader, read_frame, read_table
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
 from .lev_automaton import LevAutomaton
@@ -532,29 +538,40 @@ def scan_reads(scan: ScanSpec, multifield: bool) -> list[tuple[pc.Expression, bo
     return [(positional, True), (rows & ~positional, False)]
 
 
-def _vocab_expand(terms_a: np.ndarray, df_a: np.ndarray, spec: tuple, limit: int):
-    """Prefix/range/wildcard expansion over a field's sorted vocabulary →
-    (scored, overflow). Prefix and range are two binary searches; a wildcard
-    slices its literal-prefix block, then regex-matches only the slice. The
-    ``limit`` highest-df matches are scored, ties towards the smaller term
-    (the slice is term-ascending, so a STABLE argsort on -df gives that
-    order); ``overflow`` says more matched."""
+def _spec_slice(terms_a: np.ndarray, spec: tuple, key_prefix: str = "") -> np.ndarray:
+    """Indexes of the ascending-sorted ``terms_a`` entries that start with
+    ``key_prefix`` and whose rest satisfies ``spec`` (:func:`spec_match`).
+    Prefix and range are two binary searches (a shared prefix keeps the
+    order, so the bounds just carry it); a wildcard slices its literal-prefix
+    block, then regex-matches only the slice."""
     kind = spec[0]
     if kind == "range":
         _, rlo, rhi, il, ih = spec
-        lo = 0 if rlo is None else int(np.searchsorted(terms_a, rlo, side="left" if il else "right"))
-        hi = len(terms_a) if rhi is None else int(
-            np.searchsorted(terms_a, rhi, side="right" if ih else "left")
+        blo, bhi = _prefix_block(terms_a, key_prefix) if key_prefix else (0, len(terms_a))
+        lo = blo if rlo is None else int(
+            np.searchsorted(terms_a, key_prefix + rlo, side="left" if il else "right")
         )
-    else:
-        lo, hi = _prefix_block(terms_a, spec[1] if kind == "prefix" else _like_prefix(spec[1]))
-    seg_terms, seg_df = terms_a[lo:hi], df_a[lo:hi]
-    if kind == "wildcard":
-        rx = _like_regex(spec[1])
-        mask = np.fromiter(
-            (rx.match(t) is not None for t in seg_terms), bool, len(seg_terms)
+        hi = bhi if rhi is None else int(
+            np.searchsorted(terms_a, key_prefix + rhi, side="right" if ih else "left")
         )
-        seg_terms, seg_df = seg_terms[mask], seg_df[mask]
+        return np.arange(lo, max(lo, hi))
+    lit = spec[1] if kind == "prefix" else _like_prefix(spec[1])
+    lo, hi = _prefix_block(terms_a, key_prefix + lit)
+    if kind != "wildcard":
+        return np.arange(lo, hi)
+    rx, n = _like_regex(spec[1]), len(key_prefix)
+    hit = np.fromiter((rx.match(t[n:]) is not None for t in terms_a[lo:hi]), bool, hi - lo)
+    return lo + np.flatnonzero(hit)
+
+
+def _vocab_expand(terms_a: np.ndarray, df_a: np.ndarray, spec: tuple, limit: int):
+    """Prefix/range/wildcard expansion over a field's sorted vocabulary →
+    (scored, overflow): the matches are :func:`_spec_slice`'s. The ``limit``
+    highest-df matches are scored, ties towards the smaller term (the
+    matches are term-ascending, so a STABLE argsort on -df gives that
+    order); ``overflow`` says more matched."""
+    hit = _spec_slice(terms_a, spec)
+    seg_terms, seg_df = terms_a[hit], df_a[hit]
     if len(seg_terms) > limit:
         order = np.argsort(-seg_df, kind="stable")[:limit]
         return sorted((str(seg_terms[i]), int(seg_df[i])) for i in order), True
@@ -1014,58 +1031,63 @@ def compile_plan(
 
 
 class PostingsView:
-    """Lazy per-(term, segment) posting list: block-resolution decode.
+    """One (term, segment) posting list over its decoded doc ids and freqs.
 
-    The doc_iterator/skip-list analogue (formats_10.cpp:1667-1725): ``seek`` is
-    ``np.searchsorted`` over ``block_last_doc``; only the blocks a caller needs
-    are VByte-decoded.
+    The doc_iterator/skip-list analogue (formats_10.cpp:1667-1725): block j
+    holds values ``[128·j, min(128·j + 128, n))``; ``block_last`` (each
+    block's last doc) and ``block_maxf`` (its largest freq, the WAND block
+    bound) come from the decoded arrays. ``seek`` is ``np.searchsorted``
+    over ``block_last``, and :meth:`decode_blocks` gathers only the chosen
+    blocks' values. A kernel's views come from :class:`_SegmentViews`, which
+    decodes the whole segment's postings in one pass; ``PostingsView(row)``
+    decodes one encoded postings row on its own.
     """
 
     __slots__ = (
-        "docs_count", "max_freq", "block_last", "doc_off", "freq_off",
-        "block_maxf", "doc_enc", "freq_enc", "pos_enc", "_full", "_pos",
-        "_block_cache",
+        "docs_count", "max_freq", "block_last", "block_maxf", "_ids", "_tfs",
+        "_positions", "_full", "_pos",
     )
 
     def __init__(self, row):
-        self.docs_count = int(row.docs_count)
-        self.max_freq = int(row.max_freq)
-        self.block_last = np.asarray(row.block_last_doc, dtype=np.int64)
-        self.doc_off = np.asarray(row.block_doc_off, dtype=np.int64)
-        self.freq_off = np.asarray(row.block_freq_off, dtype=np.int64)
-        self.block_maxf = np.asarray(row.block_max_freq, dtype=np.int64)
-        self.doc_enc = row.doc_ids_enc
-        self.freq_enc = row.freqs_enc
-        # None from the split batch scan (non-positional rows) → b""
-        self.pos_enc = getattr(row, "pos_enc", b"") or b""
+        ids, tfs, _ = decode_postings([row.doc_ids_enc], [row.freqs_enc])
+        pos_enc = getattr(row, "pos_enc", None) or b""
+        self._bind(ids, tfs, lambda: decode_positions(pos_enc, tfs))
+
+    @classmethod
+    def decoded(cls, ids: np.ndarray, tfs: np.ndarray, positions) -> "PostingsView":
+        """A view over one list's already-decoded ``ids``/``tfs``;
+        ``positions()`` returns its flat position stream."""
+        view = cls.__new__(cls)
+        view._bind(ids, tfs, positions)
+        return view
+
+    def _bind(self, ids: np.ndarray, tfs: np.ndarray, positions) -> None:
+        n = ids.size
+        self.docs_count = n
+        self.max_freq = int(tfs.max()) if n else 0
+        starts = np.arange(0, n, BLOCK_SIZE)
+        self.block_last = ids[np.minimum(starts + BLOCK_SIZE, n) - 1]
+        self.block_maxf = np.maximum.reduceat(tfs, starts) if n else tfs[:0]
+        self._ids, self._tfs = ids, tfs
+        self._positions = positions
         self._full: tuple[np.ndarray, np.ndarray] | None = None
         self._pos: np.ndarray | None = None
-        self._block_cache: dict[bytes, tuple[np.ndarray, np.ndarray]] = {}
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
+        # _full records that a kernel took the whole list: later block
+        # requests in this segment get it whole, and WAND scores it whole
         if self._full is None:
-            ids = decode_doc_ids(self.doc_enc, self.doc_off, self.block_last)
-            tfs = decode_freqs(self.freq_enc, self.freq_off)
-            self._full = (ids, tfs)
+            self._full = (self._ids, self._tfs)
         return self._full
 
     def decode_blocks(self, blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         if self._full is not None:
-            return self._full  # already fully decoded — cheaper than re-slicing
-        # memoize per block-set: a query fleet repeats hot terms (the bench's
-        # replicated plans are the extreme case), and re-decoding the same
-        # competitive blocks per plan is pure memory-bandwidth burn — the
-        # resource that caps 2→8 scaling on one box. The cache lives only for
-        # this kernel invocation (one segment × one execute).
-        key = blocks.tobytes()
-        hit = self._block_cache.get(key)
-        if hit is not None:
-            return hit
-        ids = decode_doc_ids(self.doc_enc, self.doc_off, self.block_last, blocks=blocks)
-        tfs = decode_freqs(self.freq_enc, self.freq_off, blocks=blocks)
-        if len(self._block_cache) < 64:  # bound the per-term footprint
-            self._block_cache[key] = (ids, tfs)
-        return ids, tfs
+            return self._full
+        blocks = np.asarray(blocks, dtype=np.int64)
+        idx = (blocks[:, None] * BLOCK_SIZE + np.arange(BLOCK_SIZE)).ravel()
+        if blocks.size and blocks[-1] == self.block_last.size - 1:
+            idx = idx[idx < self.docs_count]  # only the last block is short
+        return self._ids[idx], self._tfs[idx]
 
     def blocks_for(self, cand_ids: np.ndarray) -> np.ndarray:
         """Block indexes that may contain any of the sorted candidate doc ids."""
@@ -1075,53 +1097,97 @@ class PostingsView:
 
     def positions(self) -> np.ndarray:
         if self._pos is None:
-            _, tfs = self.decode_all()
-            self._pos = decode_positions(self.pos_enc, tfs)
+            self._pos = self._positions()
         return self._pos
 
 
 class _SegmentViews:
-    """term → :class:`PostingsView` with full-decode dict compatibility."""
+    """One segment's postings rows (a pyarrow table of ``term``,
+    ``doc_ids_enc``, ``freqs_enc`` and, for phrase terms, ``pos_enc``),
+    decoded in one pass (:func:`decode_postings`): term → row index, and a
+    :class:`PostingsView` of a row's slices built only when a kernel asks
+    for that term. Positions decode once too, for every positional row, on
+    the first request. Tail specs (:meth:`spec_keys`) are evaluated once per
+    segment."""
 
-    def __init__(self, pdf: pd.DataFrame):
-        self.views: dict[str, PostingsView] = {
-            row.term: PostingsView(row) for row in pdf.itertuples(index=False)
-        }
+    def __init__(self, table: pa.Table):
+        self._table = table
+        terms = table.column("term").to_numpy(zero_copy_only=False)
+        self._rows = dict(zip(terms.tolist(), range(len(terms))))
+        self._terms = terms
+        self._ids, self._tfs, self._off = decode_postings(
+            table.column("doc_ids_enc"), table.column("freqs_enc")
+        )
+        self._views: dict[str, PostingsView] = {}
+        self._pos: tuple[np.ndarray, np.ndarray] | None = None
+        self._sorted: np.ndarray | None = None
+        self._specs: dict[tuple, list[str]] = {}
 
     def view(self, term: str) -> PostingsView | None:
-        return self.views.get(term)
+        v = self._views.get(term)
+        if v is None:
+            r = self._rows.get(term)
+            if r is None:
+                return None
+            lo, hi = self._off[r], self._off[r + 1]
+            v = self._views[term] = PostingsView.decoded(
+                self._ids[lo:hi], self._tfs[lo:hi], lambda: self._positions(r)
+            )
+        return v
 
     def get(self, term: str, default=None):
-        v = self.views.get(term)
+        v = self.view(term)
         return v.decode_all() if v is not None else default
 
+    def _positions(self, r: int) -> np.ndarray:
+        """Row ``r``'s flat positions. Rows without position bytes (a
+        non-phrase read) add nothing to the stream, so one
+        :func:`decode_positions` over every row's bytes and the freqs of the
+        rows that have them decodes the segment."""
+        if self._pos is None:
+            n = len(self._terms)
+            t = self._table
+            col = t.column("pos_enc") if "pos_enc" in t.column_names else pa.nulls(n, pa.binary())
+            buf, bounds = _flat_bytes(pc.fill_null(col, b""))
+            has = np.diff(bounds) > 0
+            tf_pre = np.zeros(self._tfs.size + 1, np.int64)
+            np.cumsum(self._tfs, out=tf_pre[1:])
+            bnd = np.zeros(n + 1, np.int64)
+            np.cumsum(np.where(has, np.diff(tf_pre[self._off]), 0), out=bnd[1:])
+            tfs = self._tfs[np.repeat(has, np.diff(self._off))]
+            self._pos = (decode_positions(buf, tfs), bnd)
+        flat, bnd = self._pos
+        return flat[bnd[r] : bnd[r + 1]]
 
-def _tail_terms(plan: dict, sv) -> list[str]:
+    def spec_keys(self, key_prefix: str, spec: tuple) -> list[str]:
+        """This segment's keys of ``key_prefix`` whose term satisfies
+        ``spec`` (:func:`spec_match`), from binary searches over the
+        segment's sorted keys (:func:`_spec_slice`), once per segment and
+        spec. Without a prefix, composite ``field\\x1fterm`` keys of another
+        field's slice never match."""
+        got = self._specs.get((key_prefix, spec))
+        if got is None:
+            if self._sorted is None:
+                self._sorted = np.sort(self._terms)
+            got = self._sorted[_spec_slice(self._sorted, spec, key_prefix)].tolist()
+            if not key_prefix:
+                got = [t for t in got if FIELD_SEP not in t]
+            self._specs[(key_prefix, spec)] = got
+        return got
+
+
+def _tail_terms(plan: dict, sv: _SegmentViews) -> list[str]:
     """Unscored-tail members for an overflowed multiterm plan: terms present
     in THIS segment's scanned postings that match the tail spec and are not
     already scored (multiterm_query.cpp unscored bitset, evaluated in-kernel
     instead of via a driver-collected term list). On mixed-field scans the
     kernel keys are ``field\\x1fterm`` composites; the plan's ``key_prefix``
-    scopes the tail to its own field before the term-level spec match."""
+    scopes the tail to its own field."""
     tails = list(plan.get("unscored", ()))
     spec = plan.get("unscored_spec")
     if spec is not None:
-        prefix = plan.get("key_prefix", "")
-        scored = {m[0] for m in plan["terms"]}
-        seen = set(tails)
-        keys = sv.views.keys() if hasattr(sv, "views") else sv.keys()
-        for t in keys:
-            if t in scored or t in seen:
-                continue
-            base = t
-            if prefix:
-                if not t.startswith(prefix):
-                    continue
-                base = t[len(prefix):]
-            elif FIELD_SEP in t:
-                continue  # composite key from another field's scan slice
-            if spec_match(spec, base):
-                tails.append(t)
+        skip = {m[0] for m in plan["terms"]} | set(tails)
+        tails += [t for t in sv.spec_keys(plan.get("key_prefix", ""), spec) if t not in skip]
     return tails
 
 
@@ -1409,17 +1475,6 @@ def _eval_root_dispatch(
     return _eval_root(plan, sv, k, dl, avgdl, model, dt, dels)
 
 
-def _norms_views(norm_pdf: pd.DataFrame, mixed: bool):
-    """(default dl, dl_map) for one segment's norms rows. Mixed batches carry
-    several fields' chunk rows per segment; each field's rows become one
-    :class:`_SegmentNorms` (all fields cover the same docs, so any entry
-    serves as the size/all-docs reference)."""
-    if not mixed:
-        return _SegmentNorms(norm_pdf), None
-    dl_map = {str(f): _SegmentNorms(g) for f, g in norm_pdf.groupby("field")}
-    return next(iter(dl_map.values())), dl_map
-
-
 #: packed position key ``doc_rank * 2^32 + pos`` of the positional kernels
 _PACK = np.int64(1) << np.int64(32)
 
@@ -1644,7 +1699,8 @@ def _union(legs, min_match: int, dt, merge: str = "sum") -> tuple[np.ndarray, np
 
 
 class _SegmentNorms:
-    """Lazy chunked Norm2 reader for one segment's norms rows.
+    """Lazy chunked Norm2 reader for one segment's norms rows, held for the
+    generation in :data:`_SEGMENT_STATE` (so each chunk decodes once).
 
     The builder stores doc_len in fixed-size VByte chunks (one row per
     NORMS_CHUNK_DOCS docs — sparse_bitmap.hpp:62 block analogue); kernels
@@ -1691,16 +1747,6 @@ class _SegmentNorms:
             m = cid == c
             out[m] = self._chunk(int(c))[idx[m] - self._starts[c]]
         return out
-
-
-def _deleted_of(norm_pdf: pd.DataFrame) -> np.ndarray | None:
-    """Per-segment sorted delete array from the norms row (document_mask)."""
-    if "del_ids" not in norm_pdf.columns:
-        return None
-    v = norm_pdf["del_ids"].iloc[0]
-    if v is None or len(v) == 0:
-        return None
-    return np.asarray(v, dtype=np.int64)
 
 
 def _plan_has_all(plan: dict) -> bool:
@@ -1783,10 +1829,14 @@ def pack_segments(counts: dict[int, int], p: int) -> list[list[int]]:
     return [sorted(g) for g in groups if g]
 
 
-_POSTINGS_COLS = [
-    "segment_id", "field", "term", "doc_ids_enc", "freqs_enc", "block_last_doc",
-    "block_doc_off", "block_freq_off", "block_max_freq", "docs_count", "max_freq",
-]
+#: the postings columns a kernel reads: block bounds and max freqs come
+#: from the decoded lists (:class:`PostingsView`)
+_POSTINGS_COLS = ["segment_id", "term", "doc_ids_enc", "freqs_enc"]
+#: no postings rows read
+_NO_POSTINGS = pa.table(
+    {"segment_id": pa.array([], pa.int32()), "term": pa.array([], pa.string()),
+     "doc_ids_enc": pa.array([], pa.binary()), "freqs_enc": pa.array([], pa.binary())}
+)
 _NORMS_COLS = ["field", "segment_id", "chunk_id", "docs_count", "doc_len_enc", "min_len"]
 _TYPES = {
     "int": (pa.int32(), _T.IntegerType()), "long": (pa.int64(), _T.LongType()),
@@ -1848,54 +1898,127 @@ class _LocalResult(_ClassicDataFrame):
         return self.collect()[:num]
 
 
-def _segment_frames(
-    sids: list[int], tables: dict, reads, mixed: bool, norms_pred
-) -> dict[int, tuple[pd.DataFrame, pd.DataFrame]]:
-    """``segment_id → (postings rows, norms rows)`` for one task's segments,
-    read with pyarrow. Postings rows are the ``reads`` (see
-    :func:`scan_reads`), keyed ``field\\x1fterm`` on mixed-field scans; a
-    segment with deletes gets its sorted deleted doc ids as a ``del_ids``
-    column on its norms rows (the document_mask, segment_reader.hpp:92-93)."""
+@dataclass(frozen=True)
+class _SegmentRead:
+    """What :func:`_segment_frames` reads for one compiled batch from the
+    committed generation's parquet (:meth:`Searcher._segment_read`)."""
+
+    index: str  # the index directory, which keys _SEGMENT_STATE
+    generation: int
+    tables: dict  # table name → path(s)
+    reads: list  # postings reads, :func:`scan_reads`
+    mixed: bool  # composite field\x1fterm keys
+    fields: tuple  # the fields whose norms the kernels read
+    multifield: bool
+
+
+#: index directory → (generation, files, {(segment_id, field): norms},
+#: {segment_id: sorted deleted doc ids}): each segment's
+#: :class:`_SegmentNorms` (with the chunks it decoded) and delete ids, built
+#: once per generation in a process (the driver, or a Spark worker reused
+#: across jobs) — the norms and docs_mask a reference segment reader opens
+#: once (segment_reader.hpp:35-110). ``files`` are the norms and deletes
+#: paths with their mtimes, like ``_DATASETS``' keys. One generation is held
+#: per index directory: a newer one replaces it, and a reader pinned to an
+#: older one (or a rebuilt directory at a lower generation) reads its own
+#: state uncached.
+_SEGMENT_STATE: dict[str, tuple[int, tuple, dict, dict]] = {}
+#: held while a search looks up or fills :data:`_SEGMENT_STATE`: a search
+#: must not see a segment's norms before its deletes are in
+_SEGMENT_STATE_LOCK = threading.Lock()
+
+
+def _files_key(tables: dict) -> tuple:
+    """The norms and deletes paths of a generation, with their mtimes."""
+    paths = tables["norms"] if isinstance(tables["norms"], list) else [tables["norms"]]
+    paths = [*paths, *([tables["deletes"]] if "deletes" in tables else [])]
+    return tuple((p, os.stat(p.removeprefix("file:")).st_mtime_ns) for p in paths)
+
+
+def _generation_state(read: _SegmentRead) -> tuple[dict, dict]:
+    """The (norms, deletes) maps of ``read``'s generation, held in
+    :data:`_SEGMENT_STATE` unless a newer generation of the index is."""
+    files = _files_key(read.tables)
+    held = _SEGMENT_STATE.get(read.index)
+    if held is not None and held[1] == files:
+        return held[2], held[3]
+    state: tuple[dict, dict] = ({}, {})
+    if held is None or read.generation >= held[0]:
+        _SEGMENT_STATE[read.index] = (read.generation, files, *state)
+    return state
+
+
+def _load_segment_state(sids: list[int], read: _SegmentRead, norms: dict, dels: dict) -> None:
+    """Read ``sids``' norms rows (of ``read.fields``) and delete ids into
+    the generation maps; a field a segment has no norms for maps to None."""
     seg = pc.field("segment_id").isin(sids)
-    cols = [c for c in _POSTINGS_COLS if c != "field" or mixed]
-    any_pos = any(pos for _, pos in reads)
-    parts = []
-    for pred, pos in reads:
-        part = read_frame(tables["postings"], cols + ["pos_enc"] * pos, pred & seg)
-        parts.append(part if pos or not any_pos else part.assign(pos_enc=None))
-    if not parts:
-        post = pd.DataFrame(columns=cols)
-    else:
-        post = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-    if mixed and len(post):
-        post["term"] = post["field"] + FIELD_SEP + post["term"]
-    norms = read_frame(
-        tables["norms"], _NORMS_COLS, seg if norms_pred is None else norms_pred & seg
-    )
-    dels = {}
-    if "deletes" in tables:
-        d = read_frame(tables["deletes"], ["segment_id", "doc_id"], seg)
-        dels = {
-            sid: np.sort(g["doc_id"].to_numpy(np.int64)) for sid, g in d.groupby("segment_id")
-        }
-    post_of = dict(tuple(post.groupby("segment_id"))) if len(post) else {}
-    norms_of = dict(tuple(norms.groupby("segment_id")))
-    out = {}
+    pred = seg & pc.field("field").isin(list(read.fields)) if read.multifield else seg
+    rows = read_frame(read.tables["norms"], _NORMS_COLS, pred)
+    by = ["segment_id", "field"] if read.multifield else "segment_id"
+    groups = dict(tuple(rows.groupby(by))) if len(rows) else {}
     for sid in sids:
-        n = norms_of.get(sid, norms.iloc[:0])
-        if sid in dels:
-            n = n.assign(del_ids=[dels[sid]] * len(n))
-        out[sid] = (post_of.get(sid, post.iloc[:0]), n)
-    return out
+        for f in read.fields:
+            g = groups.get((sid, f) if read.multifield else sid)
+            norms[(sid, f)] = _SegmentNorms(g) if g is not None else None
+        dels[sid] = None
+    if "deletes" in read.tables:
+        d = read_frame(read.tables["deletes"], ["segment_id", "doc_id"], seg)
+        for sid, g in d.groupby("segment_id"):
+            dels[int(sid)] = np.sort(g["doc_id"].to_numpy(np.int64))
 
 
-def _segment_loop(sids: list[int], read: tuple, kernel):
+def _postings_table(sids: list[int], read: _SegmentRead) -> pa.Table:
+    """``sids``' postings rows of ``read.reads`` as one pyarrow table sorted
+    by segment, keyed ``field\\x1fterm`` on mixed-field scans; rows of a
+    read without positions carry a null ``pos_enc`` when another read has
+    them."""
+    seg = pc.field("segment_id").isin(sids)
+    cols = _POSTINGS_COLS + ["field"] * read.mixed
+    any_pos = any(pos for _, pos in read.reads)
+    parts = []
+    for pred, pos in read.reads:
+        t = read_table(read.tables["postings"], cols + ["pos_enc"] * pos, pred & seg)
+        if any_pos and not pos:
+            t = t.append_column("pos_enc", pa.nulls(len(t), pa.binary()))
+        parts.append(t)
+    if not parts:
+        return _NO_POSTINGS
+    post = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+    if read.mixed:
+        key = pc.binary_join_element_wise(post["field"], post["term"], FIELD_SEP)
+        post = post.set_column(post.schema.get_field_index("term"), "term", key)
+    return post.take(np.argsort(post["segment_id"].to_numpy(), kind="stable"))
+
+
+def _segment_frames(sids: list[int], read: _SegmentRead):
+    """Yield ``(segment_id, postings, norms, deletes)`` per segment of
+    ``sids``: its postings rows (a pyarrow table, :func:`_postings_table`),
+    ``{field: _SegmentNorms}`` of the fields with norms in it (empty when it
+    has none), and its sorted deleted doc ids (the document_mask,
+    segment_reader.hpp:92-93) or None. Norms and deletes come from the
+    generation's process-wide state (:data:`_SEGMENT_STATE`); only segments
+    it does not hold yet read them, with pyarrow."""
+    with _SEGMENT_STATE_LOCK:
+        norms, dels = _generation_state(read)
+        miss = [sid for sid in sids if any((sid, f) not in norms for f in read.fields)]
+        if miss:
+            _load_segment_state(miss, read, norms, dels)
+    post = _postings_table(sids, read)
+    seg_col = post["segment_id"].to_numpy()
+    for sid in sids:
+        lo, hi = np.searchsorted(seg_col, [sid, sid + 1])
+        dl_map = {f: n for f in read.fields if (n := norms[(sid, f)]) is not None}
+        yield sid, post.slice(int(lo), int(hi - lo)), dl_map, dels[sid]
+
+
+def _segment_loop(sids: list[int], read: _SegmentRead, kernel):
     """The per-segment reader loop (segment_reader.hpp:35-110) of both
-    placements: one pyarrow read of ``sids``' postings, norms and deletes
-    (``read`` = :meth:`Searcher._segment_read`), then ``kernel(postings,
-    norms)`` per segment, serially. Yields each non-empty kernel frame."""
-    for post_pdf, norm_pdf in _segment_frames(sids, *read).values():
-        out = kernel(post_pdf, norm_pdf)
+    placements: one pyarrow read of ``sids``' postings (norms and deletes
+    once per generation, :func:`_segment_frames`), then ``kernel(segment_id,
+    postings, norms, deletes)`` per segment, serially. Yields each non-empty
+    kernel frame."""
+    for args in _segment_frames(sids, read):
+        out = kernel(*args)
         if len(out):
             yield out
 
@@ -1969,23 +2092,27 @@ class Searcher:
             self._groups = pack_segments(counts, p)
         return self._groups
 
-    def _segment_read(self, scan: ScanSpec) -> tuple:
+    def _segment_read(self, scan: ScanSpec) -> _SegmentRead:
         """What :func:`_segment_frames` reads for ``scan`` from the committed
-        generation's parquet: (tables, postings reads (:func:`scan_reads`),
-        mixed, norms predicate — the scan's fields, else the default
-        field)."""
+        generation: its tables, the postings reads (:func:`scan_reads`) and
+        the norms of the scan's fields (the default field when it has none;
+        a single-field index's norms are all the default field's)."""
         reader = self.reader
-        fields = scan.fields or [reader.default_field]
-        norms_pred = pc.field("field").isin(fields) if reader.is_multifield else None
+        multi = reader.is_multifield
+        fields = (scan.fields or [reader.default_field]) if multi else [reader.default_field]
         tables = {
             t: reader.meta["tables"][t]
             for t in ("postings", "norms", "deletes") if t in reader.meta["tables"]
         }
-        return tables, scan_reads(scan, reader.is_multifield), scan.mixed, norms_pred
+        return _SegmentRead(
+            os.path.abspath(reader.index_path), int(reader.meta["generation"]), tables,
+            scan_reads(scan, multi), scan.mixed, tuple(fields), multi,
+        )
 
     def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
         """The Spark placement: ONE shuffle-free Spark job running
-        ``kernel(postings_pdf, norms_pdf)`` once per live segment →
+        ``kernel(segment_id, postings, norms, deletes)`` once per live
+        segment →
         ``_SEGMENT_OUT_SCHEMA`` rows.
 
         ``range(P).mapInArrow``: task i runs :func:`_segment_loop` over group
@@ -2245,13 +2372,12 @@ class Searcher:
         # pickled command larger than PythonUtils.getBroadcastThreshold
         items = list(plans.items())
 
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(norm_pdf) == 0:
+        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> pd.DataFrame:
+            if not norms:
                 return _NO_SEGMENT_ROWS  # postings may be empty: All plans use norms only
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
+            dl = next(iter(norms.values()))
+            dl_map = norms if mixed else None
+            sv = _SegmentViews(postings)
             names, sizes, matches, id_parts, score_parts = [], [], [], [], []
             for name, plan in items:
                 if k is None:

@@ -9,7 +9,9 @@ from iresearch_spark.index.codec import (
     decode_doc_ids,
     decode_freqs,
     decode_positions,
+    decode_postings,
     encode_postings,
+    encode_postings_batch,
     vbyte_decode,
     vbyte_encode,
 )
@@ -154,3 +156,101 @@ def test_multiblock_decode_vectorized_matches_full():
         )
         assert np.array_equal(decode_doc_ids(doc_enc, doff, blast, b), full_ids[sel])
         assert np.array_equal(decode_freqs(freq_enc, foff, b), full_fr[sel])
+
+
+def _random_segment(rng, sizes):
+    """One segment's encode_postings_batch rows for lists of ``sizes``
+    postings (gaps up to 2^16, so deltas take 1-3 varint bytes), with
+    positions; returns (batch, per-list (ids, tfs, positions))."""
+    lists, bounds = [], [0]
+    for n in sizes:
+        ids = np.cumsum(rng.integers(1, 1 << 16, size=n)).astype(np.int64)
+        tfs = rng.integers(1, 300, size=n).astype(np.int64)
+        pos = np.concatenate([np.sort(rng.choice(np.arange(1, 5000), t, replace=False)) for t in tfs])
+        lists.append((ids, tfs, pos))
+        bounds.append(bounds[-1] + n)
+    batch = encode_postings_batch(
+        np.concatenate([lst[0] for lst in lists]),
+        np.concatenate([lst[1] for lst in lists]),
+        np.array(bounds),
+        np.concatenate([lst[2] for lst in lists]),
+    )
+    return batch, lists
+
+
+_SEGMENT_SIZES = [1, 1, 5, 127, 128, 129, 256, 300, 1, 1000, 2]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_decode_postings_matches_per_row_decode(seed):
+    """The one-pass segment decoder equals per-row decode_doc_ids /
+    decode_freqs on every row (1-posting, exactly-one-block and multi-block
+    lists), from byte strings and from a sliced pyarrow binary column."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    sizes = list(rng.permutation(_SEGMENT_SIZES))
+    batch, lists = _random_segment(rng, sizes)
+    ids, tfs, off = decode_postings(batch["doc_ids_enc"], batch["freqs_enc"])
+    assert off.tolist() == np.concatenate([[0], np.cumsum(sizes)]).tolist()
+    for r, (want_ids, want_tfs, _) in enumerate(lists):
+        row_ids = decode_doc_ids(
+            batch["doc_ids_enc"][r], batch["block_doc_off"][r], batch["block_last_doc"][r]
+        )
+        row_tfs = decode_freqs(batch["freqs_enc"][r], batch["block_freq_off"][r])
+        assert ids[off[r] : off[r + 1]].tolist() == row_ids.tolist() == want_ids.tolist()
+        assert tfs[off[r] : off[r + 1]].tolist() == row_tfs.tolist() == want_tfs.tolist()
+    # a sliced arrow column (non-zero array offset) decodes the same rows
+    docs = pa.array([b"x"] + batch["doc_ids_enc"], pa.binary()).slice(1)
+    freqs = pa.array([b"x"] + batch["freqs_enc"], pa.binary()).slice(1)
+    a_ids, a_tfs, a_off = decode_postings(docs, freqs)
+    assert a_ids.tolist() == ids.tolist() and a_tfs.tolist() == tfs.tolist()
+    assert a_off.tolist() == off.tolist()
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_segment_views_match_per_row_decode(seed):
+    """A kernel's views of a one-pass decoded segment (``_SegmentViews``)
+    equal the per-row decoders: whole lists, random block subsets
+    (``decode_doc_ids(blocks=...)``), the block metadata WAND reads, and
+    positions when only some rows carry them."""
+    import pyarrow as pa
+
+    from iresearch_spark.search.executor import _SegmentViews
+
+    rng = np.random.default_rng(100 + seed)
+    sizes = list(rng.permutation(_SEGMENT_SIZES))
+    batch, lists = _random_segment(rng, sizes)
+    terms = [f"t{r:02d}" for r in range(len(sizes))]
+    with_pos = rng.random(len(sizes)) < 0.5
+    sv = _SegmentViews(
+        pa.table(
+            {
+                "term": pa.array(terms),
+                "doc_ids_enc": pa.array(batch["doc_ids_enc"], pa.binary()),
+                "freqs_enc": pa.array(batch["freqs_enc"], pa.binary()),
+                "pos_enc": pa.array(
+                    [p if w else None for p, w in zip(batch["pos_enc"], with_pos)], pa.binary()
+                ),
+            }
+        )
+    )
+    assert sv.view("absent") is None
+    for r in rng.permutation(len(sizes)):
+        enc_ids, enc_tfs = batch["doc_ids_enc"][r], batch["freqs_enc"][r]
+        doc_off, freq_off = batch["block_doc_off"][r], batch["block_freq_off"][r]
+        last = batch["block_last_doc"][r]
+        v = sv.view(terms[r])
+        assert v.docs_count == sizes[r] and v.max_freq == batch["max_freq"][r]
+        assert v.block_last.tolist() == last
+        assert v.block_maxf.tolist() == batch["block_max_freq"][r]
+        for _ in range(3):
+            sel = np.flatnonzero(rng.random(len(last)) < 0.5)
+            got_ids, got_tfs = v.decode_blocks(sel)
+            assert got_ids.tolist() == decode_doc_ids(enc_ids, doc_off, last, blocks=sel).tolist()
+            assert got_tfs.tolist() == decode_freqs(enc_tfs, freq_off, blocks=sel).tolist()
+        want_pos = decode_positions(batch["pos_enc"][r], lists[r][1]) if with_pos[r] else []
+        assert v.positions().tolist() == list(want_pos)
+        all_ids, all_tfs = v.decode_all()
+        assert all_ids.tolist() == decode_doc_ids(enc_ids, doc_off, last).tolist()
+        assert all_tfs.tolist() == decode_freqs(enc_tfs, freq_off).tolist()

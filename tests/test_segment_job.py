@@ -14,6 +14,13 @@
 * Two Searchers and two prepared batches over one index share nothing in
   Spark: releasing one leaves the other's ``execute`` at one job, and no
   search-path call creates a Spark broadcast.
+* A segment's tail-spec keys (``_SegmentViews.spec_keys``) are exactly the
+  keys ``spec_match`` accepts, plain and ``field\\x1fterm`` composite.
+* The per-generation norms and deletes state (``_SEGMENT_STATE``) never
+  serves a stale generation: after append, delete and consolidate a fresh
+  reader's rows equal an uncached evaluation's under both placements, a
+  reader pinned to an older generation still reads its own, and one
+  generation per index directory is held.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from pyspark import SparkContext
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
 from iresearch_spark.index.consolidate import consolidate
+from iresearch_spark.index.deletes import delete_docs
 from iresearch_spark.search import executor
 from iresearch_spark.search.executor import (
     compile_plans,
@@ -158,6 +166,29 @@ def test_spec_filter_selects_exactly_spec_match(spec):
 def test_wildcard_spec_filter_selects_superset(spec):
     want = {t for t in _VOCAB if spec_match(spec, t)}
     assert want <= _selected(spec)
+
+
+@pytest.mark.parametrize("spec", _SPECS + _WILDCARDS, ids=repr)
+def test_segment_spec_keys_equal_spec_match(spec):
+    # the segment's rows mix plain keys and another field's composites; the
+    # composite-keyed tail of field "f" sees only its own field's terms
+    sep = executor.FIELD_SEP
+    keys = _VOCAB + [f"f{sep}{t}" for t in _VOCAB[::2]] + [f"g{sep}{t}" for t in _VOCAB[1::2]]
+    order = np.random.default_rng(0).permutation(len(keys))
+    n = len(keys)
+    sv = executor._SegmentViews(
+        pa.table(
+            {
+                "term": pa.array([keys[i] for i in order], pa.string()),
+                "doc_ids_enc": pa.array([b"\x01"] * n, pa.binary()),
+                "freqs_enc": pa.array([b"\x01"] * n, pa.binary()),
+            }
+        )
+    )
+    assert sorted(sv.spec_keys("", spec)) == sorted(t for t in _VOCAB if spec_match(spec, t))
+    assert sorted(sv.spec_keys(f"f{sep}", spec)) == sorted(
+        f"f{sep}{t}" for t in _VOCAB[::2] if spec_match(spec, t)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -293,3 +324,108 @@ def test_search_paths_create_no_broadcast(spark, tmp_path_factory, monkeypatch):
         p.DRIVER_MAX_POSTINGS = max_postings
         assert p.payloads(flt.Term("scan"), k=5).collect()
     assert calls == []
+
+
+# --------------------------------------------------------------------------
+# the per-generation norms and deletes state
+# --------------------------------------------------------------------------
+
+_STATE_QUERIES = {
+    "t": flt.Term("spark"),
+    "o": flt.Or((flt.Term("scan"), flt.Term("hash"), flt.Term("join"))),
+    "a": flt.And((flt.Term("sort"), flt.Term("fast"))),
+    "p": flt.Prefix("s", scored_terms_limit=2),
+    "ph": flt.Phrase(("spark", "scan")),
+}
+
+
+def _placed_rows(reader, max_postings) -> list:
+    s = Searcher(reader)
+    s.DRIVER_MAX_POSTINGS = max_postings
+    return [tuple(r) for r in s.search_many(_STATE_QUERIES, k=40).collect()]
+
+
+def _uncached_rows(reader) -> list:
+    """The rows of a process that has never read the index: the driver
+    placement with an empty state."""
+    held = dict(executor._SEGMENT_STATE)
+    executor._SEGMENT_STATE.clear()
+    try:
+        return _placed_rows(reader, 1 << 62)
+    finally:
+        executor._SEGMENT_STATE.clear()
+        executor._SEGMENT_STATE.update(held)
+
+
+def test_generation_state_never_stale(spark, tmp_path_factory):
+    import os
+
+    path = str(tmp_path_factory.mktemp("segjob_state"))
+    IndexBuilder(spark, path, num_segments=3).build(
+        _docs(spark, "s", 150, 5), key_col="doc_key", text_col="text"
+    )
+    key = os.path.abspath(path)
+    first = IndexReader(spark, path)
+    first_rows = _uncached_rows(first)
+    steps = [
+        lambda r: IndexBuilder(spark, path, num_segments=2).append(
+            _docs(spark, "n", 80, 6), key_col="doc_key", text_col="text"
+        ),
+        lambda r: delete_docs(r, [f"s{i:04d}" for i in range(0, 150, 3)]),
+        lambda r: delete_docs(r, [f"n{i:04d}" for i in range(0, 80, 4)]),
+        lambda r: consolidate(r),
+    ]
+    reader = first
+    for step in steps:
+        for max_postings in (1 << 62, -1):
+            _placed_rows(reader, max_postings)  # the state now holds this generation
+        step(reader)
+        reader = IndexReader(spark, path)
+        want = _uncached_rows(reader)
+        for max_postings in (1 << 62, -1):
+            assert _placed_rows(reader, max_postings) == want
+        assert executor._SEGMENT_STATE[key][0] == reader.meta["generation"]
+    # a reader pinned to the first generation reads its own norms and
+    # deletes, uncached, and the newest generation stays held
+    for max_postings in (1 << 62, -1):
+        assert _placed_rows(first, max_postings) == first_rows
+    assert executor._SEGMENT_STATE[key][0] == reader.meta["generation"]
+
+
+def test_generation_state_filled_by_racing_searches(spark, tmp_path_factory, monkeypatch):
+    # driver-placed searches from more threads than cores fill one cold
+    # state together; a slow deletes read keeps the first filler inside it
+    # while the others arrive, and none may see a segment's norms without
+    # its deletes
+    import threading
+    import time
+
+    path = str(tmp_path_factory.mktemp("segjob_race"))
+    IndexBuilder(spark, path, num_segments=3).build(
+        _docs(spark, "r", 150, 7), key_col="doc_key", text_col="text"
+    )
+    delete_docs(IndexReader(spark, path), [f"r{i:04d}" for i in range(0, 150, 2)])
+    reader = IndexReader(spark, path)
+    want = _uncached_rows(reader)
+    read_frame = executor.read_frame
+
+    def slow_read_frame(paths, columns, pred=None):
+        if columns == ["segment_id", "doc_id"]:  # the deletes read
+            time.sleep(0.2)
+        return read_frame(paths, columns, pred)
+
+    monkeypatch.setattr(executor, "read_frame", slow_read_frame)
+    executor._SEGMENT_STATE.clear()
+    got = []
+
+    def search(delay):
+        time.sleep(delay)
+        got.append(_placed_rows(reader, 1 << 62))
+
+    threads = [threading.Thread(target=search, args=(0.05 * i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8 and all(rows == want for rows in got)

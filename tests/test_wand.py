@@ -134,3 +134,40 @@ def test_wand_actually_skips_blocks():
     dl = np.full(20000, 100, dtype=np.int64)
     _wand_single_term(view, 2.0, 1.0, 10, dl, 100.0, MODEL, np.float64)
     assert sum(calls) < enc.block_last_doc.size  # decoded strictly fewer blocks
+
+
+def test_wand_skips_blocks_of_a_segment_view(monkeypatch):
+    """The same skip holds for a view of a one-pass decoded segment
+    (``_SegmentViews``): the lists arrive decoded, and WAND still gathers
+    strictly fewer blocks than the list has, with the unpruned top-k."""
+    import pyarrow as pa
+
+    from iresearch_spark.search.executor import _SegmentViews
+
+    ids = np.arange(1, 20001, dtype=np.int64)
+    tfs = np.ones(20000, dtype=np.int64)
+    tfs[:16] = 50  # one hot block holding the whole top-10
+    enc = encode_postings(ids, tfs)
+    other = encode_postings(np.array([3, 9]), np.array([1, 2]))
+    sv = _SegmentViews(
+        pa.table(
+            {
+                "term": ["other", "flat"],
+                "doc_ids_enc": pa.array([other.doc_ids_enc, enc.doc_ids_enc], pa.binary()),
+                "freqs_enc": pa.array([other.freqs_enc, enc.freqs_enc], pa.binary()),
+            }
+        )
+    )
+    calls = []
+    decode_blocks = PostingsView.decode_blocks
+
+    def spy(self, blocks):
+        calls.append(len(blocks))
+        return decode_blocks(self, blocks)
+
+    monkeypatch.setattr(PostingsView, "decode_blocks", spy)
+    dl = np.full(20000, 100, dtype=np.int64)
+    got = _wand_single_term(sv.view("flat"), 2.0, 1.0, 10, dl, 100.0, MODEL, np.float64)
+    assert 0 < sum(calls) < enc.block_last_doc.size
+    whole = PostingsView(SimpleNamespace(doc_ids_enc=enc.doc_ids_enc, freqs_enc=enc.freqs_enc))
+    assert _topk_tuple(*got) == _topk_tuple(*_full_term(whole, 2.0, dl, 100.0, np.float64))

@@ -17,12 +17,14 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +67,138 @@ def read_frame(paths, columns: list[str], pred=None) -> pd.DataFrame:
     return read_table(paths, columns, pred).to_pandas()
 
 
+class TableParts:
+    """One index table's parquet files held by their footers: each file's
+    ``FileMetaData`` and, per row group, the min/max statistics of the
+    ``keys`` columns. :meth:`read` opens a file with its held footer
+    (``pq.ParquetFile(path, metadata=...)``), reads the chosen row groups
+    and closes it: no read parses a footer again and no file handle stays
+    open. Memory: each file's footer (its serialized size is
+    ``FileMetaData.serialized_size``, about 3–6 KB for a postings file) plus
+    two values per row group and key."""
+
+    def __init__(self, paths, keys: tuple[str, ...]):
+        self.files = [(f, pq.read_metadata(f)) for d in table_datasets(paths) for f in d.files]
+        self._names = [set(md.schema.to_arrow_schema().names) for _, md in self.files]
+        file_of, group_of = [], []
+        lo: dict[str, list] = {k: [] for k in keys}
+        hi: dict[str, list] = {k: [] for k in keys}
+        for i, (_, md) in enumerate(self.files):
+            col = {md.schema.column(j).path: j for j in range(md.num_columns)}
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                file_of.append(i)
+                group_of.append(g)
+                for k in keys:
+                    st = rg.column(col[k]).statistics if k in col else None
+                    ok = st is not None and st.has_min_max
+                    lo[k].append(st.min if ok else None)
+                    hi[k].append(st.max if ok else None)
+        self.file_of = np.array(file_of, np.int64)
+        self.group_of = np.array(group_of, np.int64)
+        self._lo = {k: np.array(v, dtype=object) for k, v in lo.items()}
+        self._hi = {k: np.array(v, dtype=object) for k, v in hi.items()}
+        self._has = {k: np.array([x is not None for x in v], bool) for k, v in lo.items()}
+
+    @property
+    def num_groups(self) -> int:
+        return self.file_of.size
+
+    def overlaps(self, key: str, lo=None, hi=None) -> np.ndarray:
+        """Per row group: may it hold a ``key`` value in the closed interval
+        ``[lo, hi]`` (None: unbounded)? True where it has no statistics."""
+        has = self._has[key]
+        hit = np.ones(int(has.sum()), bool)
+        if lo is not None:
+            hit &= self._hi[key][has] >= lo
+        if hi is not None:
+            hit &= self._lo[key][has] <= hi
+        out = ~has
+        out[has] = hit
+        return out
+
+    def holds_any(self, key: str, values: np.ndarray) -> np.ndarray:
+        """Per row group: may it hold one of the ascending-sorted ``values``?
+        One ``searchsorted`` of every group's min into them. True where it
+        has no statistics."""
+        has = self._has[key]
+        out = ~has
+        if values.size:
+            j = np.searchsorted(values, self._lo[key][has])
+            out[has] = (j < values.size) & (values[np.minimum(j, values.size - 1)] <= self._hi[key][has])
+        return out
+
+    def read(self, groups: np.ndarray, columns: list[str], use_threads: bool = True) -> pa.Table | None:
+        """The ``columns`` of the row groups ``groups`` (indexes into this
+        table's row groups, ascending), file by file; None when ``groups``
+        is empty. Columns a file lacks are null in its rows. ``use_threads``
+        decodes a file's columns in parallel."""
+        groups = np.asarray(groups, np.int64)
+        files = self.file_of[groups]
+        tables = []
+        for i in np.unique(files).tolist():
+            path, md = self.files[i]
+            with pq.ParquetFile(path, metadata=md) as pf:
+                tables.append(pf.read_row_groups(
+                    self.group_of[groups[files == i]].tolist(),
+                    columns=[c for c in columns if c in self._names[i]],
+                    use_threads=use_threads,
+                ))
+        if not tables:
+            return None
+        return tables[0] if len(tables) == 1 else pa.concat_tables(tables, promote_options="default")
+
+
+#: the tables whose files a generation's held state depends on
+STATE_TABLES = ("postings", "docs", "norms", "deletes")
+#: index directory → (generation, files, norms, deletes, parts): what a
+#: process holds of the newest generation of the index it has searched —
+#: the readers a reference segment reader opens once
+#: (segment_reader.hpp:35-110). ``norms`` and ``deletes`` are the search
+#: executor's per-segment maps (its decoded norms and sorted delete ids);
+#: ``parts`` maps a table name to its :class:`TableParts`. ``files`` are the
+#: generation's :data:`STATE_TABLES` paths with their mtimes, like
+#: ``_DATASETS``' keys. One generation is held per index directory: a newer
+#: one replaces it, and a reader pinned to an older one (or a rebuilt
+#: directory at a lower generation) gets its own state, uncached.
+_SEGMENT_STATE: dict[str, tuple[int, tuple, dict, dict, dict]] = {}
+#: held while a search looks up or fills :data:`_SEGMENT_STATE`: a search
+#: must not see a segment's norms before its deletes are in
+_SEGMENT_STATE_LOCK = threading.Lock()
+
+
+def _files_key(tables: dict) -> tuple:
+    """Every path of ``tables`` with its mtime."""
+    paths = [p for v in tables.values() for p in (v if isinstance(v, list) else [v])]
+    return tuple((p, os.stat(p.removeprefix("file:")).st_mtime_ns) for p in paths)
+
+
+def generation_state(index: str, generation: int, tables: dict) -> tuple[dict, dict, dict]:
+    """The (norms, deletes, parts) maps of ``index``'s ``generation``, whose
+    :data:`STATE_TABLES` are ``tables``: held in :data:`_SEGMENT_STATE`
+    unless a newer generation of the index is. The caller holds
+    :data:`_SEGMENT_STATE_LOCK`."""
+    files = _files_key(tables)
+    held = _SEGMENT_STATE.get(index)
+    if held is not None and held[1] == files:
+        return held[2], held[3], held[4]
+    state: tuple[dict, dict, dict] = ({}, {}, {})
+    if held is None or generation >= held[0]:
+        _SEGMENT_STATE[index] = (generation, files, *state)
+    return state
+
+
+def held_parts(index: str, generation: int, tables: dict, name: str, keys: tuple[str, ...]) -> TableParts:
+    """Table ``name``'s :class:`TableParts` (row-group statistics of
+    ``keys``) from the generation's state, read on first use."""
+    with _SEGMENT_STATE_LOCK:
+        parts = generation_state(index, generation, tables)[2]
+        got = parts.get(name)
+        if got is None:
+            got = parts[name] = TableParts(tables[name], keys)
+    return got
+
+
 class IndexReader:
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark
@@ -75,6 +209,9 @@ class IndexReader:
         self._tables: dict[str, DataFrame] = {}
         self._vocab: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._norms_summary: pd.DataFrame | None = None
+        self._segment_counts: dict[int, int] | None = None
+        #: the tables that key this generation's held state
+        self.state_tables = {t: v for t, v in self.meta["tables"].items() if t in STATE_TABLES}
 
     # ------------------------------------------------------------- fields
     @property
@@ -122,26 +259,46 @@ class IndexReader:
         self, segment_ids, doc_ids, columns: tuple[str, ...] = ("doc_key",)
     ) -> pd.DataFrame:
         """Stored columns of the given (segment_id, doc_id) docs, read on the
-        driver with pyarrow — no Spark job (the reference reads stored values
-        by doc id from the open reader, index-search.cpp:676-748). The
-        per-segment ``segment_id == s AND doc_id IN (...)`` filter prunes
-        files and row groups by their statistics, so a top-k fetch reads only
-        the touched segments' parts. Returns (segment_id, doc_id, *columns)
-        in no particular order; pairs not in the table are absent."""
-        want = pd.DataFrame(
-            {"segment_id": np.asarray(segment_ids, np.int64),
-             "doc_id": np.asarray(doc_ids, np.int64)}
+        driver with pyarrow — no Spark job and no dataset scan (the reference
+        reads stored values by doc id from the open reader,
+        index-search.cpp:676-748). The docs table's footers and each row
+        group's (segment_id, doc_id) ranges are held per generation
+        (:func:`held_parts`); a fetch reads ``segment_id``, ``doc_id`` and
+        ``columns`` of only the row groups whose ranges cover a wanted pair,
+        then takes each pair's row by its offset in them (a binary search
+        over the pairs read). Returns (segment_id, doc_id, *columns): one row
+        per pair found, in the input order, indexed by the pair's input
+        position; pairs not in the table are absent."""
+        sids = np.asarray(segment_ids, np.int64)
+        dids = np.asarray(doc_ids, np.int64)
+        cols = ["segment_id", "doc_id", *columns]
+        parts = held_parts(
+            os.path.abspath(self.index_path), int(self.meta["generation"]),
+            self.state_tables, "docs", ("segment_id", "doc_id"),
         )
-        pred = None
-        for sid, grp in want.groupby("segment_id"):
-            p = (pc.field("segment_id") == int(sid)) & pc.field("doc_id").isin(
-                grp["doc_id"].to_numpy()
+        pick = np.zeros(parts.num_groups, bool)
+        for sid in np.unique(sids).tolist():
+            d = dids[sids == sid]
+            pick |= parts.overlaps("segment_id", sid, sid) & parts.overlaps(
+                "doc_id", int(d.min()), int(d.max())
             )
-            pred = p if pred is None else pred | p
-        if pred is None:
-            return want.assign(**{c: pd.Series([], dtype=object) for c in columns})
-        return read_frame(
-            self.meta["tables"]["docs"], ["segment_id", "doc_id", *columns], pred
+        # a docs row group's few small columns decode about twice as fast
+        # serially as on threads
+        t = parts.read(np.flatnonzero(pick), cols, use_threads=False)
+        if t is None:
+            return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
+        have = (t.column("segment_id").to_numpy().astype(np.int64) << 32) | t.column(
+            "doc_id"
+        ).to_numpy().astype(np.int64)
+        order = np.argsort(have, kind="stable")
+        have = have[order]
+        want = (sids << 32) | dids
+        at = np.minimum(np.searchsorted(have, want), max(have.size - 1, 0))
+        found = np.flatnonzero(have[at] == want) if have.size else np.zeros(0, np.int64)
+        rows = pa.array(order[at[found]])
+        return pd.DataFrame(
+            {c: t.column(c).take(rows).to_numpy(zero_copy_only=False) for c in cols},
+            index=found,
         )
 
     def postings(self) -> DataFrame:
@@ -270,7 +427,10 @@ class IndexReader:
     def segment_docs_counts(self) -> dict[int, int]:
         """segment_id → live+masked doc count of every live segment (sums the
         default field's norm chunk rows — every field covers the same docs).
-        No Spark job."""
-        rows = self._norms_rows(self.default_field)
-        counts = rows.groupby("segment_id")["docs_count"].sum()
-        return {int(sid): int(n) for sid, n in counts.items()}
+        No Spark job; summed once per reader (a reader is pinned to one
+        generation). Returns a copy."""
+        if self._segment_counts is None:
+            rows = self._norms_rows(self.default_field)
+            counts = rows.groupby("segment_id")["docs_count"].sum()
+            self._segment_counts = {int(sid): int(n) for sid, n in counts.items()}
+        return dict(self._segment_counts)

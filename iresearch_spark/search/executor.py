@@ -17,8 +17,11 @@ in the merge:
 * ``execute`` — one per-segment loop (:func:`_segment_loop`, the
   per-segment reader of segment_reader.hpp:35-110): one pyarrow read of its
   segments' postings from the index parquet, then one kernel call per
-  segment. Norms and deletes are query-independent: each process reads and
-  decodes a segment's once per generation (:data:`_SEGMENT_STATE`).
+  segment. Each process holds what does not depend on the query once per
+  generation (:data:`_SEGMENT_STATE`): every segment's norms and deletes,
+  and the postings files' footers with each row group's (field, term)
+  range, so a read opens only the row groups its terms and tail ranges
+  select (:func:`_row_groups`).
   :meth:`Searcher._execute_batch` places the loop. A k-bounded batch
   planning at most ``Searcher.DRIVER_MAX_POSTINGS`` postings runs the loop
   serially in the driver over every live segment, with no Spark job (the
@@ -37,9 +40,11 @@ in the merge:
 * merge — every k-bounded call (``search``, ``search_many``,
   ``PreparedBatch.execute``) has one merge, on the driver: the union of
   per-segment top-k rows is tiny, and the driver orders it by (score desc,
-  segment_id asc, doc_id asc) ≙ the min-heap loop of
-  utils/index-search.cpp:676-748, binding an unbound phrase idf from the
-  summed per-segment match counts first. The merged rows stay on the driver
+  segment_id asc, doc_id asc) with one numpy ``lexsort`` ≙ the min-heap
+  loop of utils/index-search.cpp:676-748, binding an unbound phrase idf
+  from the summed per-segment match counts first. A keyed search then
+  reads its ≤k doc keys by offset from the held docs row groups
+  (:meth:`IndexReader.fetch_docs`). The merged rows stay on the driver
   (:class:`_LocalResult`): ``collect``/``toPandas``/``count``/``take`` answer
   from them, and only a Spark operation on the result builds its JVM plan.
   ``matches`` has no merge: its result is the lazy kernel job itself.
@@ -70,7 +75,8 @@ top-k; ``search`` is a batch of one.
 Scale notes: the driver holds each queried field's vocabulary (about 65
 bytes per term); each task's postings read is pruned by parquet min/max
 stats over the (field, term)-sorted range layout (field equality plus exact,
-prefix, range and wildcard-prefix term ranges all prune row groups);
+prefix, range and wildcard-prefix term ranges all prune row groups), from
+footers each process reads once per generation (a few KB per file);
 per-segment kernels are independent; the only other driver-side data is
 the merge's candidate rows, at most #segments × #queries × (k + 16) (each
 segment keeps 16 extra rows of an ``exact_df`` root phrase).
@@ -91,7 +97,6 @@ import functools as _functools
 import heapq as _heapq
 import math
 import os
-import threading
 from dataclasses import dataclass, field as _dc_field
 
 import numpy as np
@@ -111,7 +116,14 @@ from ..index.codec import (
     decode_postings,
     vbyte_decode,
 )
-from ..index.reader import IndexReader, read_frame, read_table
+from ..index.reader import (  # _SEGMENT_STATE: the per-generation state this module fills
+    _SEGMENT_STATE,  # noqa: F401
+    _SEGMENT_STATE_LOCK,
+    IndexReader,
+    generation_state,
+    held_parts,
+    read_frame,
+)
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
 from .lev_automaton import LevAutomaton
@@ -499,43 +511,80 @@ def spec_filter(spec: tuple) -> pc.Expression:
     raise ValueError(f"bad spec {spec}")
 
 
-def scan_reads(scan: ScanSpec, multifield: bool) -> list[tuple[pc.Expression, bool]]:
+def scan_reads(scan: ScanSpec, multifield: bool) -> list[tuple[pc.Expression, bool, dict]]:
     """The compiled batch's postings reads as ``(pyarrow filter,
-    with_positions)`` pairs; empty when nothing is scanned. The rows are,
-    per field, the exact terms OR the field's tail specs, AND'd with the
-    field equality on multi-field indexes (the layout is sorted by
-    (field, term), so both reach row-group statistics). ``pos_enc`` is read
-    only for the phrase slots' terms: when other rows exist too, they are a
-    second read without it, so one phrase in a large batch does not drag
-    every other term's (typically largest) position stream."""
+    with_positions, selects)`` triples; empty when nothing is scanned. The
+    rows are, per field, the exact terms OR the field's tail specs, AND'd
+    with the field equality on multi-field indexes (the layout is sorted by
+    (field, term)). ``selects`` maps each field to the ``(exact terms, tail
+    specs)`` whose row groups the read needs (:func:`_row_groups`): a
+    superset of the filter's rows. ``pos_enc`` is read only for the phrase
+    slots' terms: when other rows exist too, they are a second read without
+    it, so one phrase in a large batch does not drag every other term's
+    (typically largest) position stream."""
 
     def per_field(terms_of, with_specs: bool):
-        pred = None
+        pred, selects = None, {}
         for f in scan.fields:
             terms = terms_of.get(f, [])
+            specs = scan.field_specs.get(f, []) if with_specs else []
             p = _terms_filter(terms) if terms else None
-            for spec in scan.field_specs.get(f, []) if with_specs else ():
+            for spec in specs:
                 p = spec_filter(spec) if p is None else p | spec_filter(spec)
             if p is None:
                 continue
+            selects[f] = (terms, specs)
             if multifield:
                 p = (pc.field("field") == f) & p
             pred = p if pred is None else pred | p
-        return pred
+        return pred, selects
 
-    rows = per_field(scan.field_terms, True)
+    rows, selects = per_field(scan.field_terms, True)
     if rows is None:
         return []
-    positional = per_field(scan.pos_terms, False) if scan.need_positions else None
+    positional, pos_selects = (
+        per_field(scan.pos_terms, False) if scan.need_positions else (None, {})
+    )
     if positional is None:
-        return [(rows, False)]
+        return [(rows, False, selects)]
     every_row = not any(scan.field_specs.values()) and all(
         set(scan.pos_terms.get(f, [])) == set(scan.field_terms.get(f, []))
         for f in scan.fields
     )
     if every_row:
-        return [(rows, True)]
-    return [(positional, True), (rows & ~positional, False)]
+        return [(rows, True, selects)]
+    return [(positional, True, pos_selects), (rows & ~positional, False, selects)]
+
+
+def _spec_bounds(spec: tuple) -> tuple[str | None, str | None]:
+    """A closed term interval ``[lo, hi]`` (None: unbounded) holding every
+    term :func:`spec_filter` selects — a prefix or wildcard's literal-prefix
+    block, a range's bounds — for row-group selection."""
+    kind = spec[0]
+    if kind == "range":
+        return spec[1], spec[2]
+    if kind in ("prefix", "wildcard"):
+        p = spec[1] if kind == "prefix" else _like_prefix(spec[1])
+        return p, _prefix_successor(p)
+    return None, None
+
+
+def _row_groups(parts, selects: dict, multifield: bool) -> np.ndarray:
+    """Indexes of the postings row groups (of ``parts``, a ``TableParts``)
+    that may hold a row of ``selects`` (``field → (exact terms, tail
+    specs)``): the exact terms by one ``searchsorted`` of the groups' term
+    minimums into them, each tail spec by its term interval
+    (:func:`_spec_bounds`), and on a multi-field index only groups whose
+    field range covers the field. Every row of a group lies within each
+    column's min/max, so a group spanning two fields is pruned by the same
+    two tests. A group without statistics is always read."""
+    pick = np.zeros(parts.num_groups, bool)
+    for f, (terms, specs) in selects.items():
+        hit = parts.holds_any("term", np.array(sorted(set(terms)), dtype=object))
+        for spec in specs:
+            hit |= parts.overlaps("term", *_spec_bounds(spec))
+        pick |= hit & parts.overlaps("field", f, f) if multifield else hit
+    return np.flatnonzero(pick)
 
 
 def _spec_slice(terms_a: np.ndarray, spec: tuple, key_prefix: str = "") -> np.ndarray:
@@ -801,6 +850,11 @@ def compile_plans(
             # term still contribute the term score while every other doc
             # scores 0 (terms_filter_test.cpp "match all" with an invalid
             # term and min_match=0 expects all 32 docs).
+            # Known divergence: the reference prepares that disjunction with
+            # kNoBoost (terms_filter.cpp:123-133), dropping any boost a
+            # boosted ancestor passes down; here the rewritten Or is an
+            # ordinary child, so an ancestor's boost still multiplies the
+            # term legs' scores. Without a boosted ancestor the two agree.
             if len(node.terms) == 0 or node.min_match > len(node.terms):
                 return {"op": "empty"}
             if node.min_match == 0:
@@ -1039,19 +1093,14 @@ class PostingsView:
     bound) come from the decoded arrays. ``seek`` is ``np.searchsorted``
     over ``block_last``, and :meth:`decode_blocks` gathers only the chosen
     blocks' values. A kernel's views come from :class:`_SegmentViews`, which
-    decodes the whole segment's postings in one pass; ``PostingsView(row)``
-    decodes one encoded postings row on its own.
+    decodes the whole segment's postings in one pass
+    (:func:`decode_postings`) and builds each with :meth:`decoded`.
     """
 
     __slots__ = (
         "docs_count", "max_freq", "block_last", "block_maxf", "_ids", "_tfs",
         "_positions", "_full", "_pos",
     )
-
-    def __init__(self, row):
-        ids, tfs, _ = decode_postings([row.doc_ids_enc], [row.freqs_enc])
-        pos_enc = getattr(row, "pos_enc", None) or b""
-        self._bind(ids, tfs, lambda: decode_positions(pos_enc, tfs))
 
     @classmethod
     def decoded(cls, ids: np.ndarray, tfs: np.ndarray, positions) -> "PostingsView":
@@ -1779,17 +1828,25 @@ _NO_HITS = pd.DataFrame(
 )
 
 
-def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> pd.DataFrame:
+def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> dict[str, np.ndarray]:
     """Driver-side top-k merge of per-segment candidate rows — the
-    reference's heap loop (index-search.cpp:676-748): order by (score desc,
-    segment_id, doc_id) and keep ≤k rows (per ``by`` group when given)."""
-    keys = ["score", "segment_id", "doc_id"]
-    asc = [False, True, True]
-    if by is not None:
-        keys, asc = [by, *keys], [True, *asc]
-    pdf = pdf.sort_values(keys, ascending=asc, kind="stable")
-    top = pdf.groupby(by, sort=False).head(k) if by is not None else pdf.head(k)
-    return top.reset_index(drop=True)
+    reference's heap loop (index-search.cpp:676-748): one ``np.lexsort`` by
+    (``by``, score desc, segment_id, doc_id), then a rank cut keeping ≤k
+    rows (per ``by`` group when given). Returns the kept rows as ``{column:
+    array}`` (``by``, segment_id, doc_id, score), in that order."""
+    names = ([by] if by is not None else []) + ["segment_id", "doc_id", "score"]
+    cols = {c: pdf[c].to_numpy() for c in names}
+    keys = [cols["doc_id"], cols["segment_id"], -cols["score"]]
+    order = np.lexsort(keys if by is None else [*keys, cols[by]])
+    if by is None:
+        order = order[:k]
+    elif order.size:
+        group = cols[by][order]
+        pos = np.arange(order.size)
+        starts = np.flatnonzero(np.concatenate(([True], group[1:] != group[:-1])))
+        rank = pos - np.repeat(starts, np.diff(np.append(starts, order.size)))
+        order = order[rank < k]
+    return {c: a[order] for c, a in cols.items()}
 
 
 def _top(df: DataFrame, k: int | None, *order) -> DataFrame:
@@ -1905,47 +1962,11 @@ class _SegmentRead:
 
     index: str  # the index directory, which keys _SEGMENT_STATE
     generation: int
-    tables: dict  # table name → path(s)
+    tables: dict  # the generation's state tables (IndexReader.state_tables)
     reads: list  # postings reads, :func:`scan_reads`
     mixed: bool  # composite field\x1fterm keys
     fields: tuple  # the fields whose norms the kernels read
     multifield: bool
-
-
-#: index directory → (generation, files, {(segment_id, field): norms},
-#: {segment_id: sorted deleted doc ids}): each segment's
-#: :class:`_SegmentNorms` (with the chunks it decoded) and delete ids, built
-#: once per generation in a process (the driver, or a Spark worker reused
-#: across jobs) — the norms and docs_mask a reference segment reader opens
-#: once (segment_reader.hpp:35-110). ``files`` are the norms and deletes
-#: paths with their mtimes, like ``_DATASETS``' keys. One generation is held
-#: per index directory: a newer one replaces it, and a reader pinned to an
-#: older one (or a rebuilt directory at a lower generation) reads its own
-#: state uncached.
-_SEGMENT_STATE: dict[str, tuple[int, tuple, dict, dict]] = {}
-#: held while a search looks up or fills :data:`_SEGMENT_STATE`: a search
-#: must not see a segment's norms before its deletes are in
-_SEGMENT_STATE_LOCK = threading.Lock()
-
-
-def _files_key(tables: dict) -> tuple:
-    """The norms and deletes paths of a generation, with their mtimes."""
-    paths = tables["norms"] if isinstance(tables["norms"], list) else [tables["norms"]]
-    paths = [*paths, *([tables["deletes"]] if "deletes" in tables else [])]
-    return tuple((p, os.stat(p.removeprefix("file:")).st_mtime_ns) for p in paths)
-
-
-def _generation_state(read: _SegmentRead) -> tuple[dict, dict]:
-    """The (norms, deletes) maps of ``read``'s generation, held in
-    :data:`_SEGMENT_STATE` unless a newer generation of the index is."""
-    files = _files_key(read.tables)
-    held = _SEGMENT_STATE.get(read.index)
-    if held is not None and held[1] == files:
-        return held[2], held[3]
-    state: tuple[dict, dict] = ({}, {})
-    if held is None or read.generation >= held[0]:
-        _SEGMENT_STATE[read.index] = (read.generation, files, *state)
-    return state
 
 
 def _load_segment_state(sids: list[int], read: _SegmentRead, norms: dict, dels: dict) -> None:
@@ -1971,19 +1992,27 @@ def _postings_table(sids: list[int], read: _SegmentRead) -> pa.Table:
     """``sids``' postings rows of ``read.reads`` as one pyarrow table sorted
     by segment, keyed ``field\\x1fterm`` on mixed-field scans; rows of a
     read without positions carry a null ``pos_enc`` when another read has
-    them."""
+    them. Each read takes only the row groups its terms and tail specs
+    select (:func:`_row_groups`, over the generation's held
+    ``TableParts``), then applies its filter to the rows read."""
+    parts = held_parts(read.index, read.generation, read.tables, "postings", ("field", "term"))
     seg = pc.field("segment_id").isin(sids)
-    cols = _POSTINGS_COLS + ["field"] * read.mixed
-    any_pos = any(pos for _, pos in read.reads)
-    parts = []
-    for pred, pos in read.reads:
-        t = read_table(read.tables["postings"], cols + ["pos_enc"] * pos, pred & seg)
+    cols = _POSTINGS_COLS + ["field"] * read.multifield  # the filter reads field too
+    any_pos = any(pos for _, pos, _ in read.reads)
+    out = []
+    for pred, pos, selects in read.reads:
+        t = parts.read(_row_groups(parts, selects, read.multifield), cols + ["pos_enc"] * pos)
+        if t is None:
+            continue
+        t = t.filter(pred & seg)
+        if read.multifield and not read.mixed:
+            t = t.drop_columns("field")
         if any_pos and not pos:
             t = t.append_column("pos_enc", pa.nulls(len(t), pa.binary()))
-        parts.append(t)
-    if not parts:
+        out.append(t)
+    if not out:
         return _NO_POSTINGS
-    post = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+    post = out[0] if len(out) == 1 else pa.concat_tables(out, promote_options="default")
     if read.mixed:
         key = pc.binary_join_element_wise(post["field"], post["term"], FIELD_SEP)
         post = post.set_column(post.schema.get_field_index("term"), "term", key)
@@ -1999,7 +2028,7 @@ def _segment_frames(sids: list[int], read: _SegmentRead):
     generation's process-wide state (:data:`_SEGMENT_STATE`); only segments
     it does not hold yet read them, with pyarrow."""
     with _SEGMENT_STATE_LOCK:
-        norms, dels = _generation_state(read)
+        norms, dels, _ = generation_state(read.index, read.generation, read.tables)
         miss = [sid for sid in sids if any((sid, f) not in norms for f in read.fields)]
         if miss:
             _load_segment_state(miss, read, norms, dels)
@@ -2015,11 +2044,11 @@ def _segment_loop(sids: list[int], read: _SegmentRead, kernel):
     """The per-segment reader loop (segment_reader.hpp:35-110) of both
     placements: one pyarrow read of ``sids``' postings (norms and deletes
     once per generation, :func:`_segment_frames`), then ``kernel(segment_id,
-    postings, norms, deletes)`` per segment, serially. Yields each non-empty
-    kernel frame."""
+    postings, norms, deletes)`` per segment, serially. Yields each kernel
+    output that has rows (a ``{column: numpy array}`` dict)."""
     for args in _segment_frames(sids, read):
         out = kernel(*args)
-        if len(out):
+        if out is not None:
             yield out
 
 
@@ -2032,7 +2061,7 @@ def _segment_task(groups, read: tuple, kernel, schema: pa.Schema):
         for batch in batches:
             for gid in batch.column(0).to_pylist():
                 for out in _segment_loop(groups[gid], read, kernel):
-                    yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+                    yield pa.RecordBatch.from_pydict(out, schema=schema)
 
     return run
 
@@ -2100,13 +2129,9 @@ class Searcher:
         reader = self.reader
         multi = reader.is_multifield
         fields = (scan.fields or [reader.default_field]) if multi else [reader.default_field]
-        tables = {
-            t: reader.meta["tables"][t]
-            for t in ("postings", "norms", "deletes") if t in reader.meta["tables"]
-        }
         return _SegmentRead(
-            os.path.abspath(reader.index_path), int(reader.meta["generation"]), tables,
-            scan_reads(scan, multi), scan.mixed, tuple(fields), multi,
+            os.path.abspath(reader.index_path), int(reader.meta["generation"]),
+            reader.state_tables, scan_reads(scan, multi), scan.mixed, tuple(fields), multi,
         )
 
     def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
@@ -2135,7 +2160,9 @@ class Searcher:
         segment in this process — no Spark job."""
         sids = sorted(self.reader.segment_docs_counts())
         outs = list(_segment_loop(sids, self._segment_read(scan), kernel))
-        return pd.concat(outs, ignore_index=True) if outs else _NO_SEGMENT_ROWS.copy()
+        if not outs:
+            return _NO_SEGMENT_ROWS.copy()
+        return pd.DataFrame({c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
 
     def unpersist(self) -> None:
         """No-op, kept for callers: a Searcher caches nothing in Spark (each
@@ -2345,8 +2372,8 @@ class Searcher:
         k: int | None,
         dtype: str,
     ):
-        """Per-query top-k of a compiled batch as pandas rows (query,
-        segment_id, doc_id, score), ordered by (query, score desc,
+        """Per-query top-k of a compiled batch as ``{column: array}`` rows
+        (query, segment_id, doc_id, score), ordered by (query, score desc,
         segment_id, doc_id): the one merge of every k-bounded call, on the
         driver (:func:`_driver_topk`, after :meth:`_bind_phrase_idf`). At
         most #segments × #plans × (k + 16) kernel rows reach it.
@@ -2363,8 +2390,10 @@ class Searcher:
         model = self.model
         dt = _dtype(dtype)
         if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
+            if k is not None:
+                return _driver_topk(_NO_SEGMENT_ROWS, k, by="query")
             empty = _NO_SEGMENT_ROWS.drop(columns="seg_matches")
-            return empty if k is not None else _LocalResult(self.reader.spark, empty, BATCH_OUT_SCHEMA)
+            return _LocalResult(self.reader.spark, empty, BATCH_OUT_SCHEMA)
 
         in_driver = k is not None and scan.planned_postings <= self.DRIVER_MAX_POSTINGS
         mixed, avgdl, avg_map = self._norms_ctx(scan)
@@ -2372,9 +2401,9 @@ class Searcher:
         # pickled command larger than PythonUtils.getBroadcastThreshold
         items = list(plans.items())
 
-        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> pd.DataFrame:
+        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> dict | None:
             if not norms:
-                return _NO_SEGMENT_ROWS  # postings may be empty: All plans use norms only
+                return None  # postings may be empty: All plans use norms only
             dl = next(iter(norms.values()))
             dl_map = norms if mixed else None
             sv = _SegmentViews(postings)
@@ -2400,17 +2429,15 @@ class Searcher:
                     id_parts.append(ids.astype(np.int32))
                     score_parts.append(scores.astype(np.float64))
             if not sizes:
-                return _NO_SEGMENT_ROWS
-            # one frame per segment: every plan's rows, in plan order
-            return pd.DataFrame(
-                {
-                    "query": np.repeat(np.array(names, dtype=object), sizes),
-                    "segment_id": np.full(sum(sizes), sid, np.int32),
-                    "doc_id": np.concatenate(id_parts),
-                    "score": np.concatenate(score_parts),
-                    "seg_matches": np.repeat(np.array(matches, dtype=np.int64), sizes),
-                }
-            )
+                return None
+            # one set of columns per segment: every plan's rows, in plan order
+            return {
+                "query": np.repeat(np.array(names, dtype=object), sizes),
+                "segment_id": np.full(sum(sizes), sid, np.int32),
+                "doc_id": np.concatenate(id_parts),
+                "score": np.concatenate(score_parts),
+                "seg_matches": np.repeat(np.array(matches, dtype=np.int64), sizes),
+            }
 
         if in_driver:
             pdf = self._segment_rows(kernel, scan)
@@ -2420,37 +2447,43 @@ class Searcher:
                 return local
             pdf = local.toPandas()
         self._bind_phrase_idf(pdf, plans, dtype)
-        return _driver_topk(pdf.drop(columns="seg_matches"), k, by="query")
+        return _driver_topk(pdf, k, by="query")
 
     def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
-        """Bind each unbound phrase plan's idf into its kernel rows in place:
-        the per-segment match counts sum to the exact phrase df (the
+        """Bind each unbound phrase plan's idf into its kernel rows: the
+        per-segment match counts sum to the exact phrase df (the
         phrase_query.cpp one-pass stats collection), and every const-1 score
-        is multiplied by that df's idf in ``dtype``."""
+        is multiplied by that df's idf in ``dtype``. Replaces ``pdf``'s
+        score column when a plan is unbound."""
+        unbound = [(name, plan) for name, plan in plans.items() if _unbound(plan)]
+        if not unbound:
+            return
         dt = _dtype(dtype)
-        for name, plan in plans.items():
-            if _unbound(plan):
-                rows = pdf["query"] == name
-                dfp = pdf.loc[rows].drop_duplicates("segment_id")["seg_matches"].sum()
-                idf = dt(self._phrase_idf(plan, dfp, dtype))
-                pdf.loc[rows, "score"] = (pdf.loc[rows, "score"].to_numpy(dt) * idf).astype(np.float64)
+        query, seg = pdf["query"].to_numpy(), pdf["segment_id"].to_numpy()
+        matches = pdf["seg_matches"].to_numpy()
+        score = pdf["score"].to_numpy(np.float64, copy=True)
+        for name, plan in unbound:
+            rows = np.flatnonzero(query == name)
+            _, first = np.unique(seg[rows], return_index=True)  # one count per segment
+            idf = dt(self._phrase_idf(plan, matches[rows[first]].sum(), dtype))
+            score[rows] = (score[rows].astype(dt) * idf).astype(np.float64)
+        pdf["score"] = score
 
-    def _hits_frame(
-        self, hits: pd.DataFrame, with_keys: bool, score_cols: tuple[str, ...] = ("score",)
-    ) -> DataFrame:
-        """The ≤k ranked driver-side hits, in their order, as the search
-        result: a :class:`_LocalResult` of (doc_key?, segment_id, doc_id,
-        *score_cols) that keeps the rows on the driver. Doc keys come from
-        :meth:`IndexReader.fetch_docs` — no Spark job."""
-        hits = hits[["segment_id", "doc_id", *score_cols]]
+    def _hits_frame(self, hits, with_keys: bool, score_cols: tuple[str, ...] = ("score",)) -> DataFrame:
+        """The ≤k ranked driver-side hits (a pandas frame or a ``{column:
+        array}`` dict), in their order, as the search result: a
+        :class:`_LocalResult` of (doc_key?, segment_id, doc_id, *score_cols)
+        that keeps the rows on the driver. Doc keys come from
+        :meth:`IndexReader.fetch_docs` — no Spark job — and attach by
+        position."""
+        cols = {c: np.asarray(hits[c]) for c in ("segment_id", "doc_id", *score_cols)}
         schema = "segment_id int, doc_id int, " + ", ".join(f"{c} double" for c in score_cols)
         if with_keys:
-            keys = self.reader.fetch_docs(hits["segment_id"], hits["doc_id"])
-            hits = hits.merge(keys, on=["segment_id", "doc_id"], how="inner")[
-                ["doc_key", "segment_id", "doc_id", *score_cols]
-            ]
+            keys = self.reader.fetch_docs(cols["segment_id"], cols["doc_id"])
+            found = keys.index.to_numpy()
+            cols = {"doc_key": keys["doc_key"].to_numpy(), **{c: a[found] for c, a in cols.items()}}
             schema = "doc_key string, " + schema
-        return _LocalResult(self.reader.spark, hits, schema)
+        return _LocalResult(self.reader.spark, pd.DataFrame(cols), schema)
 
     def _search_column_exists(self, node: flt.ColumnExists, k: int | None, with_keys: bool) -> DataFrame:
         """by_column_existence (column_existence_filter.cpp): docs whose stored
@@ -2808,7 +2841,7 @@ class PreparedBatch:
         ``collect`` makes no JVM call)."""
         s = self._searcher
         rows = s._execute_batch(self.plans, self.scan, k, self.dtype)
-        return _LocalResult(s.reader.spark, rows, BATCH_OUT_SCHEMA)
+        return _LocalResult(s.reader.spark, pd.DataFrame(rows), BATCH_OUT_SCHEMA)
 
     def unpersist(self) -> None:
         """No-op, kept for callers: a batch holds nothing in Spark (each

@@ -7,12 +7,10 @@ all/wand); these tests assert the same property for our kernels on randomized
 posting lists.
 """
 
-from types import SimpleNamespace
-
 import numpy as np
 import pytest
 
-from iresearch_spark.index.codec import encode_postings
+from iresearch_spark.index.codec import decode_postings, encode_postings
 from iresearch_spark.search.bm25 import BM25Model, bm25_idf, bm25_score
 from iresearch_spark.search.executor import (
     PostingsView,
@@ -28,6 +26,12 @@ K1, B = 1.2, 0.75
 MODEL = BM25Model(K1, B)
 
 
+def _view(enc, cls=PostingsView):
+    """A view over one encoded list, decoded like a segment's lists."""
+    ids, tfs, _ = decode_postings([enc.doc_ids_enc], [enc.freqs_enc])
+    return cls.decoded(ids, tfs, lambda: np.zeros(0, np.int64))
+
+
 def _make_corpus(rng, n_terms):
     """Random postings + doc lengths; returns (views, idfs, dl, avgdl)."""
     dl = rng.integers(20, 400, size=N_DOCS).astype(np.int64)
@@ -37,19 +41,7 @@ def _make_corpus(rng, n_terms):
         df = int(rng.integers(5, N_DOCS))
         ids = np.sort(rng.choice(np.arange(1, N_DOCS + 1), size=df, replace=False))
         tfs = rng.integers(1, 15, size=df).astype(np.int64)
-        enc = encode_postings(ids, tfs)
-        row = SimpleNamespace(
-            docs_count=enc.docs_count,
-            max_freq=enc.max_freq,
-            block_last_doc=enc.block_last_doc,
-            block_doc_off=enc.block_doc_off,
-            block_freq_off=enc.block_freq_off,
-            block_max_freq=enc.block_max_freq,
-            doc_ids_enc=enc.doc_ids_enc,
-            freqs_enc=enc.freqs_enc,
-            pos_enc=b"",
-        )
-        views.append(PostingsView(row))
+        views.append(_view(encode_postings(ids, tfs)))
         idfs.append(float(bm25_idf(df, N_DOCS)))
     return views, idfs, dl, avgdl
 
@@ -115,12 +107,6 @@ def test_wand_actually_skips_blocks():
     tfs = np.ones(20000, dtype=np.int64)
     tfs[:16] = 50  # one hot block holding the whole top-10
     enc = encode_postings(ids, tfs)
-    row = SimpleNamespace(
-        docs_count=enc.docs_count, max_freq=enc.max_freq,
-        block_last_doc=enc.block_last_doc, block_doc_off=enc.block_doc_off,
-        block_freq_off=enc.block_freq_off, block_max_freq=enc.block_max_freq,
-        doc_ids_enc=enc.doc_ids_enc, freqs_enc=enc.freqs_enc, pos_enc=b"",
-    )
     calls = []
 
     class Spy(PostingsView):
@@ -130,7 +116,7 @@ def test_wand_actually_skips_blocks():
             calls.append(len(blocks))
             return super().decode_blocks(blocks)
 
-    view = Spy(row)
+    view = _view(enc, Spy)
     dl = np.full(20000, 100, dtype=np.int64)
     _wand_single_term(view, 2.0, 1.0, 10, dl, 100.0, MODEL, np.float64)
     assert sum(calls) < enc.block_last_doc.size  # decoded strictly fewer blocks
@@ -169,5 +155,5 @@ def test_wand_skips_blocks_of_a_segment_view(monkeypatch):
     dl = np.full(20000, 100, dtype=np.int64)
     got = _wand_single_term(sv.view("flat"), 2.0, 1.0, 10, dl, 100.0, MODEL, np.float64)
     assert 0 < sum(calls) < enc.block_last_doc.size
-    whole = PostingsView(SimpleNamespace(doc_ids_enc=enc.doc_ids_enc, freqs_enc=enc.freqs_enc))
+    whole = _view(enc)
     assert _topk_tuple(*got) == _topk_tuple(*_full_term(whole, 2.0, dl, 100.0, np.float64))

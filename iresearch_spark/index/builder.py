@@ -36,8 +36,8 @@ Spark-first re-expression of the reference write path (SURVEY.md §3.1):
 * stage ``norms``     — per-segment dense ``doc_len`` arrays, VByte-encoded, one
   row per segment (Norm2 columnstore reader analogue — kernels index it by
   doc_id with zero joins).
-* stage ``field_stats`` — docs_with_field / total_term_freq for BM25
-  (bm25.cpp:495-519).
+  Each norms row also carries its chunk's docs_with_field and sum_len, the
+  BM25 field stats (bm25.cpp:495-519) that ``IndexReader.field_stats`` sums.
 * commit — two-phase: stages write under ``gen=<g>/``, a ``_pending.json`` is
   written then atomically renamed to ``meta.json`` (index_writer.cpp:2606-2718
   ``pending_segments_<gen>`` → ``segments_<gen>``).

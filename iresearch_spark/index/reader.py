@@ -378,18 +378,12 @@ class IndexReader:
         """{docs_with_field, total_term_freq, avgdl} for one field — collected
         once per field, tiny (bm25.cpp:495-519 field_collector analogue).
 
-        Derived from the per-segment norms rows; legacy indexes with a
-        dedicated field_stats table still read that."""
+        Derived from the per-segment norms rows."""
         fname = self._resolve_field(field)
         if fname not in self._field_stats:
-            if "field_stats" in self.meta["tables"]:
-                row = self.spark.read.parquet(self.meta["tables"]["field_stats"]).collect()[0]
-                n = int(row["docs_with_field"])
-                ttf = int(row["total_term_freq"])
-            else:
-                rows = self._norms_rows(fname)
-                n = int(rows["docs_with_field"].sum())
-                ttf = int(rows["sum_len"].sum())
+            rows = self._norms_rows(fname)
+            n = int(rows["docs_with_field"].sum())
+            ttf = int(rows["sum_len"].sum())
             self._field_stats[fname] = {
                 "docs_with_field": n,
                 "total_term_freq": ttf,

@@ -48,6 +48,9 @@ in the merge:
   (:class:`_LocalResult`): ``collect``/``toPandas``/``count``/``take`` answer
   from them, and only a Spark operation on the result builds its JVM plan.
   ``matches`` has no merge: its result is the lazy kernel job itself.
+  ``search_ordered`` runs the same loop and merge with a kernel that scores
+  every scorer's plan on each segment, and ``highlight`` / ``payloads``
+  read the sidecar rows of ``search``'s ≤k hits on the driver.
 
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
@@ -123,6 +126,7 @@ from ..index.reader import (  # _SEGMENT_STATE: the per-generation state this mo
     generation_state,
     held_parts,
     read_frame,
+    read_table,
 )
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
@@ -1828,15 +1832,18 @@ _NO_HITS = pd.DataFrame(
 )
 
 
-def _driver_topk(pdf: pd.DataFrame, k: int, by: str | None = None) -> dict[str, np.ndarray]:
+def _driver_topk(
+    pdf: pd.DataFrame, k: int, by: str | None = None, scores: tuple[str, ...] = ("score",)
+) -> dict[str, np.ndarray]:
     """Driver-side top-k merge of per-segment candidate rows — the
     reference's heap loop (index-search.cpp:676-748): one ``np.lexsort`` by
-    (``by``, score desc, segment_id, doc_id), then a rank cut keeping ≤k
-    rows (per ``by`` group when given). Returns the kept rows as ``{column:
-    array}`` (``by``, segment_id, doc_id, score), in that order."""
-    names = ([by] if by is not None else []) + ["segment_id", "doc_id", "score"]
+    (``by``, each of ``scores`` desc, segment_id, doc_id), then a rank cut
+    keeping ≤k rows (per ``by`` group when given). Returns the kept rows as
+    ``{column: array}`` (``by``, segment_id, doc_id, *scores), in that
+    order."""
+    names = ([by] if by is not None else []) + ["segment_id", "doc_id", *scores]
     cols = {c: pdf[c].to_numpy() for c in names}
-    keys = [cols["doc_id"], cols["segment_id"], -cols["score"]]
+    keys = [cols["doc_id"], cols["segment_id"], *(-cols[c] for c in reversed(scores))]
     order = np.lexsort(keys if by is None else [*keys, cols[by]])
     if by is None:
         order = order[:k]
@@ -2185,22 +2192,17 @@ class Searcher:
         driver and the doc keys are read from the docs table without Spark
         (:meth:`IndexReader.fetch_docs`). The result holds those ≤k rows on
         the driver (:class:`_LocalResult`): ``collect`` and ``toPandas`` make
-        no JVM call. Stored-column filters (All, ColumnExists, NumericRange,
-        Nested) stay lazy Spark plans.
+        no JVM call. ``All`` is scored from the norms by the same kernel:
+        every live doc at its boost, in (segment_id, doc_id) order.
+        Stored-column filters (ColumnExists, NumericRange, Nested) stay lazy
+        Spark plans.
         """
         nf = flt.normalize(f)
         stored = self._stored_filter(nf, k, with_keys)
         if stored is not None:
             return stored
         plans, scan = self._compile({"": nf}, dtype)
-        plan = plans[""]
-        if plan["op"] == "all":
-            docs = self.reader.live_docs()
-            out = docs.select(
-                "doc_key", "segment_id", "doc_id", F.lit(float(plan["boost"])).alias("score")
-            ).orderBy("segment_id", "doc_id").limit(k)
-            return out if with_keys else out.drop("doc_key")
-        if plan["op"] == "empty":
+        if plans[""]["op"] == "empty":
             return self._hits_frame(_NO_HITS, with_keys)
         # a batch of one: the batch kernel, merged on the driver
         return self._hits_frame(self._execute_batch(plans, scan, k, dtype), with_keys)
@@ -2218,25 +2220,28 @@ class Searcher:
         return None
 
     def _compile(
-        self, filters: dict[str, flt.Filter], dtype: str
+        self, filters: dict[str, flt.Filter], dtype: str, model: ScoreModel | None = None
     ) -> tuple[dict[str, dict], ScanSpec]:
-        """:func:`compile_plans` of normalized root filters — the one compile
-        of ``search``, ``matches`` and ``prepare``. Under ``exact_df`` each
-        root Phrase/SamePosition gets ``"idf": None``: the kernel scores it at
-        const 1 and reports its per-segment match counts, and
+        """:func:`compile_plans` of normalized root filters under ``model``
+        (the searcher's when None) — the one compile of ``search``,
+        ``matches``, ``prepare`` and ``search_ordered``. Under ``exact_df``
+        each root Phrase/SamePosition gets ``"idf": None``: the kernel scores
+        it at const 1 and reports its per-segment match counts, and
         :meth:`_bind_phrase_idf` multiplies in the phrase-df idf."""
-        plans, scan = compile_plans(filters, self.reader, self.k1, self.b, dtype, model=self.model)
+        model = model or self.model
+        plans, scan = compile_plans(filters, self.reader, self.k1, self.b, dtype, model=model)
         if self.phrase_scoring == "exact_df":
             for plan in plans.values():
                 if plan["op"] == "phrase":
                     plan["idf"] = None
         return plans, scan
 
-    def _phrase_idf(self, plan: dict, dfp: int, dtype: str) -> float:
-        """The idf of an unbound phrase plan matched by ``dfp`` live docs,
-        from the stats of the plan's (first slot's) field."""
+    def _phrase_idf(self, plan: dict, dfp: int, dtype: str, model: ScoreModel | None = None) -> float:
+        """The idf under ``model`` (the searcher's when None) of an unbound
+        phrase plan matched by ``dfp`` live docs, from the stats of the
+        plan's (first slot's) field."""
         n = self.reader.field_stats(plan["field"])["docs_with_field"]
-        return self.model.term_const(int(dfp), n, _dtype(dtype))
+        return (model or self.model).term_const(int(dfp), n, _dtype(dtype))
 
     def search_ordered(
         self,
@@ -2253,33 +2258,82 @@ class Searcher:
 
         Returns (doc_key?, segment_id, doc_id, score0..scoreN).
 
-        Scale shape: one full match pass per bucket (each a distributed
-        kernel job over the pruned scan), joined on (segment_id, doc_id) —
-        the join moves only the MATCH set, never the corpus — and the
-        lexicographic top-k is a TakeOrdered (no global sort) whose ≤k rows
-        are collected and keyed like :meth:`search`'s. Pruning
-        (WAND/MaxScore) is single-bucket-bound in the reference too, so the
-        exact per-bucket evaluation here is the honest equivalent."""
+        Scale shape: placed, merged and keyed like :meth:`search`. The
+        filter compiles once per scorer (that scorer's model), and one
+        per-segment loop runs a kernel that evaluates every scorer's plan
+        exact on each segment and keeps the segment's lexicographic top-k
+        (an exact cut: the order is total). Pruning (WAND/MaxScore) is
+        single-bucket-bound in the reference too. A stored-column root
+        filter (ColumnExists, NumericRange, Nested) has no postings kernel:
+        it joins one lazy :meth:`matches` plan per scorer on (segment_id,
+        doc_id)."""
         if not scorers:
             raise ValueError("scorers must name at least one scorer")
-        legs = []
-        for i, name in enumerate(scorers):
-            s = Searcher(
-                self.reader, self.k1, self.b, scorer=name,
-                phrase_scoring=self.phrase_scoring,
-            )
-            legs.append(
-                s.matches(f, dtype=dtype).withColumnRenamed("score", f"score{i}")
-            )
-        out = legs[0]
-        for leg in legs[1:]:
-            # identical boolean structure → identical match sets; inner join
-            out = out.join(leg, ["segment_id", "doc_id"])
-        order = [F.desc(f"score{i}") for i in range(len(scorers))] + [
-            F.asc("segment_id"), F.asc("doc_id"),
-        ]
         score_cols = tuple(f"score{i}" for i in range(len(scorers)))
-        return self._hits_frame(out.orderBy(*order).limit(k).toPandas(), with_keys, score_cols)
+        nf = flt.normalize(f)
+        if isinstance(nf, (flt.ColumnExists, flt.NumericRange, flt.Nested)):
+            legs = [
+                Searcher(self.reader, self.k1, self.b, scorer=name, phrase_scoring=self.phrase_scoring)
+                .matches(nf, dtype=dtype)
+                .withColumnRenamed("score", col)
+                for name, col in zip(scorers, score_cols)
+            ]
+            out = legs[0]
+            for leg in legs[1:]:
+                # identical boolean structure → identical match sets; inner join
+                out = out.join(leg, ["segment_id", "doc_id"])
+            order = [F.desc(c) for c in score_cols] + [F.asc("segment_id"), F.asc("doc_id")]
+            return self._hits_frame(out.orderBy(*order).limit(k).toPandas(), with_keys, score_cols)
+        models = {c: get_model(name, self.k1, self.b) for c, name in zip(score_cols, scorers)}
+        plans: dict[str, dict] = {}
+        for c, model in models.items():
+            compiled, scan = self._compile({c: nf}, dtype, model)
+            plans.update(compiled)
+        root = plans[score_cols[0]]
+        dt = _dtype(dtype)
+        mixed, avgdl, avg_map = self._norms_ctx(scan)
+        # every scorer's plan has the same boolean structure, so the same
+        # matches; an unbound idf scales a bucket alike, yet its ULP
+        # rounding may reorder near-ties: 16 rows of slack
+        cut = k + 16 if _unbound(root) else k
+        legs = [(plans[c], models[c]) for c in score_cols]
+
+        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> dict | None:
+            if not norms:
+                return None  # postings may be empty: All plans use norms only
+            dl = next(iter(norms.values()))
+            nctx = (norms, avg_map) if mixed else None
+            sv = _SegmentViews(postings)
+            evals = [
+                _mask_deleted(*_eval_plan(plan, sv, dl, avgdl, model, dt, nctx), dels)
+                for plan, model in legs
+            ]
+            ids = evals[0][0]
+            if not ids.size:
+                return None
+            scores = [sc.astype(np.float64) for _, sc in evals]
+            top = np.lexsort([ids, *(-sc for sc in reversed(scores))])[:cut]
+            n = top.size * len(legs)
+            # one block of rows per scorer, each in the same doc order
+            return {
+                "query": np.repeat(np.array(score_cols, dtype=object), top.size),
+                "segment_id": np.full(n, sid, np.int32),
+                "doc_id": np.tile(ids[top].astype(np.int32), len(legs)),
+                "score": np.concatenate([sc[top] for sc in scores]),
+                "seg_matches": np.full(n, ids.size if _unbound(root) else 0, np.int64),
+            }
+
+        if scan.planned_postings <= self.DRIVER_MAX_POSTINGS:
+            pdf = self._segment_rows(kernel, scan)
+        else:
+            pdf = self._segment_job(kernel, scan).toPandas()
+        self._bind_phrase_idf(pdf, plans, dtype, models)
+        # the scorers' row blocks arrive aligned: one column per scorer
+        query, score = pdf["query"].to_numpy(), pdf["score"].to_numpy()
+        wide = pdf.loc[query == score_cols[0], ["segment_id", "doc_id"]].assign(
+            **{c: score[query == c] for c in score_cols}
+        )
+        return self._hits_frame(_driver_topk(wide, k, scores=score_cols), with_keys, score_cols)
 
     def matches(self, f: flt.Filter, dtype: str = "float64") -> DataFrame:
         """ALL matching (segment_id, doc_id, score) rows — no top-k, no global
@@ -2295,11 +2349,6 @@ class Searcher:
             return stored
         plans, scan = self._compile({"": nf}, dtype)
         plan = plans[""]
-        if plan["op"] == "all":
-            docs = self.reader.live_docs()
-            return docs.select(
-                "segment_id", "doc_id", F.lit(float(plan["boost"])).alias("score")
-            )
         if plan["op"] == "empty":
             return self.reader.spark.createDataFrame([], KERNEL_OUT_SCHEMA)
         local = self._execute_batch(plans, scan, None, dtype)
@@ -2449,23 +2498,28 @@ class Searcher:
         self._bind_phrase_idf(pdf, plans, dtype)
         return _driver_topk(pdf, k, by="query")
 
-    def _bind_phrase_idf(self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str) -> None:
+    def _bind_phrase_idf(
+        self, pdf: pd.DataFrame, plans: dict[str, dict], dtype: str, models: dict | None = None
+    ) -> None:
         """Bind each unbound phrase plan's idf into its kernel rows: the
         per-segment match counts sum to the exact phrase df (the
         phrase_query.cpp one-pass stats collection), and every const-1 score
-        is multiplied by that df's idf in ``dtype``. Replaces ``pdf``'s
-        score column when a plan is unbound."""
+        is multiplied by that df's idf in ``dtype``, under the plan's model
+        in ``models`` (the searcher's when absent). Replaces ``pdf``'s score
+        column when a plan is unbound."""
         unbound = [(name, plan) for name, plan in plans.items() if _unbound(plan)]
         if not unbound:
             return
         dt = _dtype(dtype)
+        models = models or {}
         query, seg = pdf["query"].to_numpy(), pdf["segment_id"].to_numpy()
         matches = pdf["seg_matches"].to_numpy()
         score = pdf["score"].to_numpy(np.float64, copy=True)
         for name, plan in unbound:
             rows = np.flatnonzero(query == name)
             _, first = np.unique(seg[rows], return_index=True)  # one count per segment
-            idf = dt(self._phrase_idf(plan, matches[rows[first]].sum(), dtype))
+            dfp = matches[rows[first]].sum()
+            idf = dt(self._phrase_idf(plan, dfp, dtype, models.get(name)))
             score[rows] = (score[rows].astype(dt) * idf).astype(np.float64)
         pdf["score"] = score
 
@@ -2601,28 +2655,34 @@ class Searcher:
             topk = _top(out, k, F.desc("score"), "segment_id", "doc_id")
         return topk if with_keys else topk.drop("doc_key")
 
-    def _sidecar_targets(
+    def _hit_occurrences(
         self,
         f: flt.Filter,
         k: int,
         dtype: str,
         table: str,
-        cols: tuple[str, ...],
+        streams: tuple[str, ...],
         surface: str,
-        build_flag: str,
-    ):
-        """Shared :meth:`highlight` / :meth:`payloads` scaffolding: extract
-        the query's term set from the normalized filter (Term/Terms/And/Or),
-        run the normal pruned top-k search, and return the ≤k target docs
-        (``segment_id → sorted doc ids``), their ``(segment_id, doc_id) →
-        (doc_key, score)`` and the term+segment-pruned sidecar scan. The two
-        dicts ride in the caller's kernel closure. Returns None when the
-        search matches nothing; raises if the index lacks the sidecar
-        table."""
+        first_only: bool = False,
+    ) -> pd.DataFrame:
+        """Shared :meth:`highlight` / :meth:`payloads` read, on the driver:
+        the ≤k hits of :meth:`search`, then one pyarrow read of the sidecar
+        ``table``'s rows of the query's terms (Term/Terms/And/Or) in the hit
+        segments, decoded in one pass (:func:`decode_postings`; ``pay_enc``
+        by :func:`vbyte_decode`, a positional stream by
+        :func:`decode_positions`); the hit docs' occurrences are gathered in
+        numpy, as the reference reads stored values by doc id from the open
+        reader (index-search.cpp:676-748).
+
+        Returns (doc_key, segment_id, doc_id, score, term, *streams): one row
+        per occurrence of a query term in a hit doc (only its first with
+        ``first_only``), ordered by (hit rank, term, occurrence) — the hit
+        rank is the search order (score desc, segment_id, doc_id). Raises if
+        the index lacks the sidecar table."""
         if table not in self.reader.meta.get("tables", {}):
             raise ValueError(
                 f"index has no {table} sidecar: build with "
-                f"IndexBuilder(..., {build_flag}=True)"
+                f"IndexBuilder(..., with_{table}=True)"
             )
 
         def terms_of(node: flt.Filter) -> set[str]:
@@ -2641,22 +2701,49 @@ class Searcher:
             )
 
         terms = sorted(terms_of(flt.normalize(f)))
-        hits = self.search(f, k=k, dtype=dtype, with_keys=True).collect()  # ≤ k
-        if not hits:
-            return None
-        targets: dict[int, list] = {}
-        keys: dict[tuple[int, int], tuple[str, float]] = {}
-        for r in hits:
-            sid, did = int(r["segment_id"]), int(r["doc_id"])
-            targets.setdefault(sid, []).append(did)
-            keys[(sid, did)] = (r["doc_key"], float(r["score"]))
-        tgt = {s: np.asarray(sorted(d), dtype=np.int64) for s, d in targets.items()}
-        scan = (
-            self.reader._table(table)
-            .where(F.col("term").isin(terms) & F.col("segment_id").isin(list(tgt)))
-            .select(*cols)
+        hits = self.search(f, k=k, dtype=dtype).toPandas()  # ≤ k
+        sids = hits["segment_id"].to_numpy().astype(np.int64)
+        want = (sids << 32) | hits["doc_id"].to_numpy().astype(np.int64)
+        pred = pc.field("term").isin(terms) & pc.field("segment_id").isin(np.unique(sids).tolist())
+        cols = ["term", "segment_id", "doc_ids_enc", "freqs_enc", *streams]
+        t = read_table(self.reader.meta["tables"][table], cols, pred)
+        ids, tfs, off = decode_postings(t.column("doc_ids_enc"), t.column("freqs_enc"))
+        row = np.repeat(np.arange(t.num_rows), np.diff(off))  # each posting's row
+        have = (t.column("segment_id").to_numpy().astype(np.int64)[row] << 32) | ids
+        # the postings of hit docs, and each one's hit rank
+        by_key = np.argsort(want)
+        at = np.searchsorted(want, have, sorter=by_key)
+        found = at < want.size
+        found[found] = want[by_key[at[found]]] == have[found]
+        sel = np.flatnonzero(found)
+        rank = by_key[at[sel]]
+        # their occurrences: indexes into the flat per-occurrence streams
+        occ_pre = np.zeros(tfs.size + 1, np.int64)
+        np.cumsum(tfs, out=occ_pre[1:])
+        n = np.minimum(tfs[sel], 1) if first_only else tfs[sel]
+        of = np.repeat(np.arange(sel.size), n)  # each occurrence's posting in sel
+        ordinal = np.arange(of.size) - (np.cumsum(n) - n)[of]
+        occ = occ_pre[sel][of] + ordinal
+        values = {}
+        for name in streams:
+            buf, _ = _flat_bytes(t.column(name))
+            flat = vbyte_decode(buf).astype(np.int64) if name == "pay_enc" else decode_positions(buf, tfs)
+            values[name] = flat[occ]
+        term = t.column("term").to_numpy(zero_copy_only=False)[row[sel][of]]
+        hit = rank[of]
+        _, term_rank = np.unique(term, return_inverse=True)
+        order = np.lexsort((ordinal, term_rank, hit))
+        hit = hit[order]
+        return pd.DataFrame(
+            {
+                "doc_key": hits["doc_key"].to_numpy()[hit],
+                "segment_id": hits["segment_id"].to_numpy()[hit],
+                "doc_id": hits["doc_id"].to_numpy()[hit],
+                "score": hits["score"].to_numpy()[hit],
+                "term": term[order],
+                **{name: v[order] for name, v in values.items()},
+            }
         )
-        return tgt, keys, scan
 
     def highlight(self, f: flt.Filter, k: int = 10, dtype: str = "float64") -> DataFrame:
         """First-occurrence token offsets of the query's terms in the top-k
@@ -2669,62 +2756,20 @@ class Searcher:
         occurring in it): ``(doc_key, segment_id, doc_id, score, term, start,
         end)`` where ``start`` is the 0-based byte offset of the term's FIRST
         occurrence in the doc's lowercased text and ``end = start +
-        len(term)`` (simple-analyzer tokens are verbatim substrings).
+        len(term)`` (simple-analyzer tokens are verbatim substrings), ordered
+        by (score desc, segment_id, doc_id, term).
 
-        Scale shape: top-k is the normal pruned search; the offsets decode is
-        a mapInPandas over the term+segment-pruned sidecar scan with the ≤k
-        target docs in its closure — per-occurrence work only for the touched
-        (term, segment) rows, nothing unbounded at the driver.
+        Scale shape: top-k is :meth:`search`, placed as usual; the offsets
+        of its ≤k hits are one pyarrow read of the query terms' sidecar rows
+        in the hit segments, decoded and gathered on the driver
+        (:meth:`_hit_occurrences`), with no Spark job. The result keeps its
+        rows on the driver (:class:`_LocalResult`).
         """
-        out_schema = (
-            "doc_key string, segment_id int, doc_id int, score double, "
-            "term string, start long, end long"
-        )
-        prep = self._sidecar_targets(
-            f, k, dtype, "offsets",
-            ("term", "segment_id", "doc_ids_enc", "freqs_enc", "offs_enc"),
-            "highlight", "with_offsets",
-        )
-        if prep is None:
-            return self.reader.spark.createDataFrame([], out_schema)
-        targets, keys, offs_scan = prep
-
-        def kernel(batches):
-            for pdf in batches:
-                cols = {c: [] for c in (
-                    "doc_key", "segment_id", "doc_id", "score", "term", "start", "end"
-                )}
-                for row in pdf.itertuples(index=False):
-                    tgt = targets.get(int(row.segment_id))
-                    if tgt is None:
-                        continue
-                    docs = np.cumsum(vbyte_decode(row.doc_ids_enc).astype(np.int64))
-                    freqs = vbyte_decode(row.freqs_enc).astype(np.int64)
-                    sel = np.flatnonzero(np.isin(docs, tgt))
-                    if sel.size == 0:
-                        continue
-                    offs = decode_positions(row.offs_enc, freqs)
-                    occ_start = np.zeros(docs.size, dtype=np.int64)
-                    np.cumsum(freqs[:-1], out=occ_start[1:])
-                    first = offs[occ_start[sel]]
-                    for j, d in zip(first, docs[sel]):
-                        dk, sc = keys[(int(row.segment_id), int(d))]
-                        cols["doc_key"].append(dk)
-                        cols["segment_id"].append(int(row.segment_id))
-                        cols["doc_id"].append(int(d))
-                        cols["score"].append(sc)
-                        cols["term"].append(row.term)
-                        cols["start"].append(int(j))
-                        cols["end"].append(int(j) + len(row.term))
-                yield pd.DataFrame(cols).astype(
-                    {"segment_id": "int32", "doc_id": "int32", "score": "float64",
-                     "start": "int64", "end": "int64"}
-                )
-
-        return (
-            offs_scan.mapInPandas(kernel, out_schema)
-            .orderBy(F.desc("score"), "segment_id", "doc_id", "term")
-        )
+        occ = self._hit_occurrences(f, k, dtype, "offsets", ("offs_enc",), "highlight", True)
+        occ = occ.rename(columns={"offs_enc": "start"})
+        occ["end"] = occ["start"] + np.fromiter(map(len, occ["term"]), np.int64, len(occ))
+        ddl = "doc_key string, segment_id int, doc_id int, score double, term string, start long, end long"
+        return _LocalResult(self.reader.spark, occ, ddl)
 
     def payloads(self, f: flt.Filter, k: int = 10, dtype: str = "float64") -> DataFrame:
         """Per-occurrence payloads of the query's terms in the top-k docs —
@@ -2734,84 +2779,16 @@ class Searcher:
         Requires an index built with ``IndexBuilder(..., with_payloads=True)``
         and a payload-emitting analyzer (``payload:<sep>``). Returns one row
         per (top-k doc, query-term occurrence): ``(doc_key, segment_id,
-        doc_id, score, term, pos, payload)``.
+        doc_id, score, term, pos, payload)``, ordered by (score desc,
+        segment_id, doc_id, term, pos).
 
-        Scale shape mirrors :meth:`highlight`: top-k is the normal pruned
-        search; the payload decode is a mapInPandas over the term+segment-
-        pruned sidecar scan with the ≤k target docs in its closure."""
-        out_schema = (
-            "doc_key string, segment_id int, doc_id int, score double, "
-            "term string, pos long, payload long"
-        )
-        prep = self._sidecar_targets(
-            f, k, dtype, "payloads",
-            ("term", "segment_id", "doc_ids_enc", "freqs_enc", "pos_enc", "pay_enc"),
-            "payloads", "with_payloads",
-        )
-        if prep is None:
-            return self.reader.spark.createDataFrame([], out_schema)
-        targets, keys, pay_scan = prep
-
-        def kernel(batches):
-            for pdf in batches:
-                frames = []
-                for row in pdf.itertuples(index=False):  # one row per (term, segment)
-                    tgt = targets.get(int(row.segment_id))
-                    if tgt is None:
-                        continue
-                    docs = np.cumsum(vbyte_decode(row.doc_ids_enc).astype(np.int64))
-                    freqs = vbyte_decode(row.freqs_enc).astype(np.int64)
-                    sel = np.flatnonzero(np.isin(docs, tgt))
-                    if sel.size == 0:
-                        continue
-                    poss = decode_positions(row.pos_enc, freqs)
-                    pays = vbyte_decode(row.pay_enc).astype(np.int64)
-                    # vectorized per-occurrence gather for the ≤k target docs
-                    occ_start = np.zeros(docs.size, dtype=np.int64)
-                    np.cumsum(freqs[:-1], out=occ_start[1:])
-                    lens = freqs[sel]
-                    out_off = np.zeros(sel.size, np.int64)
-                    np.cumsum(lens[:-1], out=out_off[1:])
-                    rep = np.repeat(np.arange(sel.size), lens)
-                    occ_idx = (
-                        np.arange(int(lens.sum()), dtype=np.int64)
-                        - out_off[rep]
-                        + occ_start[sel][rep]
-                    )
-                    d_ids = docs[sel][rep]
-                    dks, scs = zip(
-                        *(keys[(int(row.segment_id), int(d))] for d in docs[sel])
-                    )
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "doc_key": np.asarray(dks, dtype=object)[rep],
-                                "segment_id": np.full(d_ids.size, int(row.segment_id), np.int32),
-                                "doc_id": d_ids.astype(np.int32),
-                                "score": np.asarray(scs, np.float64)[rep],
-                                "term": row.term,
-                                "pos": poss[occ_idx],
-                                "payload": pays[occ_idx],
-                            }
-                        )
-                    )
-                empty = pd.DataFrame(
-                    {
-                        "doc_key": pd.Series([], dtype=object),
-                        "segment_id": pd.Series([], dtype="int32"),
-                        "doc_id": pd.Series([], dtype="int32"),
-                        "score": pd.Series([], dtype="float64"),
-                        "term": pd.Series([], dtype=object),
-                        "pos": pd.Series([], dtype="int64"),
-                        "payload": pd.Series([], dtype="int64"),
-                    }
-                )
-                yield pd.concat(frames, ignore_index=True) if frames else empty
-
-        return (
-            pay_scan.mapInPandas(kernel, out_schema)
-            .orderBy(F.desc("score"), "segment_id", "doc_id", "term", "pos")
-        )
+        Scale shape mirrors :meth:`highlight`: top-k is :meth:`search`; the
+        positions and payloads of its ≤k hits are one pyarrow read of the
+        sidecar rows, decoded and gathered on the driver with no Spark job."""
+        occ = self._hit_occurrences(f, k, dtype, "payloads", ("pos_enc", "pay_enc"), "payloads")
+        occ = occ.rename(columns={"pos_enc": "pos", "pay_enc": "payload"})
+        ddl = "doc_key string, segment_id int, doc_id int, score double, term string, pos long, payload long"
+        return _LocalResult(self.reader.spark, occ, ddl)
 
 class PreparedBatch:
     """A compiled query batch (``filter::prepared`` analogue): stats baked

@@ -22,7 +22,11 @@ fetched from the docs table with pyarrow (``IndexReader.fetch_docs``).
   patched to raise and no Spark job; Spark operations on a result (select,
   where, join, orderBy, show) match the materialized frame's.
 * Job floor: on the Spark placement a keyed Term search and a keyed Phrase
-  search each run one Spark job; on the driver placement they run none.
+  search each run one Spark job, and so does a two-scorer
+  ``search_ordered``; on the driver placement none of them runs a job, nor
+  do a one-scorer ``search_ordered``, ``search(All())``, ``highlight`` and
+  ``payloads``. The last two give the same rows under both placements, and
+  their results answer like Spark's too.
 * Placement choice: a batch planning more postings than
   ``DRIVER_MAX_POSTINGS`` runs one Spark job, a batch at the constant runs
   none and returns the same rows.
@@ -230,6 +234,72 @@ def test_keyed_term_and_phrase_run_no_job_in_driver(spark, small_index):
 
 
 SCAN_OR_HASH = flt.Or((flt.Term("scan"), flt.Term("hash")))
+
+
+@pytest.fixture(scope="module")
+def sidecar_indexes(spark, tmp_path_factory):
+    """(offsets index, payloads index) over small corpora of WORDS."""
+    offs = str(tmp_path_factory.mktemp("keyed_offs"))
+    df = spark.createDataFrame(_corpus("h", 60, 7), "doc_key string, text string")
+    IndexBuilder(spark, offs, num_segments=3, with_offsets=True).build(
+        df, key_col="doc_key", text_col="text"
+    )
+    pays = str(tmp_path_factory.mktemp("keyed_pays"))
+    rows = [
+        (key, " ".join(f"{w}|{7 * j + 1}" for j, w in enumerate(text.split())))
+        for key, text in _corpus("y", 60, 8)
+    ]
+    IndexBuilder(spark, pays, analyzer="payload:|", num_segments=3, with_payloads=True).build(
+        spark.createDataFrame(rows, "doc_key string, text string"), key_col="doc_key", text_col="text"
+    )
+    return IndexReader(spark, offs), IndexReader(spark, pays)
+
+
+def _sidecar_results(sidecar_indexes, placement: str) -> tuple[DataFrame, DataFrame]:
+    offs, pays = sidecar_indexes
+    return (
+        _searcher(offs, placement).highlight(SCAN_OR_HASH, k=K),
+        _searcher(pays, placement).payloads(SCAN_OR_HASH, k=K),
+    )
+
+
+def test_driver_placed_entry_points_run_no_job(spark, small_index, sidecar_indexes):
+    s = _searcher(small_index, "driver")
+    offs, pays = (_searcher(r, "driver") for r in sidecar_indexes)
+    runs = {
+        "ordered_1": lambda: s.search_ordered(SCAN_OR_HASH, k=K).collect(),
+        "ordered_2": lambda: s.search_ordered(SCAN_OR_HASH, k=K, scorers=("bm25", "tfidf")).collect(),
+        "highlight": lambda: offs.highlight(SCAN_OR_HASH, k=K).collect(),
+        "payloads": lambda: pays.payloads(SCAN_OR_HASH, k=K).collect(),
+        "all": lambda: s.search(flt.All(), k=K).collect(),
+    }
+    for run in runs.values():  # warm the readers' vocabularies and stats
+        assert run()
+    assert {name: _jobs_of(spark, run) for name, run in runs.items()} == dict.fromkeys(runs, 0)
+
+
+def test_ordered_spark_placement_runs_one_job(spark, small_index):
+    s = _searcher(small_index, "spark")
+
+    def run():
+        return s.search_ordered(SCAN_OR_HASH, k=K, scorers=("bm25", "tfidf")).collect()
+
+    want = run()
+    got = []
+    assert _jobs_of(spark, lambda: got.extend(run())) == 1
+    assert got == want and got
+
+
+def test_sidecar_rows_equal_under_both_placements(sidecar_indexes):
+    rows = {p: [r.collect() for r in _sidecar_results(sidecar_indexes, p)] for p in PLACEMENTS}
+    assert rows["driver"] == rows["spark"]
+    assert all(rows["driver"])
+
+
+@pytest.mark.parametrize("placement", sorted(PLACEMENTS))
+def test_sidecar_results_answer_like_spark(sidecar_indexes, placement):
+    for res in _sidecar_results(sidecar_indexes, placement):
+        _assert_same_views(*_local_and_spark_views(res))
 
 
 def test_driver_results_need_no_spark_plan(spark, small_index, monkeypatch):

@@ -1,7 +1,8 @@
 """Multi-scorer Order (sort.hpp:218-349): a LIST of scorer buckets per query,
 results ordered lexicographically by bucket scores. The reference prepares
 one collector set per bucket and sorts by the concatenated score vector;
-`Searcher.search_ordered` reproduces that with one match pass per bucket."""
+`Searcher.search_ordered` reproduces that with one kernel pass that scores
+every bucket on each segment."""
 
 import math
 
@@ -9,6 +10,7 @@ import pytest
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher
 from iresearch_spark import filters as flt
+from iresearch_spark.index.deletes import delete_docs
 
 K1, B = 1.2, 0.75
 
@@ -99,3 +101,41 @@ def test_boolean_filter_buckets(idx):
     assert [(r["doc_key"], r["score0"], round(r["score1"], 9)) for r in got] == [
         (k, s0, round(s1, 9)) for k, s0, s1 in want
     ]
+
+
+def _assert_ordered_equals_own_searches(reader, f, scorers=("tfidf", "bm25")):
+    """Each bucket holds exactly its scorer's own search() rows and scores,
+    in lexicographic bucket order, and a smaller k keeps that order's head."""
+    got = Searcher(reader).search_ordered(f, k=10, scorers=scorers).collect()
+    assert got
+    for i, name in enumerate(scorers):
+        own = Searcher(reader, scorer=name).search(f, k=10).collect()
+        assert sorted(
+            (r["doc_key"], r["segment_id"], r["doc_id"], round(r["score"], 9)) for r in own
+        ) == sorted(
+            (r["doc_key"], r["segment_id"], r["doc_id"], round(r[f"score{i}"], 9)) for r in got
+        )
+    keys = [
+        (*(-r[f"score{i}"] for i in range(len(scorers))), r["segment_id"], r["doc_id"])
+        for r in got
+    ]
+    assert keys == sorted(keys)
+    head = Searcher(reader).search_ordered(f, k=2, scorers=scorers).collect()
+    assert head == got[:2]
+
+
+def test_exact_df_phrase_buckets_equal_own_searches(idx):
+    _assert_ordered_equals_own_searches(idx, flt.Phrase(("scan", "alpha")))
+
+
+def test_buckets_mask_deleted_doc(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("mo_del") / "idx")
+    df = spark.createDataFrame(DOCS, "doc_key string, text string")
+    IndexBuilder(spark, path, analyzer="simple", num_segments=2).build(
+        df, key_col="doc_key", text_col="text"
+    )
+    delete_docs(IndexReader(spark, path), ["d02"])
+    reader = IndexReader(spark, path)
+    _assert_ordered_equals_own_searches(reader, flt.Term("scan"))
+    got = Searcher(reader).search_ordered(flt.Term("scan"), k=10, scorers=("tfidf", "bm25"))
+    assert "d02" not in {r["doc_key"] for r in got.collect()}

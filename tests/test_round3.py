@@ -449,69 +449,3 @@ def test_norms_rows_bounded_by_chunk_size(spark, tmp_path_factory):
     # queries across the chunk boundary score correctly (dl gathered lazily)
     hits = Searcher(reader).search(flt.Term("rare"), k=5).collect()
     assert len(hits) == 5 and all(h["score"] > 0 for h in hits)
-
-
-# --------------------------------------------------------------------------
-# OFFS offsets sidecar + highlight (token_attributes.hpp:39-47;
-# formats_10.cpp:345-353 .pos/.pay streams analogue)
-# --------------------------------------------------------------------------
-
-
-def _offs_fixture(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("offs"))
-    rows = [
-        ("d1", "Fast scan, QUICK sort!"),
-        ("d2", "scan scan scan"),
-        ("d3", "  padding before a scan here"),
-        ("d4", "no match at all"),
-        ("d5", ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=2, with_offsets=True).build(
-        df, key_col="doc_key", text_col="text"
-    )
-    return path, dict(rows)
-
-
-def test_highlight_first_occurrence_offsets(spark, tmp_path_factory):
-    import re
-
-    path, texts = _offs_fixture(spark, tmp_path_factory)
-    s = Searcher(IndexReader(spark, path))
-    got = s.highlight(flt.Or((flt.Term("scan"), flt.Term("sort"))), k=10).collect()
-    assert got, "expected highlight rows"
-    for r in got:
-        t = texts[r["doc_key"]].lower()
-        m = [x for x in re.finditer(r"[a-z0-9]+", t) if x.group() == r["term"]]
-        assert m and m[0].start() == r["start"] and m[0].end() == r["end"]
-    # d2 has three 'scan' occurrences: highlight reports the FIRST (offset 0)
-    d2 = [r for r in got if r["doc_key"] == "d2"]
-    assert len(d2) == 1 and d2[0]["start"] == 0 and d2[0]["end"] == 4
-    # non-matching docs never appear
-    assert all(r["doc_key"] not in ("d4", "d5") for r in got)
-
-
-def test_offsets_require_simple_analyzer_and_matching_append(spark, tmp_path_factory):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="simple"):
-        IndexBuilder(spark, "/tmp/never", analyzer="text_en:", with_offsets=True)
-    path, _ = _offs_fixture(spark, tmp_path_factory)
-    extra = spark.createDataFrame([("d9", "another scan")], "doc_key string, text string")
-    with _pytest.raises(ValueError, match="with_offsets"):
-        IndexBuilder(spark, path, num_segments=1).append(extra)
-    # matching append extends the sidecar; highlight sees the new segment
-    IndexBuilder(spark, path, num_segments=1, with_offsets=True).append(extra)
-    s = Searcher(IndexReader(spark, path))
-    got = {r["doc_key"]: r for r in s.highlight(flt.Term("scan"), k=10).collect()}
-    assert "d9" in got and got["d9"]["start"] == 8 and got["d9"]["end"] == 12
-
-
-def test_highlight_requires_offsets_index(spark, tmp_path_factory):
-    import pytest as _pytest
-
-    path = str(tmp_path_factory.mktemp("nooffs"))
-    df = spark.createDataFrame([("a", "scan")], "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=1).build(df, key_col="doc_key", text_col="text")
-    with _pytest.raises(ValueError, match="offsets"):
-        Searcher(IndexReader(spark, path)).highlight(flt.Term("scan"))

@@ -214,7 +214,8 @@ def test_append_callable_analyzer_rejected(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# PAY payload stream: codec round-trip + end-to-end per-occurrence payloads
+# PAY payload stream: codec round-trip and the payload tokenizer (the
+# search surface and consolidation of the sidecar: test_sidecars.py)
 # --------------------------------------------------------------------------
 
 
@@ -251,155 +252,6 @@ def test_payload_tokenizer_plane():
     out = tok(pd.Series(["Fast|12 scan|7 bare x|notnum", None])).tolist()
     assert out[0] == (["fast", "scan", "bare", "x"], [12, 7, 0, 0])
     assert out[1] == ([], [])
-
-
-def test_payloads_end_to_end(spark, tmp_path):
-    path = str(tmp_path / "r4pay")
-    rows = [
-        ("d1", "scan|100 merge|200 scan|300"),
-        ("d2", "merge|5 scan|6"),
-        ("d3", "pad|1 pad|2 pad|3"),
-    ]
-    df = spark.createDataFrame(rows, "doc_key string, text string")
-    b = IndexBuilder(
-        spark, path, analyzer="payload:|", num_segments=1, with_payloads=True
-    )
-    b.build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    s = Searcher(reader)
-    got = [
-        (r["doc_key"], r["term"], r["pos"], r["payload"])
-        for r in s.payloads(flt.Term("scan"), k=5)
-        .orderBy("doc_key", "pos")
-        .collect()
-    ]
-    assert got == [
-        ("d1", "scan", 1, 100),
-        ("d1", "scan", 3, 300),
-        ("d2", "scan", 2, 6),
-    ]
-    # plain search over the payload index scores identically to the same
-    # corpus without payloads (token stream is the token parts)
-    plain = str(tmp_path / "r4plain")
-    df2 = spark.createDataFrame(
-        [(k, " ".join(p.split("|")[0] for p in t.split())) for k, t in rows],
-        "doc_key string, text string",
-    )
-    IndexBuilder(spark, plain, num_segments=1).build(df2, key_col="doc_key", text_col="text")
-    s2 = Searcher(IndexReader(spark, plain))
-    r1 = [(r["doc_key"], round(r["score"], 9)) for r in s.search(flt.Term("scan"), k=5).collect()]
-    r2 = [(r["doc_key"], round(r["score"], 9)) for r in s2.search(flt.Term("scan"), k=5).collect()]
-    assert r1 == r2
-    # with_payloads on a non-payload analyzer fails loudly at the driver —
-    # validated on the RESOLVED field list at build time, so the per-field
-    # `fields=` surface works even with the default constructor analyzer
-    with pytest.raises(ValueError, match="payload-emitting"):
-        IndexBuilder(spark, str(tmp_path / "bad"), with_payloads=True).build(
-            df, key_col="doc_key", text_col="text"
-        )
-
-
-def test_payloads_via_fields_spec(spark, tmp_path):
-    """with_payloads=True with a per-field analyzer spec (constructor keeps
-    the default 'simple' analyzer — validation must use the field's)."""
-    path = str(tmp_path / "r4payfields")
-    df = spark.createDataFrame(
-        [("d1", "scan|7 merge|8"), ("d2", "scan|9")],
-        "doc_key string, text string",
-    )
-    IndexBuilder(spark, path, num_segments=1, with_payloads=True).build(
-        df, key_col="doc_key", fields=(("text", "text", "payload:|"),)
-    )
-    s = Searcher(IndexReader(spark, path))
-    got = sorted(
-        (r["doc_key"], r["pos"], r["payload"])
-        for r in s.payloads(flt.Term("scan"), k=5).collect()
-    )
-    assert got == [("d1", 1, 7), ("d2", 1, 9)]
-
-
-# --------------------------------------------------------------------------
-# consolidation now merges the OFFS / PAY sidecars (doc-id remap + purge)
-# --------------------------------------------------------------------------
-
-
-def _pay_rows():
-    return [
-        ("d1", "scan|100 merge|200 scan|300"),
-        ("d2", "merge|5 scan|6"),
-        ("d3", "pad|1 pad|2 pad|3"),
-        ("d4", "scan|44 pad|9"),
-    ]
-
-
-def test_consolidate_merges_payload_sidecar(spark, tmp_path):
-    from iresearch_spark.index.consolidate import consolidate
-
-    path = str(tmp_path / "r4paycons")
-    df = spark.createDataFrame(_pay_rows(), "doc_key string, text string")
-    IndexBuilder(
-        spark, path, analyzer="payload:|", num_segments=2, with_payloads=True
-    ).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    before = sorted(
-        (r["doc_key"], r["term"], r["pos"], r["payload"])
-        for r in Searcher(reader).payloads(flt.Term("scan"), k=10).collect()
-    )
-    consolidate(reader)
-    reader2 = IndexReader(spark, path)
-    assert len(reader2.segment_docs_counts()) == 1
-    after = sorted(
-        (r["doc_key"], r["term"], r["pos"], r["payload"])
-        for r in Searcher(reader2).payloads(flt.Term("scan"), k=10).collect()
-    )
-    assert after == before
-
-
-def test_consolidate_purges_deleted_payloads(spark, tmp_path):
-    from iresearch_spark.index.consolidate import consolidate
-    from iresearch_spark.index.deletes import delete_docs
-
-    path = str(tmp_path / "r4paydel")
-    df = spark.createDataFrame(_pay_rows(), "doc_key string, text string")
-    IndexBuilder(
-        spark, path, analyzer="payload:|", num_segments=2, with_payloads=True
-    ).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    delete_docs(reader, ["d1"])
-    reader = IndexReader(spark, path)
-    consolidate(reader)
-    reader2 = IndexReader(spark, path)
-    assert "deletes" not in reader2.meta["tables"]  # physically purged
-    got = sorted(
-        (r["doc_key"], r["term"], r["pos"], r["payload"])
-        for r in Searcher(reader2).payloads(flt.Term("scan"), k=10).collect()
-    )
-    assert got == [("d2", "scan", 2, 6), ("d4", "scan", 1, 44)]
-
-
-def test_consolidate_merges_offsets_sidecar(spark, tmp_path):
-    from iresearch_spark.index.consolidate import consolidate
-
-    path = str(tmp_path / "r4offcons")
-    df = spark.createDataFrame(
-        [("d1", "fast scan merge"), ("d2", "slow scan"), ("d3", "scan scan go")],
-        "doc_key string, text string",
-    )
-    IndexBuilder(spark, path, num_segments=2, with_offsets=True).build(
-        df, key_col="doc_key", text_col="text"
-    )
-    reader = IndexReader(spark, path)
-    before = sorted(
-        (r["doc_key"], r["term"], r["start"], r["end"])
-        for r in Searcher(reader).highlight(flt.Term("scan"), k=10).collect()
-    )
-    consolidate(reader)
-    reader2 = IndexReader(spark, path)
-    after = sorted(
-        (r["doc_key"], r["term"], r["start"], r["end"])
-        for r in Searcher(reader2).highlight(flt.Term("scan"), k=10).collect()
-    )
-    assert after == before
 
 
 # --------------------------------------------------------------------------

@@ -38,9 +38,12 @@ Spark-first re-expression of the reference write path (SURVEY.md §3.1):
   doc_id with zero joins).
   Each norms row also carries its chunk's docs_with_field and sum_len, the
   BM25 field stats (bm25.cpp:495-519) that ``IndexReader.field_stats`` sums.
-* commit — two-phase: stages write under ``gen=<g>/``, a ``_pending.json`` is
-  written then atomically renamed to ``meta.json`` (index_writer.cpp:2606-2718
-  ``pending_segments_<gen>`` → ``segments_<gen>``).
+* commit — through :mod:`.commit`, like every writer: the build or append
+  claims ``gen=<g+1>/`` of the committed generation g, its stages write
+  there, and the meta staged in that directory is renamed to ``meta.json``
+  (index_writer.cpp:2606-2718 ``pending_segments_<gen>`` → ``segments_<gen>``).
+  One local filesystem, one live writer per index at a time: a stale base or
+  a rival live writer raises ``CommitConflict`` before any stage runs.
 
 Every stage appends a manifest row (run_id, stage, status, rows, seconds) and
 is skipped on re-run when its output + manifest row exist → an interrupted
@@ -56,6 +59,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +70,8 @@ from ..analysis.tokenizers import (
 )
 
 from .codec import encode_postings_batch_arrow, vbyte_encode
+from .commit import Claim, claim, read_meta
+from .reader import read_frame
 
 POSTINGS_SCHEMA = (
     "field string, term string, segment_id int, docs_count int, total_freq long, "
@@ -330,37 +336,33 @@ class IndexBuilder:
         its own postings namespace, norms (doc lengths) and BM25 stats, like
         the reference's per-field field_data (field_data.cpp) and per-field
         stats collectors (bm25.cpp:204-276)."""
-        spark = self.spark
-        run_id = run_id or uuid.uuid4().hex[:12]
-        gen = self._next_generation()
-        gen_dir = os.path.join(self.index_path, f"gen={gen}")
-        os.makedirs(gen_dir, exist_ok=True)
-
         committed = self.read_meta()
         if committed is not None:
             return committed  # already committed — resume is a no-op
 
         field_list = self._resolve_fields(text_col, fields)
+        run_id = run_id or uuid.uuid4().hex[:12]
         num_segments = self.num_segments or max(
-            1, spark.sparkContext.defaultParallelism
+            1, self.spark.sparkContext.defaultParallelism
         )
         stored_cols = tuple(stored_cols)
         doc_cols = ["segment_id", "doc_id", "doc_key", "doc_len", *stored_cols]
-        docs_path, norms_path, postings_path, _ = self._invert_and_layout(
-            df, gen_dir, key_col, field_list, stored_cols, num_segments, 0, run_id, gen,
-            fuse_term_dict=True,
-        )
-        return self._finish_commit(
-            gen, gen_dir, run_id, num_segments, num_segments,
-            [docs_path], [norms_path], [postings_path],
-            doc_cols, key_col, field_list, stored_cols,
-            offsets_paths=(
-                [os.path.join(gen_dir, "offsets")] if self.with_offsets else None
-            ),
-            payloads_paths=(
-                [os.path.join(gen_dir, "payloads")] if self.with_payloads else None
-            ),
-        )
+        with claim(self.index_path, 0) as c:
+            docs_path, norms_path, postings_path, _ = self._invert_and_layout(
+                df, c.dir, key_col, field_list, stored_cols, num_segments, 0, run_id, c.gen,
+                fuse_term_dict=True,
+            )
+            return self._finish_commit(
+                c, run_id, num_segments, num_segments,
+                [docs_path], [norms_path], [postings_path],
+                doc_cols, key_col, field_list, stored_cols,
+                offsets_paths=(
+                    [os.path.join(c.dir, "offsets")] if self.with_offsets else None
+                ),
+                payloads_paths=(
+                    [os.path.join(c.dir, "payloads")] if self.with_payloads else None
+                ),
+            )
 
     def _invert_and_layout(
         self,
@@ -937,21 +939,8 @@ class IndexBuilder:
             # prune part files left by an interrupted run whose range
             # boundaries shifted (sids absent from this run's lineage);
             # lineage is a few rows — read it driver-local, not as a Spark job
-            lin = self._read_parquet_local(
-                [lineage_path], ["segment_id", "n_docs", "skipped"]
-            )
-            if lin is not None:
-                live = {
-                    int(r.segment_id)
-                    for r in lin.itertuples(index=False)
-                    if r.skipped or r.n_docs > 0
-                }
-            else:
-                live = {
-                    int(r["segment_id"])
-                    for r in spark.read.parquet(lineage_path).collect()
-                    if r["skipped"] or r["n_docs"] > 0
-                }
+            lin = read_frame(lineage_path, ["segment_id", "n_docs", "skipped"])
+            live = set(lin["segment_id"][lin["skipped"] | (lin["n_docs"] > 0)].tolist())
             for d in part_dirs:
                 for fn in os.listdir(d):
                     if fn.startswith("part-") and fn.endswith(".parquet"):
@@ -1043,8 +1032,7 @@ class IndexBuilder:
 
     def _finish_commit(
         self,
-        gen: int,
-        gen_dir: str,
+        c: Claim,
         run_id: str,
         requested_segments: int,
         next_segment_id: int,
@@ -1061,7 +1049,8 @@ class IndexBuilder:
         offsets_paths: list[str] | None = None,
         payloads_paths: list[str] | None = None,
     ) -> dict:
-        """term_dict aggregation + two-phase commit.
+        """term_dict aggregation, then the meta published through the claim
+        ``c`` on the generation the stages wrote.
 
         A fresh fused build already wrote term_dict (manifest row skips the
         stage). Appends pass ``term_sources`` = [previous term_dict, new
@@ -1076,8 +1065,8 @@ class IndexBuilder:
         have assigned, so appended ids never collide."""
         spark = self.spark
         p_parts = self.postings_partitions or max(16, requested_segments)
-        term_dict_path = os.path.join(gen_dir, "term_dict")
-        if not self._stage_done(run_id, gen, "term_dict", term_dict_path):
+        term_dict_path = os.path.join(c.dir, "term_dict")
+        if not self._stage_done(run_id, c.gen, "term_dict", term_dict_path):
             t0 = time.time()
             if term_sources:
                 # select the term_dict columns only: an older source may
@@ -1110,30 +1099,16 @@ class IndexBuilder:
                 .write.mode("overwrite")
                 .parquet(term_dict_path)
             )
-            self._manifest(run_id, gen, "term_dict", "done", time.time() - t0)
+            self._manifest(run_id, c.gen, "term_dict", "done", time.time() - t0)
 
         # docs_count and the live segment count for the meta from the tiny
         # norms rows of the DEFAULT field (every field covers the same docs;
         # counting one avoids multi-field double counting); driver-local
         # read — a Spark job for a few-KB stats table is pure serial time
-        # (Spark fallback for non-local index paths)
         default_field = field_list[0][0]
-        norm_pdf = self._read_parquet_local(
-            norms_paths, ["field", "segment_id", "docs_count"]
+        norm_pdf = read_frame(
+            norms_paths, ["segment_id", "docs_count"], pc.field("field") == default_field
         )
-        if norm_pdf is not None:
-            if "field" in norm_pdf.columns:
-                # legacy part files lacking the column read as NaN = default
-                norm_pdf = norm_pdf[
-                    norm_pdf["field"].fillna(default_field) == default_field
-                ]
-        else:
-            norm_pdf = (
-                spark.read.parquet(*norms_paths)
-                .where(F.col("field") == default_field)
-                .select("segment_id", "docs_count")
-                .toPandas()
-            )
         total_docs = int(norm_pdf["docs_count"].sum())
         num_segments = int(norm_pdf["segment_id"].nunique())
         tables = dict(carry_tables or {})
@@ -1154,7 +1129,7 @@ class IndexBuilder:
                 offsets_paths if len(offsets_paths) > 1 else offsets_paths[0]
             )
         meta = {
-            "generation": gen,
+            "generation": c.gen,
             "analyzer": self.analyzer if isinstance(self.analyzer, str) else repr(self.analyzer),
             "with_positions": self.with_positions,
             "num_segments": num_segments,
@@ -1179,11 +1154,7 @@ class IndexBuilder:
         }
         if last_stream_batch is not None:
             meta["last_stream_batch"] = last_stream_batch
-        pending = os.path.join(self.index_path, "_pending.json")
-        with open(pending, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(pending, os.path.join(self.index_path, "meta.json"))  # atomic publish
-        return meta
+        return c.publish(meta)
 
     # ---------------------------------------------------------------- append
     def append(
@@ -1250,55 +1221,48 @@ class IndexBuilder:
         ]:
             raise ValueError("append field names must match the existing index")
         run_id = uuid.uuid4().hex[:12]
-        gen = meta["generation"] + 1
-        gen_dir = os.path.join(self.index_path, f"gen={gen}")
-        os.makedirs(gen_dir, exist_ok=True)
         n_new = self.num_segments or max(1, self.spark.sparkContext.defaultParallelism)
         sid_base = int(meta.get("next_segment_id", meta["num_segments"]))
-        docs_path, norms_path, postings_path, term_partial = self._invert_and_layout(
-            df, gen_dir, key_col, field_list, stored_cols, n_new, sid_base, run_id, gen
-        )
 
         def paths_of(v) -> list[str]:
             return list(v) if isinstance(v, list) else [v]
 
-        carry = {k: v for k, v in meta["tables"].items() if k == "deletes"}
-        term_sources = (
-            [meta["tables"]["term_dict"], term_partial] if term_partial else None
-        )
-        return self._finish_commit(
-            gen, gen_dir, run_id,
-            meta["num_segments"] + n_new, sid_base + n_new,
-            paths_of(meta["tables"]["docs"]) + [docs_path],
-            paths_of(meta["tables"]["norms"]) + [norms_path],
-            paths_of(meta["tables"]["postings"]) + [postings_path],
-            meta["doc_cols"], key_col, field_list, stored_cols,
-            carry_tables=carry,
-            last_stream_batch=batch_id if batch_id is not None else meta.get("last_stream_batch"),
-            term_sources=term_sources,
-            offsets_paths=(
-                paths_of(meta["tables"]["offsets"]) + [os.path.join(gen_dir, "offsets")]
-                if self.with_offsets
-                else None
-            ),
-            payloads_paths=(
-                paths_of(meta["tables"]["payloads"]) + [os.path.join(gen_dir, "payloads")]
-                if self.with_payloads
-                else None
-            ),
-        )
+        with claim(self.index_path, meta["generation"]) as c:
+            docs_path, norms_path, postings_path, term_partial = self._invert_and_layout(
+                df, c.dir, key_col, field_list, stored_cols, n_new, sid_base, run_id, c.gen
+            )
+            carry = {k: v for k, v in meta["tables"].items() if k == "deletes"}
+            term_sources = (
+                [meta["tables"]["term_dict"], term_partial] if term_partial else None
+            )
+            return self._finish_commit(
+                c, run_id,
+                meta["num_segments"] + n_new, sid_base + n_new,
+                paths_of(meta["tables"]["docs"]) + [docs_path],
+                paths_of(meta["tables"]["norms"]) + [norms_path],
+                paths_of(meta["tables"]["postings"]) + [postings_path],
+                meta["doc_cols"], key_col, field_list, stored_cols,
+                carry_tables=carry,
+                last_stream_batch=(
+                    batch_id if batch_id is not None else meta.get("last_stream_batch")
+                ),
+                term_sources=term_sources,
+                offsets_paths=(
+                    paths_of(meta["tables"]["offsets"]) + [os.path.join(c.dir, "offsets")]
+                    if self.with_offsets
+                    else None
+                ),
+                payloads_paths=(
+                    paths_of(meta["tables"]["payloads"]) + [os.path.join(c.dir, "payloads")]
+                    if self.with_payloads
+                    else None
+                ),
+            )
 
     # ------------------------------------------------------------- plumbing
     def read_meta(self) -> dict | None:
-        p = os.path.join(self.index_path, "meta.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return None
-
-    def _next_generation(self) -> int:
-        meta = self.read_meta()
-        return (meta["generation"] + 1) if meta else 1
+        """The committed meta, or None when nothing is committed."""
+        return read_meta(self.index_path)
 
     def _footer_segment_groups(
         self, df: DataFrame, key_col: str, n: int, gen_dir: str
@@ -1440,37 +1404,6 @@ class IndexBuilder:
             json.dump(bounds, f)
         os.replace(tmp, path)
         return bounds
-
-    @staticmethod
-    def _read_parquet_local(paths: list[str], columns: list[str]):
-        """Driver-local pyarrow read of tiny metadata tables (lineage, norms
-        stats) — returns a pandas DataFrame, or None when any path is not a
-        local directory (object-store indexes keep the Spark-job path).
-
-        Submitting a whole Spark job to read a few-KB table is pure SERIAL
-        driver time (~0.3-0.5 s each on this box) that the N→4N scaling rule
-        charges in full; the local read is microseconds."""
-        import pyarrow.parquet as pq
-
-        frames = []
-        try:
-            for p in paths:
-                if not os.path.isdir(p):
-                    return None
-                for fn in sorted(os.listdir(p)):
-                    if fn.endswith(".parquet"):
-                        fp = os.path.join(p, fn)
-                        cols = [
-                            c
-                            for c in columns
-                            if c in pq.read_schema(fp).names
-                        ]
-                        frames.append(pq.read_table(fp, columns=cols).to_pandas())
-        except Exception:
-            return None
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)
 
     def _manifest_path(self) -> str:
         return os.path.join(self.index_path, "manifest.jsonl")

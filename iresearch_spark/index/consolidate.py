@@ -24,14 +24,16 @@ exactly merge_writer's contract):
   under merge, which also proves BM25 scores are invariant (test asserts
   rank+score identity before/after).
 
-The result is committed as generation g+1 via the same two-phase protocol as
-the build (pending json → atomic rename), and readers pinned to gen g keep
-working (README.md:100-103 generation semantics).
+The merge is based on the reader's generation g and commits g+1 through
+:mod:`.commit`, like every writer: the index lives on one local filesystem
+and has one live writer at a time. When another writer committed since the
+reader opened, g is stale and the merge raises ``CommitConflict`` before it
+writes anything. Readers pinned to gen g keep working (README.md:100-103
+generation semantics).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -41,6 +43,7 @@ from pyspark.sql import functions as F
 
 from .builder import POSTINGS_SCHEMA, NORMS_SCHEMA, IndexBuilder
 from .codec import decode_positions, encode_postings_batch, vbyte_decode, vbyte_encode
+from .commit import Claim, claim
 from .reader import IndexReader
 
 
@@ -240,21 +243,15 @@ def consolidate(
     reader: IndexReader,
     segment_ids: list[int] | None = None,
 ) -> dict:
-    """Merge ``segment_ids`` (default: all) into one segment; commit gen+1."""
-    spark = reader.spark
-    meta = dict(reader.meta)
-    gen = meta["generation"] + 1
-    index_path = reader.index_path
-    has_offsets = "offsets" in reader.meta.get("tables", {})
-    has_payloads = "payloads" in reader.meta.get("tables", {})
-    gen_dir = os.path.join(index_path, f"gen={gen}")
-    os.makedirs(gen_dir, exist_ok=True)
-
-    seg_rows = sorted(reader.segment_docs_counts().items())
-    all_ids = [s for s, _ in seg_rows]
+    """Merge ``segment_ids`` (default: all) into one segment and commit it as
+    the generation after the reader's; returns the new meta. Raises
+    :class:`~.commit.CommitConflict` when the reader's generation is no
+    longer the committed one (reopen the reader and retry), or another writer
+    is committing."""
+    all_ids = sorted(reader.segment_docs_counts())
     merge_ids = sorted(segment_ids) if segment_ids is not None else all_ids
     if len(merge_ids) < 2:
-        return meta  # nothing to merge
+        return dict(reader.meta)  # nothing to merge
     live_between = [s for s in all_ids if merge_ids[0] <= s <= merge_ids[-1]]
     if merge_ids != live_between:
         raise ValueError(
@@ -263,7 +260,20 @@ def consolidate(
             "range: merging around an untouched live segment reorders the "
             "global (segment_id, doc_id) tie-break on equal scores"
         )
-    docs_count = dict(seg_rows)
+    with claim(reader.index_path, reader.meta["generation"]) as c:
+        return _merge(reader, merge_ids, c)
+
+
+def _merge(reader: IndexReader, merge_ids: list[int], c: Claim) -> dict:
+    """Write the reader's generation with ``merge_ids`` merged into the
+    claimed generation ``c`` and publish it."""
+    spark = reader.spark
+    meta = dict(reader.meta)
+    gen, gen_dir = c.gen, c.dir
+    index_path = reader.index_path
+    has_offsets = "offsets" in reader.meta.get("tables", {})
+    has_payloads = "payloads" in reader.meta.get("tables", {})
+    docs_count = reader.segment_docs_counts()
     target = merge_ids[0]
 
     # document_mask purge (merge_writer.cpp:162-209 doc_map_f): deleted docs
@@ -293,11 +303,6 @@ def consolidate(
 
     # ---- postings ----
     postings = reader.postings()
-    if "field" not in postings.columns:
-        # pre-multi-field index (committed before the `field` column landed):
-        # inject the default field so the (field, term) merge paths below work
-        # — IndexReader keeps the same legacy fallback on the query side
-        postings = postings.withColumn("field", F.lit(reader.default_field))
     passthrough = postings.where(~F.col("segment_id").isin(merge_ids))
     to_merge = postings.where(F.col("segment_id").isin(merge_ids))
 
@@ -520,19 +525,8 @@ def consolidate(
 
     # ---- norms ----
     t0 = time.time()
-    # raw norms table (NOT reader.norms(), which joins the delete mask in)
-    norm_cols = [
-        c
-        for c in (
-            "field", "segment_id", "chunk_id", "docs_count", "doc_len_enc",
-            "docs_with_field", "sum_len", "min_len",
-        )
-        if c in reader._table("norms").columns
-    ]
-    norms = reader._table("norms").select(*norm_cols)
-    if "field" not in norms.columns:
-        # legacy pre-multi-field norms: one default field (see postings above)
-        norms = norms.withColumn("field", F.lit(reader.default_field))
+    # every field's rows (reader.norms() keeps one field of a multi-field index)
+    norms = reader._table("norms")
 
     def merge_norms(pdf: pd.DataFrame) -> pd.DataFrame:
         """Merge ONE field's norm rows across the merged segments (the group
@@ -542,8 +536,7 @@ def consolidate(
         offs = b_offsets.value
         dmask_v = b_dmask.value
         fname = pdf["field"].iloc[0] if len(pdf) else ""
-        sort_cols = ["segment_id"] + (["chunk_id"] if "chunk_id" in pdf.columns else [])
-        pdf = pdf.sort_values(sort_cols)
+        pdf = pdf.sort_values(["segment_id", "chunk_id"])
         parts = []
         for sid_in, grp in pdf.groupby("segment_id", sort=True):
             dl = np.concatenate(
@@ -582,7 +575,7 @@ def consolidate(
     )
     (
         norms.where(~F.col("segment_id").isin(merge_ids))
-        .unionByName(merged_norms, allowMissingColumns=True)
+        .unionByName(merged_norms)
         .write.mode("overwrite")
         .parquet(norms_path)
     )
@@ -649,8 +642,7 @@ def consolidate(
     builder._manifest(meta["run_id"], gen, "consolidate_docs", "done", time.time() - t0)
 
     # ---- commit gen+1 ----
-    meta["generation"] = gen
-    meta["num_segments"] = len(all_ids) - len(merge_ids) + 1
+    meta["num_segments"] = len(docs_count) - len(merge_ids) + 1
     # the purge drops the merged segments' deleted docs from storage
     meta["docs_count"] = sum(docs_count.values()) - sum(ds.size for ds in dmask.values())
     meta["tables"] = dict(meta["tables"])
@@ -687,8 +679,4 @@ def consolidate(
             meta["tables"]["deletes"] = deletes_path
         else:
             meta["tables"].pop("deletes", None)
-    pending = os.path.join(index_path, "_pending.json")
-    with open(pending, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(pending, os.path.join(index_path, "meta.json"))
-    return meta
+    return c.publish(meta)

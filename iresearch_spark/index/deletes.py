@@ -12,69 +12,59 @@ segment_reader.hpp:92-93 ``docs_mask()``). Semantics mirrored exactly:
 
 Storage: a plain ``(segment_id, doc_id)`` parquet table per generation —
 pair rows anti-join the docs table (Catalyst pushdown) and aggregate into
-per-segment sorted arrays for the scoring kernels. Commit is the same
-two-phase pending→rename as the build.
+per-segment sorted arrays for the scoring kernels. A delete applies to the
+generation it commits on: it is based on the committed generation, not the
+caller's reader, and commits the next one through :mod:`.commit` like every
+writer (one local filesystem, one live writer per index at a time;
+``CommitConflict`` when another writer commits first).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .commit import claim
 from .reader import IndexReader
 
 DELETES_SCHEMA = "segment_id int, doc_id int"
 
 
 def delete_docs(reader: IndexReader, doc_keys) -> dict:
-    """Mark documents deleted by ``doc_key``; commits generation+1.
+    """Mark documents deleted by ``doc_key``; commits the generation after
+    the committed one and returns its meta.
 
     ``doc_keys`` is a list of keys or a DataFrame with a ``doc_key`` column.
-    Returns the new meta. The reader itself stays pinned to its generation
-    (snapshot semantics) — open a new IndexReader to see the deletes.
-    """
-    spark = reader.spark
-    # commit against the CURRENT meta, not the pinned reader's snapshot: an
-    # append/streaming-ingest commit between reader open and this rename would
-    # otherwise be silently dropped (lost update). The delete pairs themselves
-    # are still resolved against the reader's snapshot (point-in-time delete).
-    meta_path = os.path.join(reader.index_path, "meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    gen = meta["generation"] + 1
-    gen_dir = os.path.join(reader.index_path, f"gen={gen}")
-    os.makedirs(gen_dir, exist_ok=True)
+    The keys resolve against the committed generation, which may be newer
+    than ``reader``'s (an append or a consolidate since it opened); ``reader``
+    itself stays pinned to its generation — open a new IndexReader to see the
+    deletes. Raises :class:`~.commit.CommitConflict` when another writer is
+    committing."""
+    current = IndexReader(reader.spark, reader.index_path)
+    with claim(current.index_path, current.meta["generation"]) as c:
+        docs = current.docs().select("segment_id", "doc_id", "doc_key")
+        if isinstance(doc_keys, DataFrame):
+            new_pairs = docs.join(
+                F.broadcast(doc_keys.select("doc_key").distinct()), "doc_key", "leftsemi"
+            ).select("segment_id", "doc_id")
+        else:
+            new_pairs = docs.where(F.col("doc_key").isin(list(doc_keys))).select(
+                "segment_id", "doc_id"
+            )
 
-    docs = reader.docs().select("segment_id", "doc_id", "doc_key")
-    if isinstance(doc_keys, DataFrame):
-        new_pairs = docs.join(
-            F.broadcast(doc_keys.select("doc_key").distinct()), "doc_key", "leftsemi"
-        ).select("segment_id", "doc_id")
-    else:
-        new_pairs = docs.where(F.col("doc_key").isin(list(doc_keys))).select(
+        union = new_pairs
+        old = current.deletes()
+        if old is not None:
+            union = union.unionByName(old.select("segment_id", "doc_id"))
+
+        deletes_path = os.path.join(c.dir, "deletes")
+        n_parts = max(1, len(current.segment_docs_counts()) // 8)
+        union.distinct().repartitionByRange(n_parts, "segment_id", "doc_id").sortWithinPartitions(
             "segment_id", "doc_id"
-        )
+        ).write.mode("overwrite").parquet(deletes_path)
 
-    parts = [new_pairs]
-    old_path = meta["tables"].get("deletes")  # current-meta deletes, not the snapshot's
-    if old_path is not None:
-        parts.append(spark.read.parquet(old_path).select("segment_id", "doc_id"))
-    union = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-
-    deletes_path = os.path.join(gen_dir, "deletes")
-    n_parts = max(1, len(reader.segment_docs_counts()) // 8)
-    union.distinct().repartitionByRange(n_parts, "segment_id", "doc_id").sortWithinPartitions(
-        "segment_id", "doc_id"
-    ).write.mode("overwrite").parquet(deletes_path)
-
-    meta["generation"] = gen
-    meta["tables"] = dict(meta["tables"])
-    meta["tables"]["deletes"] = deletes_path
-    pending = os.path.join(reader.index_path, "_pending.json")
-    with open(pending, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(pending, os.path.join(reader.index_path, "meta.json"))
-    return meta
+        meta = dict(current.meta)
+        meta["tables"] = {**meta["tables"], "deletes": deletes_path}
+        return c.publish(meta)

@@ -15,7 +15,6 @@ default field) and the field equality clause pushes down to the
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -27,6 +26,8 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .commit import read_meta
 
 #: (path, directory mtime) → pyarrow dataset; a process-wide cache, so each
 #: driver or Python worker lists a table's files once. A committed
@@ -203,8 +204,9 @@ class IndexReader:
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark
         self.index_path = index_path
-        with open(os.path.join(index_path, "meta.json")) as f:
-            self.meta = json.load(f)
+        self.meta = read_meta(index_path)
+        if self.meta is None:
+            raise FileNotFoundError(f"no index committed at {index_path}")
         self._field_stats: dict[str, dict] = {}
         self._tables: dict[str, DataFrame] = {}
         self._vocab: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
@@ -234,7 +236,7 @@ class IndexReader:
 
     def _field_clause(self, field: str | None):
         """Pushdown field-equality clause, or None when the index has a single
-        field (legacy tables may lack the column entirely)."""
+        field."""
         if not self.is_multifield:
             return None
         return F.col("field") == self._resolve_field(field)
@@ -306,7 +308,7 @@ class IndexReader:
 
     def term_dict(self, field: str | None = None) -> DataFrame:
         td = self._table("term_dict")
-        clause = self._field_clause(field) if "field" in td.columns else None
+        clause = self._field_clause(field)
         return td.where(clause) if clause is not None else td
 
     def fuzzy_vocab_sorted(self, field: str | None = None):
@@ -360,19 +362,9 @@ class IndexReader:
     def norms(self, field: str | None = None) -> DataFrame:
         """Per-segment chunked Norm2 rows of one field's doc lengths (the
         default field when None)."""
-        df = self._table("norms")
-        keep = [
-            c
-            for c in (
-                "field", "segment_id", "chunk_id", "docs_count", "doc_len_enc",
-                "docs_with_field", "sum_len", "min_len",
-            )
-            if c in df.columns
-        ]
-        out = df.select(*keep)
-        if "field" in out.columns and self.is_multifield:
-            out = out.where(F.col("field") == self._resolve_field(field))
-        return out
+        out = self._table("norms")
+        clause = self._field_clause(field)
+        return out.where(clause) if clause is not None else out
 
     def field_stats(self, field: str | None = None) -> dict:
         """{docs_with_field, total_term_freq, avgdl} for one field — collected
@@ -416,7 +408,7 @@ class IndexReader:
                 ["field", "segment_id", "docs_count", "docs_with_field", "sum_len"],
             )
         ns = self._norms_summary
-        return ns[ns["field"] == field] if "field" in ns.columns else ns
+        return ns[ns["field"] == field]
 
     def segment_docs_counts(self) -> dict[int, int]:
         """segment_id → live+masked doc count of every live segment (sums the

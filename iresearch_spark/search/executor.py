@@ -1761,27 +1761,22 @@ class _SegmentNorms:
     touch are decoded. Exposes the minimal ndarray surface the scoring
     kernels use: fancy ``__getitem__`` (0-based int array), ``.size``,
     ``.min()``. ``.min()`` comes from the per-chunk ``min_len`` column (no
-    decode); legacy single-cell rows (no chunk_id) degrade gracefully to one
-    chunk."""
+    decode)."""
 
     __slots__ = ("_enc", "_starts", "size", "_min", "_chunks")
 
     def __init__(self, norm_pdf: pd.DataFrame):
-        if "chunk_id" in norm_pdf.columns:
-            norm_pdf = norm_pdf.sort_values("chunk_id")
+        norm_pdf = norm_pdf.sort_values("chunk_id")
         self._enc = list(norm_pdf["doc_len_enc"])
         counts = norm_pdf["docs_count"].to_numpy(np.int64)
         self._starts = np.zeros(counts.size + 1, dtype=np.int64)
         np.cumsum(counts, out=self._starts[1:])
         self.size = int(self._starts[-1])
-        mv = norm_pdf["min_len"].min() if "min_len" in norm_pdf.columns else None
-        self._min = int(mv) if mv is not None and not pd.isna(mv) else None
+        self._min = int(norm_pdf["min_len"].min())
         self._chunks: dict[int, np.ndarray] = {}
 
     def min(self) -> int:
-        if self._min is not None:
-            return self._min
-        return int(self[np.arange(self.size)].min()) if self.size else 1
+        return self._min
 
     def _chunk(self, c: int) -> np.ndarray:
         a = self._chunks.get(c)

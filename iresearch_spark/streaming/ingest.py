@@ -5,8 +5,8 @@ batches, index_writer.cpp documents() contexts); a Spark-native engine gets
 continuous ingestion from Structured Streaming instead: ``readStream`` →
 ``foreachBatch`` → :meth:`IndexBuilder.append`. Each micro-batch commits a
 new index generation containing the batch's segments; readers pinned to an
-older generation keep their snapshot (the same two-phase commit as the batch
-build).
+older generation keep their snapshot (the commit of every writer,
+index/commit.py).
 
 Exactly-once: Spark's checkpoint may REPLAY a micro-batch after a crash;
 ``append(batch_id=...)`` records the last committed batch id in the index

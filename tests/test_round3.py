@@ -1,5 +1,5 @@
 """Round-3 regressions: docs_mask inside pruned iterators (WAND/MaxScore/
-conjunction with multi-block segments), delete-commit lost updates, the fused
+conjunction with multi-block segments), the fused
 postings+term_dict build stage, the scale-safe phrase scorer (per-segment
 local top-k + exact seg counts), the matches-only nested child pass, and
 same-position ngram chain semantics."""
@@ -104,27 +104,6 @@ def test_batch_path_masks_before_theta(spark, big_del_idx):
     ]
     exp = _live(oracle.term_query("scan", k=N_BIG), deleted, 10)
     assert [g[0] for g in got] == [e[0] for e in exp]
-
-
-# --------------------------------------------------------------------------
-# delete commit must not drop a concurrent append (ADVICE r2 medium)
-# --------------------------------------------------------------------------
-
-
-def test_delete_commit_keeps_concurrent_append(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("lostupd"))
-    df1 = spark.createDataFrame(
-        [("a1", "scan merge"), ("a2", "sort scan")], "doc_key string, text string"
-    )
-    b = IndexBuilder(spark, path, num_segments=1)
-    b.build(df1, key_col="doc_key", text_col="text")
-    pinned = IndexReader(spark, path)  # snapshot BEFORE the append
-    df2 = spark.createDataFrame([("b1", "scan fast")], "doc_key string, text string")
-    b.append(df2)
-    delete_docs(pinned, ["a1"])  # commits against CURRENT meta, not the snapshot
-    latest = IndexReader(spark, path)
-    keys = {r["doc_key"] for r in latest.live_docs().select("doc_key").collect()}
-    assert keys == {"a2", "b1"}  # b1 survived the delete commit
 
 
 # --------------------------------------------------------------------------

@@ -1,7 +1,6 @@
 """Round-4 regressions: MinHash-LSH band-bucket skew cap, bit-stable IVF
-centroids, clear compile-time errors for nested positional filters and
-unrestorable append analyzers, and legacy (pre-multi-field) consolidate
-compatibility."""
+centroids, and clear compile-time errors for nested positional filters and
+unrestorable append analyzers."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -252,49 +251,6 @@ def test_payload_tokenizer_plane():
     out = tok(pd.Series(["Fast|12 scan|7 bare x|notnum", None])).tolist()
     assert out[0] == (["fast", "scan", "bare", "x"], [12, 7, 0, 0])
     assert out[1] == ([], [])
-
-
-# --------------------------------------------------------------------------
-# consolidate over a legacy index whose postings/norms lack the field column
-# --------------------------------------------------------------------------
-
-
-def test_consolidate_legacy_no_field_column(spark, tmp_path):
-    import glob
-    import os
-
-    from iresearch_spark.index.consolidate import consolidate
-
-    path = str(tmp_path / "r4legacy")
-    df = spark.createDataFrame(
-        [(f"d{i}", f"scan merge pad{i % 3} " + "filler " * (i % 4)) for i in range(40)],
-        "doc_key string, text string",
-    )
-    IndexBuilder(spark, path, num_segments=2).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    before = [
-        (r["doc_key"], round(r["score"], 6))
-        for r in Searcher(reader).search(flt.Term("scan"), k=10).collect()
-    ]
-    # strip the field column in place (simulates a pre-multi-field commit)
-    for tbl in ("postings", "norms"):
-        src = reader.meta["tables"][tbl]
-        src = src if isinstance(src, str) else src[0]
-        stripped = spark.read.parquet(src).drop("field")
-        tmp_out = src + "_nofield"
-        stripped.write.mode("overwrite").parquet(tmp_out)
-        for f in glob.glob(os.path.join(src, "*")):
-            os.remove(f) if os.path.isfile(f) else None
-        for f in glob.glob(os.path.join(tmp_out, "*")):
-            os.replace(f, os.path.join(src, os.path.basename(f)))
-    reader = IndexReader(spark, path)
-    consolidate(reader)  # must not raise AnalysisException on 'field'
-    reader2 = IndexReader(spark, reader.index_path)
-    after = [
-        (r["doc_key"], round(r["score"], 6))
-        for r in Searcher(reader2).search(flt.Term("scan"), k=10).collect()
-    ]
-    assert after == before
 
 
 # --------------------------------------------------------------------------

@@ -46,8 +46,10 @@ Spark-first re-expression of the reference write path (SURVEY.md §3.1):
   a rival live writer raises ``CommitConflict`` before any stage runs.
 
 Every stage appends a manifest row (run_id, stage, status, rows, seconds) and
-is skipped on re-run when its output + manifest row exist → an interrupted
-build resumes at stage/segment granularity without recomputation.
+is skipped when the same run re-runs it (``build(run_id=...)``) and its
+output + manifest row exist → an interrupted build resumes at stage
+granularity. Any other run redoes the stages; its segments stage still skips
+every segment whose part files hold exactly that segment's doc keys.
 """
 
 from __future__ import annotations
@@ -1291,17 +1293,22 @@ class IndexBuilder:
 
         Returns ``[{"sid", "units": [[file, row_group], ...], "rows"}, ...]``
         or None when the fast path does not apply. The plan is persisted to
-        ``gen_dir/filegroups.json`` BEFORE the job, so a resumed build reuses
-        the exact same segment membership (restart-stable, the same contract
-        as boundaries.json); an interrupted legacy-path build (boundaries.json
-        already present) keeps resuming on the legacy path."""
+        ``gen_dir/filegroups.json`` BEFORE the job, so a resumed build over
+        the same files reuses the exact same segment membership
+        (restart-stable, the same contract as boundaries.json); an
+        interrupted legacy-path build (boundaries.json already present) keeps
+        resuming on the legacy path."""
         path = os.path.join(gen_dir, "filegroups.json")
+        files = _direct_scan_files(df)
         if os.path.exists(path):
             with open(path) as f:
-                return json.load(f)
-        if os.path.exists(os.path.join(gen_dir, "boundaries.json")):
+                groups = json.load(f)
+            # reused only for the input it was planned from, never for the
+            # other files of a failed earlier append
+            if {u[0] for g in groups for u in g["units"]} == set(files or ()):
+                return groups
+        elif os.path.exists(os.path.join(gen_dir, "boundaries.json")):
             return None
-        files = _direct_scan_files(df)
         if not files:
             return None
         import pyarrow.parquet as pq
@@ -1421,15 +1428,13 @@ class IndexBuilder:
             f.write(json.dumps(row) + "\n")
 
     def _stage_done(self, run_id: str, gen: int, stage: str, path: str) -> bool:
-        """Stage-granular resume: skip when output exists + a done manifest row."""
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
+        """Stage-granular resume: skip when output exists + a done manifest
+        row of this run. Another run's stages under the same generation (a
+        failed append, a build restarted without its ``run_id``) are redone;
+        its segments still skip per segment on matching doc keys."""
         mp = self._manifest_path()
-        if not os.path.exists(mp):
+        if not (os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(mp)):
             return False
+        want = {"run_id": run_id, "generation": gen, "stage": stage, "status": "done"}
         with open(mp) as f:
-            for line in f:
-                row = json.loads(line)
-                if row["generation"] == gen and row["stage"] == stage and row["status"] == "done":
-                    return True
-        return False
+            return any(want.items() <= json.loads(line).items() for line in f)

@@ -9,8 +9,8 @@ in the merge:
   expand multiterm leaves against the field's sorted term dictionary, held
   on the driver as numpy arrays (:meth:`IndexReader.fuzzy_vocab_sorted`,
   loaded once per reader and field with pyarrow; prefix/range/wildcard are
-  binary-search slices, fuzzy is the Levenshtein automaton's intersect
-  walk), look up global stats (field_stats + per-term df) once, bake
+  binary-search slices, fuzzy is the Levenshtein automaton's level walk),
+  look up global stats (field_stats + per-term df) once, bake
   per-term idf into a plan tree (collectors.cpp analogue). A root
   Phrase/SamePosition under ``phrase_scoring="exact_df"`` leaves its idf
   unbound: the phrase df is only known after the kernel runs.
@@ -130,7 +130,7 @@ from ..index.reader import (  # _SEGMENT_STATE: the per-generation state this mo
 )
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
-from .lev_automaton import LevAutomaton
+from .lev_automaton import LevAutomaton, SortedVocab
 
 KERNEL_OUT_SCHEMA = "segment_id int, doc_id int, score double"
 BATCH_OUT_SCHEMA = "query string, " + KERNEL_OUT_SCHEMA
@@ -193,52 +193,11 @@ class ScanSpec:
 # --------------------------------------------------------------------------
 
 
-def _fuzzy_distances(
-    cands: list[str], query: str, maxd: int, transpose: bool = False
-) -> np.ndarray:
-    """Edit distance per candidate, with a vectorized character-count
-    prefilter before the DP (the parametric-automaton role of
-    levenshtein_utils.cpp done with set arithmetic instead of FST states):
-
-    * every occurrence in the candidate of a character outside the query's
-      alphabet costs ≥1 edit (insert or substitute) — occurrence count ≤ d;
-    * every query character entirely absent from the candidate costs ≥1 edit
-      (delete or substitute) — absent-char count ≤ d.
-
-    Both tests are O(batch × len) numpy ops; the O(batch × len × |q|) DP runs
-    only on survivors. Transpositions keep the character multiset, so the
-    bounds hold for the Damerau/OSA variant too. Returns ``maxd + 1`` for
-    candidates ruled out by either test or the DP."""
-    import re as _re
-
-    n = len(cands)
-    out = np.full(n, maxd + 1, dtype=np.int64)
-    if n == 0:
-        return out
-    q_cp = np.frombuffer(query.encode("utf-32-le"), dtype=np.uint32)
-    # both prefilter tests run as C-regex ops over the WHOLE candidate batch
-    # (no per-candidate Python): the matrix encode below happens only for the
-    # few survivors, which is what makes the expansion vocab-scan cheap
-    s = pd.Series(cands, dtype="object").astype(str)
-    alphabet = "".join(sorted(set(query)))
-    outside = s.str.count(f"[^{_re.escape(alphabet)}]") if alphabet else s.str.len()
-    keep = (outside <= maxd).to_numpy()
-    missing = np.zeros(n, dtype=np.int64)
-    for ch in sorted(set(query)):
-        missing += (~s.str.contains(_re.escape(ch), regex=True)).to_numpy()
-    keep &= missing <= maxd
-    idx = np.flatnonzero(keep)
-    if idx.size:
-        d = _levenshtein_leq([cands[i] for i in idx], query, maxd, transpose=transpose)
-        out[idx] = np.minimum(d, maxd + 1)
-    return out
-
-
 def _levenshtein_leq(
     cands: list[str], query: str, maxd: int, transpose: bool = False
 ) -> np.ndarray:
-    """Vectorized Levenshtein over a candidate batch (numpy DP; the parametric
-    automaton of levenshtein_utils.cpp replaced by a batched matrix).
+    """Vectorized Levenshtein over a candidate batch (numpy DP), the tests'
+    oracle for the automaton walk (search/lev_automaton.py).
     ``transpose=True`` adds adjacent-transposition edits (the Damerau/OSA
     variant of levenshtein_filter.cpp's ``with_transpositions``)."""
     n = len(cands)
@@ -631,16 +590,16 @@ def _vocab_expand(terms_a: np.ndarray, df_a: np.ndarray, spec: tuple, limit: int
     return sorted((str(t), int(d)) for t, d in zip(seg_terms, seg_df)), False
 
 
-def _fuzzy_expand(node: flt.Fuzzy, terms_a: np.ndarray, df_a: np.ndarray) -> list:
+def _fuzzy_expand(node: flt.Fuzzy, vocab: SortedVocab, df_a: np.ndarray) -> list:
     """Fuzzy expansion over a field's sorted vocabulary → scored
     (term, df, similarity) triples.
 
-    Candidates are the Levenshtein/OSA automaton's intersect walk over the
-    vocabulary (search/lev_automaton.py — the automaton × FST arc walk of
-    levenshtein_filter.cpp:139-310), then the exact DP gives each its
-    distance. With ``prefix`` (levenshtein_filter.cpp:241-265) only the
-    prefix block's suffixes are matched. Selection: the top ``max_terms`` by
-    similarity ``1 - d / min(|term|, |prefix| + |q|)``
+    The Levenshtein/OSA automaton's walk over the vocabulary
+    (search/lev_automaton.py — the automaton × FST arc walk of
+    levenshtein_filter.cpp:139-310) gives every term within the distance and
+    its distance. With ``prefix`` (levenshtein_filter.cpp:241-265) the walk
+    starts at the prefix block, past the prefix. Selection: the top
+    ``max_terms`` by similarity ``1 - d / min(|term|, |prefix| + |q|)``
     (levenshtein_filter.cpp:48-55, 158-165), ties towards the LARGER term
     (top_terms_collector.hpp:64-69)."""
     q, maxd, max_terms = node.term, node.max_distance, node.max_terms
@@ -660,19 +619,11 @@ def _fuzzy_expand(node: flt.Fuzzy, terms_a: np.ndarray, df_a: np.ndarray) -> lis
     if max_terms <= 0:
         max_terms = 1 << 30
     pfx = getattr(node, "prefix", "") or ""
-    if pfx:
-        lo, hi = _prefix_block(terms_a, pfx)
-        terms_a, df_a = terms_a[lo:hi], df_a[lo:hi]
-        # a shared prefix preserves order: the suffixes are still sorted
-        match_a = np.array([t[len(pfx):] for t in terms_a], dtype=object)
-    else:
-        match_a = terms_a
-    idx = LevAutomaton(q, maxd, transpose=transpose).intersect(match_a)
+    lo, hi = _prefix_block(vocab.terms, pfx)
+    idx, kd = LevAutomaton(q, maxd, transpose=transpose).walk(vocab, lo, hi, len(pfx))
     if idx.size == 0:
         return []
-    d = _fuzzy_distances(list(match_a[idx]), q, maxd, transpose=transpose)
-    keep = d <= maxd
-    kt, kd, kdf = terms_a[idx][keep], d[keep], df_a[idx][keep]
+    kt, kdf = vocab.terms[idx], df_a[idx]
     # similarity length incl. the prefix, clamped to >= 1 exactly like the
     # reference (levenshtein_filter.cpp collect_terms: max(1,
     # utf8_length(prefix) + utf8_length(term))); an empty vocabulary term
@@ -708,7 +659,7 @@ def expand_multiterm(
         return [], None  # unknown field matches nothing (reference semantics)
     terms_a, df_a, _ = reader.fuzzy_vocab_sorted(fname)
     if isinstance(node, flt.Fuzzy):
-        return _fuzzy_expand(node, terms_a, df_a), None
+        return _fuzzy_expand(node, reader.fuzzy_vocab_index(fname), df_a), None
     spec = _spec_of(node)
     if spec is None:
         raise TypeError(f"not a multiterm filter: {node}")

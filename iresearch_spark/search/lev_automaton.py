@@ -1,67 +1,113 @@
-"""Lazy-determinized Levenshtein automaton + sorted-dictionary intersection.
+"""Levenshtein automaton walked over a sorted term dictionary.
 
-The reference expands ``by_edit_distance`` by intersecting a parametric
-Levenshtein automaton (Schulz–Mihov) with the FST term dictionary, making the
-expansion sublinear in vocabulary size (levenshtein_utils.cpp:1-775;
-levenshtein_filter.cpp:139-310: ``visit`` walks automaton × FST arcs).  This
-module is the Spark-repo analogue over the driver-held SORTED term
-dictionary (index/reader.py ``fuzzy_vocab_sorted`` — the in-memory FST
-role), and it enumerates every fuzzy expansion, at every distance the
-reference's provider supports (0–4, 0–3 with transpositions):
+The reference expands ``by_edit_distance`` in one pass: a parametric
+Levenshtein automaton (Schulz–Mihov) intersected with the FST term
+dictionary, whose state gives each accepted term's edit distance
+(levenshtein_utils.cpp:1-775; levenshtein_filter.cpp:139-310 ``visit``).
+Here the dictionary is the driver-held SORTED term array (index/reader.py
+``fuzzy_vocab_sorted``), at every distance the reference's provider
+supports (0–4, 0–3 with transpositions):
 
 * :class:`LevAutomaton` — an NFA for (query, max_distance, transpositions)
-  determinized LAZILY into subset states, one transition table entry per
-  (state, character-class).  Character classes collapse the unbounded Unicode
-  alphabet to ``{each distinct query char} ∪ OTHER`` — every non-query
-  character behaves identically in every state, so the DFA stays finite and
-  tiny regardless of corpus alphabet.
-* :meth:`LevAutomaton.intersect` — the Lucene-style ``seek``/``skip`` walk
-  over a sorted term array: walk the DFA down the current term; on a dead
-  prefix, compute the lexicographically smallest viable successor string and
-  ``searchsorted`` straight to it.  Dictionary terms between the dead prefix
-  and the successor are never touched — the walk is sublinear in |vocab|
-  (O(#accepted + #explored prefix runs) instead of O(|vocab|)).
+  determinized lazily into an integer table ``delta[state, class]``: only
+  the (state, class) pairs the walk meets are built.  Class 0 is every
+  character outside the query, classes 1..m its distinct characters — a
+  non-query character behaves the same in every state.  ``dist[state] =
+  min(e + n - i)`` over the state's plain ``(i, e)`` is the exact edit
+  distance of the word read so far whenever it is ``<= max_distance``.
+* :class:`SortedVocab` — the terms as UTF-32 code points with offsets, and
+  the rows grouped by their longest common prefix (LCP) with the
+  predecessor: the terms sharing a k-character prefix are one row range,
+  whose children start at its rows of LCP k.
+* :meth:`LevAutomaton.walk` — the live (row range, state) nodes advance one
+  character depth at a time, in numpy; a dead state drops its whole range
+  unread, so the walk is sublinear in |vocab|.
 
-Distance semantics match ``_fuzzy_distances`` (executor.py): standard
-Levenshtein, or the restricted Damerau/OSA variant when
-``transpose=True`` — the NFA's transposition states consume exactly an
-adjacent pair, the same restriction the OSA DP encodes.  The caller still
-DP-verifies survivors, so the automaton only needs NO FALSE NEGATIVES; it is
-in fact exact (property-tested against the DP in
-tests/test_lev_automaton.py), which is what makes the seek walk sublinear.
+Distances are Levenshtein, or the restricted Damerau/OSA variant when
+``transpose=True`` (a transposition state consumes exactly an adjacent
+pair, as in the OSA DP).  tests/test_lev_automaton.py checks each accepted
+term's distance against the DP (``executor._levenshtein_leq``).
 
 NFA states (query length n, budget d = max_distance):
 
 * plain ``(i, e)`` — consumed ``q[:i]`` with ``e`` edits.  Transitions on
   input char ``c``: match ``(i+1, e)`` when ``c == q[i]``; insertion
   ``(i, e+1)``; substitution ``(i+1, e+1)``; deletions are the
-  epsilon-closure ``(i+k, e+k)``.  Accepting iff ``e + (n - i) <= d``
-  (delete the unconsumed tail).
+  epsilon-closure ``(i+k, e+k)``; deleting the unconsumed tail costs
+  ``n - i``.
 * transposition ``T(i, e)`` — consumed ``q[i+1]`` out of order (charged on
   entry); the only way forward is reading ``q[i]`` → ``(i+2, e)``.
 
 Subset states are reduced by the standard subsumption rule
-``(i, e) subsumes (j, f)  iff  f >= e + |i - j|`` (Schulz–Mihov §4) so the
-lazy DFA state count stays flat in query length.
+``(i, e) subsumes (j, f)  iff  f >= e + |i - j|`` (Schulz–Mihov §4), which
+keeps the state count flat in query length and never drops the minimum of
+``e + n - i`` (``f - e >= j - i``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-#: sentinel character class for "any character not occurring in the query"
-_OTHER = "\0other"
 
-#: one past the largest Unicode scalar — no dictionary char sorts >= this
-_MAXCP = 0x110000
+class SortedVocab:
+    """A term-ascending string array laid out for :meth:`LevAutomaton.walk`:
+    about 4 bytes per character plus 16 per term beside the terms."""
+
+    __slots__ = ("terms", "cps", "off", "_by_lcp", "_lcp_at")
+
+    def __init__(self, terms: np.ndarray):
+        self.terms = terms
+        n = len(terms)
+        lens = np.fromiter(map(len, terms), np.int64, n)
+        self.off = np.zeros(n + 1, np.int64)
+        np.cumsum(lens, out=self.off[1:])
+        self.cps = np.frombuffer("".join(terms).encode("utf-32-le"), np.uint32)
+        # LCP of each row with its predecessor (row 0: 0): every row still
+        # equal to its predecessor on [0, k) compares its k-th code point
+        lcp = np.zeros(n, np.int64)
+        alive, k = np.arange(1, n), 0
+        while alive.size:
+            same = np.minimum(lens[alive - 1], lens[alive]) > k
+            at = alive[same]
+            same[same] = self.cps[self.off[at] + k] == self.cps[self.off[at - 1] + k]
+            lcp[alive[~same]] = k
+            alive, k = alive[same], k + 1
+        self._by_lcp = np.argsort(lcp, kind="stable")
+        self._lcp_at = np.searchsorted(lcp[self._by_lcp], np.arange(lens.max(initial=0) + 2))
+
+    def __len__(self) -> int:
+        return len(self.terms)
+
+    def chars_at(self, rows: np.ndarray, depth: int) -> np.ndarray:
+        """The code point at ``depth`` of each row (every row is longer)."""
+        return self.cps[self.off[rows] + depth]
+
+    def children(self, lo: np.ndarray, hi: np.ndarray, depth: int):
+        """Split the ascending, disjoint row ranges ``[lo, hi)``, each sharing
+        its first ``depth`` characters, by the character at ``depth`` →
+        (start, end, parent) per child range.  A range's first row is no
+        child when it ends at ``depth``; every other child starts at a row
+        whose LCP with its predecessor is ``depth``."""
+        cuts = self._by_lcp[self._lcp_at[depth] : self._lcp_at[depth + 1]]
+        a = np.searchsorted(cuts, lo, "right")
+        cnt = np.searchsorted(cuts, hi, "left") - a
+        at = np.arange(cnt.sum()) + np.repeat(a - np.cumsum(cnt) + cnt, cnt)
+        first = lo[self.off[lo + 1] - self.off[lo] > depth]
+        start = np.sort(np.concatenate([first, cuts[at]]))
+        parent = np.searchsorted(lo, start, "right") - 1
+        # a child ends where its parent's next child starts, the last at hi
+        end = hi[parent]
+        inner = parent[1:] == parent[:-1]
+        end[:-1][inner] = start[1:][inner]
+        return start, end, parent
 
 
 class LevAutomaton:
     """Levenshtein/OSA acceptor for one (query, max_distance) pair."""
 
     __slots__ = (
-        "query", "maxd", "transpose", "n", "_qchars", "_qsorted",
-        "_trans", "start",
+        "query", "maxd", "transpose", "n", "_chars", "_cps", "_states",
+        "_ids", "delta", "dist",
     )
 
     def __init__(self, query: str, maxd: int, transpose: bool = False):
@@ -69,11 +115,17 @@ class LevAutomaton:
         self.maxd = int(maxd)
         self.transpose = bool(transpose)
         self.n = len(query)
-        self._qchars = set(query)
-        self._qsorted = sorted(self._qchars)
-        # transition cache: state -> {char_class -> state}
-        self._trans: dict[frozenset, dict[str, frozenset]] = {}
-        self.start = self._reduce(self._closure({(0, 0, False)}))
+        # class c >= 1 reads _chars[c - 1]; class 0 reads every other char
+        self._chars = sorted(set(query))
+        self._cps = np.array([ord(c) for c in self._chars], np.uint32)
+        # state 0 is dead (the empty set), state 1 the start; a -1 entry of
+        # delta is not determinized yet
+        self._states: list[frozenset] = []
+        self._ids: dict[frozenset, int] = {}
+        self.delta = np.zeros((2, len(self._chars) + 1), np.int64)
+        self.dist = np.zeros(2, np.int64)
+        self._state_id(frozenset())
+        self._state_id(self._reduce(self._closure({(0, 0, False)})))
 
     # ---- NFA mechanics -------------------------------------------------
     # NFA state encoding: (i, e, is_transposition_pending)
@@ -106,7 +158,7 @@ class LevAutomaton:
         return frozenset(keep)
 
     def _nfa_step(self, states: frozenset, ch: str | None) -> set:
-        """One NFA step on an input char (``None`` = the OTHER class)."""
+        """One NFA step on an input char (``None`` = a non-query char)."""
         q, n, d = self.query, self.n, self.maxd
         out: set = set()
         for (i, e, t) in states:
@@ -130,97 +182,69 @@ class LevAutomaton:
                     out.add((i, e + 1, True))         # transposition entry
         return out
 
-    # ---- lazy DFA ------------------------------------------------------
+    # ---- lazy DFA table ------------------------------------------------
 
-    def _class_of(self, ch: str) -> str:
-        return ch if ch in self._qchars else _OTHER
+    def _state_id(self, state: frozenset) -> int:
+        sid = self._ids.get(state)
+        if sid is None:
+            sid = self._ids[state] = len(self._states)
+            self._states.append(state)
+            if sid == len(self.dist):  # double the table's capacity
+                self.delta = np.concatenate([self.delta, self.delta])
+                self.dist = np.concatenate([self.dist, self.dist])
+            self.delta[sid] = -1 if state else 0
+            self.dist[sid] = min(
+                (e + self.n - i for (i, e, t) in state if not t), default=self.maxd + 1
+            )
+        return sid
 
-    def step(self, state: frozenset, ch: str) -> frozenset:
-        """DFA transition on a real character (lazily built + cached)."""
-        row = self._trans.setdefault(state, {})
-        key = self._class_of(ch)
-        nxt = row.get(key)
-        if nxt is None:
-            # deletion moves are ε-transitions: re-expand the ε-closure
-            # BEFORE consuming the character (subsumption-reduced states are
-            # stored closed-modulo-reduction, and a reduced-away (i+k, e+k)
-            # can still be the match source for this character)
-            full = self._closure(set(state))
-            raw = self._nfa_step(frozenset(full), None if key is _OTHER else key)
-            nxt = self._reduce(self._closure(raw)) if raw else frozenset()
-            row[key] = nxt
+    def _successor(self, sid: int, cls: int) -> int:
+        # deletion moves are ε-transitions: re-expand the ε-closure BEFORE
+        # consuming the character (subsumption-reduced states are stored
+        # closed-modulo-reduction, and a reduced-away (i+k, e+k) can still
+        # be the match source for this character)
+        full = frozenset(self._closure(set(self._states[sid])))
+        raw = self._nfa_step(full, self._chars[cls - 1] if cls else None)
+        return self._state_id(self._reduce(self._closure(raw)) if raw else frozenset())
+
+    def _next(self, states: np.ndarray, cps: np.ndarray) -> np.ndarray:
+        """The table step of each state on its code point, determinizing the
+        (state, class) pairs not in the table yet."""
+        cls = np.zeros(len(cps), np.int64)
+        if self._chars:
+            at = np.minimum(np.searchsorted(self._cps, cps), len(self._cps) - 1)
+            cls = np.where(self._cps[at] == cps, at + 1, 0)
+        nxt = self.delta[states, cls]
+        miss = nxt < 0
+        if miss.any():
+            ncls = self.delta.shape[1]
+            for key in np.unique(states[miss] * ncls + cls[miss]).tolist():
+                s, c = divmod(key, ncls)
+                succ = self._successor(s, c)  # may reallocate the table
+                self.delta[s, c] = succ
+            nxt = self.delta[states, cls]
         return nxt
 
-    def is_accepting(self, state: frozenset) -> bool:
-        n, d = self.n, self.maxd
-        return any(not t and e + (n - i) <= d for (i, e, t) in state)
+    # ---- sorted-dictionary walk ----------------------------------------
 
-    def accepts(self, term: str) -> bool:
-        st = self.start
-        for ch in term:
-            st = self.step(st, ch)
-            if not st:
-                return False
-        return self.is_accepting(st)
-
-    # ---- sorted-dictionary intersection --------------------------------
-
-    def _next_live_char(self, state: frozenset, ch: str) -> str | None:
-        """Smallest character STRICTLY greater than ``ch`` whose transition
-        from ``state`` is live, or None.  Only two kinds of candidate exist:
-        the query's own characters, and the smallest non-query character
-        > ``ch`` (every non-query char behaves identically)."""
-        best: str | None = None
-        for qc in self._qsorted:
-            if qc > ch and self.step(state, qc):
-                best = qc
-                break
-        # smallest OTHER-class char > ch: scan past any query chars that sit
-        # immediately above ch (bounded by |query| probes)
-        o = ord(ch) + 1
-        while o < _MAXCP and chr(o) in self._qchars:
-            o += 1
-        if o < _MAXCP and self.step(state, chr(o)):
-            c = chr(o)
-            if best is None or c < best:
-                best = c
-        return best
-
-    def intersect(self, terms: np.ndarray) -> np.ndarray:
-        """Indices of accepted terms in an ASCENDING-sorted string array.
-
-        The seek walk: run the DFA down ``terms[pos]``; when the prefix dies
-        at depth k, every dictionary term sharing that dead prefix is skipped
-        in one ``searchsorted`` jump to the smallest viable successor string
-        (backtracking to the deepest ancestor state with a live character
-        above the current one — exactly the automaton×FST arc walk of
-        levenshtein_filter.cpp:139-310, with binary search standing in for
-        FST arc seeks)."""
-        out: list[int] = []
-        npos, pos = len(terms), 0
-        while pos < npos:
-            t = terms[pos]
-            states = [self.start]
-            dead_at = -1
-            for k in range(len(t)):
-                nxt = self.step(states[-1], t[k])
-                if not nxt:
-                    dead_at = k
-                    break
-                states.append(nxt)
-            if dead_at < 0:
-                if self.is_accepting(states[-1]):
-                    out.append(pos)
-                pos += 1          # live prefix: successors may extend it
-                continue
-            seek = None
-            for k in range(dead_at, -1, -1):
-                c = self._next_live_char(states[k], t[k])
-                if c is not None:
-                    seek = t[:k] + c
-                    break
-            if seek is None:
-                break             # automaton exhausted above every suffix
-            j = int(np.searchsorted(terms, seek, side="left"))
-            pos = j if j > pos else pos + 1
-        return np.asarray(out, dtype=np.int64)
+    def walk(self, vocab: SortedVocab, lo: int = 0, hi: int | None = None, depth: int = 0):
+        """(rows, distances) of every term of ``vocab`` in rows ``[lo, hi)``
+        within ``maxd`` of the query.  The rows share their first ``depth``
+        characters, which the walk skips: a Fuzzy ``prefix`` block starts at
+        ``depth = len(prefix)``."""
+        hi = len(vocab) if hi is None else hi
+        n0 = int(hi > lo)  # one root node, none for an empty range
+        lo_a, hi_a, st = np.full(n0, lo), np.full(n0, hi), np.ones(n0, np.int64)
+        rows, dists = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+        while st.size:
+            # a range's first row is its prefix when it ends at this depth
+            d = self.dist[st]
+            ok = (vocab.off[lo_a + 1] - vocab.off[lo_a] == depth) & (d <= self.maxd)
+            rows.append(lo_a[ok])
+            dists.append(d[ok])
+            start, end, parent = vocab.children(lo_a, hi_a, depth)
+            st = self._next(st[parent], vocab.chars_at(start, depth))
+            live = st != 0
+            lo_a, hi_a, st = start[live], end[live], st[live]
+            depth += 1
+        return np.concatenate(rows), np.concatenate(dists)

@@ -189,3 +189,37 @@ def test_delete_commit_keeps_concurrent_append(spark, tmp_path_factory):
     latest = IndexReader(spark, path)
     keys = {r["doc_key"] for r in latest.live_docs().select("doc_key").collect()}
     assert keys == {"a2", "b1"}  # b1 survived the delete commit
+
+
+@pytest.mark.parametrize("source", ["rows", "parquet"])
+def test_failed_append_lends_nothing_to_the_next_append(
+    spark, tmp_path_factory, monkeypatch, source
+):
+    # an append whose commit failed leaves its stages (and, from parquet
+    # input, its file-group plan) under gen=2; the next, unrelated append
+    # claims gen=2 again and must commit its own docs, not the failed ones
+    path = str(tmp_path_factory.mktemp("commit_f"))
+
+    def docs(keys):
+        df = _docs(spark, keys)
+        if source == "rows":
+            return df
+        p = str(tmp_path_factory.mktemp("src") / "docs")
+        df.coalesce(1).write.parquet(p)
+        return spark.read.parquet(p)
+
+    IndexBuilder(spark, path, num_segments=1).build(
+        _docs(spark, ["a1", "a2"]), key_col="doc_key", text_col="text"
+    )
+
+    def crash(self, meta):
+        raise OSError("crashed before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(commit.Claim, "publish", crash)
+        with pytest.raises(OSError):
+            IndexBuilder(spark, path, num_segments=1).append(docs(["x1"]))
+    IndexBuilder(spark, path, num_segments=1).append(docs(["y1", "y2"]))
+    assert _live_keys(spark, path) == ["a1", "a2", "y1", "y2"]
+    # the term stats are the committed docs' too: scan's df counts 4 docs
+    assert IndexReader(spark, path).term_stats(["scan"])["scan"][0] == 4

@@ -1,5 +1,5 @@
-"""Round-2 behaviors: All-filter batches, empty-input build, transposition
-fuzzy, contiguous consolidation, distributed multiterm expansion specs."""
+"""Round-2 behaviors: All-filter batches, empty-input build, contiguous
+consolidation, distributed multiterm expansion specs."""
 
 import os
 
@@ -7,11 +7,7 @@ import numpy as np
 import pytest
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
-from iresearch_spark.search.executor import (
-    _levenshtein_leq,
-    expand_multiterm,
-    spec_match,
-)
+from iresearch_spark.search.executor import expand_multiterm, spec_match
 
 DOCS = {
     f"d{i:04d}": t
@@ -85,31 +81,6 @@ def test_empty_input_build(spark, tmp_path_factory):
     s = Searcher(reader)
     assert s.search(flt.Term("anything"), k=5).collect() == []
     assert s.search_many({"q": flt.Term("x")}, k=5).collect() == []
-
-
-# ---------------------------------------------------------------- fuzzy
-
-
-def test_levenshtein_transpositions_unit():
-    # plain Levenshtein: "ab" -> "ba" costs 2; OSA transposition costs 1
-    d_plain = _levenshtein_leq(["ba"], "ab", 2, transpose=False)
-    d_tr = _levenshtein_leq(["ba"], "ab", 2, transpose=True)
-    assert d_plain[0] == 2 and d_tr[0] == 1
-    d = _levenshtein_leq(["sprak", "spark", "spurk", "sparkle"], "spark", 2, transpose=True)
-    assert list(d) == [1, 0, 1, 2]
-
-
-def test_fuzzy_with_transpositions(built):
-    s = Searcher(built)
-    # "saprk" is a transposition of "spark": distance 2 plain, 1 with OSA
-    plain = s.search(flt.Fuzzy("saprk", max_distance=1), k=10).collect()
-    tr = s.search(
-        flt.Fuzzy("saprk", max_distance=1, with_transpositions=True), k=10
-    ).collect()
-    assert plain == []
-    assert {r["doc_key"] for r in tr} == {
-        k for k, t in DOCS.items() if "spark" in t.split()
-    }
 
 
 # ---------------------------------------------------------------- expansion

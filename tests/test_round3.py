@@ -323,51 +323,6 @@ def test_jaccard_head_shingle_cap(spark):
 
 
 # --------------------------------------------------------------------------
-# fuzzy candidate parity: top-max_terms by reference boost
-# (levenshtein_filter.cpp:48-55 similarity; top_terms_collector.hpp:64-69
-# tie-break towards the larger term) + charset prefilter soundness
-# --------------------------------------------------------------------------
-
-
-def test_fuzzy_prefilter_matches_bruteforce():
-    import itertools
-    import random
-
-    from iresearch_spark.search.executor import _fuzzy_distances, _levenshtein_leq
-
-    rng = random.Random(11)
-    alpha = "abcd"
-    vocab = sorted({"".join(rng.choice(alpha) for _ in range(rng.randint(1, 7))) for _ in range(400)})
-    for q in ["abca", "dcba", "aa", "abcdabc"]:
-        for maxd in (1, 2):
-            for tr in (False, True):
-                brute = _levenshtein_leq(vocab, q, maxd, transpose=tr)
-                fast = _fuzzy_distances(vocab, q, maxd, transpose=tr)
-                within_b = np.asarray(brute) <= maxd
-                within_f = fast <= maxd
-                assert np.array_equal(within_b, within_f), (q, maxd, tr)
-                assert np.array_equal(np.asarray(brute)[within_b], fast[within_f])
-
-
-def test_fuzzy_candidate_selection_reference_order(spark, tmp_path_factory):
-    from iresearch_spark.search.executor import expand_multiterm
-
-    path = str(tmp_path_factory.mktemp("fuzzysel"))
-    # vocabulary: > max_terms terms within distance 1 of 'scan'
-    vocab = ["scan", "scanx", "scax", "sca", "zcan", "scann", "scaz", "sxan"]
-    docs = {f"d{i}": w for i, w in enumerate(vocab)}
-    df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=1).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    node = flt.Fuzzy("scan", max_distance=1, max_terms=3)
-    got, tail = expand_multiterm(node, reader)
-    assert tail is None
-    # boosts: scan=1.0; len>=4 d=1 -> 0.75 (zcan scann scanx scax scaz sxan);
-    # sca (len 3, d=1) -> 2/3. top-3 = scan, then the two LARGEST 0.75 terms
-    assert [t for t, *_ in got] == sorted(["scan", "zcan", "sxan"])
-
-
-# --------------------------------------------------------------------------
 # chunked norms (round-1 finding #7 / VERDICT r2 #4): doc_len stored in
 # 2^16-doc VByte rows; kernels decode only the chunks their candidates touch
 # --------------------------------------------------------------------------

@@ -434,81 +434,6 @@ def test_minhash_signatures_plan_has_no_shuffle(spark):
 
 
 # --------------------------------------------------------------------------
-# Fuzzy exact-prefix option (by_edit_distance opts.prefix,
-# levenshtein_filter.cpp:241-265): candidates must start with the prefix,
-# edits apply to the remainder, similarity length = |prefix| + |term|
-# --------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def batch_index(spark, tmp_path_factory):
-    from iresearch_spark import IndexBuilder, IndexReader
-
-    words = ["spark", "index", "scan", "merge", "rank", "query", "fast", "dup"]
-    rows = [
-        (f"{i:04d}", " ".join(words[(i + j) % len(words)] for j in range(1 + i % 7)))
-        for i in range(120)
-    ]
-    path = str(tmp_path_factory.mktemp("batchidx"))
-    df = spark.createDataFrame(rows, "doc_key string, text string")
-    IndexBuilder(spark, path, analyzer="simple", num_segments=3).build(
-        df, key_col="doc_key", text_col="text"
-    )
-    return IndexReader(spark, path)
-
-
-def _fuzzy_prefix_brute(vocab, pfx, term, d, tr=False):
-    from iresearch_spark.search.executor import _fuzzy_distances
-
-    out = []
-    for t in vocab:
-        if not t.startswith(pfx):
-            continue
-        if _fuzzy_distances([t[len(pfx):]], term, d, transpose=tr)[0] <= d:
-            out.append(t)
-    return sorted(out)
-
-
-FUZZY_PFX_CASES = [
-    ("r", "ank", 1, False),    # exact suffix hit (rank)
-    ("s", "cab", 1, False),    # scan via 1 edit on the suffix; spark excluded
-    ("sc", "an", 0, False),    # d=0 degenerates to exact prefix+term (scan)
-    ("q", "uery", 2, True),    # transpositions on the suffix
-    ("zz", "an", 2, False),    # empty prefix run -> no candidates
-    ("", "scam", 1, False),    # empty prefix == plain fuzzy (regression)
-]
-
-
-@pytest.mark.parametrize("pfx,term,d,tr", FUZZY_PFX_CASES)
-def test_fuzzy_prefix_candidates_match_brute(spark, batch_index, pfx, term, d, tr):
-    from iresearch_spark import filters as flt
-    from iresearch_spark.search.executor import expand_multiterm
-
-    vocab = [r["term"] for r in batch_index.term_dict().select("term").distinct().collect()]
-    expect = _fuzzy_prefix_brute(vocab, pfx, term, d, tr)
-    got, tail = expand_multiterm(
-        flt.Fuzzy(term, max_distance=d, with_transpositions=tr, prefix=pfx),
-        batch_index,
-    )
-    assert tail is None
-    assert sorted(t for t, *_ in got) == expect, (pfx, term, d, tr)
-
-
-def test_fuzzy_prefix_similarity_length_includes_prefix(spark, batch_index):
-    """Selection boost = 1 - d/min(|candidate|, |prefix|+|term|): with
-    max_terms=1 the closer candidate must win under the prefixed length."""
-    from iresearch_spark import filters as flt
-    from iresearch_spark.search.executor import expand_multiterm
-
-    # candidates starting "s": scan (suffix d=1 vs "cab") and spark (d=4) —
-    # only scan survives maxd=1; boost = 1 - 1/min(4, 1+3) = 0.75 (not 1/3)
-    got, _ = expand_multiterm(
-        flt.Fuzzy("cab", max_distance=1, prefix="s", max_terms=1), batch_index
-    )
-    assert [t for t, *_ in got] == ["scan"]
-
-
-# --------------------------------------------------------------------------
 # ngram start/end markers (Options.start_marker/end_marker): sequences
 # pinned against the reference's own fixtures
 # (tests/analysis/ngram_token_stream_test.cpp:1030-1163, input "quick",

@@ -1,13 +1,20 @@
 """Sweep the kernel placement threshold, ``Searcher.DRIVER_MAX_POSTINGS``.
 
 Over an existing index, runs single queries of the reference categories and
-mixed batches of 1–64 plans twice each: once with the segment kernel forced
+mixed batches of 1–256 plans twice each: once with the segment kernel forced
 into the driver and once forced into the Spark job. It asserts the rows are
 identical and prints, per query or batch, its planned postings
-(``ScanSpec.planned_postings``) and the median milliseconds of
-``PreparedBatch.execute(k=10).collect()`` under each placement. The two
-placements alternate within every repeat, so a drift in machine speed hits
-both alike.
+(``ScanSpec.planned_postings``), the median milliseconds of
+``Searcher.prepare`` (expansion, stats and compile; the same under both
+placements) and of ``PreparedBatch.execute(k=10).collect()`` under each
+placement. The two placements alternate within every repeat, so a drift in
+machine speed hits both alike.
+
+It ends with the two figures ``DRIVER_MAX_POSTINGS`` is set from: the job
+floor, the smallest job median of the sweep (a job's fixed cost, which no
+number of executors lowers), and the crossing, the planned postings at which
+the batches' serial driver time reaches that floor (linear between the two
+batch rows around it).
 
     python examples/placement_sweep.py INDEX_PATH [--repeat 5] [--seed 1] [--master local[4]]
 
@@ -43,7 +50,7 @@ BATCH_MIX = (
     "HighTerm", "MedTerm", "AndHighMed", "OrHighMed", "Prefix3", "Wildcard",
     "Fuzzy1", "Or6High4Med2Low",
 )
-BATCH_SIZES = (1, 2, 4, 8, 16, 32, 64)
+BATCH_SIZES = (1, 2, 4, 8, 16, 32, 64, 128, 256)
 
 
 class Terms:
@@ -91,10 +98,17 @@ class Terms:
         raise ValueError(cat)
 
 
-def sweep_one(searcher: Searcher, queries: dict, repeat: int) -> tuple[int, float, float]:
-    """(planned postings, driver ms, job ms) of one prepared batch; asserts
-    both placements return identical rows."""
-    prepared = searcher.prepare(queries)
+def sweep_one(
+    searcher: Searcher, queries: dict, repeat: int
+) -> tuple[int, float, float, float]:
+    """(planned postings, prepare ms, driver ms, job ms) of one batch;
+    asserts both placements return identical rows."""
+    prep_ms = []
+    for i in range(repeat + 1):  # the first prepare warms up and is not timed
+        t0 = time.perf_counter()
+        prepared = searcher.prepare(queries)
+        if i:
+            prep_ms.append((time.perf_counter() - t0) * 1e3)
     rows, ms = {}, {p: [] for p in FORCE}
     for i in range(repeat + 1):  # the first round warms up and is not timed
         for p in FORCE if i % 2 else reversed(FORCE):
@@ -109,9 +123,20 @@ def sweep_one(searcher: Searcher, queries: dict, repeat: int) -> tuple[int, floa
     prepared.unpersist()
     return (
         prepared.scan.planned_postings,
+        statistics.median(prep_ms),
         statistics.median(ms["driver"]),
         statistics.median(ms["spark"]),
     )
+
+
+def crossing(points: list[tuple[int, float]], floor: float) -> int | None:
+    """Planned postings at which the driver time, linear between the sorted
+    (planned, driver ms) points, first exceeds ``floor``; None when no point
+    is above it, or the first already is."""
+    for (p0, d0), (p1, d1) in zip(points, points[1:]):
+        if d0 <= floor < d1:
+            return round(p0 + (floor - d0) * (p1 - p0) / (d1 - d0))
+    return None
 
 
 def main() -> None:
@@ -131,21 +156,27 @@ def main() -> None:
     print(f"# {args.index}: {sum(counts.values())} docs, {len(counts)} segments, "
           f"defaultParallelism {spark.sparkContext.defaultParallelism}, "
           f"current DRIVER_MAX_POSTINGS {Searcher.DRIVER_MAX_POSTINGS}")
-    print(f"{'query':<24}{'plans':>6}{'planned':>10}{'driver_ms':>11}{'job_ms':>9}  faster")
+    print(f"{'query':<24}{'plans':>6}{'planned':>10}{'prepare_ms':>12}{'driver_ms':>11}"
+          f"{'job_ms':>9}  faster")
     results = []
     cases = [(cat, {cat: gen.filter(cat)}) for cat in SINGLE] + [
         (f"batch{n}", {f"q{j}": gen.filter(BATCH_MIX[j % len(BATCH_MIX)]) for j in range(n)})
         for n in BATCH_SIZES
     ]
     for name, queries in cases:
-        planned, d_ms, j_ms = sweep_one(searcher, queries, args.repeat)
-        results.append((planned, d_ms, j_ms))
+        planned, p_ms, d_ms, j_ms = sweep_one(searcher, queries, args.repeat)
+        results.append((name, planned, d_ms, j_ms))
         faster = "driver" if d_ms < j_ms else "spark"
-        print(f"{name:<24}{len(queries):>6}{planned:>10}{d_ms:>11.1f}{j_ms:>9.1f}  {faster}")
-    driver_wins = [p for p, d, j in results if d < j]
-    spark_wins = [p for p, d, j in results if d >= j]
+        print(f"{name:<24}{len(queries):>6}{planned:>10}{p_ms:>12.1f}{d_ms:>11.1f}"
+              f"{j_ms:>9.1f}  {faster}")
+    driver_wins = [p for _, p, d, j in results if d < j]
+    spark_wins = [p for _, p, d, j in results if d >= j]
     print(f"# largest planned postings faster in the driver: {max(driver_wins, default=None)}")
     print(f"# smallest planned postings faster as a job: {min(spark_wins, default=None)}")
+    floor = min(j for *_, j in results)
+    batches = sorted((p, d) for name, p, d, _ in results if name.startswith("batch"))
+    print(f"# job floor (smallest job median): {floor:.1f} ms")
+    print(f"# crossing (batch driver time reaches the job floor): {crossing(batches, floor)}")
     spark.stop()
 
 

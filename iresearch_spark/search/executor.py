@@ -33,7 +33,8 @@ in the merge:
   vectorized pass (:class:`_SegmentViews`: one VByte decode of all doc
   ids, one of all freqs), runs the boolean algebra vectorized in numpy
   (conjunction = sorted-array intersection ≙ conjunction.hpp;
-  disjunction = unique+bincount ≙ disjunction.hpp; exclusion ≙
+  disjunction = scores added into a dense per-segment accumulator, or
+  unique+add.at for the exact union ≙ disjunction.hpp; exclusion ≙
   exclusion.hpp; phrases = packed-key position intersection), scores
   through the searcher's :class:`ScoreModel`, and emits its local top-k
   under (score desc, doc_id asc) — or, for ``matches``, every match.
@@ -1094,7 +1095,8 @@ class PostingsView:
         return self._ids[idx], self._tfs[idx]
 
     def blocks_for(self, cand_ids: np.ndarray) -> np.ndarray:
-        """Block indexes that may contain any of the sorted candidate doc ids."""
+        """Sorted block indexes that may contain any of the candidate doc ids
+        (in any order)."""
         b = np.searchsorted(self.block_last, cand_ids, side="left")
         b = b[b < self.block_last.size]
         return np.unique(b)
@@ -1195,29 +1197,6 @@ def _tail_terms(plan: dict, sv: _SegmentViews) -> list[str]:
     return tails
 
 
-def _merge_scores(
-    cand_ids: np.ndarray, cand_scores: np.ndarray, ids: np.ndarray, scores: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    merged = np.concatenate([cand_ids, ids])
-    msc = np.concatenate([cand_scores, scores.astype(np.float64)])
-    uniq, inv = np.unique(merged, return_inverse=True)
-    acc = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(acc, inv, msc)
-    return uniq, acc
-
-
-def _add_to_candidates(
-    cand_ids: np.ndarray, cand_scores: np.ndarray, ids: np.ndarray, scores: np.ndarray
-) -> None:
-    """Add contributions to existing candidates only (in place)."""
-    if cand_ids.size == 0 or ids.size == 0:
-        return
-    pos = np.searchsorted(cand_ids, ids)
-    pos_c = np.minimum(pos, cand_ids.size - 1)
-    valid = cand_ids[pos_c] == ids
-    np.add.at(cand_scores, pos_c[valid], scores[valid].astype(np.float64))
-
-
 def _kth_threshold(scores: np.ndarray, k: int) -> float:
     if scores.size < k:
         return -np.inf
@@ -1296,6 +1275,12 @@ def _maxscore_union(
     NEW doc into the top-k, remaining lists are decoded only at blocks holding
     surviving candidates; candidates that cannot reach the k-th score are
     dropped. Strict comparisons keep exact ties intact.
+
+    Scores add into a dense float64 accumulator over the segment's doc ids
+    (block_disjunction's score window, disjunction.hpp:780-905), with a
+    ``live`` mask of the candidates and their ids in first-seen order,
+    sorted once, at return. Each doc's additions follow the leg order, so
+    the sums are those of a pairwise merge.
     """
     dl_min = float(dl.min()) if dl.size else 1.0
     ubs = model.ub_batch(
@@ -1307,16 +1292,18 @@ def _maxscore_union(
     order = np.argsort(-ubs, kind="stable")
     suffix = np.zeros(order.size + 1)
     suffix[:-1] = np.cumsum(ubs[order][::-1])[::-1]
-    cand_ids = np.empty(0, np.int64)
-    cand_scores = np.empty(0, np.float64)
+    n = max((int(v.block_last[-1]) for v, _, _ in legs if v.docs_count), default=0) + 1
+    acc = np.zeros(n, np.float64)
+    live = np.zeros(n, bool)
+    cand = np.empty(0, np.int64)
     theta = -np.inf
     for j, li in enumerate(order):
         view, idf, boost = legs[li]
         candidates_only = suffix[j] < theta  # no new doc can reach the k-th score
         if candidates_only:
-            if cand_ids.size == 0:
+            if cand.size == 0:
                 break
-            blocks = view.blocks_for(cand_ids)
+            blocks = view.blocks_for(cand)
             if blocks.size == 0:
                 continue
             ids, tfs = view.decode_blocks(blocks)
@@ -1324,15 +1311,22 @@ def _maxscore_union(
             ids, tfs = view.decode_all()
         ids, tfs = _mask_deleted(ids, tfs, dels)
         sc = model.score(tfs, dl[ids - 1], idf, avgdl, boost, dt)
+        seen = live[ids]
         if candidates_only:
-            _add_to_candidates(cand_ids, cand_scores, ids, sc)
+            ids, sc = ids[seen], sc[seen]
         else:
-            cand_ids, cand_scores = _merge_scores(cand_ids, cand_scores, ids, sc)
+            fresh = ids[~seen]
+            live[fresh] = True
+            cand = np.concatenate([cand, fresh])
+        acc[ids] += sc
+        cand_scores = acc[cand]
         theta = _kth_threshold(cand_scores, k)
-        if theta > -np.inf and suffix[j + 1] < theta:
+        if suffix[j + 1] < theta:
             keep = cand_scores + suffix[j + 1] >= theta
-            cand_ids, cand_scores = cand_ids[keep], cand_scores[keep]
-    return cand_ids, cand_scores.astype(dt)
+            live[cand[~keep]] = False
+            cand = cand[keep]
+    cand = np.sort(cand)
+    return cand, acc[cand].astype(dt)
 
 
 def _conjunction_selective(
@@ -1396,15 +1390,9 @@ def _eval_root(
     ):
         legs = [(sv.view(m[0]), m[1], plan["boost"] * (m[2] if len(m) > 2 else 1.0)) for m in plan["terms"]]
         legs = [(v, i, bo) for v, i, bo in legs if v is not None]
-        unscored = _tail_terms(plan, sv)
-        if not legs and not unscored:
-            return empty
-        ids, sc = (
-            _maxscore_union(legs, k, dl, avgdl, model, dt, dels)
-            if legs
-            else (np.empty(0, np.int64), np.empty(0, dtype=dt))
-        )
-        if unscored and ids.size < k:
+        ids, sc = _maxscore_union(legs, k, dl, avgdl, model, dt, dels) if legs else empty
+        unscored = _tail_terms(plan, sv) if ids.size < k else ()
+        if unscored:
             # fill the tail with unscored matches at score 0 (smallest doc ids
             # win ties, same as the reference's doc-order heap insertion)
             tails = [sv.view(t).decode_all()[0] for t in unscored if sv.view(t) is not None]
@@ -2024,11 +2012,16 @@ class Searcher:
     # planned postings (ScanSpec.planned_postings — the df sum over every
     # plan's scored leaves; unscored multiterm tails do not count, top-k
     # prunes their 0-score matches) the segment loop runs serially in the
-    # driver with no Spark job, above it as the Spark job. On 4 cores
-    # examples/placement_sweep.py puts the break-even near 0.9M planned
-    # postings; a job gains with more executor cores, so the constant sits
-    # well under that. Instance-overridable for tests / unusual deployments.
-    DRIVER_MAX_POSTINGS = 250_000
+    # driver with no Spark job, above it as the Spark job. Rule: the driver
+    # takes any batch its serial loop finishes within the Spark job floor,
+    # the smallest job median of examples/placement_sweep.py. The floor is a
+    # job's fixed cost, which no number of executor cores lowers, so the
+    # bound does not depend on the core count. It is the sweep's printed
+    # crossing, median over repeated sweeps, rounded to 0.1M: on a
+    # 5,000-page perfbench index at 4 cores, nine sweeps read 0.84–1.26M
+    # (median 1.14M).
+    # Instance-overridable for tests / unusual deployments.
+    DRIVER_MAX_POSTINGS = 1_100_000
 
     def __init__(
         self,

@@ -1,110 +1,16 @@
-"""Round-3 regressions: docs_mask inside pruned iterators (WAND/MaxScore/
-conjunction with multi-block segments), the fused
-postings+term_dict build stage, the scale-safe phrase scorer (per-segment
-local top-k + exact seg counts), the matches-only nested child pass, and
-same-position ngram chain semantics."""
+"""Round-3 regressions: the fused postings+term_dict build stage, the
+scale-safe phrase scorer (per-segment local top-k + exact seg counts), the
+matches-only nested child pass, and same-position ngram chain semantics.
+The deletes-before-theta cases of the pruned kernels are in
+``tests/test_wand.py``."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from iresearch_spark import IndexBuilder, IndexReader, Searcher, filters as flt
-from iresearch_spark.index.deletes import delete_docs
 from tests.oracle import ScalarIndex
-
-# --------------------------------------------------------------------------
-# deletes must be masked BEFORE top-k pruning (ADVICE r2 high): a big single
-# segment (>2 blocks so WAND actually skips) whose top-ranking docs are all
-# deleted — theta computed over deleted docs would skip live-doc blocks
-# --------------------------------------------------------------------------
-
-N_BIG = 700  # ~6 blocks of 128
-
-
-def _big_docs() -> dict[str, str]:
-    docs = {}
-    for i in range(N_BIG):
-        # tf of 'scan' rises with i, so the best docs are at the end;
-        # 'sort' appears on even docs with its own gradient
-        tf_scan = 1 + (i * 7) % 13
-        tf_sort = 1 + (i * 5) % 11 if i % 2 == 0 else 0
-        filler = ["pad"] * (3 + i % 5)
-        docs[f"d{i:05d}"] = " ".join(["scan"] * tf_scan + ["sort"] * tf_sort + filler)
-    return docs
-
-
-@pytest.fixture(scope="module")
-def big_del_idx(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("bigdel"))
-    docs = _big_docs()
-    df = spark.createDataFrame(list(docs.items()), "doc_key string, text string")
-    IndexBuilder(spark, path, num_segments=1).build(df, key_col="doc_key", text_col="text")
-    reader = IndexReader(spark, path)
-    oracle = ScalarIndex(docs)
-    # delete the CURRENT top-30 'scan' docs and the top-30 'sort' docs: the
-    # pre-fix kernels would compute theta over exactly these and skip blocks
-    top_scan = [k for k, _ in oracle.term_query("scan", k=30)]
-    top_sort = [k for k, _ in oracle.term_query("sort", k=30)]
-    deleted = sorted(set(top_scan) | set(top_sort))
-    delete_docs(reader, deleted)
-    return IndexReader(spark, path), docs, set(deleted), oracle
-
-
-def _live(oracle_hits, deleted, k):
-    return [(key, s) for key, s in oracle_hits if key not in deleted][:k]
-
-
-def test_wand_single_term_masks_before_theta(spark, big_del_idx):
-    reader, docs, deleted, oracle = big_del_idx
-    got = [
-        (r["doc_key"], r["score"])
-        for r in Searcher(reader).search(flt.Term("scan"), k=10).collect()
-    ]
-    exp = _live(oracle.term_query("scan", k=N_BIG), deleted, 10)
-    assert [g[0] for g in got] == [e[0] for e in exp]
-    for (_, gs), (_, es) in zip(got, exp):
-        assert abs(gs - es) < 1e-9
-
-
-def test_maxscore_union_masks_before_theta(spark, big_del_idx):
-    reader, docs, deleted, oracle = big_del_idx
-    got = [
-        (r["doc_key"], r["score"])
-        for r in Searcher(reader)
-        .search(flt.Or((flt.Term("scan"), flt.Term("sort"))), k=10)
-        .collect()
-    ]
-    exp = _live(oracle.or_query(["scan", "sort"], k=N_BIG), deleted, 10)
-    assert [g[0] for g in got] == [e[0] for e in exp]
-    for (_, gs), (_, es) in zip(got, exp):
-        assert abs(gs - es) < 1e-9
-
-
-def test_conjunction_masks_driving_leg(spark, big_del_idx):
-    reader, docs, deleted, oracle = big_del_idx
-    got = [
-        (r["doc_key"], r["score"])
-        for r in Searcher(reader)
-        .search(flt.And((flt.Term("scan"), flt.Term("sort"))), k=10)
-        .collect()
-    ]
-    exp = _live(oracle.and_query(["scan", "sort"], k=N_BIG), deleted, 10)
-    assert [g[0] for g in got] == [e[0] for e in exp]
-
-
-def test_batch_path_masks_before_theta(spark, big_del_idx):
-    reader, docs, deleted, oracle = big_del_idx
-    res = Searcher(reader).search_many({"q": flt.Term("scan")}, k=10)
-    keys = reader.docs().select("segment_id", "doc_id", "doc_key")
-    got = [
-        (r["doc_key"], r["score"])
-        for r in res.join(keys, ["segment_id", "doc_id"])
-        .orderBy(F.desc("score"), "doc_key")
-        .collect()
-    ]
-    exp = _live(oracle.term_query("scan", k=N_BIG), deleted, 10)
-    assert [g[0] for g in got] == [e[0] for e in exp]
-
+from tests.test_wand import _big_docs
 
 # --------------------------------------------------------------------------
 # fused build: term_dict written by the layout pass equals a global groupBy

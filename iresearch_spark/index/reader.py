@@ -366,7 +366,7 @@ class IndexReader:
         return self._table("deletes")
 
     def live_docs(self) -> DataFrame:
-        """docs minus deleted (mask applied; stored-column query surface)."""
+        """docs minus deleted (mask applied; the surface of Nested's fold)."""
         docs = self.docs()
         dels = self.deletes()
         if dels is None:

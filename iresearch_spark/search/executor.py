@@ -1,9 +1,9 @@
 """Query execution: one compile → one kernel → one merge.
 
-Every scored filter — Term/Terms/multiterm, boolean trees, Phrase and
-SamePosition (root or nested), NgramSimilarity — takes the same path, and
-``search``, ``matches`` and ``search_many`` / ``PreparedBatch`` differ only
-in the merge:
+Every filter but Nested — Term/Terms/multiterm, boolean trees, Phrase and
+SamePosition (root or nested), NgramSimilarity, ColumnExists, NumericRange
+— takes the same path, and ``search``, ``matches`` and ``search_many`` /
+``PreparedBatch`` differ only in the merge:
 
 * ``prepare`` — :func:`compile_plans`, pure driver code with no Spark job:
   expand multiterm leaves against the field's sorted term dictionary, held
@@ -21,7 +21,8 @@ in the merge:
   generation (:data:`_SEGMENT_STATE`): every segment's norms and deletes,
   and the postings files' footers with each row group's (field, term)
   range, so a read opens only the row groups its terms and tail ranges
-  select (:func:`_row_groups`).
+  select (:func:`_row_groups`), and a stored-column leaf the docs rows of
+  its segment (:func:`_stored_matches`).
   :meth:`Searcher._execute_batch` places the loop. A k-bounded batch
   planning at most ``Searcher.DRIVER_MAX_POSTINGS`` postings runs the loop
   serially in the driver over every live segment, with no Spark job (the
@@ -100,6 +101,7 @@ import dataclasses as _dataclasses
 import functools as _functools
 import heapq as _heapq
 import math
+import operator
 import os
 from dataclasses import dataclass, field as _dc_field
 
@@ -128,6 +130,7 @@ from ..index.reader import (  # _SEGMENT_STATE: the per-generation state this mo
     held_parts,
     read_frame,
     read_table,
+    table_datasets,
 )
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, get_model
@@ -163,10 +166,12 @@ class ScanSpec:
     need_positions: bool = False
     pos_terms: dict[str, list[str]] = _dc_field(default_factory=dict)
     # planned postings: the df sum over every plan's scored leaves (an All
-    # leg counts every doc), summed over the batch's plans — the placement
-    # input of Searcher._execute_batch. Unscored multiterm tails do not
-    # count: top-k prunes their 0-score matches.
+    # or stored leg counts every doc), summed over the batch's plans — the
+    # placement input of Searcher._execute_batch. Unscored multiterm tails
+    # do not count: top-k prunes their 0-score matches.
     planned_postings: int = 0
+    # key → (docs columns, pyarrow predicate) per stored leaf, :func:`_stored_leaf`
+    stored: dict[str, tuple] = _dc_field(default_factory=dict)
 
     @property
     def fields(self) -> list[str]:
@@ -780,10 +785,10 @@ def compile_plans(
             return 0.0
         return model.term_const(df, n_by_field[f], dt)
 
-    def all_leg(boost: float) -> dict:
-        # an all-docs leg enumerates every stored doc of every segment
+    def all_leg(boost: float, op: str = "all", **leaf) -> dict:
+        # an all-docs (or stored-column) leg enumerates every stored doc
         scan.planned_postings += sum(reader.segment_docs_counts().values())
-        return {"op": "all", "boost": boost}
+        return {"op": op, "boost": boost, **leaf}
 
     def build(node: flt.Filter) -> dict:
         f = fld(node)
@@ -991,6 +996,12 @@ def compile_plans(
             }
         if isinstance(node, flt.All):
             return all_leg(node.boost)
+        if isinstance(node, (flt.ColumnExists, flt.NumericRange)):
+            leaf = _stored_leaf(node, reader)
+            if leaf is None:
+                return {"op": "empty"}
+            scan.stored[str(leaf[1])] = leaf
+            return all_leg(node.boost, "column", key=str(leaf[1]))
         if isinstance(node, flt.Empty):
             return {"op": "empty"}
         raise TypeError(f"unsupported filter: {node}")
@@ -1008,6 +1019,38 @@ def compile_plans(
     for f in list(scan.field_terms):
         scan.field_terms[f] = sorted(set(scan.field_terms[f]))
     return plans, scan
+
+
+def _stored_leaf(node: flt.Filter, reader: IndexReader) -> tuple | None:
+    """(docs columns, pyarrow predicate) of a ColumnExists
+    (column_existence_filter.cpp: any of its columns non-null) or
+    NumericRange leaf (by_granular_range, granular_range_filter.cpp:42-91:
+    non-null and within bounds), or None when no column resolves. A
+    NumericRange column that is not integer or floating point raises."""
+    names = reader.meta["doc_cols"]
+    if isinstance(node, flt.ColumnExists) and node.prefix_match:
+        reserved = {"doc_key", "segment_id", "doc_id", "doc_len"}
+        cols = [c for c in names if c.startswith(node.column) and c not in reserved]
+    else:
+        cols = [node.column] if node.column in names else []
+    if not cols:
+        return None
+    if isinstance(node, flt.ColumnExists):
+        return tuple(cols), _functools.reduce(operator.or_, [pc.field(c).is_valid() for c in cols])
+    for d in table_datasets(reader.meta["tables"]["docs"]):
+        t = d.schema.field(node.column).type if node.column in d.schema.names else None
+        if t is not None and not (pa.types.is_integer(t) or pa.types.is_floating(t)):
+            raise ValueError(
+                f"NumericRange over stored column {node.column!r} of type {t}: "
+                "the column must be integer or floating point"
+            )
+    c = pc.field(node.column)
+    pred = c.is_valid()
+    if node.low is not None:
+        pred = pred & (c >= node.low if node.include_low else c > node.low)
+    if node.high is not None:
+        pred = pred & (c <= node.high if node.include_high else c < node.high)
+    return (node.column,), pred
 
 
 def _plan_fields(plan: dict) -> set[str]:
@@ -1114,10 +1157,11 @@ class _SegmentViews:
     :class:`PostingsView` of a row's slices built only when a kernel asks
     for that term. Positions decode once too, for every positional row, on
     the first request. Tail specs (:meth:`spec_keys`) are evaluated once per
-    segment."""
+    segment. ``stored``: :func:`_stored_matches`."""
 
-    def __init__(self, table: pa.Table):
+    def __init__(self, table: pa.Table, stored: dict | None = None):
         self._table = table
+        self.stored = stored or {}
         terms = table.column("term").to_numpy(zero_copy_only=False)
         self._rows = dict(zip(terms.tolist(), range(len(terms))))
         self._terms = terms
@@ -1654,8 +1698,8 @@ def _eval_plan(
         if plan["boost"] != 1.0:
             scores = scores * dt(plan["boost"])
         return ids, scores
-    if op == "all":
-        ids = np.arange(1, dl.size + 1, dtype=np.int64)
+    if op in ("all", "column"):
+        ids = np.arange(1, dl.size + 1, dtype=np.int64) if op == "all" else decoded.stored[plan["key"]]
         return ids, np.full(ids.size, dt(plan["boost"]), dtype=dt)
     if op == "empty":
         return empty
@@ -1738,8 +1782,8 @@ class _SegmentNorms:
 
 def _plan_has_all(plan: dict) -> bool:
     """True when the plan (or a sub-plan) matches docs without any postings —
-    such plans must be evaluated from the norms side in every segment."""
-    if plan["op"] == "all":
+    such plans must be evaluated from the norms or docs in every segment."""
+    if plan["op"] in ("all", "column"):
         return True
     for p in plan.get("parts", ()):
         if _plan_has_all(p):
@@ -1908,6 +1952,7 @@ class _SegmentRead:
     mixed: bool  # composite field\x1fterm keys
     fields: tuple  # the fields whose norms the kernels read
     multifield: bool
+    stored: dict = _dc_field(default_factory=dict)  # ScanSpec.stored
 
 
 def _load_segment_state(sids: list[int], read: _SegmentRead, norms: dict, dels: dict) -> None:
@@ -1960,14 +2005,36 @@ def _postings_table(sids: list[int], read: _SegmentRead) -> pa.Table:
     return post.take(np.argsort(post["segment_id"].to_numpy(), kind="stable"))
 
 
+def _stored_matches(sid: int, read: _SegmentRead) -> dict[str, np.ndarray]:
+    """Each stored leaf's (``read.stored``) sorted matching doc ids in segment
+    ``sid``, deleted ones included, from its docs row groups (picked by their
+    held segment_id ranges); columns the segment lacks are null."""
+    if not read.stored:
+        return {}
+    parts = held_parts(read.index, read.generation, read.tables, "docs", ("segment_id", "doc_id"))
+    cols = sorted({c for cs, _ in read.stored.values() for c in cs})
+    groups = np.flatnonzero(parts.overlaps("segment_id", sid, sid))
+    docs = parts.read(groups, ["segment_id", "doc_id", *cols], use_threads=False)
+    if docs is None:
+        return dict.fromkeys(read.stored, np.empty(0, np.int64))
+    docs = docs.filter(pc.field("segment_id") == sid)
+    for c in set(cols) - set(docs.column_names):
+        docs = docs.append_column(c, pa.nulls(len(docs), pa.float64()))
+    return {
+        key: np.sort(docs.filter(pred)["doc_id"].to_numpy().astype(np.int64))
+        for key, (_, pred) in read.stored.items()
+    }
+
+
 def _segment_frames(sids: list[int], read: _SegmentRead):
-    """Yield ``(segment_id, postings, norms, deletes)`` per segment of
+    """Yield ``(segment_id, postings, norms, deletes, stored)`` per segment of
     ``sids``: its postings rows (a pyarrow table, :func:`_postings_table`),
     ``{field: _SegmentNorms}`` of the fields with norms in it (empty when it
-    has none), and its sorted deleted doc ids (the document_mask,
-    segment_reader.hpp:92-93) or None. Norms and deletes come from the
-    generation's process-wide state (:data:`_SEGMENT_STATE`); only segments
-    it does not hold yet read them, with pyarrow."""
+    has none), its sorted deleted doc ids (the document_mask,
+    segment_reader.hpp:92-93) or None, and :func:`_stored_matches`. Norms
+    and deletes come from the generation's process-wide state
+    (:data:`_SEGMENT_STATE`); only segments it does not hold yet read them,
+    with pyarrow."""
     with _SEGMENT_STATE_LOCK:
         norms, dels, _ = generation_state(read.index, read.generation, read.tables)
         miss = [sid for sid in sids if any((sid, f) not in norms for f in read.fields)]
@@ -1978,15 +2045,15 @@ def _segment_frames(sids: list[int], read: _SegmentRead):
     for sid in sids:
         lo, hi = np.searchsorted(seg_col, [sid, sid + 1])
         dl_map = {f: n for f in read.fields if (n := norms[(sid, f)]) is not None}
-        yield sid, post.slice(int(lo), int(hi - lo)), dl_map, dels[sid]
+        yield sid, post.slice(int(lo), int(hi - lo)), dl_map, dels[sid], _stored_matches(sid, read)
 
 
 def _segment_loop(sids: list[int], read: _SegmentRead, kernel):
     """The per-segment reader loop (segment_reader.hpp:35-110) of both
     placements: one pyarrow read of ``sids``' postings (norms and deletes
     once per generation, :func:`_segment_frames`), then ``kernel(segment_id,
-    postings, norms, deletes)`` per segment, serially. Yields each kernel
-    output that has rows (a ``{column: numpy array}`` dict)."""
+    postings, norms, deletes, stored)`` per segment, serially. Yields each
+    kernel output that has rows (a ``{column: numpy array}`` dict)."""
     for args in _segment_frames(sids, read):
         out = kernel(*args)
         if out is not None:
@@ -2078,12 +2145,13 @@ class Searcher:
         return _SegmentRead(
             os.path.abspath(reader.index_path), int(reader.meta["generation"]),
             reader.state_tables, scan_reads(scan, multi), scan.mixed, tuple(fields), multi,
+            scan.stored,
         )
 
     def _segment_job(self, kernel, scan: ScanSpec) -> DataFrame:
         """The Spark placement: ONE shuffle-free Spark job running
-        ``kernel(segment_id, postings, norms, deletes)`` once per live
-        segment →
+        ``kernel(segment_id, postings, norms, deletes, stored)`` once per
+        live segment →
         ``_SEGMENT_OUT_SCHEMA`` rows.
 
         ``range(P).mapInArrow``: task i runs :func:`_segment_loop` over group
@@ -2132,36 +2200,23 @@ class Searcher:
         (:meth:`IndexReader.fetch_docs`). The result holds those ≤k rows on
         the driver (:class:`_LocalResult`): ``collect`` and ``toPandas`` make
         no JVM call. ``All`` is scored from the norms by the same kernel:
-        every live doc at its boost, in (segment_id, doc_id) order.
-        Stored-column filters (ColumnExists, NumericRange, Nested) stay lazy
-        Spark plans.
+        every live doc at its boost, in (segment_id, doc_id) order, and so
+        are ColumnExists and NumericRange from the docs. A root Nested stays a
+        lazy Spark plan.
         """
         nf = flt.normalize(f)
-        stored = self._stored_filter(nf, k, with_keys)
-        if stored is not None:
-            return stored
+        if isinstance(nf, flt.Nested):
+            return self._search_nested(nf, k, with_keys)
         plans, scan = self._compile({"": nf}, dtype)
         if plans[""]["op"] == "empty":
             return self._hits_frame(_NO_HITS, with_keys)
         # a batch of one: the batch kernel, merged on the driver
         return self._hits_frame(self._execute_batch(plans, scan, k, dtype), with_keys)
 
-    def _stored_filter(self, nf: flt.Filter, k: int | None, with_keys: bool):
-        """The lazy result of a stored-column filter (ColumnExists,
-        NumericRange, Nested) — its top k, or every match when ``k`` is None
-        — or None for a filter the kernel scores."""
-        if isinstance(nf, flt.ColumnExists):
-            return self._search_column_exists(nf, k, with_keys)
-        if isinstance(nf, flt.NumericRange):
-            return self._search_numeric_range(nf, k, with_keys)
-        if isinstance(nf, flt.Nested):
-            return self._search_nested(nf, k, with_keys)
-        return None
-
     def _compile(
         self, filters: dict[str, flt.Filter], dtype: str, model: ScoreModel | None = None
     ) -> tuple[dict[str, dict], ScanSpec]:
-        """:func:`compile_plans` of normalized root filters under ``model``
+        """:func:`compile_plans` of root filters under ``model``
         (the searcher's when None) — the one compile of ``search``,
         ``matches``, ``prepare`` and ``search_ordered``. Under ``exact_df``
         each root Phrase/SamePosition gets ``"idf": None``: the kernel scores
@@ -2202,15 +2257,13 @@ class Searcher:
         per-segment loop runs a kernel that evaluates every scorer's plan
         exact on each segment and keeps the segment's lexicographic top-k
         (an exact cut: the order is total). Pruning (WAND/MaxScore) is
-        single-bucket-bound in the reference too. A stored-column root
-        filter (ColumnExists, NumericRange, Nested) has no postings kernel:
-        it joins one lazy :meth:`matches` plan per scorer on (segment_id,
-        doc_id)."""
+        single-bucket-bound in the reference too. A root Nested joins one
+        lazy :meth:`matches` plan per scorer on (segment_id, doc_id)."""
         if not scorers:
             raise ValueError("scorers must name at least one scorer")
         score_cols = tuple(f"score{i}" for i in range(len(scorers)))
         nf = flt.normalize(f)
-        if isinstance(nf, (flt.ColumnExists, flt.NumericRange, flt.Nested)):
+        if isinstance(nf, flt.Nested):
             legs = [
                 Searcher(self.reader, self.k1, self.b, scorer=name, phrase_scoring=self.phrase_scoring)
                 .matches(nf, dtype=dtype)
@@ -2237,12 +2290,12 @@ class Searcher:
         cut = k + 16 if _unbound(root) else k
         legs = [(plans[c], models[c]) for c in score_cols]
 
-        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> dict | None:
+        def kernel(sid: int, postings: pa.Table, norms: dict, dels, stored: dict) -> dict | None:
             if not norms:
                 return None  # postings may be empty: All plans use norms only
             dl = next(iter(norms.values()))
             nctx = (norms, avg_map) if mixed else None
-            sv = _SegmentViews(postings)
+            sv = _SegmentViews(postings, stored)
             evals = [
                 _mask_deleted(*_eval_plan(plan, sv, dl, avgdl, model, dt, nctx), dels)
                 for plan, model in legs
@@ -2278,14 +2331,13 @@ class Searcher:
         """ALL matching (segment_id, doc_id, score) rows — no top-k, no global
         sort, output stays partitioned by segment. This is the composition
         path (nested child legs, pre-materialization): a downstream fold
-        shuffles only the match set, never sorts the corpus. Scored filters
+        shuffles only the match set, never sorts the corpus. Filters but Nested
         are the search kernel without its top-k; nothing is collected. An
         ``exact_df`` root phrase first counts its matches (one more job, one
         row back) to bind its idf."""
         nf = flt.normalize(f)
-        stored = self._stored_filter(nf, None, with_keys=False)
-        if stored is not None:
-            return stored
+        if isinstance(nf, flt.Nested):
+            return self._search_nested(nf, None, with_keys=False)
         plans, scan = self._compile({"": nf}, dtype)
         plan = plans[""]
         if plan["op"] == "empty":
@@ -2314,11 +2366,7 @@ class Searcher:
         Compiled like :meth:`search` (:meth:`_compile`): under ``exact_df``
         a root Phrase/SamePosition's idf is bound at each execute's merge,
         so every query scores exactly as its own ``search()``."""
-        normalized = {name: flt.normalize(f) for name, f in queries.items()}
-        for name, nf in normalized.items():
-            if isinstance(nf, flt.ColumnExists):
-                raise ValueError(f"{name}: ColumnExists queries need search()")
-        plans, scan = self._compile(normalized, dtype)
+        plans, scan = self._compile(queries, dtype)
         return PreparedBatch(self, plans, scan, dtype)
 
     def search_many(
@@ -2389,12 +2437,12 @@ class Searcher:
         # pickled command larger than PythonUtils.getBroadcastThreshold
         items = list(plans.items())
 
-        def kernel(sid: int, postings: pa.Table, norms: dict, dels) -> dict | None:
+        def kernel(sid: int, postings: pa.Table, norms: dict, dels, stored: dict) -> dict | None:
             if not norms:
                 return None  # postings may be empty: All plans use norms only
             dl = next(iter(norms.values()))
             dl_map = norms if mixed else None
-            sv = _SegmentViews(postings)
+            sv = _SegmentViews(postings, stored)
             names, sizes, matches, id_parts, score_parts = [], [], [], [], []
             for name, plan in items:
                 if k is None:
@@ -2478,51 +2526,6 @@ class Searcher:
             schema = "doc_key string, " + schema
         return _LocalResult(self.reader.spark, pd.DataFrame(cols), schema)
 
-    def _search_column_exists(self, node: flt.ColumnExists, k: int | None, with_keys: bool) -> DataFrame:
-        """by_column_existence (column_existence_filter.cpp): docs whose stored
-        column is non-null, constant score = boost. Catalyst pushes the
-        IS NOT NULL to the parquet scan."""
-        docs = self.reader.live_docs()
-        reserved = {"doc_key", "segment_id", "doc_id", "doc_len"}
-        if node.prefix_match:
-            cols = [c for c in docs.columns if c.startswith(node.column) and c not in reserved]
-        else:
-            cols = [node.column] if node.column in docs.columns else []
-        if not cols:
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return self.reader.spark.createDataFrame([], schema if with_keys else schema.split(", ", 1)[1])
-        pred = F.col(cols[0]).isNotNull()
-        for c in cols[1:]:
-            pred = pred | F.col(c).isNotNull()
-        out = docs.where(pred).select(
-            "doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score")
-        )
-        out = _top(out, k, "segment_id", "doc_id")
-        return out if with_keys else out.drop("doc_key")
-
-    def _search_numeric_range(self, node: flt.NumericRange, k: int | None, with_keys: bool) -> DataFrame:
-        """by_granular_range analogue: a native numeric predicate on a stored
-        column — Catalyst pushes it to the parquet scan (min/max row-group
-        pruning plays the role of the reference's multi-precision trie terms,
-        granular_range_filter.cpp:42-91). Constant score = boost, doc order."""
-        docs = self.reader.live_docs()
-        if node.column not in docs.columns:
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return self.reader.spark.createDataFrame(
-                [], schema if with_keys else schema.split(", ", 1)[1]
-            )
-        c = F.col(node.column)
-        pred = c.isNotNull()
-        if node.low is not None:
-            pred = pred & (c >= node.low if node.include_low else c > node.low)
-        if node.high is not None:
-            pred = pred & (c <= node.high if node.include_high else c < node.high)
-        out = docs.where(pred).select(
-            "doc_key", "segment_id", "doc_id", F.lit(float(node.boost)).alias("score")
-        )
-        out = _top(out, k, "segment_id", "doc_id")
-        return out if with_keys else out.drop("doc_key")
-
     def _search_nested(self, node: flt.Nested, k: int | None, with_keys: bool) -> DataFrame:
         """ChildToParentJoin (nested_filter.cpp:99-305) as a relational plan:
         ALL child matches (un-truncated kernel pass) → broadcast-light
@@ -2532,10 +2535,7 @@ class Searcher:
         pk = node.parent_key_col
         docs = self.reader.live_docs()
         if pk not in docs.columns:
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return self.reader.spark.createDataFrame(
-                [], schema if with_keys else schema.split(", ", 1)[1]
-            )
+            return self._hits_frame(_NO_HITS, with_keys)
         parents = docs.where(F.col(pk).isNull()).select(
             "doc_key", "segment_id", "doc_id"
         )

@@ -357,13 +357,6 @@ def test_nested_merge_max(nested_idx):
         assert abs(got[p] - exp[p]) < 1e-9
 
 
-def test_column_exists_prefix(built):
-    s = Searcher(built)
-    # doc_key column starts with "doc_" ... our stored col is none; use
-    # prefix over 'doc_len'-reserved: expect empty for bogus prefix
-    assert s.search(flt.ColumnExists("zzz", prefix_match=True), k=5).collect() == []
-
-
 def test_and_only_not(built):
     """And with only Not parts gets an implicit all-docs base
     (boolean_filter.cpp MakeAllDocsFilter)."""
